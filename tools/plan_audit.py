@@ -230,7 +230,10 @@ _REVIEWED_CHECKPOINTS = {
     "knn_ivf_kmeans": "LOOP training-set cache during model fit",
     "pq_fit": "LOOP training-set cache during model fit (70 MB @x100m "
     "via embedding_pq_codes)",
-    "recursive_cte": "LOOP per-round frontier (plans/recursive.py)",
+    "recursive_cte": "LOOP each iteration's new rows, lazily checkpointed "
+    "and written once by the count() that decides emptiness; the union of "
+    "those frontiers compacted every checkpoint_every iterations "
+    "(plans/recursive.py)",
     # --- output-sized (the query RETURNS this data) ---
     "json_tree_walk": "OUTPUT per-level frontiers; union of ALL levels "
     "IS the result (4676 MB mem + 132 MB disk @x100m — bounded by "
