@@ -18,11 +18,13 @@ Determinism contract with the oracle (FIXTURES.md §"Oracle protocol"):
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -65,10 +67,55 @@ def query(
     return deco
 
 
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, read from one
+    footer on the driver.
+
+    Inference without schema merging reads a single footer, but Spark
+    still runs it as a parallel job: ~95 ms per table against ~20 ms
+    here, on a warm local session on a 4-core host. This reads the
+    footer with parquet's ``ParquetFileReader`` and converts it with
+    Spark's own ``ParquetFileFormat.readSchemaFromFooter`` and a
+    converter built from the session's SQLConf, so ``nanosAsLong``, the INT96/binary
+    settings and Spark's own row metadata are honoured exactly as
+    inference honours them. For a directory it reads the file inference
+    reads: the first data file by path, skipping ``_`` and ``.`` names
+    (no partition discovery: a directory without data files directly
+    inside it is an error)."""
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(conf)
+    if fs.getFileStatus(p).isDirectory():
+        files = sorted(
+            st.getPath().toString()
+            for st in fs.listStatus(p)
+            if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+        )
+        if not files:
+            raise FileNotFoundError(f"no parquet data file directly under {path}")
+        p = jvm.org.apache.hadoop.fs.Path(files[0])
+    pq = jvm.org.apache.parquet
+    footer = pq.hadoop.ParquetFileReader.readFooter(
+        conf, p, pq.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    )
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        pq.hadoop.Footer(p, footer),
+        parquet.ParquetToSparkSchemaConverter(state.conf()),
+    )
+    return StructType.fromJson(json.loads(schema.json()))
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a DataFrame (parquet scan; Catalyst will
-    push filters/projections down into the scan)."""
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    push filters/projections down into the scan).
+
+    The table is opened with the schema ``parquet_schema`` reads from its
+    footer on the driver, so opening it runs no Spark job."""
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # events.ts is parquet TIMESTAMP(NANOS); with
         # spark.sql.legacy.parquet.nanosAsLong it arrives as int64 nanos.

@@ -33,6 +33,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Row, SparkSession
 
+from litebase_spark.catalog import register_views
 from litebase_spark.session import get_spark
 
 # Statement-prefix classes, mirroring reference pkg/database/query.go:46-102
@@ -1932,8 +1933,7 @@ class Engine:
         return ns
 
     def register_parquet_dir(self, sf_dir: str, tables) -> None:
-        for t in tables:
-            self.spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
+        register_views(self.spark, sf_dir, tables)
 
     # -- metrics (A22) ------------------------------------------------------
 

@@ -1105,6 +1105,9 @@ def ts_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (== the old 1 << (i + 32 - n) at i = n-1-j), missing taps at a
     # partition head are NULL -> 0, so num is bit-identical; n (the
     # available-tap count) comes from the same trailing frame as before.
+    # NULL values count as taps in n but add nothing to num, as in the
+    # oracle's list/SUM; a window with no non-NULL value is NULL there
+    # (SUM of nothing), so k gates the result the same way.
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wf = wo.rowsBetween(-(_EWMA_TAPS - 1), Window.currentRow)
     num = None
@@ -1114,6 +1117,7 @@ def ts_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
         ) * F.lit(1 << (_EWMA_TAPS - 1 - j))
         num = tap if num is None else num + tap
     n = F.count(F.lit(1)).over(wf)
+    k = F.count(F.col("__c")).over(wf)
     denom = F.expr(
         f"CAST(shiftleft(1L, {_EWMA_TAPS})"
         f" - shiftleft(1L, {_EWMA_TAPS} - __n) AS DOUBLE)"
@@ -1121,7 +1125,7 @@ def ts_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.withColumn("__c", fp("value"))
         .withColumn("__n", n)
-        .withColumn("ewma", F.round(num / (denom * 100.0), 6))
+        .withColumn("ewma", F.when(k > 0, F.round(num / (denom * 100.0), 6)))
         .select(
             "user_id",
             "event_id",

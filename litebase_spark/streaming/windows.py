@@ -20,7 +20,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from litebase_spark.catalog import dsum
+from litebase_spark.catalog import dsum, parquet_schema
 from litebase_spark.operators.streaming_batch import SESSION_GAP_MIN
 
 
@@ -36,7 +36,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stage = tempfile.mkdtemp(prefix="litebase_stream_")
     os.symlink(
         f"{sf_dir}/events.parquet", os.path.join(stage, "events.parquet")
@@ -62,13 +62,13 @@ def documents_stream(
 
     stage = tempfile.mkdtemp(prefix="litebase_stream_docs_")
     src = f"{sf_dir}/documents.parquet"
+    schema = parquet_schema(spark, src)
     if n_files <= 1:
         os.symlink(src, os.path.join(stage, "documents.parquet"))
-        schema = spark.read.parquet(src).schema
     else:
-        d = spark.read.parquet(src)
-        schema = d.schema
-        d.repartition(n_files).write.mode("overwrite").parquet(stage)
+        spark.read.schema(schema).parquet(src).repartition(n_files).write.mode(
+            "overwrite"
+        ).parquet(stage)
     return (
         spark.readStream.schema(schema)
         .format("parquet")

@@ -781,3 +781,26 @@ def test_trigger_body_with_case_end(engine):
     eng.sql("DROP TRIGGER trgc")
     for t in ("trgc_b", "trgc_s"):
         eng.sql(f"DROP TABLE {t}")
+
+
+def test_engine_events_schema_matches_load(spark, sf_dir, tmp_path):
+    """Engine-registered tables open through catalog.load, so a
+    TIMESTAMP(NANOS) events.ts is a timestamp there too (under
+    nanosAsLong a raw read gives BIGINT nanoseconds), as builders and
+    the DuckDB oracle see it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from litebase_spark.catalog import load
+
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    t = t.set_column(1, "ts", t["ts"].cast(pa.timestamp("ns")))
+    pq.write_table(t, tmp_path / "events.parquet")
+    eng = Engine(spark)
+    eng.register_parquet_dir(str(tmp_path), ["events"])
+    try:
+        got = spark.table("events").schema
+    finally:
+        spark.catalog.dropTempView("events")
+    assert got == load(spark, str(tmp_path), "events").schema
+    assert got["ts"].dataType.simpleString() == "timestamp"

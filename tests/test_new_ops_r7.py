@@ -51,6 +51,42 @@ def test_ewma_first_row_equals_value(spark):
         )
 
 
+def test_ewma_all_null_window_matches_oracle(spark, tmp_path):
+    """One user's values nulled: every trailing window of that user
+    holds no non-NULL value, so the oracle's SUM is NULL and the
+    smoothed value must be NULL too (not 0.0); other users unchanged."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from litebase_spark.catalog import REGISTRY
+    from litebase_spark.operators.asof import ts_ewma_smooth
+    from tools.check_oracle import canon_rows
+
+    t = pq.read_table(f"{SF}/events.parquet")
+    uid = t["user_id"][0].as_py()
+    nulled = pc.if_else(
+        pc.equal(t["user_id"], uid), pa.scalar(None, pa.float64()), t["value"]
+    )
+    t = t.set_column(t.schema.get_field_index("value"), "value", nulled)
+    pq.write_table(t, tmp_path / "events.parquet")
+
+    sdf = ts_ewma_smooth(spark, str(tmp_path))
+    srows = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/events.parquet')"
+    )
+    cur = con.execute(REGISTRY["ts_ewma_smooth"].oracle)
+    got = canon_rows(sdf.columns, srows)
+    want = canon_rows([d[0] for d in cur.description], cur.fetchall())
+    assert got == want
+    nulls = [r for r in srows if r[sdf.columns.index("ewma")] is None]
+    assert len(nulls) == pc.sum(pc.equal(t["user_id"], uid)).as_py() > 0
+
+
 def test_scd2_invariants(spark):
     from litebase_spark.operators.asof import ts_scd2_intervals
 

@@ -72,6 +72,7 @@ def main() -> int:
 
     import litebase_spark.operators  # noqa: F401
     from bench import read_loadavg
+    from litebase_spark.catalog import parquet_schema
     from litebase_spark.session import get_spark
     from litebase_spark.streaming.stateful import scd2_apply
     from litebase_spark.streaming.windows import (
@@ -84,7 +85,7 @@ def main() -> int:
     spark = get_spark("stream-soak")
     spark.range(1).count()
     sf_dir = build_replica(spark, args.x)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
 
     def events_stream():
         return (
