@@ -11,7 +11,7 @@ Layout:
   session    — tuned SparkSession builder (AQE, Arrow, UTC)
   engine     — Engine / QueryResult / query metrics (SURVEY §2.A A2/A3/A22)
   catalog    — registry of declared queries + DuckDB oracle SQL (t2 gate)
-  functions  — SQLite-dialect compat shims (SURVEY §2.B scalar functions)
+  functions  — SQLite -> Spark SQL dialect layer (SURVEY §2.B scalar functions)
   operators  — relational + dedup + similarity + text + multimodal
   plans      — recursive CTE fixpoint helper (SQLite WITH RECURSIVE analog)
   streaming  — Structured Streaming operators over the events table

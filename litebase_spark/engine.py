@@ -34,6 +34,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Row, SparkSession
 
 from litebase_spark.catalog import register_views
+from litebase_spark.functions.dialect import to_spark_sql
 from litebase_spark.session import get_spark
 
 # Statement-prefix classes, mirroring reference pkg/database/query.go:46-102
@@ -76,117 +77,6 @@ def classify_statement(sql: str) -> str:
 
 def is_write(sql: str) -> bool:
     return classify_statement(sql) in ("DDL", "DML")
-
-
-_SQLITE_CAST_TYPES = {
-    # SQLite type name -> Spark type. INTEGER maps to BIGINT because
-    # SQLite's INTEGER storage class is 64-bit.
-    "TEXT": "STRING",
-    "BLOB": "BINARY",
-}
-
-# SQLite CAST applies *prefix parsing*: CAST('42abc' AS INTEGER) = 42,
-# CAST('3.7xyz' AS REAL) = 3.7, CAST('junk' AS INTEGER) = 0 (see
-# sqlite.org/lang_expr.html#castexpr; the reference binds through
-# pkg/sqlite3/statement.go:103-159 over dynamically-typed storage).
-# The rewrite tries, in order: Spark's native cast (covers numeric
-# operands and clean strings, including int64 that a double round-trip
-# would corrupt, and double->bigint clamping at +/-2^63 like SQLite);
-# a double parse (clean real strings like '3.9' -> 3); the longest
-# numeric prefix; then SQLite's 0 default. NUMERIC stays DOUBLE-typed
-# (Spark columns are statically typed — documented deviation: SQLite
-# would narrow 42.0 back to integer 42).
-# NB: these are SQL string literals — Spark's parser unescapes '\\s'
-# to the regex \s (escapedStringLiterals is off by default).
-_INT_PREFIX_RX = r"^\\s*([+-]?[0-9]+)"
-_REAL_PREFIX_RX = (
-    r"^\\s*[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)([eE][+-]?[0-9]+)?"
-)
-
-
-def _int_affinity(x: str) -> str:
-    # Numeric operands vs text operands need different rules (SQLite
-    # dispatches on the runtime storage class; Spark types are static):
-    # a REAL value truncates toward zero (1.23e7 -> 12300000, clamping
-    # at +/-2^63), but TEXT parses only the INTEGER prefix — exponents
-    # are junk ('1e3' -> 1). The double round-trip guard separates the
-    # two at runtime: a numeric operand's string form IS its canonical
-    # double rendering, so equality selects the numeric path; any other
-    # text falls to prefix parsing. (A string that happens to equal a
-    # canonical exponent rendering like '1.0E20' takes the numeric path
-    # — the one residue of static typing; documented in COVERAGE.md.)
-    s = f"CAST({x} AS STRING)"
-    d = f"TRY_CAST({x} AS DOUBLE)"
-    return (
-        f"CASE WHEN {d} IS NOT NULL AND CAST({d} AS STRING) = {s} "
-        f"THEN CAST({d} AS BIGINT) "
-        f"ELSE COALESCE("
-        f"TRY_CAST({x} AS BIGINT), "
-        f"TRY_CAST(regexp_extract({s}, '{_INT_PREFIX_RX}', 1) AS BIGINT), "
-        f"CAST(TRY_CAST(regexp_extract({s}, '{_REAL_PREFIX_RX}', 0) "
-        f"AS DOUBLE) AS BIGINT), "
-        f"CAST(0 AS BIGINT)) END"
-    )
-
-
-def _real_affinity(x: str) -> str:
-    return (
-        f"COALESCE(TRY_CAST({x} AS DOUBLE), "
-        f"TRY_CAST(regexp_extract(CAST({x} AS STRING), "
-        f"'{_REAL_PREFIX_RX}', 0) AS DOUBLE), CAST(0.0 AS DOUBLE))"
-    )
-
-
-def _rewrite_sqlite_casts(sql: str) -> str:
-    """Map SQLite CAST semantics onto Spark: type-name translation for
-    TEXT/BLOB, full prefix-parsing affinity for INTEGER/REAL/NUMERIC.
-
-    Scoped strictly to CAST expressions (depth-tracked to the matching
-    close paren), so a column alias that happens to be named `text` is
-    never touched — the fixtures' documents.text would otherwise be a
-    landmine for a blanket regex."""
-    import re as _re
-
-    out = []
-    i = 0
-    pat = _re.compile(r"(?is)\bCAST\s*\(")
-    tail = _re.compile(
-        r"(?is)(\bAS\s+)(TEXT|REAL|BLOB|NUMERIC|INTEGER)(\s*)$"
-    )
-    while True:
-        m = pat.search(sql, i)
-        if not m:
-            out.append(sql[i:])
-            return "".join(out)
-        depth, j = 1, m.end()
-        while j < len(sql) and depth:
-            if sql[j] == "(":
-                depth += 1
-            elif sql[j] == ")":
-                depth -= 1
-            j += 1
-        inner = _rewrite_sqlite_casts(sql[m.end():j - 1])
-        tm = tail.search(inner)
-        if tm:
-            ty = tm.group(2).upper()
-            operand = inner[: tm.start()].rstrip()
-            if ty == "INTEGER":
-                out.append(sql[i:m.start()])
-                out.append(_int_affinity(operand))
-                i = j
-                continue
-            if ty in ("REAL", "NUMERIC"):
-                out.append(sql[i:m.start()])
-                out.append(_real_affinity(operand))
-                i = j
-                continue
-            inner = (inner[: tm.start()] + tm.group(1)
-                     + _SQLITE_CAST_TYPES[ty]
-                     + tm.group(3))
-        out.append(sql[i:m.end()])
-        out.append(inner)
-        out.append(sql[j - 1:j])
-        i = j
 
 
 @dataclass
@@ -398,12 +288,6 @@ class Engine:
         # total_changes() functions (sqlite.org/lang_corefunc.html)
         self._last_changes = 0
         self._total_changes = 0
-        # SQLite-name shims (ifnull/iif/julianday/unixepoch/...) are part
-        # of the dialect surface a reference user expects from plain
-        # Engine.sql() — register them up front, UDF-free (SQL macros).
-        from litebase_spark.functions.compat import register_sqlite_functions
-
-        register_sqlite_functions(self.spark)
 
     # -- query dispatch (A2/A3) --------------------------------------------
 
@@ -483,17 +367,7 @@ class Engine:
             # pkg/http/query_controller.go:94-120).
             return self._autotxn.sql(statement, params)
         stmt_class = classify_statement(statement)
-        sql_text, args = self._bind(statement, params)
-        sql_text = self._rewrite_time_travel(sql_text)
-        sql_text = _rewrite_sqlite_casts(sql_text)
-        from litebase_spark.functions.dialect import (
-            rewrite_double_quoted_identifiers as _rw_dqi,
-            rewrite_integer_literal_division as _rw_div,
-            rewrite_sqlite_functions as _rw_fns,
-        )
-
-        sql_text = _rw_dqi(_rw_div(_rw_fns(sql_text)))
-        sql_text = self._rewrite_connection_fns(sql_text)
+        sql_text, args = self._translate(statement, params)
         returning = None
         if stmt_class == "DML":
             sql_text, returning = self._split_returning(sql_text)
@@ -601,17 +475,19 @@ class Engine:
 
     def df(self, statement: str, params: list | dict | None = None) -> DataFrame:
         """Lazy variant: return the DataFrame without collecting."""
-        sql_text, args = self._bind(statement, params)
-        sql_text = self._rewrite_time_travel(sql_text)
-        sql_text = _rewrite_sqlite_casts(sql_text)
-        from litebase_spark.functions.dialect import (
-            rewrite_double_quoted_identifiers as _rw_dqi,
-            rewrite_integer_literal_division as _rw_div,
-            rewrite_sqlite_functions as _rw_fns,
-        )
-
-        sql_text = _rw_dqi(_rw_div(_rw_fns(sql_text)))
+        sql_text, args = self._translate(statement, params)
         return self.spark.sql(sql_text, args=args) if args else self.spark.sql(sql_text)
+
+    def _translate(self, statement: str, params) -> tuple[str, dict | None]:
+        """Bind parameters, resolve time travel, then translate the
+        SQLite dialect to Spark SQL (functions/dialect.py)."""
+        sql_text, args = self._bind(statement, params)
+        sql_text = to_spark_sql(
+            self._rewrite_time_travel(sql_text),
+            self._last_changes,
+            self._total_changes,
+        )
+        return sql_text, args
 
     # -- time travel over a VersionedStore (A21 SQL surface) ----------------
 
@@ -682,7 +558,8 @@ class Engine:
                 coldest = min(self._plan_freq, key=lambda k: self._plan_freq[k])
                 self._plan_cache.pop(coldest, None)
                 self._plan_freq.pop(coldest, None)
-            df = self._plan_cache[h] = self.spark.sql(statement)
+            sql_text = self._translate(statement, None)[0]
+            df = self._plan_cache[h] = self.spark.sql(sql_text)
             self._plan_freq[h] = 0
         self._plan_freq[h] = self._plan_freq.get(h, 0) + 1
         return df
@@ -720,7 +597,7 @@ class Engine:
 
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
-            self.spark.sql(statement).explain(mode=mode)
+            self.spark.sql(self._translate(statement, None)[0]).explain(mode=mode)
         return buf.getvalue()
 
     def describe(self, table: str) -> list[Row]:
@@ -794,27 +671,6 @@ class Engine:
         return drift_report(
             df, value_col=value_col, ts_col=ts_col, split=split
         )
-
-    def _rewrite_connection_fns(self, sql_text: str) -> str:
-        """Connection-scope SQLite functions: changes()/total_changes()
-        substitute the engine's DML counters (the reference captures
-        sqlite3_changes the same way, resolver.go:127-130);
-        sqlite_version() reports the emulated dialect version;
-        random() maps to a full-range signed 64-bit value (Spark's
-        rand() is [0,1)). Textual, word-boundary, call-site only."""
-        import re as _re
-
-        subs = [
-            (r"(?i)(?<![\w.])changes\s*\(\s*\)", str(self._last_changes)),
-            (r"(?i)(?<![\w.])total_changes\s*\(\s*\)",
-             str(self._total_changes)),
-            (r"(?i)(?<![\w.])sqlite_version\s*\(\s*\)", "'3.45.3'"),
-            (r"(?i)(?<![\w.])random\s*\(\s*\)",
-             "CAST((rand() - 0.5) * 1.844674407370955E19 AS BIGINT)"),
-        ]
-        for pat, repl in subs:
-            sql_text = _re.sub(pat, repl, sql_text)
-        return sql_text
 
     _TRIGGER_CREATE_RE = re.compile(
         r"(?is)^\s*CREATE\s+TRIGGER\s+(?:IF\s+NOT\s+EXISTS\s+)?"

@@ -1,15 +1,19 @@
-"""SQL-text dialect rewriter: SQLite scalar-function calls -> Spark SQL.
+"""SQLite SQL -> Spark SQL: the engine's one SQLite dialect layer.
 
-The compat layer (functions/compat.py) gives every SQLite scalar a
-Python Column helper, and a handful of names are SQL-registered as
-typed temporary functions — but typed SQL UDFs cannot express the
-generic/variadic SQLite forms (iif over any type, char(...) variadic,
-scalar max/min, strftime's literal format, GLOB's pattern language,
-datetime modifiers). Those become a *textual* rewrite here, applied by
-``Engine.sql`` after parameter binding: each call site is located with
-a quote- and paren-aware scanner (never inside string literals,
-requires word boundary, arguments split at top level and rewritten
-recursively) and replaced with the equivalent Spark expression.
+Every SQLite spelling that Spark SQL does not share is translated here,
+as text, before a statement reaches Spark: CAST affinity, scalar
+functions (iif, glob, quote, strftime and the datetime modifiers,
+julianday/unixepoch, printf, the JSON1 family, ...), integer-literal
+division, double-quoted identifiers, and the connection functions
+(changes(), total_changes(), sqlite_version(), random()).
+``to_spark_sql`` runs the whole chain; ``Engine.sql`` and ``Engine.df``
+call it after parameter binding. Each replacement is a plain Spark SQL
+expression, so nothing depends on a session-registered function.
+
+All rewriters share one literal-aware scanner: a single-quoted string
+literal ('' escapes a quote) is data and is never rewritten. Call sites
+are found at a word boundary, their arguments are split at top level
+and rewritten first.
 
 Reference surface: sqlite.org/lang_corefunc.html and lang_datefunc.html
 (the reference enables the full core-function set, pkg/sqlite3).
@@ -22,42 +26,103 @@ from __future__ import annotations
 import json
 import re
 
-from litebase_spark.functions.compat import strftime_format
+# -- the literal-aware scanner ------------------------------------------------
 
-_WORD_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+def _literal_end(s: str, i: int) -> int:
+    """Index just past the '...' literal opening at s[i] ('' is an
+    escaped quote); len(s) if it is unterminated."""
+    j = s.find("'", i + 1)
+    while j != -1 and s.startswith("'", j + 1):
+        j = s.find("'", j + 2)
+    return len(s) if j == -1 else j + 1
+
+
+_PAREN_RE = re.compile(r"[()']")
+
+
+def _paren_end(s: str, k: int) -> int | None:
+    """Index just past the ')' that closes the '(' at s[k], skipping
+    literals; None if it is unbalanced."""
+    depth, j = 1, k + 1
+    while depth:
+        m = _PAREN_RE.search(s, j)
+        if m is None:
+            return None
+        j = m.end()
+        if m.group() == "'":
+            j = _literal_end(s, m.start())
+        else:
+            depth += 1 if m.group() == "(" else -1
+    return j
+
+
+def _outside_literals(sql: str, fn) -> str:
+    """Apply fn to every stretch of sql between string literals."""
+    out, i = [], 0
+    while i < len(sql):
+        j = sql.find("'", i)
+        if j == -1:
+            j = len(sql)
+        out.append(fn(sql[i:j]))
+        i = _literal_end(sql, j) if j < len(sql) else j
+        out.append(sql[j:i])
+    return "".join(out)
+
+
+def _calls_re(names) -> re.Pattern:
+    """Matches a literal's opening quote, or a call to one of `names`
+    (group 1, any case) that does not continue an identifier."""
+    alts = "|".join(sorted(names, key=len, reverse=True))
+    return re.compile(rf"'|(?<![\w.])({alts})\s*\(", re.IGNORECASE)
+
+
+def _rewrite_calls(sql: str, calls: re.Pattern, xform) -> str:
+    """Replace every call matched by `calls` with xform(name, inner),
+    where inner is the argument text, rewritten first. A None from
+    xform keeps the call."""
+    out, i = [], 0
+    while (m := calls.search(sql, i)) is not None:
+        s = m.start()
+        out.append(sql[i:s])
+        if m.group(1) is None:
+            i = _literal_end(sql, s)
+            out.append(sql[s:i])
+            continue
+        k = m.end() - 1
+        end = _paren_end(sql, k)
+        if end is None:  # unbalanced: leave the rest as written
+            i = s
+            break
+        i = end
+        inner = _rewrite_calls(sql[k + 1:i - 1], calls, xform)
+        repl = xform(m.group(1), inner)
+        out.append(sql[s:k + 1] + inner + ")" if repl is None else repl)
+    out.append(sql[i:])
+    return "".join(out)
+
+
+_ARGS_RE = re.compile(r"[(),']")
 
 
 def _split_args(s: str) -> list[str] | None:
     """Split a call's argument text at top-level commas; None if the
-    text is unbalanced. Tracks single-quoted strings ('' escapes)."""
-    args, depth, cur, i = [], 0, [], 0
-    while i < len(s):
-        ch = s[i]
+    text is unbalanced."""
+    args, depth, start, i = [], 0, 0, 0
+    while (m := _ARGS_RE.search(s, i)) is not None:
+        ch, i = m.group(), m.end()
         if ch == "'":
-            j = i + 1
-            while j < len(s):
-                if s[j] == "'":
-                    if j + 1 < len(s) and s[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            cur.append(s[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "(":
+            i = _literal_end(s, m.start())
+        elif ch == "(":
             depth += 1
         elif ch == ")":
             depth -= 1
             if depth < 0:
                 return None
-        if ch == "," and depth == 0:
-            args.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    args.append("".join(cur).strip())
+        elif depth == 0:
+            args.append(s[start:m.start()].strip())
+            start = i
+    args.append(s[start:].strip())
     return args
 
 
@@ -69,9 +134,34 @@ def _literal(arg: str) -> str | None:
     return None
 
 
+def _sq(s: str) -> str:
+    return s.replace("'", "''")
+
+
+# -- GLOB ----------------------------------------------------------------------
+
+
+def _glob_set(body: str) -> str:
+    """The members of a GLOB [...] set as a Java character-class body.
+    As in SQLite's patternCompare, x-y is a range unless x is the
+    leading ']', and a range's end cannot start another one."""
+    out, k = [], 0
+    while k < len(body):
+        c = body[k]
+        if body.startswith("-", k + 1) and k + 2 < len(body) and (k or c != "]"):
+            if c <= body[k + 2]:
+                out.append(f"{re.escape(c)}-{re.escape(body[k + 2])}")
+            k += 3
+        else:
+            out.append(re.escape(c))
+            k += 1
+    return "".join(out)
+
+
 def _glob_regex(pattern: str) -> str:
-    """SQLite GLOB pattern -> anchored Java regex (mirrors
-    compat.glob_match, as text)."""
+    """SQLite GLOB pattern -> Java regex over the whole value. `*` and
+    `?` span newlines; a ']' right after '[' or '[^' is a member; an
+    unterminated set matches nothing, as in SQLite."""
     out, i = [], 0
     while i < len(pattern):
         ch = pattern[i]
@@ -80,23 +170,74 @@ def _glob_regex(pattern: str) -> str:
         elif ch == "?":
             out.append(".")
         elif ch == "[":
-            j = pattern.find("]", i + 1)
+            neg = pattern.startswith("^", i + 1)
+            start = i + 1 + neg
+            j = pattern.find("]", start + 1)
             if j == -1:
-                out.append("\\[")
-            else:
-                body = pattern[i + 1 : j]
-                if body.startswith("^"):
-                    body = "^" + re.escape(body[1:])
-                else:
-                    body = re.escape(body)
-                # keep ranges like a-z usable
-                body = body.replace("\\-", "-")
-                out.append(f"[{body}]")
-                i = j
+                out.append("(?!)")
+                break
+            members = _glob_set(pattern[start:j])
+            if members:
+                out.append(("[^" if neg else "[") + members + "]")
+            else:  # only reversed ranges: an empty set
+                out.append("." if neg else "(?!)")
+            i = j
         else:
             out.append(re.escape(ch))
         i += 1
-    return "^" + "".join(out) + "$"
+    return "(?s)^" + "".join(out) + r"\z"
+
+
+# -- date and time -------------------------------------------------------------
+
+# SQLite/C strftime directive -> Spark (java.time) pattern fragment.
+STRFTIME_MAP = {
+    "%Y": "yyyy",
+    "%m": "MM",
+    "%d": "dd",
+    "%H": "HH",
+    "%M": "mm",
+    "%S": "ss",
+    "%j": "DDD",
+    "%e": "d",
+    "%A": "EEEE",
+    "%a": "EEE",
+    "%B": "MMMM",
+    "%b": "MMM",
+    "%p": "a",
+    "%I": "hh",
+    "%%": "%",
+}
+
+
+def strftime_format(fmt: str) -> str:
+    """Translate a C-style strftime format to a Spark datetime pattern.
+    Literal text is quoted so java.time doesn't interpret it."""
+    out: list[str] = []
+    lit: list[str] = []
+
+    def flush():
+        if lit:
+            text = "".join(lit).replace("'", "''")
+            # quote any literal run containing letters
+            out.append(f"'{text}'" if any(c.isalpha() for c in text) else text)
+            lit.clear()
+
+    i = 0
+    while i < len(fmt):
+        if fmt[i] == "%" and i + 1 < len(fmt):
+            directive = fmt[i : i + 2]
+            mapped = STRFTIME_MAP.get(directive)
+            if mapped is None:
+                raise ValueError(f"unsupported strftime directive {directive!r}")
+            flush()
+            out.append(mapped)
+            i += 2
+        else:
+            lit.append(fmt[i])
+            i += 1
+    flush()
+    return "".join(out)
 
 
 _TRUNC = {"start of day": "day", "start of month": "month",
@@ -106,7 +247,8 @@ _SECONDS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
 
 def _apply_modifier(expr: str, mod: str) -> str | None:
     """One SQLite date modifier applied to a timestamp expression, as
-    SQL text (mirrors compat.sqlite_datetime)."""
+    SQL text: '+N days|hours|minutes|seconds|months|years', '-N ...',
+    'start of day|month|year'."""
     m = mod.strip().lower()
     if m in _TRUNC:
         return f"date_trunc('{_TRUNC[m]}', {expr})"
@@ -123,6 +265,8 @@ def _apply_modifier(expr: str, mod: str) -> str | None:
     if unit in _SECONDS:
         delta = int(sign * num * _SECONDS[unit] * 1e6)
         return f"timestamp_micros(unix_micros({expr}) + {delta})"
+    # interval arithmetic (not add_months) keeps TIMESTAMP and the
+    # time of day, as SQLite does
     if unit == "month":
         return f"({expr} + INTERVAL {int(sign * num)} MONTH)"
     if unit == "year":
@@ -131,6 +275,8 @@ def _apply_modifier(expr: str, mod: str) -> str | None:
 
 
 def _dt_chain(ts_arg: str, mods: list[str]) -> str | None:
+    """TIMESTAMP expression for ts_arg with SQLite modifiers applied
+    left to right; None if any modifier is unsupported."""
     expr = f"CAST({ts_arg} AS TIMESTAMP)"
     for a in mods:
         lit = _literal(a)
@@ -152,6 +298,19 @@ _TYPEOF_CASE = (
     " THEN 'real' "
     "WHEN typeof({a}) = 'binary' THEN 'blob' "
     "ELSE typeof({a}) END"
+)
+
+# SQLite quote(): TEXT quoted with '' escapes, BLOB as X'..', a boolean
+# as the integer SQLite would store, other numbers as their text.
+# typeof() is static in Spark, so the CASE folds to one branch.
+_QUOTE_CASE = (
+    "CASE WHEN {a} IS NULL THEN 'NULL' "
+    "WHEN typeof({a}) = 'string' "
+    "THEN concat('''', replace({a}, '''', ''''''), '''') "
+    "WHEN typeof({a}) = 'binary' THEN concat('X''', hex({a}), '''') "
+    "WHEN typeof({a}) = 'boolean' "
+    "THEN if(CAST(CAST({a} AS STRING) AS BOOLEAN), '1', '0') "
+    "ELSE CAST({a} AS STRING) END"
 )
 
 
@@ -392,10 +551,6 @@ def _json_xform(n: str, args: list[str], j: str) -> str | None:
     return None
 
 
-def _sq(s: str) -> str:
-    return s.replace("'", "''")
-
-
 def _flat_literal_patch(x: str, parg: str) -> str | None:
     """Fast path for json_patch(doc, '<flat literal object>') — the
     overwhelmingly common CDC/upsert shape: the patch is folded at
@@ -458,7 +613,12 @@ def _xform(name: str, args: list[str]) -> str | None:
     if n.startswith(("json", "jsonb")):
         return _json_xform(n, args, j)
     if n == "iif" and len(args) == 3:
-        return f"if({j})"
+        # SQLite's condition is any value, true when non-zero
+        return f"if(CAST({args[0]} AS BOOLEAN), {args[1]}, {args[2]})"
+    if n in ("likely", "unlikely") and len(args) == 1:
+        return f"({j})"  # planner hints: the value itself
+    if n == "likelihood" and len(args) == 2:
+        return f"({args[0]})"
     if n in ("format", "printf") and len(args) >= 1:
         return _printf_call(args)
     if n in ("ltrim", "rtrim") and len(args) == 2:
@@ -475,7 +635,7 @@ def _xform(name: str, args: list[str]) -> str | None:
         esc = f" ESCAPE {args[2]}" if len(args) == 3 else ""
         return f"(({args[1]}) LIKE ({args[0]}){esc})"
     if n == "quote" and len(args) == 1:
-        return f"sqlite_quote({j})"
+        return _QUOTE_CASE.format(a=j)
     if n == "unicode" and len(args) == 1:
         return f"ascii({j})"
     if n == "zeroblob" and len(args) == 1:
@@ -488,40 +648,51 @@ def _xform(name: str, args: list[str]) -> str | None:
             return None
         rx = _glob_regex(pat).replace("\\", "\\\\").replace("'", "''")
         return f"(({args[1]}) RLIKE '{rx}')"
-    if n == "strftime" and len(args) >= 2:
-        fmt = _literal(args[0])
-        chain = _dt_chain(args[1], args[2:])
-        if fmt is None or chain is None:
+    if n in _DATE_FUNCTIONS:
+        return _date_xform(n, args)
+    return None
+
+
+_DATE_FUNCTIONS = {
+    "datetime": "yyyy-MM-dd HH:mm:ss", "date": "yyyy-MM-dd",
+    "time": "HH:mm:ss", "strftime": None, "julianday": None,
+    "unixepoch": None,
+}
+
+
+def _date_xform(n: str, args: list[str]) -> str | None:
+    """SQLite date and time functions: the first argument (after
+    strftime's format) is the time value, the rest are modifiers."""
+    fmt = None
+    if n == "strftime":
+        fmt = _literal(args[0]) if args else None
+        if fmt is None:
             return None
-        if fmt == "%s":
-            return f"CAST(unix_timestamp({chain}) AS STRING)"
+        args = args[1:]
+    if not args or (n == "date" and len(args) == 1):
+        return None  # date(x) alone is Spark's own cast builtin
+    chain = _dt_chain(args[0], args[1:])
+    if chain is None:
+        return None
+    if n == "julianday":
+        return f"(unix_micros({chain}) / 8.64E10 + 2440587.5)"
+    if n == "unixepoch":
+        return f"unix_timestamp({chain})"
+    if fmt == "%s":
+        return f"CAST(unix_timestamp({chain}) AS STRING)"
+    jfmt = _DATE_FUNCTIONS[n]
+    if fmt is not None:
         try:
             jfmt = strftime_format(fmt)
         except ValueError:
             return None
-        return f"date_format({chain}, '{jfmt}')"
-    if n == "datetime" and len(args) >= 1:
-        chain = _dt_chain(args[0], args[1:])
-        if chain is None:
-            return None
-        return f"date_format({chain}, 'yyyy-MM-dd HH:mm:ss')"
-    if n == "date" and len(args) >= 2:
-        chain = _dt_chain(args[0], args[1:])
-        if chain is None:
-            return None
-        return f"date_format({chain}, 'yyyy-MM-dd')"
-    if n == "time" and len(args) >= 1:
-        chain = _dt_chain(args[0], args[1:])
-        if chain is None:
-            return None
-        return f"date_format({chain}, 'HH:mm:ss')"
-    return None
+    return f"date_format({chain}, '{_sq(jfmt)}')"
 
 
 _NAMES = {
-    "iif", "format", "printf", "max", "min", "char", "like", "quote",
-    "unicode", "zeroblob", "typeof", "glob", "strftime", "datetime",
-    "date", "time", "ltrim", "rtrim", "trim",
+    "iif", "likely", "unlikely", "likelihood", "format", "printf", "max",
+    "min", "char", "like", "quote", "unicode", "zeroblob", "typeof",
+    "glob", "ltrim", "rtrim", "trim", *_DATE_FUNCTIONS,
     # JSON1 family, both spellings (jsonb_* = SQLite >= 3.45 binary
     # storage variants; accepted, TEXT JSON returned)
     "json", "jsonb", "json_extract", "jsonb_extract",
@@ -535,66 +706,17 @@ _NAMES = {
 }
 
 
+def _function_xform(name: str, inner: str) -> str | None:
+    args = _split_args(inner)
+    return _xform(name, args) if args is not None else None
+
+
+_FUNCTION_CALLS = _calls_re(_NAMES)
+
+
 def rewrite_sqlite_functions(sql: str) -> str:
     """Rewrite SQLite scalar-function call sites to Spark SQL text."""
-    out, i = [], 0
-    while i < len(sql):
-        ch = sql[i]
-        if ch == "'":  # skip string literals wholesale
-            j = i + 1
-            while j < len(sql):
-                if sql[j] == "'":
-                    if j + 1 < len(sql) and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        m = _WORD_RE.match(sql, i)
-        if m and (i == 0 or not (sql[i - 1].isalnum()
-                                 or sql[i - 1] in "_.")):
-            word = m.group(0)
-            k = m.end()
-            while k < len(sql) and sql[k] in " \t\n":
-                k += 1
-            if word.lower() in _NAMES and k < len(sql) and sql[k] == "(":
-                depth, j = 1, k + 1
-                while j < len(sql) and depth:
-                    if sql[j] == "'":
-                        j2 = j + 1
-                        while j2 < len(sql):
-                            if sql[j2] == "'":
-                                if j2 + 1 < len(sql) and sql[j2 + 1] == "'":
-                                    j2 += 2
-                                    continue
-                                break
-                            j2 += 1
-                        j = j2 + 1
-                        continue
-                    if sql[j] == "(":
-                        depth += 1
-                    elif sql[j] == ")":
-                        depth -= 1
-                    j += 1
-                inner = rewrite_sqlite_functions(sql[k + 1 : j - 1])
-                args = _split_args(inner)
-                repl = _xform(word, args) if args is not None else None
-                if repl is not None:
-                    out.append(repl)
-                else:
-                    out.append(sql[i:k + 1])
-                    out.append(inner)
-                    out.append(")")
-                i = j
-                continue
-            out.append(word)
-            i = m.end()
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+    return _rewrite_calls(sql, _FUNCTION_CALLS, _function_xform)
 
 
 # -- SQLite integer division ------------------------------------------------
@@ -671,41 +793,25 @@ def _chain_is_left_operand(seg: str, start: int) -> bool:
     return True  # '(' ',' '=' '<' '>' '+' '-' '|' '&' '~' ';' etc.
 
 
+def _fold_division(seg: str) -> str:
+    out, pos = [], 0
+    for m in _INT_DIV_CHAIN_RE.finditer(seg):
+        if "/" not in m.group(0):
+            continue  # *-/% chain with no division: nothing to fold
+        if not _chain_is_left_operand(seg, m.start()):
+            continue
+        out.append(seg[pos:m.start()])
+        out.append(re.sub(r"\s*/\s*", " DIV ", m.group(0)))
+        pos = m.end()
+    out.append(seg[pos:])
+    return "".join(out)
+
+
 def rewrite_integer_literal_division(sql: str) -> str:
     """Rewrite int-literal division chains to DIV, skipping string
     literals (a '/' inside quotes is data, not an operator) and any
     chain whose leading literal is not the true left operand."""
-    parts = []
-    i = 0
-    while i < len(sql):
-        if sql[i] == "'":
-            j = i + 1
-            while j < len(sql):
-                if sql[j] == "'":
-                    if j + 1 < len(sql) and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            parts.append(sql[i:j + 1])
-            i = j + 1
-            continue
-        j = sql.find("'", i)
-        seg = sql[i:] if j == -1 else sql[i:j]
-        out = []
-        pos = 0
-        for m in _INT_DIV_CHAIN_RE.finditer(seg):
-            if "/" not in m.group(0):
-                continue  # *-/% chain with no division: nothing to fold
-            if not _chain_is_left_operand(seg, m.start()):
-                continue
-            out.append(seg[pos:m.start()])
-            out.append(re.sub(r"\s*/\s*", " DIV ", m.group(0)))
-            pos = m.end()
-        out.append(seg[pos:])
-        parts.append("".join(out))
-        i = len(sql) if j == -1 else j
-    return "".join(parts)
+    return _outside_literals(sql, _fold_division)
 
 
 # -- double-quoted identifiers ---------------------------------------------
@@ -720,40 +826,148 @@ def rewrite_integer_literal_division(sql: str) -> str:
 # option here: spark.sql.ansi.doubleQuotedIdentifiers requires ANSI
 # mode, which the engine keeps off for SQLite-compatible casts.
 
+_QUOTES_RE = re.compile("['\"]")
+
+
 def rewrite_double_quoted_identifiers(sql: str) -> str:
-    out = []
-    i = 0
-    n = len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":  # skip string literals ('' escaping)
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i:j + 1])
-            i = j + 1
+    out, i = [], 0
+    while (m := _QUOTES_RE.search(sql, i)) is not None:
+        s = m.start()
+        out.append(sql[i:s])
+        if m.group() == "'":
+            i = _literal_end(sql, s)
+            out.append(sql[s:i])
             continue
-        if ch == '"':
-            j = i + 1
-            ident = []
-            while j < n:
-                if sql[j] == '"':
-                    if j + 1 < n and sql[j + 1] == '"':
-                        ident.append('"')
-                        j += 2
-                        continue
-                    break
-                ident.append(sql[j])
-                j += 1
-            name = "".join(ident)
-            out.append("`" + name.replace("`", "``") + "`")
-            i = j + 1
-            continue
-        out.append(ch)
-        i += 1
+        j = sql.find('"', s + 1)  # the closing quote; "" is an escape
+        while j != -1 and sql.startswith('"', j + 1):
+            j = sql.find('"', j + 2)
+        end = len(sql) if j == -1 else j
+        name = sql[s + 1:end].replace('""', '"')
+        out.append("`" + name.replace("`", "``") + "`")
+        i = end + 1
+    out.append(sql[i:])
     return "".join(out)
+
+
+# -- CAST affinity ----------------------------------------------------------
+#
+# SQLite CAST applies *prefix parsing*: CAST('42abc' AS INTEGER) = 42,
+# CAST('3.7xyz' AS REAL) = 3.7, CAST('junk' AS INTEGER) = 0 (see
+# sqlite.org/lang_expr.html#castexpr; the reference binds through
+# pkg/sqlite3/statement.go:103-159 over dynamically-typed storage).
+# The rewrite tries, in order: Spark's native cast (covers numeric
+# operands and clean strings, including int64 that a double round-trip
+# would corrupt, and double->bigint clamping at +/-2^63 like SQLite);
+# a double parse (clean real strings like '3.9' -> 3); the longest
+# numeric prefix; then SQLite's 0 default. NUMERIC stays DOUBLE-typed
+# (Spark columns are statically typed — documented deviation: SQLite
+# would narrow 42.0 back to integer 42). TEXT and BLOB only rename the
+# type (INTEGER maps to BIGINT: SQLite's INTEGER storage class is
+# 64-bit).
+# NB: these are SQL string literals — Spark's parser unescapes '\\s'
+# to the regex \s (escapedStringLiterals is off by default).
+_INT_PREFIX_RX = r"^\\s*([+-]?[0-9]+)"
+_REAL_PREFIX_RX = (
+    r"^\\s*[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)([eE][+-]?[0-9]+)?"
+)
+_SQLITE_CAST_TYPES = {"TEXT": "STRING", "BLOB": "BINARY"}
+_CAST_TYPE_RE = re.compile(
+    r"(?is)(\bAS\s+)(TEXT|REAL|BLOB|NUMERIC|INTEGER)(\s*)$"
+)
+
+
+def _int_affinity(x: str) -> str:
+    # Numeric operands vs text operands need different rules (SQLite
+    # dispatches on the runtime storage class; Spark types are static):
+    # a REAL value truncates toward zero (1.23e7 -> 12300000, clamping
+    # at +/-2^63), but TEXT parses only the INTEGER prefix — exponents
+    # are junk ('1e3' -> 1). The double round-trip guard separates the
+    # two at runtime: a numeric operand's string form IS its canonical
+    # double rendering, so equality selects the numeric path; any other
+    # text falls to prefix parsing. (A string that happens to equal a
+    # canonical exponent rendering like '1.0E20' takes the numeric path
+    # — the one residue of static typing; documented in COVERAGE.md.)
+    s = f"CAST({x} AS STRING)"
+    d = f"TRY_CAST({x} AS DOUBLE)"
+    return (
+        f"CASE WHEN {d} IS NOT NULL AND CAST({d} AS STRING) = {s} "
+        f"THEN CAST({d} AS BIGINT) "
+        f"ELSE COALESCE("
+        f"TRY_CAST({x} AS BIGINT), "
+        f"TRY_CAST(regexp_extract({s}, '{_INT_PREFIX_RX}', 1) AS BIGINT), "
+        f"CAST(TRY_CAST(regexp_extract({s}, '{_REAL_PREFIX_RX}', 0) "
+        f"AS DOUBLE) AS BIGINT), "
+        f"CAST(0 AS BIGINT)) END"
+    )
+
+
+def _real_affinity(x: str) -> str:
+    return (
+        f"COALESCE(TRY_CAST({x} AS DOUBLE), "
+        f"TRY_CAST(regexp_extract(CAST({x} AS STRING), "
+        f"'{_REAL_PREFIX_RX}', 0) AS DOUBLE), CAST(0.0 AS DOUBLE))"
+    )
+
+
+def _cast_xform(word: str, inner: str) -> str | None:
+    tm = _CAST_TYPE_RE.search(inner)
+    if tm is None:
+        return None
+    ty = tm.group(2).upper()
+    operand = inner[: tm.start()].rstrip()
+    if ty == "INTEGER":
+        return _int_affinity(operand)
+    if ty in ("REAL", "NUMERIC"):
+        return _real_affinity(operand)
+    return (f"{word}({inner[: tm.start()]}{tm.group(1)}"
+            f"{_SQLITE_CAST_TYPES[ty]}{tm.group(3)})")
+
+
+_CAST_CALLS = _calls_re(["cast"])
+
+
+def rewrite_sqlite_casts(sql: str) -> str:
+    """Map SQLite CAST semantics onto Spark: type-name translation for
+    TEXT/BLOB, full prefix-parsing affinity for INTEGER/REAL/NUMERIC.
+    Scoped to CAST call sites, so a column alias that happens to be
+    named `text` is never touched."""
+    return _rewrite_calls(sql, _CAST_CALLS, _cast_xform)
+
+
+# -- connection functions ---------------------------------------------------
+
+SQLITE_VERSION = "3.49.1"  # the reference's embedded SQLite
+_CONNECTION_CALLS = _calls_re(
+    ["changes", "total_changes", "sqlite_version", "random"]
+)
+
+
+def rewrite_connection_functions(
+    sql: str, changes: int, total_changes: int
+) -> str:
+    """Connection-scope SQLite functions: changes()/total_changes()
+    become the caller's DML counters (the reference captures
+    sqlite3_changes the same way, resolver.go:127-130);
+    sqlite_version() reports the emulated dialect version; random()
+    is a full-range signed 64-bit value (Spark's rand() is [0,1))."""
+    values = {
+        "changes": str(changes),
+        "total_changes": str(total_changes),
+        "sqlite_version": f"'{SQLITE_VERSION}'",
+        "random": "CAST((rand() - 0.5) * 1.844674407370955E19 AS BIGINT)",
+    }
+    return _rewrite_calls(
+        sql, _CONNECTION_CALLS,
+        lambda name, inner: None if inner.strip() else values[name.lower()],
+    )
+
+
+def to_spark_sql(sql: str, changes: int = 0, total_changes: int = 0) -> str:
+    """The whole SQLite -> Spark SQL translation of one bound statement:
+    casts, functions, integer division, double-quoted identifiers, then
+    the connection functions with the given DML counters."""
+    sql = rewrite_sqlite_functions(rewrite_sqlite_casts(sql))
+    sql = rewrite_double_quoted_identifiers(
+        rewrite_integer_literal_division(sql)
+    )
+    return rewrite_connection_functions(sql, changes, total_changes)

@@ -10,7 +10,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from litebase_spark.catalog import load, query
-from litebase_spark.functions import compat
+from litebase_spark.functions.dialect import rewrite_sqlite_functions
+
+
+def _sqlite(expr: str):
+    """A SQLite SQL expression as a Column, through the dialect layer."""
+    return F.expr(rewrite_sqlite_functions(expr))
 
 
 @query(
@@ -44,7 +49,7 @@ def func_string(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.upper("p_brand").alias("brand_upper"),
         F.lower("p_type").alias("type_lower"),
         F.substring("p_name", 1, 8).alias("name_prefix"),
-        compat.instr("p_name", "a").alias("first_a"),
+        F.instr("p_name", "a").alias("first_a"),
         F.regexp_replace("p_brand", "Brand#", "B").alias("brand_short"),
         F.trim(F.concat(F.lit("  "), F.col("p_type"), F.lit("  "))).alias(
             "type_trimmed"
@@ -73,7 +78,7 @@ def func_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     """,
     description="Date/time family: year/month/day extraction, date_trunc, "
-    "SQLite strftime (compat translation to date_format), unixepoch, "
+    "SQLite strftime (dialect translation to date_format), unixepoch, "
     "julianday (SQLite convention), datediff. SURVEY §2.B date family.",
     tags=("functions", "compat"),
 )
@@ -85,9 +90,9 @@ def func_date(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.month("o_orderdate").cast("bigint").alias("order_month"),
         F.dayofmonth("o_orderdate").cast("bigint").alias("order_day"),
         F.date_trunc("month", F.col("o_orderdate")).alias("month_start"),
-        compat.strftime("%Y-%m-%d", F.col("o_orderdate")).alias("order_iso"),
-        compat.unixepoch(F.col("o_orderdate")).alias("order_epoch"),
-        F.round(compat.julianday(F.col("o_orderdate")), 6).alias("order_julian"),
+        _sqlite("strftime('%Y-%m-%d', o_orderdate)").alias("order_iso"),
+        _sqlite("unixepoch(o_orderdate)").alias("order_epoch"),
+        _sqlite("round(julianday(o_orderdate), 6)").alias("order_julian"),
         F.datediff(
             F.lit("2000-01-01").cast("timestamp"), F.col("o_orderdate")
         ).cast("bigint").alias("days_to_y2k"),
@@ -104,7 +109,7 @@ def func_date(spark: SparkSession, sf_dir: str) -> DataFrame:
            o_orderdate - INTERVAL 12 HOUR AS half_day_before
     FROM orders
     """,
-    description="SQLite datetime-modifier compat "
+    description="SQLite datetime modifiers "
     "(datetime(ts,'+90 days'), 'start of month' composition, '-12 hours') "
     "— SURVEY §7.3 hard part: modifier-string translation.",
     tags=("functions", "compat"),
@@ -113,11 +118,14 @@ def func_datetime_modifiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
-        compat.sqlite_datetime(F.col("o_orderdate"), "+90 days").alias("due_date"),
-        compat.sqlite_datetime(
-            F.col("o_orderdate"), "start of month", "+1 month"
+        _sqlite("CAST(datetime(o_orderdate, '+90 days') AS TIMESTAMP)").alias(
+            "due_date"
+        ),
+        _sqlite(
+            "CAST(datetime(o_orderdate, 'start of month', '+1 month') "
+            "AS TIMESTAMP)"
         ).alias("next_month_start"),
-        compat.sqlite_datetime(F.col("o_orderdate"), "-12 hours").alias(
+        _sqlite("CAST(datetime(o_orderdate, '-12 hours') AS TIMESTAMP)").alias(
             "half_day_before"
         ),
     )
@@ -349,11 +357,11 @@ def func_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
-        compat.iif(F.col("o_orderstatus") == "F", F.lit(1.0), F.lit(0.0)).alias(
+        F.when(F.col("o_orderstatus") == "F", 1.0).otherwise(0.0).alias(
             "is_finished"
         ),
-        compat.ifnull(
-            compat.nullif(F.col("o_orderpriority"), F.lit("1-URGENT")),
+        F.ifnull(
+            F.nullif(F.col("o_orderpriority"), F.lit("1-URGENT")),
             F.lit("URGENT!"),
         ).alias("priority_rewrite"),
         F.when(F.col("o_totalprice").isNull(), "NULL")
@@ -374,7 +382,7 @@ def func_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE REGEXP_MATCHES(p_brand, '^Brand#[0-9]*$')
     """,
     description="SQLite GLOB (translated to anchored regexp) and quote() "
-    "compat; REGEXP via rlike (SQLite build has no default REGEXP impl — "
+    "through the dialect layer; REGEXP via rlike (SQLite build has no default REGEXP impl — "
     "we exceed parity, SURVEY §2.B note).",
     tags=("functions", "compat"),
 )
@@ -383,8 +391,8 @@ def func_glob_quote(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p.filter(F.col("p_brand").rlike("^Brand#[0-9]*$")).select(
         "p_partkey",
         "p_brand",
-        compat.glob_match("Brand#1?", F.col("p_brand")).alias("glob_b1x"),
-        compat.quote(F.col("p_type")).alias("type_quoted"),
+        _sqlite("glob('Brand#1?', p_brand)").alias("glob_b1x"),
+        _sqlite("quote(p_type)").alias("type_quoted"),
     )
 
 
@@ -600,8 +608,6 @@ def func_json_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def func_jsonb(spark: SparkSession, sf_dir: str) -> DataFrame:
     from litebase_spark.catalog import spread
-    from litebase_spark.functions.dialect import rewrite_sqlite_functions
-
     # single-file fixture scan = one task; the variant parse work is
     # per-row and embarrassingly parallel — spread() (conditional, a
     # no-op on real multi-split inputs) lets it use the executors

@@ -666,11 +666,33 @@ def test_changes_and_total_changes_functions(engine):
         assert (engine.sql("SELECT total_changes() AS t").rows[0].t
                 == base + 4)
         v = engine.sql("SELECT sqlite_version() AS v").rows[0].v
-        assert v.count(".") == 2
+        assert v == "3.49.1"  # the reference's embedded SQLite
         r = engine.sql("SELECT random() AS r").rows[0].r
         assert isinstance(r, int)
     finally:
         engine.sql("DROP TABLE IF EXISTS t_ch")
+
+
+def test_df_translates_like_sql(engine):
+    """Engine.df (the HTTP stream route) runs the same translation as
+    Engine.sql, connection functions included."""
+    stmt = ("SELECT random() AS r, changes() AS c, total_changes() AS t, "
+            "sqlite_version() AS v")
+    df = engine.df(stmt)
+    assert df.schema["r"].dataType.typeName() == "long"
+    got = df.collect()[0]
+    want = engine.sql(stmt).rows[0]
+    assert (got.c, got.t, got.v) == (want.c, want.t, want.v)
+
+
+def test_string_literals_survive_translation(engine):
+    """SQLite spellings inside a string literal are data: neither the
+    CAST nor the connection-function rewrite may touch them."""
+    for text in ["random()", "changes()", "sqlite_version()",
+                 "CAST(1 AS TEXT)", "CAST('7x' AS INTEGER)"]:
+        lit = text.replace("'", "''")
+        assert engine.sql(f"SELECT '{lit}' AS s").rows[0].s == text
+        assert engine.df(f"SELECT '{lit}' AS s").collect()[0].s == text
 
 
 def test_trigger_after_insert_maintains_derived_table(engine):

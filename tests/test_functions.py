@@ -1,87 +1,107 @@
-"""Unit tests for the SQLite compat layer (SURVEY §2.B scalar functions)."""
+"""Unit tests for the SQLite dialect layer (SURVEY §2.B scalar
+functions) and the FTS/JSON operators. Value-level SQLite parity of the
+scalar surface lives in test_sqlite_parity.SCALAR_PARITY_EXPRS."""
 
 from __future__ import annotations
 
 import datetime as dt
+import sqlite3
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.errors import AnalysisException
 
-from litebase_spark.functions import compat
-
-
-def one(spark, col):
-    return spark.range(1).select(col.alias("v")).collect()[0].v
+from litebase_spark.engine import Engine
+from litebase_spark.functions.dialect import (
+    rewrite_sqlite_functions,
+    strftime_format,
+)
 
 
 def test_strftime_format_translation():
-    assert compat.strftime_format("%Y-%m-%d") == "yyyy-MM-dd"
-    assert compat.strftime_format("%H:%M:%S") == "HH:mm:ss"
+    assert strftime_format("%Y-%m-%d") == "yyyy-MM-dd"
+    assert strftime_format("%H:%M:%S") == "HH:mm:ss"
+    assert strftime_format("year %Y") == "'year 'yyyy"
     with pytest.raises(ValueError):
-        compat.strftime_format("%q")
-
-
-def test_strftime_literal_quoting(spark):
-    ts = F.lit("2024-03-05 07:08:09").cast("timestamp")
-    assert one(spark, compat.strftime("year %Y", ts)) == "year 2024"
-
-
-def test_julianday_epoch(spark):
-    # SQLite: julianday('1970-01-01') = 2440587.5
-    ts = F.lit("1970-01-01 00:00:00").cast("timestamp")
-    assert one(spark, compat.julianday(ts)) == pytest.approx(2440587.5)
+        strftime_format("%q")
 
 
 def test_datetime_modifiers(spark):
-    ts = F.lit("2024-01-15 10:30:00").cast("timestamp")
-    got = one(spark, compat.sqlite_datetime(ts, "+1 month"))
-    assert got == dt.datetime(2024, 2, 15, 10, 30)  # keeps time-of-day
-    got = one(spark, compat.sqlite_datetime(ts, "start of month", "+45 minutes"))
+    """Modifier values are parity rows; here: a modifier chain keeps
+    TIMESTAMP under a cast (what func_datetime_modifiers relies on),
+    and an unsupported modifier or strftime directive fails loudly
+    instead of returning SQLite's NULL or a wrong value."""
+    eng = Engine(spark)
+    got = eng.sql(
+        "SELECT CAST(datetime('2024-01-15 10:30:00', 'start of month', "
+        "'+45 minutes') AS TIMESTAMP) AS v"
+    ).rows[0].v
     assert got == dt.datetime(2024, 1, 1, 0, 45)
-    got = one(spark, compat.sqlite_datetime(ts, "-2 days"))
-    assert got == dt.datetime(2024, 1, 13, 10, 30)
-    with pytest.raises(ValueError):
-        compat.sqlite_datetime(ts, "next thursday")
+    with pytest.raises(AnalysisException, match="datetime"):
+        eng.sql("SELECT datetime('2024-01-15 10:30:00', 'next thursday')")
+    with pytest.raises(AnalysisException, match="strftime"):
+        eng.sql("SELECT strftime('%q', '2024-01-15')")
 
 
-def test_iif_ifnull_quote(spark):
-    assert one(spark, compat.iif(F.lit(2) > 1, F.lit("y"), F.lit("n"))) == "y"
-    assert one(spark, compat.ifnull(F.lit(None), F.lit(7))) == 7
-    assert one(spark, compat.quote(F.lit("o'brien"))) == "'o''brien'"
-    assert one(spark, compat.quote(F.lit(None).cast("string"))) == "NULL"
+def _column_parity(spark, values, ddl, sqlite_type, exprs):
+    """Evaluate each SQLite expression over column v through the
+    dialect layer and through stdlib sqlite3; return the mismatches."""
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(values)],
+                               f"i int, v {ddl}")
+    con = sqlite3.connect(":memory:")
+    con.execute(f"CREATE TABLE t (i INTEGER, v {sqlite_type})")
+    con.executemany("INSERT INTO t VALUES (?, ?)", enumerate(values))
+    bad = []
+    for e in exprs:
+        got = [r[1] for r in df.selectExpr(
+            "i", rewrite_sqlite_functions(e)).orderBy("i").collect()]
+        want = [r[0] for r in con.execute(f"SELECT {e} FROM t ORDER BY i")]
+        if got != want:
+            bad.append((e, got, want))
+    return bad
 
 
 def test_glob_translation(spark):
-    assert one(spark, compat.glob_match("Brand#1?", F.lit("Brand#12")))
-    assert not one(spark, compat.glob_match("Brand#1?", F.lit("Brand#123")))
-    assert one(spark, compat.glob_match("*join*", F.lit("a join b")))
-    assert one(spark, compat.glob_match("[abc]x", F.lit("bx")))
+    """GLOB over column values, differential against stdlib sqlite3:
+    wildcards span newlines, ']' first in a set is a member, ranges,
+    negation, and regex metacharacters stay literal."""
+    values = ["Brand#12", "Brand#123", "a join b", "bx", "a\nb", "]", "x",
+              "a.b", "axb", "-", None]
+    exprs = [f"glob('{p}', v)" for p in (
+        "Brand#1?", "*join*", "[abc]x", "a*", "a?b", "[]x]", "[^]x]",
+        "[a-c]x", "[-a]", "a.b", "*",
+    )]
+    assert not _column_parity(spark, values, "string", "TEXT", exprs)
 
 
-def test_total_on_empty(spark):
-    df = spark.range(1).filter("id < 0")
-    got = df.agg(compat.total(F.col("id")).alias("t")).collect()[0].t
-    assert got == 0.0  # SQLite total(): 0.0, never NULL
+def test_iif_ifnull_quote(spark):
+    """quote() dispatches on the column's storage class; iif takes any
+    condition value, true when non-zero (ifnull is Spark's own builtin,
+    covered by the parity rows)."""
+    cases = [
+        (["it's", "x", None], "string", "TEXT"),
+        ([5, -7, None], "bigint", "INTEGER"),
+        ([1.5, -0.25, None], "double", "REAL"),
+        ([b"\xab\x01", None], "binary", "BLOB"),
+    ]
+    for values, ddl, sqlite_type in cases:
+        exprs = ["quote(v)"]
+        if ddl != "binary":  # Spark has no BINARY -> BOOLEAN cast
+            exprs.append("iif(v, 'y', 'n')")
+        assert not _column_parity(spark, values, ddl, sqlite_type, exprs)
 
 
-def test_sql_registration(spark):
-    names = compat.register_sqlite_functions(spark)
-    assert "iif" in names and "julianday" in names
-    r = spark.sql(
-        "SELECT iif(true, 1.0, 2.0) AS a, "
-        "julianday(TIMESTAMP '1970-01-01') AS jd, "
-        "unixepoch(TIMESTAMP '1970-01-02') AS ue, "
-        "sqlite_quote('it''s') AS q"
-    ).collect()[0]
-    assert r.a == 1.0 and r.jd == pytest.approx(2440587.5)
-    assert r.ue == 86400 and r.q == "'it''s'"
+def test_engine_registers_no_temporary_functions(spark):
+    """The dialect layer inlines every SQLite function as plain Spark
+    SQL, so an Engine adds nothing to the session's function list."""
+    def user_functions():
+        return {r[0] for r in spark.sql("SHOW USER FUNCTIONS").collect()}
 
-
-def test_typeof_mapping():
-    assert compat.typeof("bigint") == "integer"
-    assert compat.typeof("double") == "real"
-    assert compat.typeof("string") == "text"
-    assert compat.typeof("binary") == "blob"
+    before = user_functions()
+    Engine(spark)
+    after = user_functions()
+    assert after == before
+    assert not after & {"iif", "julianday", "unixepoch", "sqlite_quote",
+                        "likely", "unlikely", "likelihood"}
 
 
 def test_fts_match_semantics(spark):
@@ -297,24 +317,28 @@ def test_int_division_rewrite_left_operand_guard():
     assert rw("WHEN 1/2 THEN 3/4") == "WHEN 1 DIV 2 THEN 3 DIV 4"
 
 
-def test_rewriters_never_touch_single_quoted_strings():
-    """Property: the dialect text rewriters (integer-literal division,
-    double-quoted identifiers) preserve every single-quoted string
-    literal byte-for-byte, for arbitrary literal content including
-    embedded quotes, slashes, digits and double quotes."""
+def test_rewriters_never_touch_single_quoted_strings(spark):
+    """Property: the whole Engine translation (casts, functions, integer
+    division, double-quoted identifiers, connection functions)
+    preserves every single-quoted string literal byte-for-byte, for
+    arbitrary literal content including embedded quotes, slashes,
+    digits, double quotes and SQLite call spellings."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from litebase_spark.functions.dialect import (
-        rewrite_double_quoted_identifiers,
-        rewrite_integer_literal_division,
-    )
-
-    content = st.text(
-        alphabet=st.characters(
-            blacklist_categories=("Cs",), blacklist_characters="'"
+    eng = Engine(spark)
+    content = st.one_of(
+        st.text(
+            alphabet=st.characters(
+                blacklist_categories=("Cs",), blacklist_characters="'"
+            ),
+            max_size=20,
         ),
-        max_size=20,
+        st.sampled_from([
+            "random()", "changes()", "sqlite_version()", "CAST(1 AS TEXT)",
+            "CAST('7x' AS INTEGER)", "glob('a*', x)", "iif(1, 2, 3)",
+            "quote(5)", "julianday('2024-01-01')", "7/2", '"col"',
+        ]),
     )
 
     @given(st.lists(content, min_size=1, max_size=4), st.integers(1, 99),
@@ -326,11 +350,10 @@ def test_rewriters_never_touch_single_quoted_strings():
         for i, lit in enumerate(lits):
             esc = lit.replace("'", "''")
             parts.append(f"'{esc}'")
-            parts.append(f" , {a}/{b} , \"col{i}\" , ")
-        sql = "SELECT " + "".join(parts)
-        out = rewrite_double_quoted_identifiers(
-            rewrite_integer_literal_division(sql)
-        )
+            parts.append(f" , {a}/{b} , \"col{i}\" , CAST(c AS TEXT) , "
+                         "changes() , random() , ")
+        sql = "SELECT " + "".join(parts) + "1"
+        out, _ = eng._translate(sql, None)
         # every literal survives untouched
         for lit in lits:
             esc = lit.replace("'", "''")
@@ -338,6 +361,8 @@ def test_rewriters_never_touch_single_quoted_strings():
         # the rewrite targets actually transformed outside strings
         assert f"{a} DIV {b}" in out
         assert "`col0`" in out and '"col0"' not in out
+        assert "CAST(c AS STRING)" in out and " changes()" not in out
+        assert "rand()" in out
 
     check()
 

@@ -313,6 +313,27 @@ SCALAR_PARITY_EXPRS = [
     # column/real-headed chains must NOT truncate (round-5 guard: the
     # literal must be the true LEFT operand before '/' becomes DIV)
     "100*5/2", "5*1/2", "8/2*3/4", "7%3/2", "9.0/2/3", "2.5*2/2",
+    # GLOB: wildcards span newlines; ']' first in a set is a member;
+    # an unterminated or empty set never matches; a trailing newline
+    # is part of the value, not skipped by the end anchor
+    "glob('a*', 'a'||char(10)||'b')", "glob('a?b', 'a'||char(10)||'b')",
+    "glob('[]x]', ']')", "glob('[^]x]', ']')", "glob('[abc', '[abc')",
+    "glob('a', 'a'||char(10))", "glob('[a-c-e]', '-')",
+    "glob('[z-a]x', 'ax')", "glob('[^z-a]x', 'ax')",
+    "glob('Brand#1?', 'Brand#12')", "glob('Brand#1?', 'Brand#123')",
+    "glob('*join*', 'a join b')", "glob('[abc]x', 'bx')",
+    # quote() renders each storage class; iif's condition is any value
+    "quote(5)", "quote(-7)", "quote(1.5)", "quote(X'ab')", "quote(1 < 2)",
+    "quote('o''brien')", "iif(1, 'a', 'b')", "iif(0, 2, 3)",
+    "iif(0.5, 'a', 'b')", "iif(NULL, 1, 2)", "iif(2 > 1, 'y', 'n')",
+    # strftime literal text, the julianday epoch, modifier chains
+    "strftime('year %Y', '2024-03-05 07:08:09')",
+    "julianday('1970-01-01')", "julianday('2024-01-15 10:30:00')",
+    "julianday('2024-01-01', '+1 day')", "unixepoch('2024-01-01', '-1 hour')",
+    "datetime('2024-01-15 10:30:00', '+1 month')",
+    "datetime('2024-01-15 10:30:00', 'start of month', '+45 minutes')",
+    "datetime('2024-01-15 10:30:00', '-2 days')",
+    "likely(1 < 2)", "unlikely(1 > 2)", "likelihood(1 < 2, 0.5)",
 ]
 
 
