@@ -18,6 +18,9 @@ Maps litebase's query lifecycle (SURVEY §3.1) onto a SparkSession:
   * Query metrics — per-statement-hash latency aggregation with
     count/avg/min/max/p50/p90/p99, the reference's telemetry shape
     (reference: pkg/logs/query_metric.go:14-28), queryable as a DataFrame.
+    ``Engine.sql`` times each statement once on a monotonic clock and
+    records it under the caller's text; percentiles come from a
+    fixed log-scale histogram, so memory does not grow with traffic.
   * Databases/branches — namespace management in the session catalog
     (reference: pkg/database/system_database.go:98-131); branch forking is
     snapshot-copy of a namespace location.
@@ -25,10 +28,13 @@ Maps litebase's query lifecycle (SURVEY §3.1) onto a SparkSession:
 
 from __future__ import annotations
 
+import bisect
+import math
 import re
+import threading
 import time
 import zlib
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -94,30 +100,91 @@ class QueryResult:
         return iter(self.rows)
 
 
-@dataclass
-class _MetricAccumulator:
-    statement: str
-    count: int = 0
-    total: float = 0.0
-    vmin: float = float("inf")
-    vmax: float = 0.0
-    latencies: list[float] = field(default_factory=list)
+# Latency histogram geometry: bucket i holds latencies in
+# [_HIST_FLOOR_S * LATENCY_BUCKET_RATIO**i, ... **(i + 1)), and a
+# percentile read from a bucket is its geometric midpoint, so between
+# 1 µs and the top bucket (~28 h) it is within LATENCY_RELATIVE_ERROR of
+# the exact sample. Latencies outside that span land in the end buckets;
+# min/max stay exact and every percentile is clamped to them.
+LATENCY_BUCKET_RATIO = 1.02
+LATENCY_RELATIVE_ERROR = math.sqrt(LATENCY_BUCKET_RATIO) - 1
+_HIST_FLOOR_S = 1e-6
+_HIST_BUCKETS = int(math.log(1e5 / _HIST_FLOOR_S)
+                    / math.log(LATENCY_BUCKET_RATIO)) + 1
+# upper edges of buckets 0 .. _HIST_BUCKETS - 2 (bisect finds the bucket)
+_HIST_EDGES = [_HIST_FLOOR_S * LATENCY_BUCKET_RATIO ** i
+               for i in range(1, _HIST_BUCKETS)]
+
+
+class _LatencyAccumulator:
+    """count/total/min/max and a sparse log-scale histogram for one
+    statement (hash): O(1) memory however many samples it takes, the
+    role of the reference's fixed 64-byte metric record."""
+
+    __slots__ = ("statement_hash", "statement", "count", "total",
+                 "vmin", "vmax", "hist")
+
+    def __init__(self, statement_hash: int, statement: str) -> None:
+        self.statement_hash = statement_hash
+        self.statement = statement
+        self.count = 0
+        self.total = 0.0
+        self.vmin = math.inf
+        self.vmax = 0.0
+        self.hist: dict[int, int] = {}  # bucket index -> samples
+
+    def add(self, latency: float) -> None:
+        self.count += 1
+        self.total += latency
+        if latency < self.vmin:
+            self.vmin = latency
+        if latency > self.vmax:
+            self.vmax = latency
+        i = bisect.bisect_right(_HIST_EDGES, latency)
+        self.hist[i] = self.hist.get(i, 0) + 1
+
+    def row(self) -> dict[str, Any]:
+        # nearest-rank percentiles (0-based rank int(p * count)), read
+        # off the histogram in one ascending pass
+        ranks = [min(self.count - 1, int(p * self.count))
+                 for p in (0.50, 0.90, 0.99)]
+        pcts, seen = [], 0
+        for i in sorted(self.hist):
+            seen += self.hist[i]
+            mid = _HIST_FLOOR_S * LATENCY_BUCKET_RATIO ** (i + 0.5)
+            while len(pcts) < len(ranks) and seen > ranks[len(pcts)]:
+                pcts.append(min(self.vmax, max(self.vmin, mid)))
+        return {
+            "statement_hash": self.statement_hash,
+            "statement": self.statement,
+            "count": self.count,
+            "avg": self.total / self.count,
+            "min": self.vmin,
+            "max": self.vmax,
+            "p50": pcts[0],
+            "p90": pcts[1],
+            "p99": pcts[2],
+        }
 
 
 class QueryMetrics:
     """Per-statement-hash latency telemetry (reference
     pkg/logs/query_metric.go:14-46 keeps count/avg/min/max/p50/p90/p99 in
-    64-byte records keyed by statement hash; we keep exact samples locally
-    and aggregate with percentile_approx when reading back at scale)."""
+    64-byte records keyed by statement hash). Each statement, overall and
+    per minute bucket, is one ``_LatencyAccumulator``: recording costs
+    O(1) memory, and p50/p90/p99 come from its log-scale histogram,
+    within ``LATENCY_RELATIVE_ERROR`` of the exact percentiles."""
 
     BUCKET_SECONDS = 60  # reference flushes per-second buckets every 5s;
     # minute grain fits the driver-side read pattern
 
     def __init__(self) -> None:
-        self._acc: dict[int, _MetricAccumulator] = {}
+        # server handler threads record concurrently; flush re-enters
+        self._lock = threading.RLock()
+        self._acc: dict[int, _LatencyAccumulator] = {}
         # time-bucketed log: bucket_ts -> statement_hash -> accumulator
         # (reference pkg/logs/query_log.go keeps queue[time][checksum])
-        self._buckets: dict[int, dict[int, _MetricAccumulator]] = {}
+        self._buckets: dict[int, dict[int, _LatencyAccumulator]] = {}
 
     @staticmethod
     def statement_hash(sql: str) -> int:
@@ -127,49 +194,26 @@ class QueryMetrics:
 
     def record(self, sql: str, latency: float, ts: float | None = None) -> None:
         h = self.statement_hash(sql)
-        acc = self._acc.get(h)
-        if acc is None:
-            acc = self._acc[h] = _MetricAccumulator(statement=sql)
-        acc.count += 1
-        acc.total += latency
-        acc.vmin = min(acc.vmin, latency)
-        acc.vmax = max(acc.vmax, latency)
-        acc.latencies.append(latency)
         bucket = int((ts if ts is not None else time.time())
                      // self.BUCKET_SECONDS) * self.BUCKET_SECONDS
-        bacc = self._buckets.setdefault(bucket, {}).get(h)
-        if bacc is None:
-            bacc = self._buckets[bucket][h] = _MetricAccumulator(statement=sql)
-        bacc.count += 1
-        bacc.total += latency
-        bacc.vmin = min(bacc.vmin, latency)
-        bacc.vmax = max(bacc.vmax, latency)
-        bacc.latencies.append(latency)
+        with self._lock:
+            per_bucket = self._buckets.get(bucket)
+            if per_bucket is None:
+                per_bucket = self._buckets[bucket] = {}
+            for accs in (self._acc, per_bucket):
+                acc = accs.get(h)
+                if acc is None:
+                    acc = accs[h] = _LatencyAccumulator(h, sql)
+                acc.add(latency)
+
+    def total_count(self) -> int:
+        """Statements recorded so far, over every statement hash."""
+        with self._lock:
+            return sum(a.count for a in self._acc.values())
 
     def snapshot(self) -> list[dict[str, Any]]:
-        out = []
-        for h, a in sorted(self._acc.items()):
-            lat = sorted(a.latencies)
-
-            def pct(p: float) -> float:
-                if not lat:
-                    return 0.0
-                return lat[min(len(lat) - 1, int(p * len(lat)))]
-
-            out.append(
-                {
-                    "statement_hash": h,
-                    "statement": a.statement,
-                    "count": a.count,
-                    "avg": a.total / a.count if a.count else 0.0,
-                    "min": a.vmin if a.count else 0.0,
-                    "max": a.vmax,
-                    "p50": pct(0.50),
-                    "p90": pct(0.90),
-                    "p99": pct(0.99),
-                }
-            )
-        return out
+        with self._lock:
+            return [a.row() for _, a in sorted(self._acc.items())]
 
     def to_df(self, spark: SparkSession) -> DataFrame:
         snap = self.snapshot()
@@ -181,26 +225,6 @@ class QueryMetrics:
 
     # -- time-bucketed query log (reference pkg/logs/query_log.go) ----------
 
-    @staticmethod
-    def _bucket_row(bucket: int, h: int, a: _MetricAccumulator) -> dict:
-        lat = sorted(a.latencies)
-
-        def pct(p: float) -> float:
-            return lat[min(len(lat) - 1, int(p * len(lat)))] if lat else 0.0
-
-        return {
-            "bucket_ts": bucket,
-            "statement_hash": h,
-            "statement": a.statement,
-            "count": a.count,
-            "avg": a.total / a.count if a.count else 0.0,
-            "min": a.vmin if a.count else 0.0,
-            "max": a.vmax,
-            "p50": pct(0.50),
-            "p90": pct(0.90),
-            "p99": pct(0.99),
-        }
-
     def log_entries(
         self, start: float | None = None, end: float | None = None
     ) -> list[dict[str, Any]]:
@@ -208,13 +232,14 @@ class QueryMetrics:
         — the reference's GET .../metrics/query with from/to filtering
         over the flushed query log (pkg/logs/query_log.go)."""
         out = []
-        for bucket in sorted(self._buckets):
-            if start is not None and bucket + self.BUCKET_SECONDS <= start:
-                continue
-            if end is not None and bucket > end:
-                continue
-            for h, a in sorted(self._buckets[bucket].items()):
-                out.append(self._bucket_row(bucket, h, a))
+        with self._lock:
+            for bucket in sorted(self._buckets):
+                if start is not None and bucket + self.BUCKET_SECONDS <= start:
+                    continue
+                if end is not None and bucket > end:
+                    continue
+                for _, a in sorted(self._buckets[bucket].items()):
+                    out.append({"bucket_ts": bucket, **a.row()})
         return out
 
     def flush(self, path: str) -> int:
@@ -223,12 +248,13 @@ class QueryMetrics:
         buckets to tiered storage). Returns rows flushed."""
         import json as _json
 
-        rows = self.log_entries()
-        if rows:
-            with open(path, "a") as f:
-                for r in rows:
-                    f.write(_json.dumps(r) + "\n")
-        self._buckets.clear()
+        with self._lock:
+            rows = self.log_entries()
+            if rows:
+                with open(path, "a") as f:
+                    for r in rows:
+                        f.write(_json.dumps(r) + "\n")
+            self._buckets.clear()
         return len(rows)
 
     @staticmethod
@@ -312,17 +338,61 @@ class Engine:
         (pkg/database/database_connection.go:52, 5000 ms): the
         statement's Spark jobs run under a dedicated job group that a
         watchdog timer cancels, surfacing TimeoutError.
+
+        This is where a statement is timed and recorded into
+        ``metrics``, once, under the caller's text — the reference
+        stamps latency once in its resolver (pkg/database/
+        resolver.go:136). The routes below return untimed results.
         """
+        stop = self._start_timer(statement)
         if transaction_id is not None:
             txn = self._transactions.get(transaction_id)
             if txn is None:
                 raise LookupError(f"no open transaction {transaction_id!r}")
-            return txn.sql(statement, params)
-        if timeout is not None:
-            return self._sql_with_timeout(statement, params, collect, timeout)
-        t0 = time.time()
-        head_class = classify_statement(statement)
-        if head_class == "VACUUM":
+            res = txn._execute(statement, params)
+        elif timeout is not None:
+            res = self._execute_with_timeout(statement, params, collect, timeout)
+        else:
+            res = self._execute(statement, params, collect)
+        return stop(res)
+
+    def stream(self, statement: str, params: list | dict | None = None) -> QueryResult:
+        """Lazy read for the NDJSON stream route: ``rows`` iterates the
+        DataFrame through ``toLocalIterator`` (one partition at a time,
+        prefetching the next), and ``row_count``/``latency`` are stamped
+        and the statement recorded when the caller exhausts it — so the
+        timed span covers the caller's consumption, as a collect's
+        would."""
+        stop = self._start_timer(statement)
+        df = self.df(statement, params)
+        res = QueryResult(list(df.columns), [], 0, 0, 0.0,
+                          classify_statement(statement))
+
+        def rows():
+            for row in df.toLocalIterator(prefetchPartitions=True):
+                res.row_count += 1
+                yield row
+            stop(res)
+
+        res.rows = rows()
+        return res
+
+    def _start_timer(self, statement: str):
+        """Start timing ``statement`` on the monotonic clock; the returned
+        function stamps a result's latency and records the statement into
+        ``metrics`` — the one record site."""
+        t0 = time.perf_counter()
+
+        def stop(res: QueryResult) -> QueryResult:
+            res.latency = time.perf_counter() - t0
+            self.metrics.record(statement, res.latency)
+            return res
+
+        return stop
+
+    def _execute(self, statement: str, params, collect: bool = True) -> QueryResult:
+        stmt_class = classify_statement(statement)
+        if stmt_class == "VACUUM":
             # Reference rejects VACUUM from the query API (needs drained
             # connections — pkg/database/resolver.go:100-103); our analog
             # is the explicit compaction job (sources/io.py compact_table).
@@ -330,55 +400,36 @@ class Engine:
                 "VACUUM is not allowed through the query API; "
                 "use litebase_spark.sources.io.compact_table"
             )
-        import re as _re
-
-        eqp = _re.match(
-            r"(?is)^\s*EXPLAIN\s+QUERY\s+PLAN\s+(.+)$", statement
-        )
+        eqp = re.match(r"(?is)^\s*EXPLAIN\s+QUERY\s+PLAN\s+(.+)$", statement)
         if eqp:
             # SQLite EXPLAIN QUERY PLAN dialect (sqlite.org/eqp.html):
             # (id, parent, notused, detail) rows over the Catalyst plan
-            from pyspark.sql import Row as _Row
-
             rows = [
-                _Row(id=i, parent=p, notused=n, detail=d)
+                Row(id=i, parent=p, notused=n, detail=d)
                 for i, p, n, d in self.explain_query_plan(eqp.group(1))
             ]
-            latency = time.time() - t0
-            self.metrics.record(statement, latency)
-            return QueryResult(
-                columns=["id", "parent", "notused", "detail"],
-                rows=rows,
-                row_count=len(rows),
-                changes=0,
-                latency=latency,
-                statement_class="DQL",
-            )
-        if head_class == "PRAGMA":
-            return self._run_pragma(statement, t0)
-        if head_class == "MAINT":
-            return self._run_maintenance(statement, t0)
-        if head_class == "TCL":
-            return self._run_tcl(statement, t0)
-        if self._autotxn is not None and head_class == "DML":
+            return QueryResult(["id", "parent", "notused", "detail"],
+                               rows, len(rows), 0, 0.0, "DQL")
+        if stmt_class == "PRAGMA":
+            return self._run_pragma(statement)
+        if stmt_class == "MAINT":
+            return self._run_maintenance(statement)
+        if stmt_class == "TCL":
+            return self._run_tcl(statement, None)
+        if self._autotxn is not None and stmt_class == "DML":
             # SQL-level BEGIN routes subsequent writes into the open
             # transaction (interactive-shell semantics, reference
             # pkg/cli/cmd/sql.go / transaction routing
             # pkg/http/query_controller.go:94-120).
-            return self._autotxn.sql(statement, params)
-        stmt_class = classify_statement(statement)
+            return self._autotxn._execute(statement, params)
         sql_text, args = self._translate(statement, params)
         returning = None
         if stmt_class == "DML":
             sql_text, returning = self._split_returning(sql_text)
         if stmt_class == "DDL":
-            res = self._try_attach_ddl(sql_text, t0)
-            if res is not None:
-                return res
-            res = self._try_trigger_ddl(sql_text, t0)
-            if res is not None:
-                return res
-            res = self._try_index_ddl(sql_text, t0)
+            res = (self._try_attach_ddl(sql_text)
+                   or self._try_trigger_ddl(sql_text)
+                   or self._try_index_ddl(sql_text))
             if res is not None:
                 return res
             # CREATE TABLE ... PRIMARY KEY: record the key (conflict target
@@ -391,17 +442,9 @@ class Engine:
                 self._last_changes = changes
                 self._total_changes += changes
                 self._fire_triggers(sql_text, changes)
-                latency = time.time() - t0
-                self.metrics.record(statement, latency)
-                return QueryResult(
-                    columns=rcols,
-                    rows=rrows,
-                    row_count=len(rrows),
-                    changes=changes,
-                    latency=latency,
-                    statement_class=stmt_class,
-                )
-        if _re.search(r"(?i)\bsqlite_master\b", sql_text):
+                return QueryResult(rcols, rrows, len(rrows), changes, 0.0,
+                                   stmt_class)
+        if re.search(r"(?i)\bsqlite_master\b", sql_text):
             self._refresh_sqlite_master()
         df = self.spark.sql(sql_text, args=args) if args else self.spark.sql(sql_text)
         if collect and stmt_class in ("DQL", "OTHER"):
@@ -424,18 +467,9 @@ class Engine:
                 self._fire_triggers(sql_text, changes)
             if returning is not None:
                 rows, columns = self._returning_rows(sql_text, returning)
-        latency = time.time() - t0
-        self.metrics.record(statement, latency)
-        return QueryResult(
-            columns=columns,
-            rows=rows,
-            row_count=len(rows),
-            changes=changes,
-            latency=latency,
-            statement_class=stmt_class,
-        )
+        return QueryResult(columns, rows, len(rows), changes, 0.0, stmt_class)
 
-    def _sql_with_timeout(
+    def _execute_with_timeout(
         self,
         statement: str,
         params,
@@ -446,7 +480,6 @@ class Engine:
         watchdog timer — cancellation interrupts the statement's Spark
         jobs only (other sessions/statements are untouched), and the
         caller sees TimeoutError, like a busy_timeout expiry."""
-        import threading
         import uuid as _uuid
 
         sc = self.spark.sparkContext
@@ -461,7 +494,7 @@ class Engine:
         timer = threading.Timer(timeout, _cancel)
         timer.start()
         try:
-            return self.sql(statement, params, collect)
+            return self._execute(statement, params, collect)
         except Exception:
             if fired.is_set():
                 raise TimeoutError(
@@ -696,7 +729,7 @@ class Engine:
         r"(?is)^\s*DETACH\s+(?:DATABASE\s+)?([A-Za-z_]\w*)\s*$"
     )
 
-    def _try_attach_ddl(self, sql_text: str, t0: float):
+    def _try_attach_ddl(self, sql_text: str) -> QueryResult | None:
         """ATTACH DATABASE '<dir>' AS alias / DETACH alias (SQLite
         authorizer codes SQLITE_ATTACH/SQLITE_DETACH,
         pkg/sqlite3/constants.go:84-85). A database here is a directory
@@ -729,9 +762,7 @@ class Engine:
                     f"CREATE TABLE IF NOT EXISTS `{alias}`.`{tq}` "
                     f"USING PARQUET LOCATION '{loc}'"
                 )
-            latency = time.time() - t0
-            self.metrics.record(sql_text, latency)
-            return QueryResult([], [], 0, 0, latency, "DDL")
+            return QueryResult([], [], 0, 0, 0.0, "DDL")
         m = self._DETACH_RE.match(sql_text)
         if m:
             alias = m.group(1)
@@ -739,12 +770,10 @@ class Engine:
             if alias not in dbs:
                 raise ValueError(f"no such database: {alias}")
             self.spark.sql(f"DROP DATABASE `{alias}` CASCADE")
-            latency = time.time() - t0
-            self.metrics.record(sql_text, latency)
-            return QueryResult([], [], 0, 0, latency, "DDL")
+            return QueryResult([], [], 0, 0, 0.0, "DDL")
         return None
 
-    def _try_trigger_ddl(self, sql_text: str, t0: float):
+    def _try_trigger_ddl(self, sql_text: str) -> QueryResult | None:
         """CREATE/DROP TRIGGER (reference authorizer DDL codes
         SQLITE_CREATE_TRIGGER/SQLITE_DROP_TRIGGER,
         pkg/sqlite3/constants.go:74-77). Statement-level AFTER triggers:
@@ -770,18 +799,14 @@ class Engine:
                     "statements": stmts,
                     "sql": sql_text.strip(),
                 }
-            latency = time.time() - t0
-            self.metrics.record(sql_text, latency)
-            return QueryResult([], [], 0, 0, latency, "DDL")
+            return QueryResult([], [], 0, 0, 0.0, "DDL")
         m = self._TRIGGER_DROP_RE.match(sql_text)
         if m:
             if_exists, name = m.group(1), m.group(2)
             if name not in self._triggers and not if_exists:
                 raise ValueError(f"no such trigger: {name}")
             self._triggers.pop(name, None)
-            latency = time.time() - t0
-            self.metrics.record(sql_text, latency)
-            return QueryResult([], [], 0, 0, latency, "DDL")
+            return QueryResult([], [], 0, 0, 0.0, "DDL")
         return None
 
     def _fire_triggers(self, sql_text: str, changes: int) -> None:
@@ -808,7 +833,7 @@ class Engine:
         finally:
             self._in_trigger = False
 
-    def _try_index_ddl(self, sql_text: str, t0: float):
+    def _try_index_ddl(self, sql_text: str) -> QueryResult | None:
         """CREATE INDEX / DROP INDEX as metadata DDL (SQLite surface the
         reference inherits wholesale). Spark has no secondary indexes —
         Parquet min/max footers, partition pruning and the Z-order
@@ -828,7 +853,7 @@ class Engine:
             uniq, if_not, name, table, cols = m.groups()
             if name in self._indexes:
                 if if_not:
-                    return self._index_result(t0, sql_text)
+                    return QueryResult([], [], 0, 0, 0.0, "DDL")
                 raise ValueError(f"index {name} already exists")
             self._indexes[name] = {
                 "table": table,
@@ -836,7 +861,7 @@ class Engine:
                 "unique": bool(uniq),
                 "sql": sql_text.strip().rstrip(";"),
             }
-            return self._index_result(t0, sql_text)
+            return QueryResult([], [], 0, 0, 0.0, "DDL")
         m = _re.match(
             r"(?is)^\s*DROP\s+INDEX\s+(IF\s+EXISTS\s+)?"
             r"([A-Za-z_][\w]*)\s*;?\s*$",
@@ -847,16 +872,8 @@ class Engine:
             if name not in self._indexes and not if_exists:
                 raise ValueError(f"no such index: {name}")
             self._indexes.pop(name, None)
-            return self._index_result(t0, sql_text)
+            return QueryResult([], [], 0, 0, 0.0, "DDL")
         return None
-
-    def _index_result(self, t0: float, statement: str) -> QueryResult:
-        latency = time.time() - t0
-        self.metrics.record(statement, latency)
-        return QueryResult(
-            columns=[], rows=[], row_count=0, changes=0,
-            latency=latency, statement_class="DDL",
-        )
 
     def _refresh_sqlite_master(self) -> None:
         """Materialize the ``sqlite_master`` schema table
@@ -962,7 +979,7 @@ class Engine:
         }
     )
 
-    def _run_pragma(self, statement: str, t0: float) -> QueryResult:
+    def _run_pragma(self, statement: str) -> QueryResult:
         import re
 
         m = re.match(r"(?is)\s*PRAGMA\s+(\w+)\s*(?:\(([^)]*)\))?\s*;?\s*$",
@@ -1016,14 +1033,9 @@ class Engine:
         else:
             raise PermissionError(f"PRAGMA {name} is not in the allowlist")
         rows = df.collect()
-        latency = time.time() - t0
-        self.metrics.record(statement, latency)
-        return QueryResult(
-            columns=list(df.columns), rows=rows, row_count=len(rows),
-            changes=0, latency=latency, statement_class="PRAGMA",
-        )
+        return QueryResult(list(df.columns), rows, len(rows), 0, 0.0, "PRAGMA")
 
-    def _run_maintenance(self, statement: str, t0: float) -> QueryResult:
+    def _run_maintenance(self, statement: str) -> QueryResult:
         """ANALYZE / REINDEX (authorizer codes SQLITE_ANALYZE /
         SQLITE_REINDEX, reference pkg/sqlite3/constants.go:64-93;
         exercised via pkg/database/database_connection.go:618-619).
@@ -1071,62 +1083,49 @@ class Engine:
                 else [t.name for t in self.spark.catalog.listTables()]
             )
             self._refresh_sqlite_stat1(stat_names)
-        latency = time.time() - t0
-        self.metrics.record(statement, latency)
-        return QueryResult(
-            columns=[], rows=[], row_count=0, changes=analyzed,
-            latency=latency, statement_class="MAINT",
-        )
+        return QueryResult([], [], 0, analyzed, 0.0, "MAINT")
 
-    def _run_tcl(self, statement: str, t0: float) -> QueryResult:
-        """SQL-level BEGIN/COMMIT/ROLLBACK (reference begin-kind selection:
+    def _run_tcl(self, statement: str, txn: "Transaction | None") -> QueryResult:
+        """SQL-level BEGIN/COMMIT/ROLLBACK and the SQLite savepoint
+        dialect (reference begin-kind selection:
         pkg/sqlite3/connection.go:118-156; DEFERRED for reads, IMMEDIATE
-        for writes — database_connection.go:759-821)."""
-        import re
-
+        for writes — database_connection.go:759-821). ``txn`` is the
+        interactive transaction the statement was routed to, or None for
+        the SQL-level one that BEGIN opens (``_autotxn``)."""
         toks = re.findall(r"\w+", statement.upper())
-        raw_toks = re.findall(r"\w+", statement)
         kw = toks[0]
         if kw == "BEGIN":
+            if txn is not None:
+                raise RuntimeError(f"unsupported TCL inside txn: {statement}")
             if self._autotxn is not None:
                 raise RuntimeError("cannot start a transaction within a transaction")
             kind = "IMMEDIATE" if "IMMEDIATE" in toks else "DEFERRED"
             self._autotxn = self.begin(kind=kind)
-        elif kw in ("COMMIT", "END"):
-            if self._autotxn is None:
-                raise RuntimeError("cannot commit - no transaction is active")
-            try:
-                self._autotxn.commit()
-            finally:
-                self._autotxn = None
-        elif kw in ("SAVEPOINT", "RELEASE") or (
-            kw == "ROLLBACK" and len(toks) > 1 and toks[1] == "TO"
-        ):
+            return QueryResult([], [], 0, 0, 0.0, "TCL")
+        txn = txn or self._autotxn
+        if kw in ("SAVEPOINT", "RELEASE") or toks[:2] == ["ROLLBACK", "TO"]:
             # SQLite savepoint dialect; requires an open transaction here
             # (SQLite's implicit-txn savepoints are out of scope — the
             # engine's txn unit is the shadow-view transaction)
-            if self._autotxn is None:
+            if txn is None:
                 raise RuntimeError(f"no transaction is active for {kw}")
-            name = raw_toks[-1]
+            name = re.findall(r"\w+", statement)[-1]
             if kw == "SAVEPOINT":
-                self._autotxn.savepoint(name)
+                txn.savepoint(name)
             elif kw == "RELEASE":
-                self._autotxn.release(name)
+                txn.release(name)
             else:
-                self._autotxn.rollback_to(name)
-        else:  # ROLLBACK
-            if self._autotxn is None:
-                raise RuntimeError("cannot rollback - no transaction is active")
-            try:
-                self._autotxn.rollback()
-            finally:
+                txn.rollback_to(name)
+            return QueryResult([], [], 0, 0, 0.0, "TCL")
+        ending = "commit" if kw in ("COMMIT", "END") else "rollback"
+        if txn is None:
+            raise RuntimeError(f"cannot {ending} - no transaction is active")
+        try:
+            getattr(txn, ending)()
+        finally:
+            if txn is self._autotxn:
                 self._autotxn = None
-        latency = time.time() - t0
-        self.metrics.record(statement, latency)
-        return QueryResult(
-            columns=[], rows=[], row_count=0, changes=0,
-            latency=latency, statement_class="TCL",
-        )
+        return QueryResult([], [], 0, 0, 0.0, "TCL")
 
     @staticmethod
     def _bind(statement: str, params: list | dict | None):
@@ -1964,41 +1963,19 @@ class Transaction:
 
     def sql(self, statement: str, params: list | dict | None = None) -> QueryResult:
         self._check_live()
-        t0 = time.time()
+        return self.engine.sql(statement, params,
+                               transaction_id=self.transaction_id)
+
+    def _execute(self, statement: str, params) -> QueryResult:
+        self._check_live()
         stmt_class = classify_statement(statement)
         if stmt_class == "TCL":
-            import re as _re
-
-            toks = _re.findall(r"\w+", statement.upper())
-            raw = _re.findall(r"\w+", statement)
-            if toks[0] == "SAVEPOINT":
-                self.savepoint(raw[-1])
-            elif toks[0] == "RELEASE":
-                self.release(raw[-1])
-            elif toks[0] == "ROLLBACK" and len(toks) > 1 and toks[1] == "TO":
-                self.rollback_to(raw[-1])
-            elif toks[0] in ("COMMIT", "END"):
-                self.commit()
-            elif toks[0] == "ROLLBACK":
-                self.rollback()
-            else:
-                raise RuntimeError(f"unsupported TCL inside txn: {statement}")
-            latency = time.time() - t0
-            self.engine.metrics.record(statement, latency)
-            return QueryResult(
-                columns=[], rows=[], row_count=0, changes=0,
-                latency=latency, statement_class="TCL",
-            )
+            return self.engine._run_tcl(statement, self)
         if stmt_class == "DML":
             changes = self._apply_dml(statement, params)
-            latency = time.time() - t0
-            self.engine.metrics.record(statement, latency)
-            return QueryResult(
-                columns=[], rows=[], row_count=0, changes=changes,
-                latency=latency, statement_class=stmt_class,
-            )
+            return QueryResult([], [], 0, changes, 0.0, stmt_class)
         # DQL/DDL/OTHER: session resolution already sees shadow views.
-        return self.engine.sql(statement, params)
+        return self.engine._execute(statement, params)
 
     def _shadow(self, table: str) -> None:
         """Record the pre-image of `table` on first touch."""

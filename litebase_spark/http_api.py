@@ -582,14 +582,10 @@ class QueryServer:
                     n_dbs = len(
                         server.engine.spark.catalog.listDatabases()
                     )
-                    served = sum(
-                        m.count
-                        for m in server.engine.metrics._acc.values()
-                    )
                     return self._send(200, {"status": "success", "data": {
                         "role": "primary",
                         "databases": n_dbs,
-                        "queries_served": served,
+                        "queries_served": server.engine.metrics.total_count(),
                         "uptime_s": round(
                             _time.time() - server.started_at, 3
                         ),
@@ -1357,7 +1353,7 @@ class QueryServer:
                     for qbytes in wire.iter_frame_queries(payload):
                         resp = wire.WireResponse()
                         etype = wire.MSG_FRAME_ENTRY
-                        t0 = _time.time()
+                        t0 = _time.perf_counter()
                         try:
                             q = wire.decode_query_input(qbytes)
                             resp.id = q["id"]
@@ -1400,7 +1396,7 @@ class QueryServer:
                         except Exception as e:
                             etype = wire.MSG_ERROR
                             resp.error = str(e)[:500] or "error"
-                            resp.latency = _time.time() - t0
+                            resp.latency = _time.perf_counter() - t0
                         enc = wire.encode_query_response(resp)
                         entries.append(
                             bytes([etype])
@@ -1442,8 +1438,6 @@ class QueryServer:
                 so the engine watchdog can cancel its job group, and an
                 expiry surfaces as an error frame.
                 """
-                import time as _time
-
                 resource = f"database:{db}:branch:{branch}"
                 if not key.allows(resource, "database:query"):
                     return self._send(403, {"status": "error", "message": "forbidden"})
@@ -1479,7 +1473,6 @@ class QueryServer:
 
                 for q in queries:
                     stmt, qid = q["statement"], q.get("id")
-                    t0 = _time.time()
                     # everything per-query runs inside the try: a bad
                     # typed parameter or classifier error must emit an
                     # error frame, not drop the connection mid-stream
@@ -1534,16 +1527,13 @@ class QueryServer:
                                           "latency": res.latency}):
                                 return
                             continue
-                        df = server.engine.df(stmt, params)
+                        res = server.engine.stream(stmt, params)
                         if not frame({"id": qid, "type": "columns",
-                                      "columns": df.columns}):
+                                      "columns": res.columns}):
                             return
-                        n, batch = 0, []
-                        for row in df.toLocalIterator(
-                            prefetchPartitions=True
-                        ):
+                        batch = []
+                        for row in res.rows:
                             batch.append([_json_value(v) for v in row])
-                            n += 1
                             if len(batch) >= 256:
                                 if not frame({"id": qid, "type": "rows",
                                               "rows": batch}):
@@ -1553,11 +1543,10 @@ class QueryServer:
                             {"id": qid, "type": "rows", "rows": batch}
                         ):
                             return
-                        latency = _time.time() - t0
-                        server.engine.metrics.record(stmt, latency)
                         if not frame({"id": qid, "type": "end",
-                                      "row_count": n, "changes": 0,
-                                      "latency": latency}):
+                                      "row_count": res.row_count,
+                                      "changes": 0,
+                                      "latency": res.latency}):
                             return
                     except Exception as e:
                         frame({"id": qid, "type": "error",

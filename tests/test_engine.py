@@ -369,6 +369,175 @@ def test_query_log_buckets_and_flush(spark, tmp_path):
     assert got[(960, "SELECT 1")] == 2
 
 
+def _lognormal_latencies(seed: int):
+    import random
+
+    rng = random.Random(seed)
+    while True:
+        yield rng.lognormvariate(-3.0, 1.0)  # median ~50 ms
+
+
+def test_metrics_memory_constant_over_a_million_records():
+    """Recording costs O(1) memory per statement: a long-lived server's
+    metrics stay bounded however much traffic it serves."""
+    import itertools
+    import tracemalloc
+
+    import litebase_spark.engine as engine_mod
+    from litebase_spark.engine import QueryMetrics
+
+    def held() -> int:
+        snap = tracemalloc.take_snapshot().filter_traces(
+            [tracemalloc.Filter(True, engine_mod.__file__)]
+        )
+        return sum(s.size for s in snap.statistics("filename"))
+
+    m = QueryMetrics()
+    lat = _lognormal_latencies(11)
+    tracemalloc.start()
+    try:
+        for x in itertools.islice(lat, 10_000):
+            m.record("SELECT 1", x, ts=0.0)
+        after_1e4 = held()
+        for x in itertools.islice(lat, 990_000):
+            m.record("SELECT 1", x, ts=0.0)
+        after_1e6 = held()
+    finally:
+        tracemalloc.stop()
+    assert m.total_count() == 1_000_000
+    # keeping every sample would add ~16 MB between the two readings
+    assert after_1e6 - after_1e4 < 256 * 1024, (after_1e4, after_1e6)
+
+
+def test_metrics_percentiles_within_bucket_error():
+    import itertools
+
+    from litebase_spark.engine import LATENCY_RELATIVE_ERROR, QueryMetrics
+
+    samples = list(itertools.islice(_lognormal_latencies(7), 20_000))
+    samples += [1e-5, 42.0]  # the spread reaches well past one decade
+    m = QueryMetrics()
+    for x in samples:
+        m.record("SELECT 1", x, ts=0.0)
+    (row,) = m.snapshot()
+    exact = sorted(samples)
+    n = len(exact)
+    assert row["count"] == n
+    assert (row["min"], row["max"]) == (exact[0], exact[-1])
+    assert row["avg"] == pytest.approx(sum(samples) / n)
+    for key, p in (("p50", 0.50), ("p90", 0.90), ("p99", 0.99)):
+        want = exact[min(n - 1, int(p * n))]
+        assert abs(row[key] - want) <= LATENCY_RELATIVE_ERROR * want, key
+    # a lone sample is reported exactly (clamped to [min, max])
+    m.record("SELECT 2", 0.0123, ts=0.0)
+    lone = next(r for r in m.snapshot() if r["statement"] == "SELECT 2")
+    assert lone["p50"] == lone["p90"] == lone["p99"] == 0.0123
+
+
+def test_metrics_record_loses_no_update_under_threads():
+    import sys
+    import threading
+
+    from litebase_spark.engine import QueryMetrics
+
+    m = QueryMetrics()
+    per_thread, n_threads = 5_000, 8
+
+    def work(i):
+        for k in range(per_thread):
+            m.record(f"SELECT {k % 3}", 0.001 * (i + 1), ts=60.0 * (k % 2))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(i,))
+                   for i in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    total = per_thread * n_threads
+    assert m.total_count() == total
+    assert sum(r["count"] for r in m.log_entries()) == total
+
+
+def test_one_metrics_record_per_statement(spark):
+    """Each statement a caller sends is timed and recorded exactly once,
+    whichever route it takes; a trigger body counts as its own
+    statement."""
+    eng = Engine(spark)
+
+    def once(stmt, **kw):
+        before = eng.metrics.total_count()
+        prior = {r["statement"]: r["count"] for r in eng.metrics.snapshot()}
+        res = eng.sql(stmt, **kw)
+        after = {r["statement"]: r["count"] for r in eng.metrics.snapshot()}
+        assert after.get(stmt, 0) - prior.get(stmt, 0) == 1, stmt
+        assert eng.metrics.total_count() - before == 1, stmt
+        assert res.latency > 0, stmt
+        return res
+
+    eng.sql("DROP TABLE IF EXISTS t_rec")
+    eng.sql("DROP TABLE IF EXISTS t_rec_log")
+    once("CREATE TABLE t_rec (id BIGINT) USING PARQUET")
+    once("SELECT 1 AS one")
+    once("SELECT 2 AS two", timeout=60)
+    once("INSERT INTO t_rec VALUES (1)")
+    once("PRAGMA table_list")
+    once("EXPLAIN QUERY PLAN SELECT * FROM t_rec")
+    once("CREATE INDEX ix_rec ON t_rec (id)")
+    once("CREATE INDEX IF NOT EXISTS ix_rec ON t_rec (id)")
+    once("DROP INDEX ix_rec")
+    # interactive transaction, by id and through the Transaction object
+    txn = eng.begin()
+    tid = txn.transaction_id
+    once("INSERT INTO t_rec VALUES (2)", transaction_id=tid)
+    assert once("SELECT count(*) AS n FROM t_rec",
+                transaction_id=tid).rows[0].n == 2
+    once("SAVEPOINT sp_rec", transaction_id=tid)
+    before = eng.metrics.total_count()
+    txn.sql("RELEASE sp_rec")
+    assert eng.metrics.total_count() - before == 1
+    once("COMMIT", transaction_id=tid)
+    # the SQL-level BEGIN/COMMIT route
+    once("BEGIN")
+    once("INSERT INTO t_rec VALUES (3)")
+    once("SAVEPOINT sp_sql")
+    once("END")
+    assert eng.sql("SELECT count(*) AS n FROM t_rec").rows[0].n == 3
+    # a trigger body runs as its own statement
+    eng.sql("CREATE TABLE t_rec_log (n BIGINT) USING PARQUET")
+    body = "INSERT INTO t_rec_log SELECT count(*) FROM t_rec"
+    once(f"CREATE TRIGGER trg_rec AFTER INSERT ON t_rec BEGIN {body}; END")
+    before = eng.metrics.total_count()
+    eng.sql("INSERT INTO t_rec VALUES (4)")
+    assert eng.metrics.total_count() - before == 2
+    counts = {r["statement"]: r["count"] for r in eng.metrics.snapshot()}
+    assert counts[body] == 1 and counts["INSERT INTO t_rec VALUES (4)"] == 1
+    once("DROP TRIGGER trg_rec")
+    eng.sql("DROP TABLE t_rec")
+    eng.sql("DROP TABLE t_rec_log")
+
+
+def test_metrics_key_on_caller_statement(spark):
+    """DDL the engine answers itself (trigger, index, attach) is keyed
+    on the text the caller sent, not on its Spark translation."""
+    eng = Engine(spark)
+    stmt = ("CREATE TRIGGER trg_iif AFTER INSERT ON t_iif "
+            "BEGIN SELECT iif(1, 2, 3) AS x; END")
+    eng.sql(stmt)
+    try:
+        snap = eng.metrics.snapshot()
+        assert [(r["statement"], r["statement_hash"]) for r in snap] == [
+            (stmt, eng.metrics.statement_hash(stmt))
+        ]
+    finally:
+        eng.sql("DROP TRIGGER trg_iif")
+
+
 def test_prepared_cache_lfu_eviction(spark):
     eng = Engine(spark=spark)
     eng.PREPARED_CACHE_CAP = 2

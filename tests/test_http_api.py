@@ -578,13 +578,40 @@ def test_trigger_and_attach_over_the_wire(server):
 def test_status_and_show_routes(server):
     """Round-4 read surface: /v1/status (cluster status analog),
     database show, branch show, backup 404s without a store."""
+    from litebase_spark.wire import BinaryStreamClient
+
     t = "admin:s3cret"
     code, body = _call(server, "GET", "/v1/status", token=t)
     assert code == 200
     d = body["data"]
     assert d["role"] == "primary" and d["uptime_s"] >= 0
-    assert d["queries_served"] >= 0 and d["versioned_store"] is False
+    assert d["versioned_store"] is False
     assert _call(server, "GET", "/v1/status")[0] == 401
+    # queries_served counts each statement once, whatever route ran it:
+    # two over JSON, two over the NDJSON stream, one over the wire
+    served = d["queries_served"]
+    code, _ = _call(server, "POST", "/v1/databases/main/main/query", {
+        "queries": [{"id": "j1", "statement": "SELECT 1 AS a"},
+                    {"id": "j2", "statement": "SELECT 2 AS b"}],
+    }, token=t)
+    assert code == 200
+    _, frames = _stream_call(server, "/v1/databases/main/main/query/stream", {
+        "queries": [{"id": "s1", "statement": "SELECT 3 AS c"},
+                    {"id": "s2", "statement":
+                        "SELECT id FROM RANGE(300) AS t(id)"}],
+    }, t)
+    assert [f["type"] for f in frames if f["id"] == "s2"] == [
+        "columns", "rows", "rows", "end"]
+    c = BinaryStreamClient(
+        "127.0.0.1", server.port,
+        "/v1/databases/main/main/query/stream", f"Bearer {t}")
+    try:
+        c.open()
+        assert c.query("w1", "SELECT 4 AS d").error == ""
+    finally:
+        c.close()
+    code, body = _call(server, "GET", "/v1/status", token=t)
+    assert body["data"]["queries_served"] == served + 5
 
     code, body = _call(server, "GET", "/v1/databases/main", token=t)
     assert code == 200

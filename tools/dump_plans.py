@@ -41,8 +41,9 @@ SHOWCASE = [
     ("stream_tumbling_window", "windowed agg (streaming twin shares the plan)"),
     (
         "graph_pagerank",
-        "iterative PageRank: post-checkpoint final round — one shuffle "
-        "per iteration, dangling mass as a 1-row broadcast",
+        "iterative PageRank: post-checkpoint final round — each round's "
+        "eager checkpoint runs 13-14 Spark jobs at sf0.01 (sort-merge joins "
+        "shuffle edges and ranks by src before AQE demotes them to broadcast)",
     ),
     (
         "dedup_incremental_minhash",
