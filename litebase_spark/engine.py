@@ -29,10 +29,12 @@ Maps litebase's query lifecycle (SURVEY §3.1) onto a SparkSession:
 from __future__ import annotations
 
 import bisect
+import contextlib
 import math
 import re
 import threading
 import time
+import uuid
 import zlib
 from dataclasses import dataclass
 from typing import Any
@@ -115,6 +117,12 @@ _HIST_BUCKETS = int(math.log(1e5 / _HIST_FLOOR_S)
 _HIST_EDGES = [_HIST_FLOOR_S * LATENCY_BUCKET_RATIO ** i
                for i in range(1, _HIST_BUCKETS)]
 
+# The time-bucketed query log keeps this many of the newest buckets (one
+# hour of minute buckets): a server that never flushes stays bounded. A
+# sample stamped behind that window (an explicit `ts`) keeps its bucket
+# until the log next reaches a new minute.
+QUERY_LOG_BUCKETS = 60
+
 
 class _LatencyAccumulator:
     """count/total/min/max and a sparse log-scale histogram for one
@@ -183,7 +191,8 @@ class QueryMetrics:
         self._lock = threading.RLock()
         self._acc: dict[int, _LatencyAccumulator] = {}
         # time-bucketed log: bucket_ts -> statement_hash -> accumulator
-        # (reference pkg/logs/query_log.go keeps queue[time][checksum])
+        # (reference pkg/logs/query_log.go keeps queue[time][checksum]),
+        # holding the newest QUERY_LOG_BUCKETS buckets
         self._buckets: dict[int, dict[int, _LatencyAccumulator]] = {}
 
     @staticmethod
@@ -199,6 +208,11 @@ class QueryMetrics:
         with self._lock:
             per_bucket = self._buckets.get(bucket)
             if per_bucket is None:
+                if bucket > max(self._buckets, default=bucket - 1):
+                    # a new newest bucket: drop those too far behind it
+                    horizon = bucket - QUERY_LOG_BUCKETS * self.BUCKET_SECONDS
+                    for old in [b for b in self._buckets if b <= horizon]:
+                        del self._buckets[old]
                 per_bucket = self._buckets[bucket] = {}
             for accs in (self._acc, per_bucket):
                 acc = accs.get(h)
@@ -268,6 +282,81 @@ class QueryMetrics:
             " p50 double, p90 double, p99 double"
         )
         return spark.read.schema(schema).json(path)
+
+
+# -- DML plans (Engine._plan_dml / Engine._run_dml) -------------------------
+
+_IDENT = r"(?:`[^`]+`|[A-Za-z_]\w*)"
+
+
+def _q(name: str) -> str:
+    """Backtick-quote an identifier for generated SQL."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _bare(name: str) -> str:
+    """An identifier without its quoting backticks."""
+    name = name.strip()
+    if len(name) > 1 and name[0] == name[-1] == "`":
+        return name[1:-1].replace("``", "`")
+    return name
+
+
+def _alias(table: str) -> str:
+    """The name a statement's own clauses use for its target table:
+    the last part of a qualified name."""
+    return re.findall(_IDENT, table)[-1]
+
+
+def _flag(cond: str | None) -> str:
+    """1 where the WHERE clause is true, else 0: a NULL predicate selects
+    nothing, as in SQLite."""
+    return f"CAST(coalesce(({cond}), false) AS INT)" if cond else "1"
+
+
+def _store(expr: str, col: str, dtype: str) -> str:
+    """`expr` as a value of a column's type. A value the type cannot hold
+    raises, as Spark's ANSI store assignment does for a native INSERT; a
+    plain CAST would wrap or NULL it, since the session runs with
+    spark.sql.ansi.enabled=false. A numeric string stores as its number,
+    as under SQLite's column affinity."""
+    where = re.sub(r"['\\]", "", f" in column {col} of type {dtype}")
+    return (
+        f"coalesce(try_cast(({expr}) AS {dtype}), if(({expr}) IS NULL, NULL, "
+        f"raise_error(concat('cannot store ', CAST(({expr}) AS STRING), "
+        f"'{where}'))))"
+    )
+
+
+def _rewrite_excluded(expr: str) -> str:
+    """`excluded.col` (the proposed insert row, SQLite upsert scope) ->
+    the join's `__exc_col` column."""
+    return re.sub(
+        r"(?i)\bexcluded\s*\.\s*(`[^`]+`|\w+)",
+        lambda m: _q("__exc_" + _bare(m.group(1))),
+        expr,
+    )
+
+
+@dataclass
+class _DmlPlan:
+    """One planned DML statement. `rows` has the target's columns plus
+    `__changed`, the number of changes a row accounts for (changes() is
+    their sum). An append's rows are new rows; a rewrite's rows are the
+    table's whole new image, minus the changed rows when `drop_changed`
+    (DELETE). A `may_skip` append (INSERT OR IGNORE / DO NOTHING) is
+    materialized before its write, which is skipped when it adds nothing:
+    an empty insert job still writes a file."""
+
+    table: str
+    event: str  # INSERT | UPDATE | DELETE: the trigger event
+    rows: DataFrame
+    append: bool
+    # the target's columns with their metadata (a column's DEFAULT), which
+    # a CASE projection drops and the written image must keep
+    fields: list
+    drop_changed: bool = False
+    may_skip: bool = False
 
 
 class Engine:
@@ -423,12 +512,11 @@ class Engine:
             # pkg/http/query_controller.go:94-120).
             return self._autotxn._execute(statement, params)
         sql_text, args = self._translate(statement, params)
-        returning = None
-        if stmt_class == "DML":
-            sql_text, returning = self._split_returning(sql_text)
         if stmt_class == "DDL":
+            # a trigger keeps the caller's text; its body is translated
+            # each time it runs
             res = (self._try_attach_ddl(sql_text)
-                   or self._try_trigger_ddl(sql_text)
+                   or self._try_trigger_ddl(statement)
                    or self._try_index_ddl(sql_text))
             if res is not None:
                 return res
@@ -436,38 +524,20 @@ class Engine:
             # for upserts) and strip the constraint Spark's parser rejects.
             sql_text = self._register_primary_key(sql_text)
         if stmt_class == "DML":
-            res = self._try_dml(sql_text, returning)
+            res = self._run_dml(sql_text, args, None)
             if res is not None:
-                changes, rrows, rcols = res
-                self._last_changes = changes
-                self._total_changes += changes
-                self._fire_triggers(sql_text, changes)
-                return QueryResult(rcols, rrows, len(rrows), changes, 0.0,
-                                   stmt_class)
+                return res
+            # a form the planner does not recognise runs natively; plain
+            # parquet reports no commit metrics, so it counts no changes
+            self._last_changes = 0
         if re.search(r"(?i)\bsqlite_master\b", sql_text):
             self._refresh_sqlite_master()
         df = self.spark.sql(sql_text, args=args) if args else self.spark.sql(sql_text)
-        if collect and stmt_class in ("DQL", "OTHER"):
-            rows = df.collect()
-            columns = list(df.columns)
-            changes = 0
-        else:
-            # DDL/DML: Spark executes eagerly on .collect(); row results of
-            # DML are commit metrics, not data (changes analog — reference
-            # resolver.go:127-130 captures sqlite3_changes).
-            res = df.collect()
+        rows = df.collect()  # DDL/DML execute eagerly here
+        if not (collect and stmt_class in ("DQL", "OTHER")):
             rows = []
-            columns = list(df.columns)
-            changes = self._changes_from(res)
-            if changes == 0 and stmt_class == "DML":
-                changes = self._insert_values_count(sql_text)
-            if stmt_class == "DML":
-                self._last_changes = changes
-                self._total_changes += changes
-                self._fire_triggers(sql_text, changes)
-            if returning is not None:
-                rows, columns = self._returning_rows(sql_text, returning)
-        return QueryResult(columns, rows, len(rows), changes, 0.0, stmt_class)
+        return QueryResult(list(df.columns), rows, len(rows), 0, 0.0,
+                           stmt_class)
 
     def _execute_with_timeout(
         self,
@@ -716,10 +786,6 @@ class Engine:
     _TRIGGER_DROP_RE = re.compile(
         r"(?is)^\s*DROP\s+TRIGGER\s+(IF\s+EXISTS\s+)?([A-Za-z_][\w]*)\s*$"
     )
-    _DML_TARGET_RE = re.compile(
-        r"(?is)^\s*(?:INSERT\s+(?:OR\s+\w+\s+)?INTO|REPLACE\s+INTO|"
-        r"UPDATE|DELETE\s+FROM)\s+([A-Za-z_][\w.]*)"
-    )
 
     _ATTACH_RE = re.compile(
         r"(?is)^\s*ATTACH\s+(?:DATABASE\s+)?'([^']+)'\s+AS\s+"
@@ -773,7 +839,7 @@ class Engine:
             return QueryResult([], [], 0, 0, 0.0, "DDL")
         return None
 
-    def _try_trigger_ddl(self, sql_text: str) -> QueryResult | None:
+    def _try_trigger_ddl(self, statement: str) -> QueryResult | None:
         """CREATE/DROP TRIGGER (reference authorizer DDL codes
         SQLITE_CREATE_TRIGGER/SQLITE_DROP_TRIGGER,
         pkg/sqlite3/constants.go:74-77). Statement-level AFTER triggers:
@@ -782,11 +848,11 @@ class Engine:
         SQLite's row triggers. Row-level NEW/OLD references are out of
         scope (documented: derived state is maintained by re-derivation
         from the base table, the set-based idiom)."""
-        m = self._TRIGGER_CREATE_RE.match(sql_text)
+        m = self._TRIGGER_CREATE_RE.match(statement)
         if m:
             name, event, table, body = m.groups()
             stmts = [s.strip() for s in body.split(";") if s.strip()]
-            if re.search(r"(?i)\bIF\s+NOT\s+EXISTS\b", sql_text) and (
+            if re.search(r"(?i)\bIF\s+NOT\s+EXISTS\b", statement) and (
                 name in self._triggers
             ):
                 pass
@@ -797,10 +863,10 @@ class Engine:
                     "event": event.upper(),
                     "table": table.split(".")[-1].lower(),
                     "statements": stmts,
-                    "sql": sql_text.strip(),
+                    "sql": statement.strip(),
                 }
             return QueryResult([], [], 0, 0, 0.0, "DDL")
-        m = self._TRIGGER_DROP_RE.match(sql_text)
+        m = self._TRIGGER_DROP_RE.match(statement)
         if m:
             if_exists, name = m.group(1), m.group(2)
             if name not in self._triggers and not if_exists:
@@ -809,7 +875,7 @@ class Engine:
             return QueryResult([], [], 0, 0, 0.0, "DDL")
         return None
 
-    def _fire_triggers(self, sql_text: str, changes: int) -> None:
+    def _fire_triggers(self, table: str, event: str, changes: int) -> None:
         """Run matching AFTER triggers once per committed DML statement.
         Non-recursive (a trigger body's own DML never re-fires triggers,
         SQLite's recursive_triggers=off default); a statement that
@@ -817,12 +883,7 @@ class Engine:
         firing collapsing to zero."""
         if self._in_trigger or not self._triggers or changes == 0:
             return
-        m = self._DML_TARGET_RE.match(sql_text)
-        if not m:
-            return
-        table = m.group(1).split(".")[-1].lower()
-        head = sql_text.lstrip().split(None, 1)[0].upper()
-        event = {"REPLACE": "INSERT"}.get(head, head)
+        table = _bare(_alias(table)).lower()
         self._in_trigger = True
         try:
             for name in sorted(self._triggers):
@@ -1155,162 +1216,173 @@ class Engine:
             raise ValueError(f"statement has {i} placeholders, got {len(params)} params")
         return "".join(out), args
 
-    @staticmethod
-    def _changes_from(rows: list[Row]) -> int:
-        # Delta-style DML returns metric rows (num_affected_rows); plain
-        # parquet DDL returns nothing. Best-effort extraction.
-        for r in rows:
-            d = r.asDict() if hasattr(r, "asDict") else {}
-            for k in ("num_affected_rows", "num_inserted_rows", "num_updated_rows"):
-                if k in d and d[k] is not None:
-                    return int(d[k])
-        return 0
-
-    # -- write side (M2): DML with `changes` semantics ---------------------
+    # -- write side (M2): one DML planner, two sinks ------------------------
     #
-    # Vanilla Spark has no UPDATE/DELETE on parquet v1 tables (Delta is not
-    # available in this environment), so the engine supplies the
+    # Vanilla Spark has no UPDATE/DELETE/upsert on parquet v1 tables (Delta
+    # is not available in this environment), so the engine supplies the
     # reference's DML surface (reference classifies and executes these:
-    # pkg/database/query.go:53-58, resolver.go:127-130 captures changes)
-    # as copy-on-write rewrites: read -> transform -> localCheckpoint
-    # (breaks file lineage, making self-overwrite safe) -> overwrite.
-    # On a Delta/Iceberg catalog these methods become single SQL calls.
+    # pkg/database/query.go:53-58, resolver.go:127-130 captures changes).
+    # `_plan_dml` parses every form once, after `_translate` has bound the
+    # parameters and applied the dialect, and returns a `_DmlPlan`: an
+    # append (the new rows) or a rewrite (the table's whole new image).
+    # `_run_dml` materializes it and hands it to one of two sinks — the
+    # table itself in autocommit, the transaction's shadow view inside
+    # BEGIN … COMMIT — so a statement means the same thing in both.
+    #
+    # `changes` rides the job that materializes the rows, via df.observe()
+    # over `__changed` — the Spark analog of reading commit
+    # operationMetrics (Delta) or sqlite3_changes: a rewrite is one eager
+    # localCheckpoint plus the overwrite, and an autocommit append is its
+    # one insert job. Expressions reach Spark as SQL text run with the
+    # bound args, so `?`/`:name` work in every clause.
 
-    # `changes` counts ride the DML job itself via df.observe() — the
-    # Spark analog of reading commit operationMetrics (Delta) or
-    # sqlite3_changes (reference resolver.go:127-130). Round 2 ran a
-    # separate count() scan per statement; observations are computed by
-    # the same tasks that rewrite the data, so DML is one scan.
+    _TABLE = rf"({_IDENT}(?:\.{_IDENT})?)"
+    _UPDATE_RE = re.compile(
+        rf"(?is)^UPDATE\s+{_TABLE}\s+SET\s+(.*?)"
+        r"(?:\s+FROM\s+(.+?))?(?:\s+WHERE\s+(.*))?$"
+    )
+    _DELETE_RE = re.compile(
+        rf"(?is)^DELETE\s+FROM\s+{_TABLE}(?:\s+WHERE\s+(.*))?$"
+    )
+    # REPLACE INTO is SQLite's alias for INSERT OR REPLACE INTO
+    _INSERT_RE = re.compile(
+        r"(?is)^(?:INSERT(?:\s+OR\s+(REPLACE|IGNORE))?|(REPLACE))\s+INTO\s+"
+        rf"{_TABLE}\s*(?:\(([^)]*)\))?\s*((?:VALUES|SELECT|WITH)\b.*)$"
+    )
+    _CONFLICT_RE = re.compile(
+        r"(?is)\s+ON\s+CONFLICT\s*(?:\(([^)]*)\))?\s*DO\s+"
+        r"(?:(NOTHING)|UPDATE\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?)$"
+    )
 
-    def insert_rows(self, table: str, rows: list[tuple], schema=None) -> int:
+    def _run_dml(
+        self, sql_text: str, args, txn: "Transaction | None"
+    ) -> QueryResult | None:
+        """Run a translated DML statement through the planner and a sink:
+        ``txn`` publishes the result as that transaction's shadow view,
+        None writes it to the table (and fires triggers). RETURNING
+        projects the post-statement image of the affected rows (deleted
+        rows for DELETE), SQLite >= 3.35 semantics. Returns None for a
+        form the planner does not recognise."""
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
-        df = self.spark.createDataFrame(
-            rows, schema=schema or self.spark.table(table).schema
-        )
+        sql_text, returning = self._split_returning(sql_text)
+        plan = self._plan_dml(sql_text, args)
+        if plan is None:
+            return None
         obs = Observation()
-        df.observe(obs, F.count(F.lit(1)).alias("changes")).write.insertInto(
-            table
-        )
-        return obs.get["changes"]
+        rows = plan.rows.observe(obs, F.sum("__changed").alias("changes"))
+        eager = (not plan.append or plan.may_skip or returning is not None
+                 or txn is not None)
+        if eager:
+            rows = rows.localCheckpoint(eager=True)
+        rrows, rcols = [], []
+        if returning is not None:
+            rdf = self._returning_df(
+                rows.filter("__changed > 0").drop("__changed"), returning
+            )
+            rrows, rcols = rdf.collect(), list(rdf.columns)
+        image = rows.filter("__changed = 0") if plan.drop_changed else rows
+        image = image.select([
+            F.col(_q(f.name)).alias(f.name, metadata=f.metadata)
+            for f in plan.fields
+        ])
+        if txn is not None:
+            txn._shadow(plan.table)
+            if plan.append:
+                image = self.spark.table(plan.table).unionByName(image)
+            image.createOrReplaceTempView(plan.table)
+        elif eager and not obs.get["changes"]:
+            pass  # nothing changed: the table is not written
+        elif plan.append:
+            image.write.insertInto(plan.table)
+        else:
+            image.write.mode("overwrite").saveAsTable(plan.table)
+        changes = int(obs.get["changes"] or 0)
+        self._last_changes = changes
+        self._total_changes += changes
+        if txn is None:
+            self._fire_triggers(plan.table, plan.event, changes)
+        return QueryResult(rcols, rrows, len(rrows), changes, 0.0, "DML")
 
-    def insert_select(self, table: str, select_df) -> int:
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        obs = Observation()
-        select_df.observe(
-            obs, F.count(F.lit(1)).alias("changes")
-        ).write.insertInto(table)
-        return obs.get["changes"]
-
-    def update_table(
-        self,
-        table: str,
-        assignments: dict[str, str],
-        where: str | None = None,
-        returning: str | None = None,
-    ):
-        """UPDATE table SET col=expr[, ...] [WHERE cond]; returns changes
-        observed during the rewrite scan (no separate count job). With
-        ``returning``, also evaluates the clause over the post-update
-        image of the affected rows (SQLite RETURNING semantics) and
-        returns (changes, rows, cols)."""
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        df = self.spark.table(table)
-        cond = F.expr(where) if where else F.lit(True)
-        obs = Observation()
-        observed = df.observe(
-            obs,
-            F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias("changes"),
-        )
-        cols = []
-        for c in df.columns:
-            if c in assignments:
-                cols.append(
-                    F.when(cond, F.expr(assignments[c]))
-                    .otherwise(F.col(c))
-                    .alias(c)
-                )
+    def _plan_dml(self, sql_text: str, args) -> "_DmlPlan | None":
+        """The one DML parser: UPDATE [FROM], DELETE, INSERT, INSERT OR
+        REPLACE/IGNORE, REPLACE INTO and INSERT … ON CONFLICT DO
+        NOTHING | DO UPDATE SET … [WHERE …] (sqlite.org/lang_upsert.html).
+        Upserts resolve against the ON CONFLICT columns or the declared
+        PRIMARY KEY. Returns None for any other statement."""
+        stmt = sql_text.strip().rstrip(";").rstrip()
+        m = self._UPDATE_RE.match(stmt)
+        if m:
+            table, set_clause, from_clause, where = m.groups()
+            tgt = self.spark.table(table)
+            assignments = self._assignments(tgt, set_clause)
+            if from_clause:
+                rows = self._update_from_rows(
+                    tgt, table, assignments, from_clause, where, args)
             else:
-                cols.append(F.col(c))
-        new_full = observed.select(
-            cols + [cond.alias("__changed")]
-        ).localCheckpoint(eager=True)
-        changes = int(obs.get["changes"] or 0)
-        rows, rcols = [], []
-        if returning is not None:
-            rdf = self._returning_df(
-                new_full.filter("__changed").drop("__changed"), returning
+                proj = ", ".join(
+                    f"CASE WHEN __changed = 1 THEN {_store(assignments[c], c, t)}"
+                    f" ELSE {_q(c)} END AS {_q(c)}"
+                    if c in assignments else _q(c)
+                    for c, t in tgt.dtypes
+                )
+                rows = self.spark.sql(
+                    f"SELECT {proj}, __changed FROM (SELECT *, "
+                    f"{_flag(where)} AS __changed FROM {table}) AS "
+                    f"{_alias(table)}",
+                    args=args or None,
+                )
+            return _DmlPlan(table, "UPDATE", rows, False, tgt.schema.fields)
+        m = self._DELETE_RE.match(stmt)
+        if m:
+            table, where = m.groups()
+            rows = self.spark.sql(
+                f"SELECT *, {_flag(where)} AS __changed FROM {table}",
+                args=args or None,
             )
-            rows, rcols = rdf.collect(), list(rdf.columns)
-        new_full.drop("__changed").write.mode("overwrite").saveAsTable(table)
-        return (changes, rows, rcols) if returning is not None else changes
-
-    def delete_from(
-        self,
-        table: str,
-        where: str | None = None,
-        returning: str | None = None,
-    ):
-        """DELETE FROM table [WHERE cond]; returns changes observed
-        during the rewrite scan (no separate count job). With
-        ``returning``, also evaluates the clause over the deleted rows
-        and returns (changes, rows, cols)."""
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        df = self.spark.table(table)
-        cond = F.expr(where) if where else F.lit(True)
-        obs = Observation()
-        observed = df.observe(
-            obs,
-            F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias("changes"),
-        )
-        ck = observed.withColumn("__del", cond).localCheckpoint(eager=True)
-        changes = int(obs.get["changes"] or 0)
-        rows, rcols = [], []
-        if returning is not None:
-            rdf = self._returning_df(
-                ck.filter("__del").drop("__del"), returning
+            return _DmlPlan(table, "DELETE", rows, False,
+                            rows.schema.fields[:-1], drop_changed=True)
+        m = self._INSERT_RE.match(stmt)
+        if not m:
+            return None
+        or_action, replace_kw, table, collist, body = m.groups()
+        action = (or_action or replace_kw or "").upper()
+        assignments = upd_where = keys = None
+        tgt = self.spark.table(table)
+        cm = self._CONFLICT_RE.search(body)
+        if cm:
+            body = body[: cm.start()]
+            conflict, nothing, set_clause, upd_where = cm.groups()
+            if conflict:
+                keys = [_bare(c) for c in conflict.split(",")]
+            if nothing:
+                action = "IGNORE"
+            else:
+                action = "UPDATE"
+                assignments = self._assignments(tgt, set_clause)
+        src = self._insert_source(tgt, collist, body, args)
+        if not action:
+            return _DmlPlan(table, "INSERT", src, True, tgt.schema.fields)
+        keys = keys or self._primary_keys.get(_bare(table).lower())
+        if not keys:
+            raise ValueError(
+                f"upsert on {table!r} needs a conflict target: declare a "
+                "PRIMARY KEY (CREATE TABLE ... PRIMARY KEY or "
+                "declare_primary_key) or write ON CONFLICT(cols)"
             )
-            rows, rcols = rdf.collect(), list(rdf.columns)
-        ck.filter(~F.col("__del")).drop("__del").write.mode(
-            "overwrite"
-        ).saveAsTable(table)
-        return (changes, rows, rcols) if returning is not None else changes
-
-    def merge_upsert(self, table: str, source, on: list[str]) -> int:
-        """MERGE (upsert) analog: source rows replace matches and append
-        the rest (reference upsert surface: INSERT ... ON CONFLICT,
-        SURVEY §2.B scans row). `changes` = source rows, observed on the
-        union branch of the same rewrite job."""
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        df = self.spark.table(table)
-        obs = Observation()
-        observed_src = source.observe(
-            obs, F.count(F.lit(1)).alias("changes")
-        )
-        kept = df.join(source, on=on, how="left_anti")
-        new_df = kept.unionByName(observed_src).localCheckpoint(eager=True)
-        changes = obs.get["changes"]
-        new_df.write.mode("overwrite").saveAsTable(table)
-        return int(changes or 0)
-
-    # -- SQLite upsert dialect: INSERT OR REPLACE/IGNORE and
-    # INSERT ... ON CONFLICT [(cols)] DO NOTHING | DO UPDATE SET ...
-    # (reference surface: full SQLite upsert grammar through the query API,
-    # pkg/database/query.go DML classes; sqlite.org/lang_upsert.html).
-    # Executed as ONE full-outer join of target and deduplicated source —
-    # matched rows take the DO UPDATE assignments (`excluded.col` = the
-    # proposed row), source-only rows insert, target-only rows pass
-    # through. DO NOTHING never rewrites the table: it appends the
-    # anti-joined new rows only.
+        src = self._dedup_source(src, keys, keep_last=action != "IGNORE")
+        if action == "IGNORE":
+            # append-only: the anti-joined new rows, no table rewrite
+            rows = src.join(tgt, on=keys, how="left_anti").select(
+                [_q(c) for c in tgt.columns] + ["__changed"])
+            return _DmlPlan(table, "INSERT", rows, True, tgt.schema.fields,
+                            may_skip=True)
+        if action == "REPLACE":
+            assignments = {c: f"excluded.{_q(c)}" for c in tgt.columns}
+        rows = self._upsert_rows(tgt, table, src, keys, assignments,
+                                 upd_where, args)
+        return _DmlPlan(table, "INSERT", rows, False, tgt.schema.fields)
 
     def declare_primary_key(self, table: str, cols: list[str]) -> None:
         """Declare the conflict target used by INSERT OR REPLACE/IGNORE
@@ -1349,372 +1421,179 @@ class Engine:
         return head + ", ".join(p.strip() for p in parts) + tail
 
     @staticmethod
-    def _rewrite_excluded(expr: str) -> str:
-        """`excluded.col` (the proposed insert row, SQLite upsert scope)
-        -> the join's `__exc_col` columns."""
-        import re
+    def _assignments(tgt: DataFrame, set_clause: str) -> dict[str, str]:
+        """`col = expr, ...` -> {table column: expr}; a column the table
+        lacks is an error, as in SQLite."""
+        cols = {c.lower(): c for c in tgt.columns}
+        out = {}
+        for part in Engine._split_top_level(set_clause):
+            name, _, expr = part.partition("=")
+            col = cols.get(_bare(name).lower())
+            if col is None:
+                raise ValueError(f"no such column: {name.strip()}")
+            out[col] = expr.strip()
+        return out
 
-        return re.sub(r"(?i)\bexcluded\s*\.\s*(\w+)", r"__exc_\1", expr)
-
-    def _parse_insert_upsert(self, statement: str):
-        """Parse the upsert INSERT forms; None for plain INSERT (which
-        Spark executes natively)."""
-        import re
-
-        stmt = statement.strip().rstrip(";")
-        # REPLACE INTO is SQLite's alias for INSERT OR REPLACE INTO
-        stmt = re.sub(r"(?is)^\s*REPLACE\s+INTO\b", "INSERT OR REPLACE INTO", stmt)
-        m = re.match(
-            r"(?is)^\s*INSERT\s+(?:OR\s+(REPLACE|IGNORE)\s+)?INTO\s+"
-            r"(\w+)\s*(?:\(([^)]*)\))?\s*(VALUES\b.*|SELECT\b.*|WITH\b.*?)$",
-            stmt,
+    def _insert_source(
+        self, tgt: DataFrame, collist: str | None, body: str, args
+    ) -> DataFrame:
+        """The rows an INSERT proposes — its VALUES tuples or SELECT/CTE
+        run with the bound args — in the target's column order and types,
+        each counting one change; a column the statement omits takes its
+        DEFAULT, else NULL. One spark.sql call: each DataFrame step costs
+        an analysis pass."""
+        given = ([_bare(c) for c in collist.split(",")] if collist
+                 else tgt.columns)
+        by_name = {c.lower(): c for c in given}
+        unknown = set(by_name) - {c.lower() for c in tgt.columns}
+        if unknown:
+            raise ValueError(f"no such column: {sorted(unknown)[0]}")
+        proj = []
+        for f in tgt.schema.fields:
+            c, t = f.name, f.dataType.simpleString()
+            v = (_q(by_name[c.lower()]) if c.lower() in by_name
+                 else f.metadata.get("CURRENT_DEFAULT", "NULL"))
+            proj.append(f"{_store(v, c, t)} AS {_q(c)}")
+        return self.spark.sql(
+            f"SELECT {', '.join(proj)}, 1 AS __changed FROM ({body}) AS "
+            f"__v({', '.join(map(_q, given))})",
+            args=args or None,
         )
-        if not m:
-            return None
-        or_action, table, collist, body = m.groups()
-        action = conflict_cols = assignments = upd_where = None
-        cm = re.search(
-            r"(?is)\bON\s+CONFLICT\s*(?:\(([^)]*)\))?\s*DO\s+"
-            r"(NOTHING|UPDATE\s+SET\s+.*)$",
-            body,
-        )
-        if cm:
-            body = body[: cm.start()].strip()
-            if cm.group(1):
-                conflict_cols = [c.strip() for c in cm.group(1).split(",")]
-            rest = cm.group(2)
-            if rest.upper().startswith("NOTHING"):
-                action = "nothing"
-            else:
-                action = "update"
-                um = re.match(
-                    r"(?is)UPDATE\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$", rest
-                )
-                assignments = {}
-                for part in self._split_top_level(um.group(1)):
-                    c, _, e = part.partition("=")
-                    assignments[c.strip()] = e.strip()
-                upd_where = um.group(2)
-        elif or_action:
-            action = "replace" if or_action.upper() == "REPLACE" else "nothing"
-        if action is None:
-            return None  # plain INSERT: native path
-        if conflict_cols is None:
-            conflict_cols = self._primary_keys.get(table.lower())
-            if not conflict_cols:
-                raise ValueError(
-                    f"upsert on {table!r} needs a conflict target: declare a "
-                    "PRIMARY KEY (CREATE TABLE ... PRIMARY KEY or "
-                    "declare_primary_key) or write ON CONFLICT(cols)"
-                )
-        cols = [c.strip() for c in collist.split(",")] if collist else None
-        return {
-            "table": table, "cols": cols, "body": body, "action": action,
-            "conflict_cols": conflict_cols, "assignments": assignments,
-            "upd_where": upd_where,
-        }
-
-    def _insert_source(self, table: str, cols, body: str) -> DataFrame:
-        """Build the source DataFrame for an upsert INSERT: VALUES tuples
-        (tagged with their statement order, so within-statement conflicts
-        resolve like SQLite's sequential row processing) or a SELECT/CTE.
-        Missing columns fill with NULL; everything casts to the target
-        schema."""
-        from pyspark.sql import functions as F
-
-        tgt_schema = self.spark.table(table).schema
-        col_list = cols or tgt_schema.fieldNames()
-        if body.upper().startswith("VALUES"):
-            tuples = [
-                p.strip()
-                for p in self._split_top_level(
-                    body[len("VALUES"):]
-                )
-                if p.strip().startswith("(")
-            ]
-            seq_vals = ", ".join(
-                f"({i}, {t[1:]}" for i, t in enumerate(tuples)
-            )
-            src = self.spark.sql(
-                f"SELECT * FROM (VALUES {seq_vals} "
-                f"AS __v(__seq, {', '.join(col_list)}))"
-            )
-        else:
-            src = self.spark.sql(body).toDF(*col_list).withColumn(
-                "__seq", F.lit(0)
-            )
-        out = [F.col("__seq")]
-        for f in tgt_schema.fields:
-            if f.name in col_list:
-                out.append(F.col(f.name).cast(f.dataType).alias(f.name))
-            else:
-                out.append(F.lit(None).cast(f.dataType).alias(f.name))
-        return src.select(out)
 
     @staticmethod
-    def _dedup_source(src: DataFrame, conflict_cols, keep_last: bool) -> DataFrame:
-        """Within-statement conflict resolution: SQLite processes VALUES
-        rows sequentially, so REPLACE/DO UPDATE keep the LAST proposed row
-        per key and IGNORE/DO NOTHING keep the FIRST."""
+    def _dedup_source(src: DataFrame, keys, keep_last: bool) -> DataFrame:
+        """Within-statement conflict resolution: SQLite processes rows
+        sequentially, so REPLACE/DO UPDATE keep the LAST proposed row per
+        key and IGNORE/DO NOTHING keep the FIRST (statement order is the
+        scan order of the proposed rows). `__n` keeps how many rows each
+        survivor stands for: SQLite counts every processed row."""
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        order = F.col("__seq").desc() if keep_last else F.col("__seq").asc()
-        w = Window.partitionBy(*conflict_cols).orderBy(order)
+        w = Window.partitionBy(*keys)
+        seq = F.col("__seq").desc() if keep_last else F.col("__seq").asc()
         return (
-            src.withColumn("__rn", F.row_number().over(w))
+            src.withColumn("__seq", F.monotonically_increasing_id())
+            .withColumn("__n", F.count(F.lit(1)).over(w))
+            .withColumn("__rn", F.row_number().over(w.orderBy(seq)))
             .filter(F.col("__rn") == 1)
             .drop("__rn", "__seq")
         )
 
-    def _upsert_plan(
-        self, tgt: DataFrame, src: DataFrame, conflict_cols,
-        assignments, upd_where,
-    ):
-        """One-pass upsert: full-outer join target with the deduplicated
-        source on the conflict key; project the merged row. Returns
-        (new_df, changes) — new_df is localCheckpointed (one scan of the
-        target materializes it; the changes count and the table rewrite
-        both read the checkpoint). Scale: shuffles both sides on the
-        conflict key once; the source is statement-sized (VALUES) so AQE
-        broadcasts it in practice."""
+    def _upsert_rows(
+        self, tgt: DataFrame, table: str, src: DataFrame, keys,
+        assignments, upd_where, args,
+    ) -> DataFrame:
+        """One-pass upsert: full-outer join the target with the
+        deduplicated source on the conflict key, then project the merged
+        row — matched rows take the DO UPDATE assignments (`excluded.col`
+        is the proposed row) where the guard holds, source-only rows
+        insert, target-only rows pass through. Shuffles both sides on the
+        key once; the source is statement-sized, so AQE broadcasts it."""
         from functools import reduce
 
         from pyspark.sql import functions as F
 
         cols = tgt.columns
-        dtypes = dict(tgt.dtypes)
         t_ren = tgt.select(
-            [F.col(c).alias(f"__t_{c}") for c in cols]
+            [F.col(_q(c)).alias(f"__t_{c}") for c in cols]
         ).withColumn("__t_present", F.lit(True))
         s_ren = src.select(
-            [F.col(c).alias(f"__exc_{c}") for c in cols]
+            [F.col(_q(c)).alias(f"__exc_{c}") for c in cols] + ["__n"]
         ).withColumn("__s_present", F.lit(True))
-        cond = reduce(
+        on = reduce(
             lambda a, b: a & b,
-            [t_ren[f"__t_{k}"] == s_ren[f"__exc_{k}"] for k in conflict_cols],
+            [t_ren[f"__t_{k}"] == s_ren[f"__exc_{k}"] for k in keys],
         )
-        j = t_ren.join(s_ren, cond, "full_outer").select(
-            *[F.col(f"__t_{c}").alias(c) for c in cols],
-            *[F.col(f"__exc_{c}") for c in cols],
+        j = t_ren.join(s_ren, on, "full_outer").select(
+            *[F.col(_q(f"__t_{c}")).alias(c) for c in cols],
+            *[F.col(_q(f"__exc_{c}")) for c in cols],
+            "__n",
             F.coalesce("__t_present", F.lit(False)).alias("__t_present"),
             F.coalesce("__s_present", F.lit(False)).alias("__s_present"),
         )
-        matched = F.col("__t_present") & F.col("__s_present")
-        src_only = ~F.col("__t_present") & F.col("__s_present")
-        gate = matched
-        if upd_where:
-            gate = matched & F.expr(self._rewrite_excluded(upd_where))
-        ck = j.withColumn("__changed", gate | src_only).localCheckpoint(
-            eager=True
-        )
-        changes = ck.filter("__changed").count()
-        final = []
-        for c in cols:
+        proj = []
+        for c, t in tgt.dtypes:
+            upd = ""
             if c in assignments:
-                val = (
-                    F.when(
-                        gate,
-                        F.expr(
-                            self._rewrite_excluded(assignments[c])
-                        ).cast(dtypes[c]),
-                    )
-                    .when(src_only, F.col(f"__exc_{c}"))
-                    .otherwise(F.col(c))
-                )
-            else:
-                val = F.when(src_only, F.col(f"__exc_{c}")).otherwise(F.col(c))
-            final.append(val.alias(c))
-        return ck.select(final), ck.filter("__changed").select(final), changes
-
-    def _run_insert_upsert(self, parsed: dict, returning: str | None = None):
-        """Execute a parsed upsert INSERT against the catalog table.
-        Returns (changes, returning_rows, returning_cols) — RETURNING
-        projects the post-statement image of the affected rows, SQLite
-        upsert semantics."""
-        table = parsed["table"]
-        action = parsed["action"]
-        src_raw = self._insert_source(table, parsed["cols"], parsed["body"])
-        src = self._dedup_source(
-            src_raw, parsed["conflict_cols"], keep_last=(action != "nothing")
-        )
-        tgt = self.spark.table(table)
-        rows, rcols = [], []
-        if action == "nothing":
-            # append-only: no table rewrite, just the anti-joined new rows
-            new_rows = src.join(
-                tgt, on=parsed["conflict_cols"], how="left_anti"
-            ).select(tgt.columns).localCheckpoint(eager=True)
-            changes = new_rows.count()
-            if returning is not None:
-                rdf = self._returning_df(new_rows, returning)
-                rows, rcols = rdf.collect(), list(rdf.columns)
-            if changes:
-                new_rows.write.insertInto(table)
-            return changes, rows, rcols
-        if action == "replace":
-            assignments = {c: f"excluded.{c}" for c in tgt.columns}
-            upd_where = None
-        else:
-            assignments, upd_where = parsed["assignments"], parsed["upd_where"]
-        new_df, affected, changes = self._upsert_plan(
-            tgt, src, parsed["conflict_cols"], assignments, upd_where
-        )
-        if action == "replace":
-            # SQLite counts EVERY processed row (a within-statement
-            # re-replacement counts again), not the post-dedup set —
-            # verified differentially vs stdlib sqlite3
-            changes = self._source_row_count(parsed["body"], src_raw)
-        if returning is not None:
-            rdf = self._returning_df(affected, returning)
-            rows, rcols = rdf.collect(), list(rdf.columns)
-        new_df.write.mode("overwrite").saveAsTable(table)
-        return changes, rows, rcols
-
-    @classmethod
-    def _source_row_count(cls, body: str, src) -> int:
-        """Pre-dedup source cardinality: parsed for VALUES (no job),
-        counted for SELECT sources."""
-        if body.upper().startswith("VALUES"):
-            return len(
-                [
-                    p
-                    for p in cls._split_top_level(body[len("VALUES"):])
-                    if p.strip().startswith("(")
-                ]
+                expr = _rewrite_excluded(assignments[c])
+                upd = f"WHEN __gate THEN {_store(expr, c, t)} "
+            proj.append(f"CASE {upd}WHEN __src_only THEN {_q('__exc_' + c)} "
+                        f"ELSE {_q(c)} END AS {_q(c)}")
+        guard = ""
+        if upd_where:
+            guard = f" AND {_flag(_rewrite_excluded(upd_where))} = 1"
+        with self._as_view(j) as view:
+            return self.spark.sql(
+                f"SELECT {', '.join(proj)}, CASE WHEN __gate OR __src_only "
+                "THEN CAST(__n AS INT) ELSE 0 END AS __changed FROM "
+                f"(SELECT *, __t_present AND __s_present{guard} AS __gate, "
+                "__s_present AND NOT __t_present AS __src_only "
+                f"FROM {view}) AS {_alias(table)}",
+                args=args or None,
             )
-        return src.count()
 
-    def _update_from_plan(
-        self, tgt: DataFrame, table: str, assignments,
-        from_clause: str, where,
-    ):
+    def _update_from_rows(
+        self, tgt: DataFrame, table: str, assignments, from_clause: str,
+        where, args,
+    ) -> DataFrame:
         """UPDATE ... FROM (SQLite >= 3.33 joined update): tag target rows
-        with a row id, join the FROM source via plain SQL (assignments and
-        WHERE reference both sides, target under its own name), then stitch
-        new values back by row id. Multiple source matches per target row
-        pick one match (SQLite: 'unspecified'). Returns (new_df, changes)."""
+        with a row id, join the FROM source in SQL (assignments and WHERE
+        reference both sides, the target under its own name), then
+        stitch the new values back by row id. Several source matches for
+        one target row pick one of them (SQLite: 'unspecified')."""
         from pyspark.sql import functions as F
 
-        dtypes = dict(tgt.dtypes)
         rid = tgt.withColumn(
             "__rid", F.monotonically_increasing_id()
         ).localCheckpoint(eager=True)
-        rid.createOrReplaceTempView("__update_from_target")
         assigned = list(assignments)
-        sel = [f"{table}.__rid AS __rid", "true AS __hit"] + [
-            f"({assignments[c]}) AS __new_{i}" for i, c in enumerate(assigned)
-        ]
-        sql = (
-            f"SELECT {', '.join(sel)} FROM __update_from_target AS {table}, "
-            f"{from_clause}"
+        sel = ", ".join(
+            [f"{_alias(table)}.__rid AS __rid", "1 AS __hit"]
+            + [f"({assignments[c]}) AS __new_{i}"
+               for i, c in enumerate(assigned)]
         )
-        if where:
-            sql += f" WHERE {where}"
-        m = (
-            self.spark.sql(sql)
-            .dropDuplicates(["__rid"])
-            .localCheckpoint(eager=True)
-        )
-        changes = m.count()
-        joined = rid.join(m, on="__rid", how="left")
+        with self._as_view(rid) as view:
+            hits = self.spark.sql(
+                f"SELECT {sel} FROM {view} AS {_alias(table)}, {from_clause}"
+                + (f" WHERE {where}" if where else ""),
+                args=args or None,
+            ).dropDuplicates(["__rid"])
         final = []
-        for c in tgt.columns:
+        for c, t in tgt.dtypes:
             if c in assignments:
-                i = assigned.index(c)
+                new = F.expr(_store(f"__new_{assigned.index(c)}", c, t))
                 final.append(
-                    F.when(
-                        F.col("__hit"),
-                        F.col(f"__new_{i}").cast(dtypes[c]),
-                    )
-                    .otherwise(F.col(c))
-                    .alias(c)
-                )
+                    F.when(F.col("__hit") == 1, new)
+                    .otherwise(F.col(_q(c))).alias(c))
             else:
-                final.append(F.col(c))
-        self.spark.catalog.dropTempView("__update_from_target")
-        return joined.select(final).localCheckpoint(eager=True), changes
+                final.append(F.col(_q(c)))
+        return rid.join(hits, on="__rid", how="left").select(
+            *final, F.coalesce("__hit", F.lit(0)).alias("__changed"))
+
+    @contextlib.contextmanager
+    def _as_view(self, df: DataFrame):
+        """Name `df` for one spark.sql call — how expressions holding
+        parameter markers reach an intermediate DataFrame. The analyzed
+        plan keeps its reference after the view is dropped."""
+        view = f"__dml_{uuid.uuid4().hex[:12]}"
+        df.createOrReplaceTempView(view)
+        try:
+            yield view
+        finally:
+            self.spark.catalog.dropTempView(view)
 
     @staticmethod
     def _split_returning(statement: str):
         """Split a trailing ``RETURNING <exprs>`` clause off a DML
         statement (SQLite >= 3.35 dialect surface, SURVEY §2.B scans row:
-        'INSERT ... RETURNING'). Spark SQL has no RETURNING; the engine
-        executes the bare DML, then evaluates the clause over the
-        affected rows (see _returning_rows)."""
-        import re
-
+        'INSERT ... RETURNING'). Spark SQL has no RETURNING; `_run_dml`
+        evaluates the clause over the affected rows."""
         m = re.match(r"(?is)^(.*?)\s+RETURNING\s+(.+?)\s*;?\s*$", statement)
-        if m and re.match(r"(?is)\s*(INSERT|UPDATE|DELETE)\b", statement):
+        if m and re.match(r"(?is)\s*(INSERT|UPDATE|DELETE|REPLACE)\b",
+                          statement):
             return m.group(1), m.group(2)
         return statement, None
-
-    def _returning_rows(self, statement: str, returning: str):
-        """Evaluate a RETURNING clause for INSERT ... VALUES: projects the
-        requested expressions over the literal tuples (the rows just
-        written). Mirrors SQLite semantics for the VALUES form; for
-        INSERT...SELECT the reference-equivalent result is the source
-        SELECT itself, which callers can issue directly."""
-        import re
-
-        m = re.search(
-            r"(?is)\bINSERT\s+INTO\s+(\w+)\s*(\(([^)]*)\))?\s*VALUES\b(.*)$",
-            statement,
-        )
-        if not m:
-            return [], []
-        table, cols, values = m.group(1), m.group(3), m.group(4)
-        if cols:
-            col_list = [c.strip() for c in cols.split(",")]
-        else:
-            col_list = self.spark.table(table).columns
-        proj = "*" if returning.strip() == "*" else returning
-        df = self.spark.sql(
-            f"SELECT {proj} FROM (VALUES {values.strip().rstrip(';')} "
-            f"AS t({', '.join(col_list)}))"
-        )
-        return df.collect(), list(df.columns)
-
-    def _try_dml(self, statement: str, returning: str | None = None):
-        """Intercept UPDATE/DELETE/upsert statements (unsupported by Spark
-        on parquet v1) and route them through the rewrite path. Returns
-        (changes, returning_rows, returning_cols) or None if not
-        intercepted (plain INSERT falls through to Spark's native
-        INSERT). RETURNING (SQLite >= 3.35 applies it to every DML form)
-        projects over the post-statement image of the affected rows."""
-        import re
-
-        m = re.match(
-            r"(?is)\s*UPDATE\s+(\w+)\s+SET\s+(.*?)"
-            r"(?:\s+FROM\s+(.+?))?(?:\s+WHERE\s+(.*))?\s*;?\s*$",
-            statement,
-        )
-        if m:
-            table, set_clause, from_clause, where = m.groups()
-            assignments = {}
-            for part in self._split_top_level(set_clause):
-                c, _, e = part.partition("=")
-                assignments[c.strip()] = e.strip()
-            if from_clause:
-                new_df, changes = self._update_from_plan(
-                    self.spark.table(table), table, assignments,
-                    from_clause, where,
-                )
-                new_df.write.mode("overwrite").saveAsTable(table)
-                return changes, [], []
-            r = self.update_table(table, assignments, where, returning)
-            return r if returning else (r, [], [])
-        m = re.match(
-            r"(?is)\s*DELETE\s+FROM\s+(\w+)(?:\s+WHERE\s+(.*?))?\s*;?\s*$",
-            statement,
-        )
-        if m:
-            r = self.delete_from(m.group(1), m.group(2), returning)
-            return r if returning else (r, [], [])
-        parsed = self._parse_insert_upsert(statement)
-        if parsed is not None:
-            return self._run_insert_upsert(parsed, returning)
-        return None
 
     def _returning_df(self, df: DataFrame, returning: str) -> DataFrame:
         exprs = (
@@ -1723,23 +1602,6 @@ class Engine:
             else [e.strip() for e in self._split_top_level(returning)]
         )
         return df.selectExpr(*exprs)
-
-    @classmethod
-    def _insert_values_count(cls, statement: str) -> int:
-        """`changes` for INSERT ... VALUES: the tuple count, parsed — the
-        reference reads sqlite3_changes after DML (resolver.go:127-130);
-        plain-parquet INSERT returns no commit metrics, so the engine
-        counts the literal rows instead (0 for INSERT...SELECT, which
-        callers route through insert_select for an exact count)."""
-        import re
-
-        m = re.search(r"(?is)\bINSERT\s+INTO\b.*?\bVALUES\b(.*)$", statement)
-        if not m:
-            return 0
-        tuples = [
-            p for p in cls._split_top_level(m.group(1)) if p.strip().startswith("(")
-        ]
-        return len(tuples)
 
     @staticmethod
     def _split_top_level(s: str) -> list[str]:
@@ -1834,27 +1696,32 @@ class Transaction:
     reference's BEGIN…COMMIT/ROLLBACK surface (A9/A10) with copy-on-write
     **shadow views**.
 
-    The first write to a table inside the txn builds a derived DataFrame
-    plan over the table's current state and registers it as a temp view
-    under the same name — temp views shadow catalog tables during
-    resolution, so later statements in the txn (reads and writes) see the
-    txn's own uncommitted state, while nothing is written to storage.
-    COMMIT localCheckpoints each shadow (cutting lineage off the files
-    about to be replaced) and overwrites the catalog table: one
-    distributed write per touched table, and a ROLLBACK costs nothing
-    (drop the views). This is the Spark-idiomatic inversion of the
-    reference's design — SQLite holds locks and writes WAL frames per
-    statement, rolling back by discarding them (pkg/database/
-    transaction.go, sqlite3/connection.go:118-156); immutable storage
-    lets us defer ALL writes to commit instead.
+    A DML statement inside the txn goes through the same planner as in
+    autocommit (``Engine._run_dml``): bound, translated, parsed once,
+    with RETURNING and `changes` alike. Only the sink differs: the
+    statement's result is materialized by one eager localCheckpoint and
+    published as a temp view under the table's name — the new rows
+    unioned onto the current state for an append, the new image for a
+    rewrite. Temp views shadow catalog tables during resolution, so
+    later statements in the txn (reads and writes) see the txn's own
+    uncommitted state, while nothing is written to storage. COMMIT
+    localCheckpoints each shadow (cutting lineage off the files about to
+    be replaced) and overwrites the catalog table: one distributed write
+    per touched table, and a ROLLBACK costs nothing (drop the views).
+    This is the Spark-idiomatic inversion of the reference's design —
+    SQLite holds locks and writes WAL frames per statement, rolling back
+    by discarding them (pkg/database/transaction.go,
+    sqlite3/connection.go:118-156); immutable storage lets us defer ALL
+    writes to commit instead.
 
     Scope/deviations: single-session single-writer (the engine model,
     SURVEY §2.A A4/A5) — cross-session isolation is out of scope; DDL
     inside a txn applies immediately (non-transactional), as in the
     reference where DDL takes the same write path but rollback of DDL is
-    rare-path. Timeout mirrors the reference's 5-minute default: an
-    expired txn auto-rolls-back and every later statement fails
-    (transaction.go:55-56)."""
+    rare-path; triggers fire in autocommit only; a DML form the planner
+    does not recognise is refused. Timeout mirrors the reference's
+    5-minute default: an expired txn auto-rolls-back and every later
+    statement fails (transaction.go:55-56)."""
 
     _seq = 0
 
@@ -1972,8 +1839,12 @@ class Transaction:
         if stmt_class == "TCL":
             return self.engine._run_tcl(statement, self)
         if stmt_class == "DML":
-            changes = self._apply_dml(statement, params)
-            return QueryResult([], [], 0, changes, 0.0, stmt_class)
+            res = self.engine._run_dml(
+                *self.engine._translate(statement, params), self)
+            if res is None:
+                raise ValueError(
+                    f"unsupported DML inside transaction: {statement[:60]}")
+            return res
         # DQL/DDL/OTHER: session resolution already sees shadow views.
         return self.engine._execute(statement, params)
 
@@ -1988,138 +1859,3 @@ class Transaction:
             raise ValueError(f"unknown table {table!r}") from None
         pre_image = spark.table(table) if was_temp else None
         self._touched[table] = (pre_image, was_temp)
-
-    def _publish(self, table: str, df: DataFrame) -> None:
-        df.createOrReplaceTempView(table)
-
-    def _apply_dml(self, statement: str, params) -> int:
-        import re
-
-        spark = self.engine.spark
-        sql_text, args = Engine._bind(statement, params)
-        parsed = self.engine._parse_insert_upsert(sql_text)
-        if parsed is not None:
-            # upsert inside a txn: same one-pass plan, applied to the
-            # shadow view and re-published (no table write until COMMIT)
-            table = parsed["table"]
-            self._shadow(table)
-            tgt = spark.table(table)
-            src_raw = self.engine._insert_source(
-                table, parsed["cols"], parsed["body"]
-            )
-            src = Engine._dedup_source(
-                src_raw, parsed["conflict_cols"],
-                keep_last=(parsed["action"] != "nothing"),
-            )
-            if parsed["action"] == "nothing":
-                new_rows = src.join(
-                    tgt, on=parsed["conflict_cols"], how="left_anti"
-                ).select(tgt.columns).localCheckpoint(eager=True)
-                changes = new_rows.count()
-                self._publish(table, tgt.unionByName(new_rows))
-                return changes
-            if parsed["action"] == "replace":
-                assignments, upd_where = (
-                    {c: f"excluded.{c}" for c in tgt.columns}, None
-                )
-            else:
-                assignments, upd_where = (
-                    parsed["assignments"], parsed["upd_where"]
-                )
-            new_df, _affected, changes = self.engine._upsert_plan(
-                tgt, src, parsed["conflict_cols"], assignments, upd_where
-            )
-            if parsed["action"] == "replace":
-                # SQLite counts every processed row (see _run_insert_upsert)
-                changes = Engine._source_row_count(parsed["body"], src_raw)
-            self._publish(table, new_df)
-            return changes
-        m = re.match(
-            r"(?is)\s*UPDATE\s+(\w+)\s+SET\s+(.*?)"
-            r"(?:\s+FROM\s+(.+?))?(?:\s+WHERE\s+(.*))?\s*;?\s*$",
-            sql_text,
-        )
-        if m and m.group(3):
-            table, set_clause, from_clause, where = m.groups()
-            self._shadow(table)
-            assignments = {}
-            for part in Engine._split_top_level(set_clause):
-                c, _, e = part.partition("=")
-                assignments[c.strip()] = e.strip()
-            new_df, changes = self.engine._update_from_plan(
-                spark.table(table), table, assignments, from_clause, where
-            )
-            self._publish(table, new_df)
-            return changes
-        m = re.match(
-            r"(?is)\s*UPDATE\s+(\w+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?\s*$",
-            sql_text,
-        )
-        if m:
-            from pyspark.sql import functions as F
-
-            table, set_clause, where = m.group(1), m.group(2), m.group(3)
-            self._shadow(table)
-            df = spark.table(table)
-            cond = F.expr(where) if where else F.lit(True)
-            changes = df.filter(cond).count()
-            assignments = {}
-            for part in Engine._split_top_level(set_clause):
-                c, _, e = part.partition("=")
-                assignments[c.strip()] = e.strip()
-            cols = [
-                F.when(cond, F.expr(assignments[c])).otherwise(F.col(c)).alias(c)
-                if c in assignments
-                else F.col(c)
-                for c in df.columns
-            ]
-            self._publish(table, df.select(cols))
-            return changes
-        m = re.match(
-            r"(?is)\s*DELETE\s+FROM\s+(\w+)(?:\s+WHERE\s+(.*))?\s*$", sql_text
-        )
-        if m:
-            from pyspark.sql import functions as F
-
-            table, where = m.group(1), m.group(2)
-            self._shadow(table)
-            df = spark.table(table)
-            cond = F.expr(where) if where else F.lit(True)
-            changes = df.filter(cond).count()
-            self._publish(table, df.filter(~cond))
-            return changes
-        m = re.match(
-            r"(?is)\s*INSERT\s+INTO\s+(\w+)\s*(\(([^)]*)\))?\s*"
-            r"(VALUES\b.*|SELECT\b.*|WITH\b.*)$",
-            sql_text,
-        )
-        if m:
-            table, cols, body = m.group(1), m.group(3), m.group(4)
-            self._shadow(table)
-            df = spark.table(table)
-            col_list = (
-                [c.strip() for c in cols.split(",")] if cols else df.columns
-            )
-            if body.upper().startswith("VALUES"):
-                src_sql = (
-                    f"SELECT * FROM ({body.rstrip(';')}) "
-                    f"AS t({', '.join(col_list)})"
-                )
-            else:
-                src_sql = body.rstrip(";")
-            src = (
-                spark.sql(src_sql, args=args) if args else spark.sql(src_sql)
-            )
-            src = src.toDF(*col_list)
-            for c in df.columns:  # missing columns -> NULL, like INSERT(cols)
-                if c not in col_list:
-                    from pyspark.sql import functions as F
-
-                    src = src.withColumn(c, F.lit(None).cast(dict(df.dtypes)[c]))
-            src = src.select(*df.columns)
-            for c, t in df.dtypes:
-                src = src.withColumn(c, src[c].cast(t))
-            changes = src.count()
-            self._publish(table, df.unionByName(src))
-            return changes
-        raise ValueError(f"unsupported DML inside transaction: {statement[:60]}")

@@ -4,6 +4,8 @@ DML rewrites with changes counts, branching, metrics."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from litebase_spark.engine import Engine, classify_statement, is_write
@@ -78,13 +80,15 @@ def test_ddl_dml_roundtrip_with_changes(engine):
 
 
 def test_merge_upsert(engine, spark):
+    # MERGE analog through SQL: source rows replace matches, the rest
+    # append; changes counts every source row
     eng = engine
     eng.sql("DROP TABLE IF EXISTS t_merge")
     eng.sql("CREATE TABLE t_merge (id BIGINT, v STRING) USING PARQUET")
     eng.sql("INSERT INTO t_merge VALUES (1,'old'),(2,'old')")
-    src = spark.createDataFrame([(2, "new"), (3, "new")], "id bigint, v string")
-    changes = eng.merge_upsert("t_merge", src, on=["id"])
-    assert changes == 2
+    r = eng.sql("INSERT INTO t_merge VALUES (2,'new'),(3,'new') "
+                "ON CONFLICT(id) DO UPDATE SET v = excluded.v")
+    assert r.changes == 2
     got = {r.id: r.v for r in eng.sql("SELECT * FROM t_merge").rows}
     assert got == {1: "old", 2: "new", 3: "new"}
     eng.sql("DROP TABLE t_merge")
@@ -320,22 +324,33 @@ def test_engine_sql_accepts_sqlite_dialect_shims(spark, sf_dir):
 def test_dml_changes_observed_no_extra_scan(engine, spark):
     """`changes` rides the rewrite job via df.observe (the commit-
     metrics analog): an UPDATE runs at most 2 jobs (checkpoint + write),
-    with NO separate count scan (round 2 ran 3)."""
+    with NO separate count scan (round 2 ran 3); an INSERT ... VALUES
+    runs one job, its write."""
     eng = engine
     eng.sql("DROP TABLE IF EXISTS t_obs")
     eng.sql("CREATE TABLE t_obs (id BIGINT, v DOUBLE) USING PARQUET")
     eng.sql("INSERT INTO t_obs VALUES (1,1.0),(2,2.0),(3,3.0),(4,4.0)")
     sc = spark.sparkContext
-    sc.setJobGroup("dml-observe-test", "update under test")
-    try:
-        changes = eng.update_table("t_obs", {"v": "v + 10"}, "id >= 3")
-    finally:
-        sc.setJobGroup("", "")
-    assert changes == 2
-    jobs = sc.statusTracker().getJobIdsForGroup("dml-observe-test")
-    assert len(jobs) <= 2, f"expected checkpoint+write only, got {len(jobs)} jobs"
+
+    def jobs_of(stmt, group):
+        sc.setJobGroup(group, stmt)
+        try:
+            res = eng.sql(stmt)
+        finally:
+            sc.setJobGroup("", "")
+        return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    res, jobs = jobs_of("UPDATE t_obs SET v = v + 10 WHERE id >= 3",
+                        "dml-observe-update")
+    assert res.changes == 2
+    assert jobs <= 2, f"expected checkpoint+write only, got {jobs} jobs"
     got = {r.id: r.v for r in eng.sql("SELECT * FROM t_obs").rows}
     assert got == {1: 1.0, 2: 2.0, 3: 13.0, 4: 14.0}
+    res, jobs = jobs_of("INSERT INTO t_obs VALUES (5, 5.0), (6, 6.0)",
+                        "dml-observe-insert")
+    assert res.changes == 2
+    assert jobs == 1, f"expected the insert job only, got {jobs} jobs"
+    assert eng.sql("SELECT count(*) AS n FROM t_obs").rows[0].n == 6
     eng.sql("DROP TABLE t_obs")
 
 
@@ -367,6 +382,22 @@ def test_query_log_buckets_and_flush(spark, tmp_path):
         (r["bucket_ts"], r["statement"]): r["count"] for r in back.collect()
     }
     assert got[(960, "SELECT 1")] == 2
+
+
+def test_query_log_keeps_newest_buckets(spark):
+    """A server that never flushes keeps at most QUERY_LOG_BUCKETS
+    minute buckets: the oldest leave as new minutes arrive."""
+    from litebase_spark.engine import QUERY_LOG_BUCKETS, QueryMetrics
+
+    m = QueryMetrics()
+    minutes = QUERY_LOG_BUCKETS + 7
+    for i in range(minutes):
+        m.record("SELECT 1", 0.01, ts=60.0 * i)
+        m.record("SELECT 2", 0.02, ts=60.0 * i + 1)
+    kept = sorted({r["bucket_ts"] for r in m.log_entries()})
+    assert len(kept) == QUERY_LOG_BUCKETS
+    assert kept[-1] == 60 * (minutes - 1)  # the newest bucket survives
+    assert m.total_count() == 2 * minutes  # overall totals keep everything
 
 
 def _lognormal_latencies(seed: int):
@@ -947,6 +978,144 @@ def test_attach_detach_database(engine, sf_dir):
     assert os.path.exists(f"{sf_dir}/orders.parquet")
     with pytest.raises(Exception, match="no such database"):
         eng.sql("DETACH att")
+
+
+def test_trigger_keeps_caller_text(engine):
+    """sqlite_master shows a trigger as the caller wrote it, SQLite
+    functions and all; its body is translated each time it runs."""
+    stmt = ("CREATE TRIGGER trg_txt AFTER INSERT ON t_txt "
+            "BEGIN SELECT iif(1, 2, 3) AS x; END")
+    engine.sql(stmt)
+    try:
+        got = engine.sql("SELECT sql FROM sqlite_master "
+                         "WHERE type = 'trigger' AND name = 'trg_txt'").rows
+        assert [r.sql for r in got] == [stmt]
+    finally:
+        engine.sql("DROP TRIGGER trg_txt")
+
+
+def _dml_table(eng, name, rows, cols="k INT, v INT"):
+    import shutil
+
+    eng.sql(f"DROP TABLE IF EXISTS {name}")
+    shutil.rmtree(f"spark-warehouse/{name}", ignore_errors=True)
+    eng.sql(f"CREATE TABLE {name} ({cols}) USING PARQUET")
+    if rows:
+        eng.sql(f"INSERT INTO {name} VALUES "
+                + ", ".join(f"({k}, {'NULL' if v is None else v})"
+                            for k, v in rows))
+
+
+def _in_both_modes(eng, name, rows, statements, cols="k INT, v INT"):
+    """Run (statement, params) pairs on a fresh `name` in autocommit and
+    inside one transaction; yield (mode, results, final rows)."""
+    for mode in ("autocommit", "transaction"):
+        _dml_table(eng, name, rows, cols)
+        try:
+            if mode == "autocommit":
+                res = [eng.sql(s, p) for s, p in statements]
+            else:
+                with eng.transaction() as txn:
+                    res = [txn.sql(s, p) for s, p in statements]
+            final = sorted(tuple(r) for r in
+                           eng.sql(f"SELECT k, v FROM {name}").rows)
+            yield mode, res, final
+        finally:
+            eng.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_delete_keeps_rows_whose_where_is_null(engine):
+    # SQLite deletes only the rows where the predicate is true
+    for mode, res, final in _in_both_modes(
+            engine, "t_delnull", [(1, 10), (2, None), (3, 30)],
+            [("DELETE FROM t_delnull WHERE v > 15", None)]):
+        assert res[0].changes == 1, mode
+        assert final == [(1, 10), (2, None)], mode
+
+
+def test_parameterized_update_and_delete(engine):
+    stmts = [
+        ("UPDATE t_dmlp SET v = ? WHERE k = ?", [99, 2]),
+        ("UPDATE t_dmlp SET v = v + :d WHERE k >= :lo", {"d": 1, "lo": 3}),
+        ("DELETE FROM t_dmlp WHERE k = ?", [1]),
+        ("DELETE FROM t_dmlp WHERE v = :v", {"v": 41}),
+    ]
+    for mode, res, final in _in_both_modes(
+            engine, "t_dmlp", [(1, 10), (2, 20), (3, 30), (4, 40)], stmts):
+        assert [r.changes for r in res] == [1, 2, 1, 1], mode
+        assert final == [(2, 99), (3, 31)], mode
+
+
+def test_update_keeps_the_table_schema(engine, spark):
+    _dml_table(engine, "t_dmls", [(1, 10), (3, 30)])
+    try:
+        before = spark.table("t_dmls").dtypes
+        assert engine.sql("UPDATE t_dmls SET v = v / 4 WHERE k = 3").changes == 1
+        assert spark.table("t_dmls").dtypes == before
+        got = sorted(tuple(r) for r in engine.sql("SELECT * FROM t_dmls").rows)
+        assert got == [(1, 10), (3, 7)]  # SQLite: 30 / 4 = 7
+    finally:
+        engine.sql("DROP TABLE IF EXISTS t_dmls")
+
+
+def test_dml_refuses_values_the_column_cannot_hold(engine):
+    """Out-of-range and non-numeric values for an INT column raise in
+    both modes and leave the table as it was (a plain CAST would wrap
+    3000000000 to -1294967296 and turn 'abc' into NULL). A numeric
+    string stores as its number, as under SQLite's column affinity."""
+    bad = ["INSERT INTO t_dmlbad VALUES (3000000000, 1)",
+           "INSERT INTO t_dmlbad VALUES ('abc', 1)",
+           "INSERT INTO t_dmlbad SELECT k, v * 3000000000 FROM t_dmlbad",
+           "UPDATE t_dmlbad SET v = 3000000000 WHERE k = 1",
+           "UPDATE t_dmlbad SET v = 'abc' WHERE k = 1"]
+    for mode in ("autocommit", "transaction"):
+        _dml_table(engine, "t_dmlbad", [(1, 10)])
+        try:
+            with contextlib.ExitStack() as stack:
+                run = engine.sql
+                if mode == "transaction":
+                    run = stack.enter_context(engine.transaction()).sql
+                for stmt in bad:
+                    with pytest.raises(Exception, match="cannot store"):
+                        run(stmt)
+                assert run("INSERT INTO t_dmlbad VALUES ('7', 70)").changes == 1
+            got = sorted(tuple(r) for r in
+                         engine.sql("SELECT k, v FROM t_dmlbad").rows)
+            assert got == [(1, 10), (7, 70)], mode
+        finally:
+            engine.sql("DROP TABLE IF EXISTS t_dmlbad")
+
+
+def test_insert_fills_omitted_columns_from_default(engine, spark):
+    """An omitted column takes its DEFAULT, also after an UPDATE has
+    rewritten the table (the rewrite keeps the column's DEFAULT)."""
+    stmts = [("INSERT INTO t_dmldef (k) VALUES (1)", None),
+             ("UPDATE t_dmldef SET v = v + 1 WHERE k = 1", None),
+             ("INSERT INTO t_dmldef (k) VALUES (2)", None)]
+    for mode, res, final in _in_both_modes(
+            engine, "t_dmldef", [], stmts, cols="k INT, v INT DEFAULT 5"):
+        assert [r.changes for r in res] == [1, 1, 1], mode
+        assert final == [(1, 6), (2, 5)], mode
+        meta = spark.table("t_dmldef").schema["v"].metadata
+        assert meta.get("CURRENT_DEFAULT") == "5", mode
+
+
+def test_insert_or_ignore_that_adds_nothing_writes_no_file(engine, spark):
+    _dml_table(engine, "t_dmlign", [(1, 10)])
+    try:
+        engine.declare_primary_key("t_dmlign", ["k"])
+        files = sorted(spark.table("t_dmlign").inputFiles())
+        r = engine.sql("INSERT OR IGNORE INTO t_dmlign VALUES (1, 11)")
+        r2 = engine.sql("INSERT INTO t_dmlign VALUES (1, 12) "
+                        "ON CONFLICT(k) DO NOTHING")
+        assert (r.changes, r2.changes) == (0, 0)
+        assert sorted(spark.table("t_dmlign").inputFiles()) == files
+        assert engine.sql("INSERT OR IGNORE INTO t_dmlign VALUES (2, 20)"
+                          ).changes == 1
+        got = sorted(tuple(x) for x in engine.sql("SELECT * FROM t_dmlign").rows)
+        assert got == [(1, 10), (2, 20)]
+    finally:
+        engine.sql("DROP TABLE IF EXISTS t_dmlign")
 
 
 def test_trigger_body_with_case_end(engine):

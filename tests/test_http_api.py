@@ -150,6 +150,33 @@ def test_dml_roundtrip_and_changes(server):
     _call(server, "POST", path, {"queries": [{"id": "9", "statement": "DROP TABLE h_dml"}]}, token=t)
 
 
+def test_parameterized_update_over_the_wire(server):
+    """Typed `parameters` bind into an UPDATE's SET and WHERE."""
+    import shutil
+
+    path = "/v1/databases/main/main/query"
+    t = "admin:s3cret"
+    _call(server, "POST", path, {"queries": [{"id": "0", "statement": "DROP TABLE IF EXISTS h_param"}]}, token=t)
+    shutil.rmtree("spark-warehouse/h_param", ignore_errors=True)
+    code, body = _call(
+        server, "POST", path,
+        {"queries": [
+            {"id": "1", "statement": "CREATE TABLE h_param (id BIGINT, v STRING) USING PARQUET"},
+            {"id": "2", "statement": "INSERT INTO h_param VALUES (1,'a'),(2,'b')"},
+            {"id": "3", "statement": "UPDATE h_param SET v = ? WHERE id = ?",
+             "parameters": [{"type": "TEXT", "value": "z"},
+                            {"type": "INTEGER", "value": "2"}]},
+            {"id": "4", "statement": "SELECT id, v FROM h_param ORDER BY id"},
+        ]},
+        token=t,
+    )
+    assert code == 200, body
+    d = {r["id"]: r for r in body["data"]}
+    assert d["3"]["changes"] == 1
+    assert d["4"]["rows"] == [[1, "a"], [2, "z"]]
+    _call(server, "POST", path, {"queries": [{"id": "9", "statement": "DROP TABLE h_param"}]}, token=t)
+
+
 def test_transaction_over_the_wire(server):
     t = "admin:s3cret"
     qpath = "/v1/databases/main/main/query"

@@ -371,3 +371,91 @@ def test_double_quoted_identifiers_dqs0(eng):
     r = eng.sql("SELECT 'say \"hi\"' AS s").rows[0].s
     assert r == 'say "hi"'
     eng.sql("DROP TABLE dqs_t")
+
+
+def _dml_script(seed):
+    """A seeded DML script over tables {t} (id, g, m — m may be NULL,
+    DEFAULT 5) and {s} (id, bump): (statement template, positional
+    params)."""
+    rng = random.Random(seed)
+
+    def m():
+        return "NULL" if rng.random() < 0.25 else str(rng.randint(0, 40))
+
+    rows = ", ".join(f"({i}, '{rng.choice('ab')}', {m()})" for i in range(10))
+    bumps = ", ".join(f"({i}, {rng.randint(1, 9)})"
+                      for i in rng.sample(range(12), 4))
+    dup = rng.randint(0, 9)
+    return [
+        (f"INSERT INTO {{t}} VALUES {rows}", None),
+        (f"INSERT INTO {{s}} VALUES {bumps}", None),
+        ("UPDATE {t} SET m = m + ? WHERE g = ?", [rng.randint(1, 5), "a"]),
+        ("UPDATE {t} SET m = iif(m > ?, m - 1, m), g = upper(g) "
+         "WHERE typeof(id) = 'integer' RETURNING id, g, m",
+         [rng.randint(10, 30)]),
+        ("DELETE FROM {t} WHERE m > ? RETURNING id, m", [rng.randint(25, 40)]),
+        ("UPDATE {t} SET m = m + s.bump FROM {s} AS s WHERE {t}.id = s.id",
+         None),
+        ("INSERT INTO {t} SELECT id + 100, g, m FROM {t} WHERE m IS NULL",
+         None),
+        ("INSERT INTO {t} VALUES (?, 'c', ?), (?, 'c', NULL) "
+         "ON CONFLICT(id) DO UPDATE SET m = excluded.m, g = excluded.g "
+         "RETURNING id, g, m", [dup, rng.randint(0, 9), 50]),
+        (f"INSERT INTO {{t}} VALUES ({dup}, 'd', 1), (51, 'd', 2) "
+         "ON CONFLICT(id) DO NOTHING", None),
+        (f"REPLACE INTO {{t}} VALUES ({(dup + 1) % 10}, 'e', 7), "
+         "(52, 'e', NULL), (52, 'f', 8)", None),
+        ("INSERT INTO {t} (id, g) VALUES (?, ?) RETURNING *", [60, "z"]),
+        ("DELETE FROM {t} WHERE g IN ('A', 'c') RETURNING *", None),
+    ]
+
+
+def test_dml_script_autocommit_transaction_and_sqlite_agree(eng):
+    """One seeded DML script, three ways — autocommit Engine.sql, inside
+    one engine.transaction(), stdlib sqlite3: the same final rows, the
+    same changes per statement and the same RETURNING rows."""
+    import shutil
+
+    script = _dml_script(20261018)
+    runs = {}
+    for mode in ("auto", "txn"):
+        t, s = f"dml3_{mode}", f"dml3_{mode}_src"
+        for name in (t, s):
+            eng.sql(f"DROP TABLE IF EXISTS {name}")
+            shutil.rmtree(f"spark-warehouse/{name}", ignore_errors=True)
+        eng.sql(f"CREATE TABLE {t} (id BIGINT PRIMARY KEY, g STRING, "
+                "m BIGINT DEFAULT 5) USING PARQUET")
+        eng.sql(f"CREATE TABLE {s} (id BIGINT, bump BIGINT) USING PARQUET")
+        out = []
+        try:
+            if mode == "auto":
+                for stmt, params in script:
+                    r = eng.sql(stmt.format(t=t, s=s), params)
+                    out.append((r.changes, sorted(tuple(x) for x in r.rows)))
+            else:
+                with eng.transaction() as txn:
+                    for stmt, params in script:
+                        r = txn.sql(stmt.format(t=t, s=s), params)
+                        out.append(
+                            (r.changes, sorted(tuple(x) for x in r.rows)))
+            out.append(sorted(tuple(x) for x in
+                              eng.sql(f"SELECT id, g, m FROM {t}").rows))
+        finally:
+            eng.sql(f"DROP TABLE IF EXISTS {t}")
+            eng.sql(f"DROP TABLE IF EXISTS {s}")
+        runs[mode] = out
+    con = sqlite3.connect(":memory:")
+    con.execute("CREATE TABLE t (id INTEGER PRIMARY KEY, g TEXT, "
+                "m INTEGER DEFAULT 5)")
+    con.execute("CREATE TABLE s (id INTEGER, bump INTEGER)")
+    want = []
+    for stmt, params in script:
+        before = con.total_changes
+        rows = con.execute(stmt.format(t="t", s="s"), params or []).fetchall()
+        want.append((con.total_changes - before,
+                     sorted(tuple(x) for x in rows)))
+    want.append(sorted(con.execute("SELECT id, g, m FROM t")))
+    for mode, got in runs.items():
+        for i, (g, w) in enumerate(zip(got, want)):
+            what = script[i][0] if i < len(script) else "final rows"
+            assert g == w, f"{mode} diverged from sqlite at {what}"
