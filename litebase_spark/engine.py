@@ -42,7 +42,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Row, SparkSession
 
 from litebase_spark.catalog import register_views
-from litebase_spark.functions.dialect import to_spark_sql
+from litebase_spark.functions.dialect import to_spark_sql, top_level_search
 from litebase_spark.session import get_spark
 
 # Statement-prefix classes, mirroring reference pkg/database/query.go:46-102
@@ -312,6 +312,13 @@ def _flag(cond: str | None) -> str:
     """1 where the WHERE clause is true, else 0: a NULL predicate selects
     nothing, as in SQLite."""
     return f"CAST(coalesce(({cond}), false) AS INT)" if cond else "1"
+
+
+def _cut(text: str, keyword: re.Pattern) -> tuple[str, str | None]:
+    """text split around its first top-level `keyword` (outside literals
+    and parentheses); (text, None) without one."""
+    m = top_level_search(keyword, text)
+    return (text, None) if m is None else (text[:m.start()], text[m.end():])
 
 
 def _store(expr: str, col: str, dtype: str) -> str:
@@ -1237,10 +1244,9 @@ class Engine:
     # bound args, so `?`/`:name` work in every clause.
 
     _TABLE = rf"({_IDENT}(?:\.{_IDENT})?)"
-    _UPDATE_RE = re.compile(
-        rf"(?is)^UPDATE\s+{_TABLE}\s+SET\s+(.*?)"
-        r"(?:\s+FROM\s+(.+?))?(?:\s+WHERE\s+(.*))?$"
-    )
+    _UPDATE_RE = re.compile(rf"(?is)^UPDATE\s+{_TABLE}\s+SET\s+(.*)$")
+    _WHERE_RE = re.compile(r"(?i)\s+WHERE\s+")
+    _FROM_RE = re.compile(r"(?i)\s+FROM\s+")
     _DELETE_RE = re.compile(
         rf"(?is)^DELETE\s+FROM\s+{_TABLE}(?:\s+WHERE\s+(.*))?$"
     )
@@ -1314,7 +1320,11 @@ class Engine:
         stmt = sql_text.strip().rstrip(";").rstrip()
         m = self._UPDATE_RE.match(stmt)
         if m:
-            table, set_clause, from_clause, where = m.groups()
+            # SET list [FROM …] [WHERE …], cut at top-level keywords only:
+            # a subquery in SET or FROM has its own FROM and WHERE
+            table, set_clause = m.groups()
+            set_clause, where = _cut(set_clause, self._WHERE_RE)
+            set_clause, from_clause = _cut(set_clause, self._FROM_RE)
             tgt = self.spark.table(table)
             assignments = self._assignments(tgt, set_clause)
             if from_clause:
@@ -1466,11 +1476,18 @@ class Engine:
         sequentially, so REPLACE/DO UPDATE keep the LAST proposed row per
         key and IGNORE/DO NOTHING keep the FIRST (statement order is the
         scan order of the proposed rows). `__n` keeps how many rows each
-        survivor stands for: SQLite counts every processed row."""
+        survivor stands for: SQLite counts every processed row. A row
+        with a NULL in any key conflicts with nothing (NULLs are distinct
+        in a UNIQUE index), so it forms its own group."""
+        from functools import reduce
+
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        w = Window.partitionBy(*keys)
+        has_null = reduce(
+            lambda a, b: a | b, [F.col(_q(k)).isNull() for k in keys]
+        )
+        w = Window.partitionBy(*keys, F.when(has_null, F.col("__seq")))
         seq = F.col("__seq").desc() if keep_last else F.col("__seq").asc()
         return (
             src.withColumn("__seq", F.monotonically_increasing_id())

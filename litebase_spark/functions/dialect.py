@@ -57,6 +57,24 @@ def _paren_end(s: str, k: int) -> int | None:
     return j
 
 
+def top_level_search(pattern: re.Pattern, s: str) -> re.Match | None:
+    """The first match of `pattern` in s outside string literals and
+    parentheses."""
+    depth, i = 0, 0
+    while True:
+        m = _PAREN_RE.search(s, i)
+        end = len(s) if m is None else m.start()
+        if depth == 0 and (hit := pattern.search(s, i, end)):
+            return hit
+        if m is None:
+            return None
+        if m.group() == "'":
+            i = _literal_end(s, m.start())
+        else:
+            depth += 1 if m.group() == "(" else -1
+            i = m.end()
+
+
 def _outside_literals(sql: str, fn) -> str:
     """Apply fn to every stretch of sql between string literals."""
     out, i = [], 0
@@ -289,8 +307,10 @@ def _dt_chain(ts_arg: str, mods: list[str]) -> str | None:
     return expr
 
 
+# Spark's typeof() is the static column type, so a NULL value is tested
+# first: SQLite types the value.
 _TYPEOF_CASE = (
-    "CASE WHEN typeof({a}) = 'void' THEN 'null' "
+    "CASE WHEN {a} IS NULL THEN 'null' "
     "WHEN typeof({a}) = 'string' THEN 'text' "
     "WHEN typeof({a}) IN ('int','bigint','smallint','tinyint','boolean')"
     " THEN 'integer' "

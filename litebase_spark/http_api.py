@@ -2,22 +2,19 @@
 user surface, re-expressed over Engine).
 
 Reference parity (behavioral, not structural):
-  * routes — POST /v1/databases/{db}/{branch}/query (batch of typed
-    queries), POST .../query/stream (pipelined NDJSON frames; SELECT
-    results stream via toLocalIterator, never collected server-side),
-    GET .../metrics/query, POST .../transactions,
-    POST .../transactions/{id}/commit, DELETE .../transactions/{id}
-    (pkg/http/routes.go:252-303);
+  * routes — every route is declared once in `ROUTES` below with its
+    method, path, required grants and handler (pkg/http/routes.go);
   * request shape — {"queries": [{id, statement, parameters,
-    transaction_id?}]} with typed parameters TEXT/INTEGER/FLOAT/NULL/
-    BLOB (pkg/http/query_controller.go:11-141,
+    transaction_id?, timeout_ms?}]} with typed parameters TEXT/INTEGER/
+    FLOAT/NULL/BLOB (pkg/http/query_controller.go:11-141,
     pkg/database/query_input.go:28-32);
   * authorization — access keys carry statements granting privileges on
     database:branch resources (pkg/auth/database_privileges.go:4-45);
-    per-statement-class privilege checks (select/insert/update/delete/
-    pragma/...) gate execution;
+    each route requires a grant, and every statement also needs its
+    statement-class privilege (select/insert/update/delete/pragma/...);
   * single-writer — the Spark driver is the write path (the reference
-    forwards writes to the primary); a lock serializes write statements.
+    forwards writes to the primary); a lock serializes write and
+    transactional statements.
 
 Implementation is stdlib http.server (no external deps in this
 environment); authentication accepts BOTH the reference's HMAC-signed
@@ -25,14 +22,17 @@ request tokens (pkg/auth/request_signer.go scheme: signature over
 method + path + signed headers + query params + body hash, chained
 hmac-sha256 through the X-Lbdb-Date value, 10 s replay window —
 sign_request / validate_signed_request below) AND a
-`Bearer <key_id>:<secret>` compat fallback. The ACL model
-(resources x privileges) gates every statement either way. For
-production swap the transport; Engine and the ACLs are the surface.
+`Bearer <key_id>:<secret>` compat fallback. One dispatcher
+authenticates and authorizes every request, and one function
+(`prepare_statement`) checks every statement of the batch, NDJSON and
+binary query routes. For production swap the transport; Engine and the
+ACLs are the surface.
 """
 
 from __future__ import annotations
 
 import base64
+import contextlib
 import datetime as dt
 import decimal
 import hashlib
@@ -41,9 +41,14 @@ import json
 import os
 import re
 import threading
+import time
 from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from types import SimpleNamespace
+from typing import NamedTuple
+from urllib.parse import parse_qs, urlparse
 
+from litebase_spark import wire
 from litebase_spark.engine import Engine, classify_statement
 
 # -- access keys / ACLs ------------------------------------------------------
@@ -79,6 +84,13 @@ class AccessKeyStatement:
 
     resources: list[str]
     privileges: list[str]  # privilege names or '*'
+
+
+def _grants_json(statements: list[AccessKeyStatement]) -> list[dict]:
+    return [
+        {"resources": s.resources, "privileges": s.privileges}
+        for s in statements
+    ]
 
 
 @dataclass
@@ -174,10 +186,7 @@ class User:
     def as_response(self) -> dict:
         return {
             "username": self.username,
-            "statements": [
-                {"resources": s.resources, "privileges": s.privileges}
-                for s in self.statements
-            ],
+            "statements": _grants_json(self.statements),
             "created_at": self.created_at,
             "updated_at": self.updated_at,
         }
@@ -371,9 +380,7 @@ def validate_signed_request(
         then = int(date_value)
     except (TypeError, ValueError):
         return None
-    import time as _time
-
-    if _time.time() - then >= max_age_seconds:
+    if time.time() - then >= max_age_seconds:
         return None
     return key
 
@@ -393,6 +400,13 @@ def _json_value(v):
     return v
 
 
+def _json_rows(df) -> list[dict]:
+    return [
+        {k: _json_value(v) for k, v in r.asDict().items()}
+        for r in df.collect()
+    ]
+
+
 def result_envelope(qid, res) -> dict:
     return {
         "id": qid,
@@ -405,71 +419,239 @@ def result_envelope(qid, res) -> dict:
     }
 
 
+def _blob(v) -> bytes:
+    # JSON carries BLOBs base64-encoded; the binary wire path
+    # (wire.decode_parameter) already yields raw bytes
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v)
+    return base64.b64decode(v)
+
+
+# query_input.go parameter types -> python bind
+_PARAM_TYPES = {
+    "NULL": lambda v: None,
+    "INTEGER": int,
+    "FLOAT": float,
+    "REAL": float,
+    "TEXT": str,
+    "BLOB": _blob,
+}
+
+
 def decode_parameters(params: list[dict] | None):
-    """Typed wire parameters -> python binds (query_input.go types)."""
+    """Typed wire parameters -> python binds (query_input.go types). A
+    type outside _PARAM_TYPES, or a value its type cannot hold, raises
+    ValueError; nothing is bound as text by default."""
     if not params:
         return None
+    if not isinstance(params, list):
+        raise ValueError("parameters must be a list")
     out = []
-    for p in params:
-        t = (p.get("type") or "TEXT").upper()
-        v = p.get("value")
-        if t == "NULL":
-            out.append(None)
-        elif t == "INTEGER":
-            out.append(int(v))
-        elif t in ("FLOAT", "REAL"):
-            out.append(float(v))
-        elif t == "BLOB":
-            # JSON carries BLOBs base64-encoded; the binary wire path
-            # (wire.decode_parameter) already yields raw bytes — pass
-            # those through untouched.
-            if isinstance(v, (bytes, bytearray)):
-                out.append(bytes(v))
-            else:
-                out.append(base64.b64decode(v))
-        else:
-            out.append(str(v))
+    for i, p in enumerate(params, 1):
+        if not isinstance(p, dict):
+            raise ValueError(f"parameter {i} must be an object")
+        t = str(p.get("type") or "TEXT").upper()
+        if t not in _PARAM_TYPES:
+            raise ValueError(f"parameter {i}: unsupported type {t}")
+        try:
+            out.append(_PARAM_TYPES[t](p.get("value")))
+        except (TypeError, ValueError):
+            raise ValueError(
+                f"parameter {i}: {p.get('value')!r} is not a valid {t}"
+            ) from None
     return out
 
 
-# -- server ------------------------------------------------------------------
+# -- the statement path ------------------------------------------------------
 
-_QUERY_RE = re.compile(r"^/v1/databases/([^/]+)/([^/]+)/query$")
-_QSTREAM_RE = re.compile(r"^/v1/databases/([^/]+)/([^/]+)/query/stream$")
-_METRICS_RE = re.compile(r"^/v1/databases/([^/]+)/([^/]+)/metrics/query$")
-_CARD_RE = re.compile(
-    r"^/v1/databases/([^/]+)/([^/]+)/tables/([A-Za-z_][A-Za-z0-9_]*)/card$"
+
+class Refusal(Exception):
+    """A request the server answers with an HTTP error status; str() is
+    the message."""
+
+    def __init__(self, status: int, message: str) -> None:
+        super().__init__(message)
+        self.status = status
+
+
+_LOCKED_CLASSES = ("DML", "DDL", "MAINT", "TCL")
+
+
+@dataclass
+class PreparedStatement:
+    """One query input, checked and decoded for QueryServer.execute."""
+
+    statement: str
+    params: list | None
+    transaction_id: str | None
+    timeout: float | None  # seconds; None runs unbounded
+    locked: bool  # runs under the single-writer lock
+
+
+def prepare_statement(key: AccessKey, resource: str, q) -> PreparedStatement:
+    """The per-statement checks shared by the batch, NDJSON and binary
+    query routes. A query that is not an object, lacks a statement or
+    needs a privilege the key lacks raises Refusal (400 / 403); a
+    malformed parameter or timeout_ms raises ValueError. Writes and
+    every statement inside a transaction take the single-writer lock."""
+    if not isinstance(q, dict):
+        raise Refusal(400, "Each query must be a JSON object.")
+    stmt = q.get("statement")
+    if not stmt or not isinstance(stmt, str):
+        raise Refusal(400, "The SQL statement field is required.")
+    priv = required_privilege(stmt)
+    if not key.allows(resource, priv):
+        raise Refusal(403, f"forbidden: requires {priv}")
+    params = decode_parameters(q.get("parameters"))
+    # per-query busy_timeout analog (connection busy_timeout 5000 ms,
+    # database_connection.go:52)
+    tmo = q.get("timeout_ms")
+    try:
+        timeout = float(tmo) / 1000.0 if tmo else None
+    except (TypeError, ValueError):
+        raise ValueError(f"timeout_ms must be a number, not {tmo!r}") from None
+    txn = q.get("transaction_id") or None
+    locked = txn is not None or classify_statement(stmt) in _LOCKED_CLASSES
+    return PreparedStatement(stmt, params, txn, timeout, locked)
+
+
+# -- routes ------------------------------------------------------------------
+#
+# Every route is declared once in ROUTES: method, path template, the
+# grants that admit it and the Handler method that serves it. A grant is
+# a (resource template, privilege) pair filled from the path parameters;
+# any one of a route's grants admits the request. `grants=None` is an
+# open route, `()` admits any authenticated key. `_dispatch` does the
+# rest once per request: 401, the route's 403, the 503 of a route that
+# needs a VersionedStore, and the JSON body (400 if it is not an object).
+# An unmatched path is authenticated before its 404.
+
+
+class Route(NamedTuple):
+    method: str
+    template: str
+    grants: tuple | None
+    handler: str
+    needs_store: bool = False
+
+
+# table report -> (Engine method, text params, positive-int params)
+_REPORTS = {
+    "card": ("dataset_card",
+             ("source_col", "lang_col", "text_col", "chars_col"), ()),
+    "compaction-plan": ("compaction_plan",
+                        (), ("rows_per_file", "target_bytes")),
+    "drift-report": ("drift_report",
+                     ("value_col", "ts_col", "split", "cols"), ()),
+}
+
+# a path parameter matches one segment unless named here
+_PARAM_PATTERNS = {
+    "table": r"[A-Za-z_][A-Za-z0-9_]*",
+    "report": "|".join(map(re.escape, _REPORTS)),
+}
+
+_DB = "/v1/databases/{db}"
+_BR = "/v1/databases/{db}/{branch}"
+_BRANCH = "database:{db}:branch:{branch}"
+_SELECT = ((_BRANCH, "database:select"),)
+_QUERY = ((_BRANCH, "database:query"),)
+_TXN = ((_BRANCH, "database:transaction"),)
+_MANAGE = ((_BRANCH, "database:manage"),)
+_DATABASES = (("*", "database:manage"),)
+_ACCESS_KEYS = (("*", "access-key:manage"),)
+_CLUSTER = (("*", "cluster:manage"),)
+
+ROUTES = (  # reference pkg/http/routes.go
+    Route("GET", "/health", None, "_health"),
+    Route("GET", "/v1/status", (), "_status"),
+    Route("GET", "/v1/databases", _DATABASES, "_database_list"),
+    Route("POST", "/v1/databases", _DATABASES, "_database_create"),
+    Route("GET", _DB, _DATABASES, "_database_show"),
+    Route("DELETE", _DB, _DATABASES, "_database_delete"),
+    Route("POST", _DB + "/branches",
+          (("database:{db}:branch:main", "database:manage"),),
+          "_branch_create", needs_store=True),
+    Route("GET", _BR, _SELECT + _DATABASES, "_branch_show"),
+    Route("POST", _BR + "/query", _QUERY, "_query"),
+    Route("POST", _BR + "/query/stream", _QUERY, "_query_stream"),
+    Route("GET", _BR + "/metrics/query", _SELECT, "_metrics"),
+    Route("GET", _BR + "/tables/{table}/{report}", _SELECT, "_table_report"),
+    Route("POST", _BR + "/transactions", _TXN, "_txn_begin"),
+    Route("POST", _BR + "/transactions/{txn}/commit", _TXN, "_txn_commit"),
+    Route("DELETE", _BR + "/transactions/{txn}", _TXN, "_txn_rollback"),
+    Route("GET", _BR + "/snapshots", _MANAGE, "_snapshot_list",
+          needs_store=True),
+    Route("POST", _BR + "/snapshots", _MANAGE, "_snapshot_create",
+          needs_store=True),
+    Route("GET", _BR + "/snapshots/{snapshot}", _MANAGE, "_snapshot_show",
+          needs_store=True),
+    Route("GET", _BR + "/backups", _MANAGE, "_backup_list"),
+    Route("POST", _BR + "/backups", _MANAGE, "_backup_create",
+          needs_store=True),
+    Route("GET", _BR + "/backups/{backup}", _MANAGE, "_backup_show"),
+    Route("DELETE", _BR + "/backups/{backup}", _MANAGE, "_backup_delete",
+          needs_store=True),
+    Route("POST", _BR + "/restore", _MANAGE, "_restore", needs_store=True),
+    Route("GET", "/v1/access-keys", _ACCESS_KEYS, "_key_list"),
+    Route("POST", "/v1/access-keys", _ACCESS_KEYS, "_key_create"),
+    Route("GET", "/v1/access-keys/{key_id}", _ACCESS_KEYS, "_key_show"),
+    Route("PUT", "/v1/access-keys/{key_id}", _ACCESS_KEYS, "_key_update"),
+    Route("DELETE", "/v1/access-keys/{key_id}", _ACCESS_KEYS, "_key_delete"),
+    Route("POST", "/v1/keys", _CLUSTER, "_ekey_store"),
+    Route("POST", "/v1/keys/activate", _CLUSTER, "_ekey_activate"),
+    Route("GET", "/v1/users", _CLUSTER, "_user_list"),
+    Route("POST", "/v1/users", _CLUSTER, "_user_create"),
+    Route("GET", "/v1/users/{username}", _CLUSTER, "_user_show"),
+    Route("PUT", "/v1/users/{username}", _CLUSTER, "_user_update"),
+    Route("DELETE", "/v1/users/{username}", _CLUSTER, "_user_delete"),
 )
-_COMPACTION_RE = re.compile(
-    r"^/v1/databases/([^/]+)/([^/]+)/tables/([A-Za-z_][A-Za-z0-9_]*)"
-    r"/compaction-plan$"
-)
-_DRIFT_RE = re.compile(
-    r"^/v1/databases/([^/]+)/([^/]+)/tables/([A-Za-z_][A-Za-z0-9_]*)"
-    r"/drift-report$"
-)
-_SNAP_RE = re.compile(r"^/v1/databases/([^/]+)/([^/]+)/snapshots$")
-_SNAP_ID_RE = re.compile(
-    r"^/v1/databases/([^/]+)/([^/]+)/snapshots/([^/]+)$"
-)
-_STATUS_RE = re.compile(r"^/v1/status$")
-_BRANCH_SHOW_RE = re.compile(r"^/v1/databases/([^/]+)/([^/]+)$")
-_BACKUP_RE = re.compile(r"^/v1/databases/([^/]+)/([^/]+)/backups$")
-_BACKUP_ID_RE = re.compile(r"^/v1/databases/([^/]+)/([^/]+)/backups/([^/]+)$")
-_RESTORE_RE = re.compile(r"^/v1/databases/([^/]+)/([^/]+)/restore$")
-_BRANCH_RE = re.compile(r"^/v1/databases/([^/]+)/branches$")
-_DBS_RE = re.compile(r"^/v1/databases$")
-_DB_RE = re.compile(r"^/v1/databases/([^/]+)$")
-_KEYS_RE = re.compile(r"^/v1/access-keys$")
-_EKEYS_RE = re.compile(r"^/v1/keys$")
-_EKEY_ACT_RE = re.compile(r"^/v1/keys/activate$")
-_KEY_ID_RE = re.compile(r"^/v1/access-keys/([^/]+)$")
-_USERS_RE = re.compile(r"^/v1/users$")
-_USER_ID_RE = re.compile(r"^/v1/users/([^/]+)$")
-_TXN_RE = re.compile(r"^/v1/databases/([^/]+)/([^/]+)/transactions$")
-_TXN_ID_RE = re.compile(
-    r"^/v1/databases/([^/]+)/([^/]+)/transactions/([^/]+)(/commit)?$"
-)
+
+
+def _path_regex(template: str) -> re.Pattern:
+    return re.compile("^" + re.sub(
+        r"\{(\w+)\}",
+        lambda m: f"(?P<{m[1]}>{_PARAM_PATTERNS.get(m[1], '[^/]+')})",
+        template,
+    ) + "$")
+
+
+_ROUTE_REGEX = [(r, _path_regex(r.template)) for r in ROUTES]
+
+
+def match_route(method: str, path: str):
+    """(Route, path parameters) of the route serving a request, or
+    (None, None)."""
+    for route, rx in _ROUTE_REGEX:
+        m = rx.match(path) if route.method == method else None
+        if m:
+            return route, m.groupdict()
+    return None, None
+
+
+def _grants(items) -> list[AccessKeyStatement]:
+    """A request's `statements` list -> grants."""
+    if not isinstance(items, list) or not all(
+        isinstance(s, dict) for s in items
+    ):
+        raise Refusal(400, "statements must be a list of objects")
+    return [
+        AccessKeyStatement(
+            resources=s.get("resources", []),
+            privileges=s.get("privileges", []),
+        )
+        for s in items
+    ]
+
+
+def _is_binary(headers) -> bool:
+    """Content negotiation on the stream route: the reference's binary
+    frame protocol on application/octet-stream, NDJSON otherwise."""
+    ctype = (headers.get("Content-Type") or "").lower()
+    return ctype.startswith("application/octet-stream")
+
+
+# -- server ------------------------------------------------------------------
 
 
 class QueryServer:
@@ -500,9 +682,7 @@ class QueryServer:
         # store-signature-check + activate-swap atomic w.r.t. each other.
         self.key_lock = threading.Lock()
         self.write_lock = threading.Lock()  # driver = single writer
-        import time as _time
-
-        self.started_at = _time.time()
+        self.started_at = time.time()
         server = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -517,6 +697,12 @@ class QueryServer:
                 self.end_headers()
                 self.wfile.write(data)
 
+            def _ok(self, data, code: int = 200) -> None:
+                self._send(code, {"status": "success", "data": data})
+
+            def _error(self, code: int, message: str) -> None:
+                self._send(code, {"status": "error", "message": message})
+
             def _auth(self) -> AccessKey | None:
                 h = self.headers.get("Authorization")
                 key = server.keys.authenticate(h)
@@ -529,8 +715,6 @@ class QueryServer:
                 # scheme; no Bearer prefix — the header IS the base64
                 # token)
                 if h and not h.startswith("Bearer "):
-                    from urllib.parse import parse_qs, urlparse
-
                     parsed = urlparse(self.path)
                     qp = {
                         k.lower(): v[0]
@@ -562,348 +746,295 @@ class QueryServer:
                     self._raw_cache = self.rfile.read(n) if n else b""
                 return self._raw_cache
 
-            def _body(self) -> dict:
-                return json.loads(self._raw() or b"{}")
-
-            def do_GET(self):  # noqa: N802 (stdlib API)
-                from urllib.parse import parse_qs, urlparse
-
-                parsed = urlparse(self.path)
-                if parsed.path == "/health":
-                    return self._send(200, {"status": "ok"})
-                if _STATUS_RE.match(parsed.path):
-                    # ClusterStatusController analog (routes.go:9-15):
-                    # single-driver deployment reports itself as primary
+            def _dispatch(self) -> None:
+                url = urlparse(self.path)
+                route, args = match_route(self.command, url.path)
+                key = None
+                if route is None or route.grants is not None:
                     key = self._auth()
                     if key is None:
-                        return self._send(401, {"status": "error", "message": "invalid access key"})
-                    import time as _time
-
-                    n_dbs = len(
-                        server.engine.spark.catalog.listDatabases()
-                    )
-                    return self._send(200, {"status": "success", "data": {
-                        "role": "primary",
-                        "databases": n_dbs,
-                        "queries_served": server.engine.metrics.total_count(),
-                        "uptime_s": round(
-                            _time.time() - server.started_at, 3
-                        ),
-                        "versioned_store": server.store is not None,
-                    }})
-                m = _METRICS_RE.match(parsed.path)
-                if m:
-                    key = self._auth()
-                    if key is None:
-                        return self._send(401, {"status": "error", "message": "invalid access key"})
-                    resource = f"database:{m.group(1)}:branch:{m.group(2)}"
-                    if not key.allows(resource, "database:select"):
-                        return self._send(403, {"status": "error", "message": "forbidden"})
-                    qs = parse_qs(parsed.query)
-                    if "from" in qs or "to" in qs:
-                        # windowed bucketed log (reference QueryLogController
-                        # reads the flushed query log with a time range)
-                        data = server.engine.metrics.log_entries(
-                            start=float(qs["from"][0]) if "from" in qs else None,
-                            end=float(qs["to"][0]) if "to" in qs else None,
-                        )
-                    else:
-                        data = [
-                            {k: _json_value(v) for k, v in r.asDict().items()}
-                            for r in server.engine.query_metrics().collect()
-                        ]
-                    return self._send(
-                        200, {"status": "success", "data": data}
-                    )
-                m = (
-                    _CARD_RE.match(parsed.path)
-                    or _COMPACTION_RE.match(parsed.path)
-                    or _DRIFT_RE.match(parsed.path)
+                        return self._error(401, "invalid access key")
+                if route is None:
+                    return self._send(404, {"status": "error"})
+                if route.grants and not any(
+                    key.allows(res.format(**args), priv)
+                    for res, priv in route.grants
+                ):
+                    return self._error(403, "forbidden")
+                if route.needs_store and server.store is None:
+                    return self._error(503, "no versioned store attached")
+                body = {}
+                if not _is_binary(self.headers):  # binary bodies stream
+                    try:
+                        body = json.loads(self._raw() or b"{}")
+                    except ValueError:
+                        body = None
+                    if not isinstance(body, dict):
+                        return self._error(400, "invalid input")
+                r = SimpleNamespace(
+                    key=key, body=body,
+                    query={k: v[0] for k, v in parse_qs(url.query).items()},
+                    **args,
                 )
-                if m:
-                    # ops-parity introspection for corpus tables: the
-                    # dataset card (datasheet rollup), the OPTIMIZE
-                    # bin-packing plan, and the fused drift report,
-                    # served like metrics — read-only, database:select
-                    # scoped
-                    key = self._auth()
-                    if key is None:
-                        return self._send(401, {"status": "error", "message": "invalid access key"})
-                    resource = f"database:{m.group(1)}:branch:{m.group(2)}"
-                    if not key.allows(resource, "database:select"):
-                        return self._send(403, {"status": "error", "message": "forbidden"})
-                    is_card = _CARD_RE.match(parsed.path) is not None
-                    is_drift = _DRIFT_RE.match(parsed.path) is not None
-                    qs = parse_qs(parsed.query)
-                    try:
-                        # parse params inside the error envelope: a
-                        # malformed or non-positive int (e.g.
-                        # ?target_bytes=abc, =0) must come back as a
-                        # 400 body, not a ValueError out of do_GET
-                        kw = {}
-                        for k, vs in qs.items():
-                            if is_card and k in (
-                                "source_col", "lang_col", "text_col",
-                                "chars_col",
-                            ):
-                                kw[k] = vs[0]
-                            elif is_drift and k in (
-                                "value_col", "ts_col", "split", "cols",
-                            ):
-                                kw[k] = vs[0]
-                            elif not is_card and not is_drift and k in (
-                                "rows_per_file", "target_bytes",
-                            ):
-                                kw[k] = int(vs[0])
-                                if kw[k] <= 0:
-                                    raise ValueError(
-                                        f"{k} must be a positive integer"
-                                    )
-                        fn = (
-                            server.engine.dataset_card
-                            if is_card
-                            else server.engine.drift_report
-                            if is_drift
-                            else server.engine.compaction_plan
-                        )
-                        rows = fn(m.group(3), **kw).collect()
-                    except Exception as exc:
-                        return self._send(
-                            400,
-                            {"status": "error", "message": str(exc)[:300]},
-                        )
-                    return self._send(200, {"status": "success", "data": [
-                        {k: _json_value(v) for k, v in r.asDict().items()}
-                        for r in rows
-                    ]})
-                m = _SNAP_RE.match(parsed.path)
-                if m:
-                    key = self._auth()
-                    if key is None:
-                        return self._send(401, {"status": "error", "message": "invalid access key"})
-                    if not self._manage_ok(key, m.group(1), m.group(2)):
-                        return self._send(403, {"status": "error", "message": "forbidden"})
-                    if server.store is None:
-                        return self._send(503, {"status": "error", "message": "no versioned store attached"})
-                    return self._send(200, {"status": "success", "data": server.store.list_snapshots()})
-                m = _BACKUP_RE.match(parsed.path)
-                if m:
-                    key = self._auth()
-                    if key is None:
-                        return self._send(401, {"status": "error", "message": "invalid access key"})
-                    if not self._manage_ok(key, m.group(1), m.group(2)):
-                        return self._send(403, {"status": "error", "message": "forbidden"})
-                    return self._send(200, {"status": "success", "data": self._backup_list()})
-                if _KEYS_RE.match(parsed.path):
-                    key = self._auth()
-                    if key is None:
-                        return self._send(401, {"status": "error", "message": "invalid access key"})
-                    if not key.allows("*", "access-key:manage"):
-                        return self._send(403, {"status": "error", "message": "forbidden"})
-                    return self._send(200, {"status": "success", "data": server.keys.list_ids()})
-                m = _KEY_ID_RE.match(parsed.path)
-                if m:
-                    key = self._auth()
-                    if key is None:
-                        return self._send(401, {"status": "error", "message": "invalid access key"})
-                    if not key.allows("*", "access-key:manage"):
-                        return self._send(403, {"status": "error", "message": "forbidden"})
-                    k = server.keys._keys.get(m.group(1))
-                    if k is None:
-                        return self._send(404, {"status": "error", "message": "no such key"})
-                    # AccessKeyControllerShow: id + statements, never the
-                    # secret (routes.go:62-66)
-                    return self._send(200, {"status": "success", "data": {
-                        "access_key_id": k.access_key_id,
-                        "statements": [
-                            {"resources": s.resources,
-                             "privileges": s.privileges}
-                            for s in k.statements
-                        ],
-                    }})
-                if _DBS_RE.match(parsed.path):
-                    key = self._auth()
-                    if key is None:
-                        return self._send(401, {"status": "error", "message": "invalid access key"})
-                    if not key.allows("*", "database:manage"):
-                        return self._send(403, {"status": "error", "message": "forbidden"})
-                    names = sorted(
-                        d.name
-                        for d in server.engine.spark.catalog.listDatabases()
-                    )
-                    return self._send(200, {"status": "success", "data": names})
-                if _USERS_RE.match(parsed.path):
-                    key = self._auth()
-                    if key is None:
-                        return self._send(401, {"status": "error", "message": "invalid access key"})
-                    if not key.allows("*", "cluster:manage"):
-                        return self._send(403, {"status": "error", "message": "forbidden"})
-                    return self._send(200, {"status": "success", "data": [
-                        u.as_response() for u in server.users.all()
-                    ]})
-                m = _USER_ID_RE.match(parsed.path)
-                if m:
-                    key = self._auth()
-                    if key is None:
-                        return self._send(401, {"status": "error", "message": "invalid access key"})
-                    if not key.allows("*", "cluster:manage"):
-                        return self._send(403, {"status": "error", "message": "forbidden"})
-                    u = server.users.get(m.group(1))
-                    if u is None:
-                        return self._send(404, {"status": "error", "message": "no such user"})
-                    return self._send(200, {"status": "success", "data": u.as_response()})
-                m = _SNAP_ID_RE.match(parsed.path)
-                if m:
-                    # SnapshotControllerShow (routes.go snapshots/{ts})
-                    key = self._auth()
-                    if key is None:
-                        return self._send(401, {"status": "error", "message": "invalid access key"})
-                    if not self._manage_ok(key, m.group(1), m.group(2)):
-                        return self._send(403, {"status": "error", "message": "forbidden"})
-                    if server.store is None:
-                        return self._send(503, {"status": "error", "message": "no versioned store attached"})
-                    try:
-                        snap = server.store.snapshot_at(float(m.group(3)))
-                    except Exception:
-                        return self._send(404, {"status": "error", "message": "no such snapshot"})
-                    return self._send(200, {"status": "success", "data": snap})
-                m = _BACKUP_ID_RE.match(parsed.path)
-                if m:
-                    # BackupControllerShow: archive metadata
-                    import os as _os
+                try:
+                    return getattr(self, route.handler)(r)
+                except Refusal as e:
+                    return self._error(e.status, str(e))
 
-                    key = self._auth()
-                    if key is None:
-                        return self._send(401, {"status": "error", "message": "invalid access key"})
-                    if not self._manage_ok(key, m.group(1), m.group(2)):
-                        return self._send(403, {"status": "error", "message": "forbidden"})
-                    if server.store is None:
-                        return self._send(404, {"status": "error", "message": "no such backup"})
-                    path = _os.path.join(
-                        self._backup_dir(), f"{m.group(3)}.tar.gz"
-                    )
-                    if not _os.path.exists(path):
-                        return self._send(404, {"status": "error", "message": "no such backup"})
-                    st = _os.stat(path)
-                    return self._send(200, {"status": "success", "data": {
-                        "backup_id": m.group(3),
-                        "size_bytes": st.st_size,
-                        "created_at": st.st_mtime,
-                    }})
-                m = _DB_RE.match(parsed.path)
-                if m:
-                    # DatabaseControllerShow: branches + tables of one db
-                    key = self._auth()
-                    if key is None:
-                        return self._send(401, {"status": "error", "message": "invalid access key"})
-                    if not key.allows("*", "database:manage"):
-                        return self._send(403, {"status": "error", "message": "forbidden"})
-                    db = m.group(1)
-                    cat = server.engine.spark.catalog
-                    all_dbs = {d.name for d in cat.listDatabases()}
-                    branches = ["main"] + sorted(
-                        n.split("__", 1)[1]
-                        for n in all_dbs
-                        if n.startswith(f"{db}__")
-                    )
-                    try:
-                        ns = db if db in all_dbs else None
-                        tables = sorted(
-                            t.name
-                            for t in (
-                                cat.listTables(ns)
-                                if ns else cat.listTables()
-                            )
-                        )
-                    except Exception:
-                        tables = []
-                    return self._send(200, {"status": "success", "data": {
-                        "database": db,
-                        "branches": branches,
-                        "tables": tables,
-                    }})
-                m = _BRANCH_SHOW_RE.match(parsed.path)
-                if m:
-                    # branch detail: tables in the branch namespace (main
-                    # = the session catalog; others = db__branch)
-                    key = self._auth()
-                    if key is None:
-                        return self._send(401, {"status": "error", "message": "invalid access key"})
-                    db, branch = m.group(1), m.group(2)
-                    if not key.allows(
-                        f"database:{db}:branch:{branch}", "database:select"
-                    ) and not key.allows("*", "database:manage"):
-                        return self._send(403, {"status": "error", "message": "forbidden"})
-                    cat = server.engine.spark.catalog
-                    all_dbs = {d.name for d in cat.listDatabases()}
-                    ns = f"{db}__{branch}"
-                    try:
-                        if branch == "main":
-                            tables = sorted(
-                                t.name for t in cat.listTables()
-                            )
-                        elif ns in all_dbs:
-                            tables = sorted(
-                                t.name for t in cat.listTables(ns)
-                            )
-                        else:
-                            return self._send(404, {"status": "error", "message": "no such branch"})
-                    except Exception:
-                        tables = []
-                    return self._send(200, {"status": "success", "data": {
-                        "database": db,
-                        "branch": branch,
-                        "tables": tables,
-                    }})
-                return self._send(404, {"status": "error"})
+            do_GET = do_POST = do_PUT = do_DELETE = _dispatch  # noqa: N815
 
-            def do_POST(self):  # noqa: N802
-                key = self._auth()
-                if key is None:
-                    return self._send(401, {"status": "error", "message": "invalid access key"})
-                m = _QUERY_RE.match(self.path)
-                if m:
-                    return self._query(key, m.group(1), m.group(2))
-                m = _QSTREAM_RE.match(self.path)
-                if m:
-                    # content negotiation: the reference's binary frame
-                    # protocol on application/octet-stream, NDJSON
-                    # otherwise
-                    ctype = (self.headers.get("Content-Type") or "").lower()
-                    if ctype.startswith("application/octet-stream"):
-                        return self._query_stream_binary(
-                            key, m.group(1), m.group(2)
+            # -- cluster, databases and branches ------------------------
+
+            def _health(self, r):
+                return self._send(200, {"status": "ok"})
+
+            def _status(self, r):
+                # ClusterStatusController analog (routes.go:9-15):
+                # single-driver deployment reports itself as primary
+                return self._ok({
+                    "role": "primary",
+                    "databases": len(
+                        server.engine.spark.catalog.listDatabases()
+                    ),
+                    "queries_served": server.engine.metrics.total_count(),
+                    "uptime_s": round(time.time() - server.started_at, 3),
+                    "versioned_store": server.store is not None,
+                })
+
+            def _database_list(self, r):
+                return self._ok(sorted(
+                    d.name for d in server.engine.spark.catalog.listDatabases()
+                ))
+
+            def _database_create(self, r):
+                name = r.body.get("name")
+                if not name:
+                    return self._error(400, "name is required")
+                with server.write_lock:
+                    server.engine.create_database(name)
+                return self._ok({"database": name}, 201)
+
+            def _database_show(self, r):
+                # DatabaseControllerShow: branches + tables of one db
+                cat = server.engine.spark.catalog
+                all_dbs = {d.name for d in cat.listDatabases()}
+                branches = ["main"] + sorted(
+                    n.split("__", 1)[1]
+                    for n in all_dbs
+                    if n.startswith(f"{r.db}__")
+                )
+                try:
+                    ns = r.db if r.db in all_dbs else None
+                    tables = sorted(t.name for t in cat.listTables(ns))
+                except Exception:
+                    tables = []
+                return self._ok({
+                    "database": r.db, "branches": branches, "tables": tables,
+                })
+
+            def _database_delete(self, r):
+                with server.write_lock:
+                    server.engine.drop_database(r.db)
+                return self._send(200, {"status": "success"})
+
+            def _branch_create(self, r):
+                name = r.body.get("name")
+                if not name:
+                    return self._error(400, "name is required")
+                tables = server.store.create_branch(
+                    name, source=r.body.get("source", "main")
+                )
+                return self._ok({"branch": name, "tables": tables}, 201)
+
+            def _branch_show(self, r):
+                # branch detail: tables in the branch namespace (main =
+                # the session catalog; others = db__branch)
+                cat = server.engine.spark.catalog
+                ns = f"{r.db}__{r.branch}"
+                if r.branch != "main" and ns not in {
+                    d.name for d in cat.listDatabases()
+                }:
+                    return self._error(404, "no such branch")
+                try:
+                    tables = sorted(
+                        t.name
+                        for t in cat.listTables(
+                            None if r.branch == "main" else ns
                         )
-                    return self._query_stream(key, m.group(1), m.group(2))
-                m = _TXN_RE.match(self.path)
-                if m:
-                    return self._txn_store(key, m.group(1), m.group(2))
-                m = _TXN_ID_RE.match(self.path)
-                if m and m.group(4):
-                    return self._txn_commit(key, m.group(1), m.group(2), m.group(3))
-                m = _SNAP_RE.match(self.path)
-                if m:
-                    return self._snapshot_create(key, m.group(1), m.group(2))
-                m = _BACKUP_RE.match(self.path)
-                if m:
-                    return self._backup_create(key, m.group(1), m.group(2))
-                m = _RESTORE_RE.match(self.path)
-                if m:
-                    return self._restore(key, m.group(1), m.group(2))
-                m = _BRANCH_RE.match(self.path)
-                if m:
-                    return self._branch_create(key, m.group(1))
-                if _DBS_RE.match(self.path):
-                    return self._database_create(key)
-                if _KEYS_RE.match(self.path):
-                    return self._key_create(key)
-                if _EKEY_ACT_RE.match(self.path):
-                    return self._ekey_activate(key)
-                if _EKEYS_RE.match(self.path):
-                    return self._ekey_store(key)
-                if _USERS_RE.match(self.path):
-                    return self._user_create(key)
-                return self._send(404, {"status": "error"})
+                    )
+                except Exception:
+                    tables = []
+                return self._ok({
+                    "database": r.db, "branch": r.branch, "tables": tables,
+                })
+
+            # -- read-only introspection --------------------------------
+
+            def _metrics(self, r):
+                if "from" in r.query or "to" in r.query:
+                    # windowed bucketed log (reference QueryLogController
+                    # reads the flushed query log with a time range)
+                    try:
+                        start, end = (
+                            float(r.query[k]) if k in r.query else None
+                            for k in ("from", "to")
+                        )
+                    except ValueError:
+                        return self._error(400, "from and to are unix seconds")
+                    return self._ok(server.engine.metrics.log_entries(
+                        start=start, end=end
+                    ))
+                return self._ok(_json_rows(server.engine.query_metrics()))
+
+            def _table_report(self, r):
+                # ops-parity introspection for corpus tables: the dataset
+                # card (datasheet rollup), the OPTIMIZE bin-packing plan
+                # and the fused drift report
+                method, texts, ints = _REPORTS[r.report]
+                try:
+                    kw = {k: v for k, v in r.query.items() if k in texts}
+                    for k in ints:
+                        if k in r.query:
+                            kw[k] = int(r.query[k])
+                            if kw[k] <= 0:
+                                raise ValueError(
+                                    f"{k} must be a positive integer"
+                                )
+                    rows = _json_rows(
+                        getattr(server.engine, method)(r.table, **kw)
+                    )
+                except Exception as exc:
+                    return self._error(400, str(exc)[:300])
+                return self._ok(rows)
+
+            # -- snapshots, backups, restore (reference routes.go) ------
+
+            def _snapshot_list(self, r):
+                return self._ok(server.store.list_snapshots())
+
+            def _snapshot_create(self, r):
+                snap = server.store.snapshot(
+                    label=r.body.get("label", ""), namespace=r.branch
+                )
+                return self._ok({
+                    "snapshot_id": snap.snapshot_id,
+                    "created_at": snap.created_at,
+                    "label": snap.label,
+                    "tables": snap.tables,
+                }, 201)
+
+            def _snapshot_show(self, r):
+                # SnapshotControllerShow (routes.go snapshots/{ts})
+                try:
+                    snap = server.store.snapshot_at(float(r.snapshot))
+                except Exception:
+                    return self._error(404, "no such snapshot")
+                return self._ok(snap)
+
+            def _backup_dir(self) -> str:
+                d = os.path.join(server.store.root, "backups")
+                os.makedirs(d, exist_ok=True)
+                return d
+
+            def _backup_file(self, backup_id: str) -> str | None:
+                """The archive of a backup, or None without one."""
+                if server.store is None:
+                    return None
+                path = os.path.join(self._backup_dir(), f"{backup_id}.tar.gz")
+                return path if os.path.exists(path) else None
+
+            def _backup_list(self, r):
+                if server.store is None:
+                    return self._ok([])
+                return self._ok(sorted(
+                    f[: -len(".tar.gz")]
+                    for f in os.listdir(self._backup_dir())
+                    if f.endswith(".tar.gz")
+                ))
+
+            def _backup_create(self, r):
+                backup_id = f"backup-{int(time.time() * 1e6)}"
+                path = os.path.join(self._backup_dir(), f"{backup_id}.tar.gz")
+                try:
+                    server.store.backup_archive(
+                        path, snapshot_id=r.body.get("snapshot_id")
+                    )
+                except LookupError as e:
+                    return self._error(400, str(e))
+                return self._ok({"backup_id": backup_id}, 201)
+
+            def _backup_show(self, r):
+                # BackupControllerShow: archive metadata
+                path = self._backup_file(r.backup)
+                if path is None:
+                    return self._error(404, "no such backup")
+                st = os.stat(path)
+                return self._ok({
+                    "backup_id": r.backup,
+                    "size_bytes": st.st_size,
+                    "created_at": st.st_mtime,
+                })
+
+            def _backup_delete(self, r):
+                path = self._backup_file(r.backup)
+                if path is None:
+                    return self._error(404, "no such backup")
+                os.remove(path)
+                return self._send(200, {"status": "success"})
+
+            def _restore(self, r):
+                ts = r.body.get("timestamp")
+                if ts is None:
+                    return self._error(400, "timestamp is required")
+                try:
+                    views = server.store.restore_at(
+                        float(ts), view_prefix=f"{r.db}_{r.branch}_restore"
+                    )
+                except (LookupError, TypeError, ValueError) as e:
+                    return self._error(400, str(e))
+                return self._ok({"views": views})
+
+            # -- access keys (routes.go:54-82) --------------------------
+
+            def _key_list(self, r):
+                return self._ok(server.keys.list_ids())
+
+            def _key_create(self, r):
+                kid, secret = r.body.get("access_key_id"), r.body.get("secret")
+                if not kid or not secret:
+                    return self._error(
+                        400, "access_key_id and secret are required"
+                    )
+                stmts = _grants(r.body.get("statements", []))
+                server.keys.store(AccessKey(kid, secret, stmts))
+                return self._ok({"access_key_id": kid}, 201)
+
+            def _key_show(self, r):
+                k = server.keys.get(r.key_id)
+                if k is None:
+                    return self._error(404, "no such key")
+                # AccessKeyControllerShow: id + statements, never the
+                # secret (routes.go:62-66)
+                return self._ok({
+                    "access_key_id": k.access_key_id,
+                    "statements": _grants_json(k.statements),
+                })
+
+            def _key_update(self, r):
+                # AccessKeyControllerUpdate (routes.go:77-82): replace the
+                # key's privilege statements; the secret is immutable
+                k = server.keys.get(r.key_id)
+                if k is None:
+                    return self._error(404, "no such key")
+                if not isinstance(r.body.get("statements"), list):
+                    return self._error(400, "statements is required")
+                k.statements = _grants(r.body["statements"])
+                return self._ok({"access_key_id": r.key_id})
+
+            def _key_delete(self, r):
+                if not server.keys.revoke(r.key_id):
+                    return self._error(404, "no such key")
+                return self._send(200, {"status": "success"})
 
             # -- encryption-key rotation (reference key_controller.go /
             # key_activate_controller.go): POST /v1/keys stores the NEXT
@@ -911,30 +1042,20 @@ class QueryServer:
             # key; POST /v1/keys/activate flips a stored key to active.
             # Activating a never-stored key is rejected. ----------------
 
-            def _ekey_store(self, key):
-                if not key.allows("*", "cluster:manage"):
-                    return self._send(
-                        403, {"status": "error", "message": "forbidden"}
-                    )
-                body = self._body()
-                ek = body.get("encryption_key")
-                sig = body.get("signature")
+            def _ekey_store(self, r):
+                ek = r.body.get("encryption_key")
+                sig = r.body.get("signature")
                 if not ek:
-                    return self._send(400, {
-                        "status": "error",
-                        "message": "The encryption key field is required.",
-                    })
+                    return self._error(
+                        400, "The encryption key field is required."
+                    )
                 if not sig:
-                    return self._send(400, {
-                        "status": "error",
-                        "message": "The signature field is required.",
-                    })
+                    return self._error(400, "The signature field is required.")
                 if not isinstance(ek, str) or not isinstance(sig, str):
-                    return self._send(400, {
-                        "status": "error",
-                        "message": "The encryption key and signature must "
-                                   "be strings.",
-                    })
+                    return self._error(
+                        400,
+                        "The encryption key and signature must be strings.",
+                    )
                 with server.key_lock:
                     expected = hmac.new(
                         server.encryption_key.encode(),
@@ -942,11 +1063,7 @@ class QueryServer:
                         hashlib.sha256,
                     ).hexdigest()
                     if not hmac.compare_digest(sig, expected):
-                        return self._send(
-                            403,
-                            {"status": "error",
-                             "message": "invalid signature"},
-                        )
+                        return self._error(403, "invalid signature")
                     server.pending_keys.add(ek)
                 return self._send(200, {
                     "status": "success",
@@ -954,29 +1071,21 @@ class QueryServer:
                     "data": {},
                 })
 
-            def _ekey_activate(self, key):
-                if not key.allows("*", "cluster:manage"):
-                    return self._send(
-                        403, {"status": "error", "message": "forbidden"}
-                    )
-                body = self._body()
-                ek = body.get("encryption_key")
+            def _ekey_activate(self, r):
+                ek = r.body.get("encryption_key")
                 if not ek:
-                    return self._send(400, {
-                        "status": "error",
-                        "message": "The encryption key field is required.",
-                    })
+                    return self._error(
+                        400, "The encryption key field is required."
+                    )
                 if not isinstance(ek, str):
-                    return self._send(400, {
-                        "status": "error",
-                        "message": "The encryption key must be a string.",
-                    })
+                    return self._error(
+                        400, "The encryption key must be a string."
+                    )
                 with server.key_lock:
                     if ek not in server.pending_keys:
-                        return self._send(400, {
-                            "status": "error",
-                            "message": "the encryption key is invalid",
-                        })
+                        return self._error(
+                            400, "the encryption key is invalid"
+                        )
                     # Activation retires every other stored candidate, so
                     # pending_keys can't grow unboundedly across rotations.
                     server.pending_keys.clear()
@@ -987,609 +1096,265 @@ class QueryServer:
                     "data": {},
                 })
 
-            def do_PUT(self):  # noqa: N802
-                key = self._auth()
-                if key is None:
-                    return self._send(401, {"status": "error", "message": "invalid access key"})
-                m = _USER_ID_RE.match(self.path)
-                if m:
-                    return self._user_update(key, m.group(1))
-                m = _KEY_ID_RE.match(self.path)
-                if m:
-                    return self._key_update(key, m.group(1))
-                return self._send(404, {"status": "error"})
+            # -- users (reference pkg/http/user_controller.go;
+            # routes.go:17-52) -----------------------------------------
 
-            def do_DELETE(self):  # noqa: N802
-                key = self._auth()
-                if key is None:
-                    return self._send(401, {"status": "error", "message": "invalid access key"})
-                m = _TXN_ID_RE.match(self.path)
-                if m and not m.group(4):
-                    return self._txn_rollback(key, m.group(1), m.group(2), m.group(3))
-                m = _BACKUP_ID_RE.match(self.path)
-                if m:
-                    return self._backup_delete(key, m.group(1), m.group(2), m.group(3))
-                m = _KEY_ID_RE.match(self.path)
-                if m:
-                    return self._key_delete(key, m.group(1))
-                m = _USER_ID_RE.match(self.path)
-                if m:
-                    return self._user_delete(key, m.group(1))
-                m = _DB_RE.match(self.path)
-                if m:
-                    return self._database_delete(key, m.group(1))
-                return self._send(404, {"status": "error"})
+            def _user_list(self, r):
+                return self._ok([u.as_response() for u in server.users.all()])
 
-            # -- admin controllers (reference routes.go backups/snapshots/
-            # restore/branches/databases/access-keys surface) ---------------
-
-            def _manage_ok(self, key, db, branch) -> bool:
-                return key.allows(
-                    f"database:{db}:branch:{branch}", "database:manage"
-                )
-
-            def _backup_dir(self) -> str:
-                import os
-
-                d = os.path.join(server.store.root, "backups")
-                os.makedirs(d, exist_ok=True)
-                return d
-
-            def _backup_list(self) -> list[str]:
-                import os
-
-                if server.store is None:
-                    return []
-                d = self._backup_dir()
-                return sorted(
-                    f[: -len(".tar.gz")]
-                    for f in os.listdir(d)
-                    if f.endswith(".tar.gz")
-                )
-
-            def _snapshot_create(self, key, db, branch):
-                if not self._manage_ok(key, db, branch):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
-                if server.store is None:
-                    return self._send(503, {"status": "error", "message": "no versioned store attached"})
-                body = self._body()
-                snap = server.store.snapshot(
-                    label=body.get("label", ""), namespace=branch
-                )
-                return self._send(201, {"status": "success", "data": {
-                    "snapshot_id": snap.snapshot_id,
-                    "created_at": snap.created_at,
-                    "label": snap.label,
-                    "tables": snap.tables,
-                }})
-
-            def _backup_create(self, key, db, branch):
-                import os
-                import time as _time
-
-                if not self._manage_ok(key, db, branch):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
-                if server.store is None:
-                    return self._send(503, {"status": "error", "message": "no versioned store attached"})
-                body = self._body()
-                backup_id = f"backup-{int(_time.time() * 1e6)}"
-                path = os.path.join(self._backup_dir(), f"{backup_id}.tar.gz")
-                try:
-                    server.store.backup_archive(
-                        path, snapshot_id=body.get("snapshot_id")
+            def _user_create(self, r):
+                name, pw = r.body.get("username"), r.body.get("password")
+                if not (name and pw and isinstance(name, str)
+                        and isinstance(pw, str)):
+                    return self._error(
+                        400, "username and password are required"
                     )
-                except LookupError as e:
-                    return self._send(400, {"status": "error", "message": str(e)})
-                return self._send(201, {"status": "success", "data": {"backup_id": backup_id}})
-
-            def _backup_delete(self, key, db, branch, backup_id):
-                import os
-
-                if not self._manage_ok(key, db, branch):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
-                if server.store is None:
-                    return self._send(503, {"status": "error", "message": "no versioned store attached"})
-                path = os.path.join(self._backup_dir(), f"{backup_id}.tar.gz")
-                if not os.path.exists(path):
-                    return self._send(404, {"status": "error", "message": "no such backup"})
-                os.remove(path)
-                return self._send(200, {"status": "success"})
-
-            def _restore(self, key, db, branch):
-                if not self._manage_ok(key, db, branch):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
-                if server.store is None:
-                    return self._send(503, {"status": "error", "message": "no versioned store attached"})
-                body = self._body()
-                ts = body.get("timestamp")
-                if ts is None:
-                    return self._send(400, {"status": "error", "message": "timestamp is required"})
-                try:
-                    views = server.store.restore_at(
-                        float(ts), view_prefix=f"{db}_{branch}_restore"
-                    )
-                except LookupError as e:
-                    return self._send(400, {"status": "error", "message": str(e)})
-                return self._send(200, {"status": "success", "data": {"views": views}})
-
-            def _branch_create(self, key, db):
-                if not key.allows(f"database:{db}:branch:main", "database:manage"):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
-                if server.store is None:
-                    return self._send(503, {"status": "error", "message": "no versioned store attached"})
-                body = self._body()
-                name = body.get("name")
-                if not name:
-                    return self._send(400, {"status": "error", "message": "name is required"})
-                tables = server.store.create_branch(
-                    name, source=body.get("source", "main")
-                )
-                return self._send(201, {"status": "success", "data": {"branch": name, "tables": tables}})
-
-            def _database_create(self, key):
-                if not key.allows("*", "database:manage"):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
-                body = self._body()
-                name = body.get("name")
-                if not name:
-                    return self._send(400, {"status": "error", "message": "name is required"})
-                with server.write_lock:
-                    server.engine.create_database(name)
-                return self._send(201, {"status": "success", "data": {"database": name}})
-
-            def _database_delete(self, key, db):
-                if not key.allows("*", "database:manage"):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
-                with server.write_lock:
-                    server.engine.drop_database(db)
-                return self._send(200, {"status": "success"})
-
-            def _key_create(self, key):
-                if not key.allows("*", "access-key:manage"):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
-                body = self._body()
-                kid, secret = body.get("access_key_id"), body.get("secret")
-                if not kid or not secret:
-                    return self._send(400, {"status": "error", "message": "access_key_id and secret are required"})
-                stmts = [
-                    AccessKeyStatement(
-                        resources=s.get("resources", []),
-                        privileges=s.get("privileges", []),
-                    )
-                    for s in body.get("statements", [])
-                ]
-                server.keys.store(AccessKey(kid, secret, stmts))
-                return self._send(201, {"status": "success", "data": {"access_key_id": kid}})
-
-            def _key_delete(self, key, key_id):
-                if not key.allows("*", "access-key:manage"):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
-                if not server.keys.revoke(key_id):
-                    return self._send(404, {"status": "error", "message": "no such key"})
-                return self._send(200, {"status": "success"})
-
-            def _key_update(self, key, key_id):
-                # AccessKeyControllerUpdate (routes.go:77-82): replace the
-                # key's privilege statements; the secret is immutable
-                if not key.allows("*", "access-key:manage"):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
-                k = server.keys._keys.get(key_id)
-                if k is None:
-                    return self._send(404, {"status": "error", "message": "no such key"})
-                body = self._body()
-                stmts = body.get("statements")
-                if not isinstance(stmts, list):
-                    return self._send(400, {"status": "error", "message": "statements is required"})
-                k.statements = [
-                    AccessKeyStatement(
-                        resources=s.get("resources", []),
-                        privileges=s.get("privileges", []),
-                    )
-                    for s in stmts
-                ]
-                return self._send(200, {"status": "success", "data": {"access_key_id": key_id}})
-
-            # -- user controllers (reference pkg/http/user_controller.go;
-            # routes.go:17-52 — index/show/store/update/destroy, all under
-            # cluster:manage) ----------------------------------------------
-
-            def _user_create(self, key):
-                if not key.allows("*", "cluster:manage"):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
-                body = self._body()
-                name, pw = body.get("username"), body.get("password")
-                if not name or not pw:
-                    return self._send(400, {"status": "error", "message": "username and password are required"})
                 if len(pw) < 8:
                     # UserControllerStoreRequest validate:"min=8"
-                    return self._send(400, {"status": "error", "message": "password must be at least 8 characters"})
-                stmts = [
-                    AccessKeyStatement(
-                        resources=s.get("resources", []),
-                        privileges=s.get("privileges", []),
+                    return self._error(
+                        400, "password must be at least 8 characters"
                     )
-                    for s in body.get("statements", [])
-                ]
-                u = User.create(name, pw, stmts)
+                u = User.create(name, pw, _grants(r.body.get("statements", [])))
                 server.users.store(u)
-                return self._send(201, {"status": "success", "data": u.as_response()})
+                return self._ok(u.as_response(), 201)
 
-            def _user_update(self, key, username):
-                if not key.allows("*", "cluster:manage"):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
-                u = server.users.get(username)
+            def _user_show(self, r):
+                u = server.users.get(r.username)
                 if u is None:
-                    return self._send(404, {"status": "error", "message": "no such user"})
-                body = self._body()
-                pw = body.get("password")
-                if pw is not None:
-                    if len(pw) < 8:
-                        return self._send(400, {"status": "error", "message": "password must be at least 8 characters"})
-                    u.set_password(pw)
-                if body.get("statements") is not None:
-                    u.statements = [
-                        AccessKeyStatement(
-                            resources=s.get("resources", []),
-                            privileges=s.get("privileges", []),
-                        )
-                        for s in body["statements"]
-                    ]
-                server.users.store(u)
-                return self._send(200, {"status": "success", "data": u.as_response()})
+                    return self._error(404, "no such user")
+                return self._ok(u.as_response())
 
-            def _user_delete(self, key, username):
-                if not key.allows("*", "cluster:manage"):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
-                if not server.users.delete(username):
-                    return self._send(404, {"status": "error", "message": "no such user"})
+            def _user_update(self, r):
+                u = server.users.get(r.username)
+                if u is None:
+                    return self._error(404, "no such user")
+                pw = r.body.get("password")
+                if pw is not None:
+                    if not isinstance(pw, str) or len(pw) < 8:
+                        return self._error(
+                            400, "password must be at least 8 characters"
+                        )
+                    u.set_password(pw)
+                if r.body.get("statements") is not None:
+                    u.statements = _grants(r.body["statements"])
+                server.users.store(u)
+                return self._ok(u.as_response())
+
+            def _user_delete(self, r):
+                if not server.users.delete(r.username):
+                    return self._error(404, "no such user")
                 return self._send(200, {"status": "success"})
 
-            # -- controllers ------------------------------------------------
+            # -- transactions -------------------------------------------
 
-            def _query(self, key, db, branch):
-                resource = f"database:{db}:branch:{branch}"
-                if not key.allows(resource, "database:query"):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
+            def _txn_begin(self, r):
+                kind = str(r.body.get("kind") or "DEFERRED").upper()
                 try:
-                    body = self._body()
-                except json.JSONDecodeError:
-                    return self._send(400, {"status": "error", "message": "invalid input"})
-                queries = body.get("queries")
+                    txn = server.engine.begin(kind)
+                except ValueError as e:  # not DEFERRED or IMMEDIATE
+                    return self._error(400, str(e))
+                return self._ok({"transaction_id": txn.transaction_id}, 201)
+
+            def _txn(self, r):
+                txn = server.engine._transactions.get(r.txn)
+                if txn is None:
+                    raise Refusal(404, "no such transaction")
+                return txn
+
+            def _txn_commit(self, r):
+                txn = self._txn(r)
+                with server.write_lock:
+                    txn.commit()
+                return self._send(200, {"status": "success"})
+
+            def _txn_rollback(self, r):
+                self._txn(r).rollback()
+                return self._send(200, {"status": "success"})
+
+            # -- queries: prepare_statement, then QueryServer.execute;
+            # each route only encodes the results -----------------------
+
+            def _queries(self, r) -> list:
+                queries = r.body.get("queries")
                 if not isinstance(queries, list) or not queries:
-                    return self._send(400, {"status": "error", "message": "The queries field is required."})
+                    raise Refusal(400, "The queries field is required.")
+                return queries
+
+            def _query(self, r):
+                """POST .../query: a batch of typed queries answered with
+                one JSON envelope per query (query_controller.go). The
+                first failing query answers for the whole batch."""
+                resource = _BRANCH.format(db=r.db, branch=r.branch)
                 out = []
-                for q in queries:
-                    stmt = q.get("statement")
-                    if not stmt:
-                        return self._send(400, {"status": "error", "message": "The SQL statement field is required."})
-                    priv = required_privilege(stmt)
-                    if not key.allows(resource, priv):
-                        return self._send(403, {"status": "error", "message": f"forbidden: requires {priv}"})
-                    params = decode_parameters(q.get("parameters"))
-                    is_write = classify_statement(stmt) in ("DML", "DDL", "MAINT", "TCL")
-                    # per-query busy_timeout analog: timeout_ms rides the
-                    # wire payload (connection busy_timeout 5000 ms,
-                    # database_connection.go:52)
-                    tmo = q.get("timeout_ms")
-                    tmo = (float(tmo) / 1000.0) if tmo else None
+                for q in self._queries(r):
                     try:
-                        if is_write:
-                            with server.write_lock:
-                                res = server.engine.sql(
-                                    stmt, params,
-                                    transaction_id=q.get("transaction_id"),
-                                    timeout=tmo,
-                                )
-                        else:
-                            res = server.engine.sql(
-                                stmt, params,
-                                transaction_id=q.get("transaction_id"),
-                                timeout=tmo,
-                            )
+                        res = server.execute(
+                            prepare_statement(r.key, resource, q)
+                        )
+                    except Refusal:
+                        raise
                     except TimeoutError as e:
-                        return self._send(408, {"status": "error", "message": str(e)[:500]})
+                        return self._error(408, str(e)[:500])
                     except Exception as e:
-                        return self._send(400, {"status": "error", "message": str(e)[:500]})
+                        return self._error(400, str(e)[:500])
                     out.append(result_envelope(q.get("id"), res))
-                return self._send(200, {"status": "success", "data": out})
+                return self._ok(out)
 
-            def _query_stream_binary(self, key, db, branch):
-                """POST .../query/stream with application/octet-stream —
-                the reference's length-prefixed binary frame protocol
-                (litebase_spark/wire.py documents the exact byte layout
-                and reference file:line provenance). The handler reads
-                [type][len][payload] messages off the request body as
-                they arrive and writes response frames as they complete
-                — the same duplex pipelining as the reference's
-                EnableFullDuplex stream controller: OPEN answers
-                'connected', each FRAME of query inputs answers a FRAME
-                of per-query [FRAME_ENTRY|ERROR] response envelopes
+            def _query_stream(self, r):
+                """POST .../query/stream — the reference's pipelined
+                streaming protocol (pkg/http/routes.go `query/stream`,
+                SURVEY §3.2): binary frames on application/octet-stream
+                (_query_wire), NDJSON frames over a streamed HTTP
+                response otherwise.
+
+                NDJSON frames, one JSON object per line, flushed as
+                produced:
+                  {"id", "type": "columns", "columns": [...]}
+                  {"id", "type": "rows", "rows": [[...], ...]}   (batches)
+                  {"id", "type": "end", "row_count", "changes", "latency"}
+                  {"id", "type": "error", "message"}             (aborts)
+
+                Every query is prepared before the response starts, so a
+                Refusal (missing statement, missing privilege) answers
+                the request with its status; a malformed parameter is
+                that query's error frame. An untimed read outside a
+                transaction streams through `Engine.stream`
+                (toLocalIterator, partition by partition, never collected
+                server-side). Every other statement is collected by
+                QueryServer.execute: writes and transactional statements
+                run under the single-writer lock, and a timed statement
+                needs its jobs on the handler thread, where the engine's
+                job-group watchdog can cancel them (toLocalIterator
+                serves jobs from its own thread). A statement error emits
+                an error frame and aborts the remaining pipeline, the
+                reference's fail-fast stream semantics."""
+                if _is_binary(self.headers):
+                    return self._query_wire(r)
+                resource = _BRANCH.format(db=r.db, branch=r.branch)
+                prepared = []
+                for q in self._queries(r):
+                    try:
+                        prepared.append(prepare_statement(r.key, resource, q))
+                    except ValueError as e:
+                        prepared.append(e)
+                self.send_response(200)
+                self.send_header("Content-Type", "application/x-ndjson")
+                self.send_header("Connection", "close")
+                self.end_headers()
+
+                def frame(qid, kind, **fields) -> bool:
+                    try:
+                        self.wfile.write((json.dumps(
+                            {"id": qid, "type": kind, **fields}
+                        ) + "\n").encode())
+                        self.wfile.flush()
+                        return True
+                    except (BrokenPipeError, ConnectionError):
+                        return False  # client went away: stop producing
+
+                for q, st in zip(r.body["queries"], prepared):
+                    qid = q.get("id")
+                    try:
+                        if isinstance(st, Exception):
+                            raise st
+                        if st.locked or st.timeout is not None:
+                            res = server.execute(st)
+                        else:
+                            res = server.engine.stream(st.statement, st.params)
+                        if not frame(qid, "columns", columns=res.columns):
+                            return
+                        batch = []
+                        for row in res.rows:
+                            batch.append([_json_value(v) for v in row])
+                            if len(batch) >= 256:
+                                if not frame(qid, "rows", rows=batch):
+                                    return
+                                batch = []
+                        if batch and not frame(qid, "rows", rows=batch):
+                            return
+                        if not frame(qid, "end", row_count=res.row_count,
+                                     changes=res.changes,
+                                     latency=res.latency):
+                            return
+                    except Exception as e:
+                        frame(qid, "error", message=str(e)[:500])
+                        return  # fail-fast: abort the remaining pipeline
+
+            def _query_wire(self, r):
+                """The reference's length-prefixed binary frame protocol
+                (litebase_spark/wire.py documents the byte layout). The
+                handler reads [type][len][payload] messages off the
+                request body as they arrive and writes response frames
+                as they complete — the duplex pipelining of the
+                reference's EnableFullDuplex stream controller: OPEN
+                answers 'connected', each FRAME of query inputs answers a
+                FRAME of per-query [FRAME_ENTRY|ERROR] response envelopes
                 (typed columns, v1 version byte), CLOSE or EOF ends the
-                stream. Execution reuses the engine's collected path —
-                the envelope's row_count precedes the rows, so each
-                per-query response is complete before it is framed,
-                exactly as the reference encodes QueryResponse."""
-                import time as _time
-
-                from litebase_spark import wire
-
-                resource = f"database:{db}:branch:{branch}"
-                if not key.allows(resource, "database:query"):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
+                stream. Each response is collected before it is framed:
+                the envelope's row_count precedes its rows."""
+                resource = _BRANCH.format(db=r.db, branch=r.branch)
                 self.send_response(200)
                 self.send_header("Content-Type", "application/octet-stream")
                 self.send_header("Connection", "close")
                 self.end_headers()
-
-                def write(data: bytes) -> bool:
-                    try:
-                        self.wfile.write(data)
-                        self.wfile.flush()
-                        return True
-                    except (BrokenPipeError, ConnectionError):
-                        return False
-
                 self.connection.settimeout(60)
                 while True:
                     try:
                         msg = wire.read_message(self.rfile.read)
                     except (ValueError, OSError):
                         return
-                    if msg is None:
+                    if msg is None or msg[0] == wire.MSG_CLOSE:
                         return
                     mtype, payload = msg
                     if mtype == wire.MSG_OPEN:
-                        if not write(
-                            wire.encode_message(wire.MSG_OPEN, b"connected")
-                        ):
-                            return
-                        continue
-                    if mtype == wire.MSG_CLOSE:
-                        return
-                    if mtype != wire.MSG_FRAME:
+                        reply = wire.encode_message(wire.MSG_OPEN, b"connected")
+                    elif mtype == wire.MSG_FRAME:
+                        reply = wire.encode_message(wire.MSG_FRAME, b"".join(
+                            self._wire_entry(r.key, resource, qbytes)
+                            for qbytes in wire.iter_frame_queries(payload)
+                        ))
+                    else:
                         continue  # unknown types are skipped, like the
                         # reference's default branch
-                    entries = []
-                    for qbytes in wire.iter_frame_queries(payload):
-                        resp = wire.WireResponse()
-                        etype = wire.MSG_FRAME_ENTRY
-                        t0 = _time.perf_counter()
-                        try:
-                            q = wire.decode_query_input(qbytes)
-                            resp.id = q["id"]
-                            resp.transaction_id = q["transaction_id"]
-                            stmt = q["statement"]
-                            if not stmt:
-                                raise ValueError(
-                                    "The SQL statement field is required."
-                                )
-                            priv = required_privilege(stmt)
-                            if not key.allows(resource, priv):
-                                raise PermissionError(
-                                    f"forbidden: requires {priv}"
-                                )
-                            params = decode_parameters(
-                                q["parameters"] or None
-                            )
-                            cls = classify_statement(stmt)
-                            is_write = cls in ("DML", "DDL", "MAINT", "TCL")
-                            import contextlib as _ctx
-
-                            lock = (
-                                server.write_lock
-                                if is_write or q["transaction_id"]
-                                else _ctx.nullcontext()
-                            )
-                            with lock:
-                                res = server.engine.sql(
-                                    stmt,
-                                    params,
-                                    transaction_id=(
-                                        q["transaction_id"] or None
-                                    ),
-                                )
-                            resp.changes = res.changes or 0
-                            resp.latency = res.latency
-                            resp.columns = list(res.columns)
-                            resp.rows = [list(r) for r in res.rows]
-                            resp.row_count = len(resp.rows)
-                        except Exception as e:
-                            etype = wire.MSG_ERROR
-                            resp.error = str(e)[:500] or "error"
-                            resp.latency = _time.perf_counter() - t0
-                        enc = wire.encode_query_response(resp)
-                        entries.append(
-                            bytes([etype])
-                            + len(enc).to_bytes(4, "little")
-                            + enc
-                        )
-                    if not write(
-                        wire.encode_message(wire.MSG_FRAME, b"".join(entries))
-                    ):
+                    try:
+                        self.wfile.write(reply)
+                        self.wfile.flush()
+                    except (BrokenPipeError, ConnectionError):
                         return
 
-            def _query_stream(self, key, db, branch):
-                """POST .../query/stream — the reference's pipelined
-                streaming protocol (pkg/http/routes.go `query/stream`,
-                SURVEY §3.2) re-expressed as NDJSON frames over a
-                streamed HTTP response (documented deviation: the
-                reference frames a custom binary protocol; the framing
-                here is line-delimited JSON, the PIPELINING is the
-                faithful part).
-
-                Frames, one JSON object per line, flushed as produced:
-                  {"id", "type": "columns", "columns": [...]}
-                  {"id", "type": "rows", "rows": [[...], ...]}   (batches)
-                  {"id", "type": "end", "row_count", "changes", "latency"}
-                  {"id", "type": "error", "message"}             (aborts)
-
-                SELECT results are NOT collected on the server: the
-                DataFrame streams through `toLocalIterator` partition by
-                partition (prefetching one ahead), so the first rows
-                frame goes out while later partitions are still
-                computing — at cluster scale the response pipeline is
-                bounded by one partition of memory, never the full
-                result. Writes execute under the single-writer lock and
-                emit only the end frame. A statement error emits an
-                error frame and aborts the remaining pipeline, matching
-                the reference's fail-fast stream semantics. Per-query
-                ``timeout_ms`` is honored exactly as on the batch
-                endpoint; a timed statement is collected (not streamed)
-                so the engine watchdog can cancel its job group, and an
-                expiry surfaces as an error frame.
-                """
-                resource = f"database:{db}:branch:{branch}"
-                if not key.allows(resource, "database:query"):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
+            def _wire_entry(self, key, resource, qbytes: bytes) -> bytes:
+                """One query input -> its [FRAME_ENTRY|ERROR] entry."""
+                resp = wire.WireResponse()
+                etype = wire.MSG_FRAME_ENTRY
+                t0 = time.perf_counter()
                 try:
-                    body = self._body()
-                except json.JSONDecodeError:
-                    return self._send(400, {"status": "error", "message": "invalid input"})
-                queries = body.get("queries")
-                if not isinstance(queries, list) or not queries:
-                    return self._send(400, {"status": "error", "message": "The queries field is required."})
-                for q in queries:
-                    stmt = q.get("statement")
-                    if not stmt:
-                        return self._send(400, {"status": "error", "message": "The SQL statement field is required."})
-                    priv = required_privilege(stmt)
-                    if not key.allows(resource, priv):
-                        return self._send(403, {"status": "error", "message": f"forbidden: requires {priv}"})
-
-                self.send_response(200)
-                self.send_header("Content-Type", "application/x-ndjson")
-                self.send_header("Connection", "close")
-                self.end_headers()
-
-                def frame(obj) -> bool:
-                    try:
-                        self.wfile.write(
-                            (json.dumps(obj) + "\n").encode()
-                        )
-                        self.wfile.flush()
-                        return True
-                    except (BrokenPipeError, ConnectionError):
-                        return False  # client went away: stop producing
-
-                for q in queries:
-                    stmt, qid = q["statement"], q.get("id")
-                    # everything per-query runs inside the try: a bad
-                    # typed parameter or classifier error must emit an
-                    # error frame, not drop the connection mid-stream
-                    # (headers are already sent — no 400 path remains)
-                    try:
-                        params = decode_parameters(q.get("parameters"))
-                        cls = classify_statement(stmt)
-                        is_write = cls in ("DML", "DDL", "MAINT", "TCL")
-                        # per-query busy_timeout analog, matching the
-                        # batch /query endpoint. A timed statement takes
-                        # the COLLECTED path: engine.sql's job-group
-                        # watchdog needs the jobs on the handler thread,
-                        # and toLocalIterator serves jobs from its own
-                        # thread where the group does not propagate —
-                        # a bounded-latency statement is bounded-size
-                        # anyway, so collecting loses nothing.
-                        tmo = q.get("timeout_ms")
-                        tmo = (float(tmo) / 1000.0) if tmo else None
-                        if (
-                            is_write
-                            or q.get("transaction_id")
-                            or tmo is not None
-                        ):
-                            # writes / transactional statements take the
-                            # collected path (single-writer lock; txn
-                            # shadow views are not lazy-streamable)
-                            import contextlib as _ctx
-
-                            lock = (
-                                server.write_lock
-                                if is_write or q.get("transaction_id")
-                                else _ctx.nullcontext()
-                            )
-                            with lock:
-                                res = server.engine.sql(
-                                    stmt, params,
-                                    transaction_id=q.get("transaction_id"),
-                                    timeout=tmo,
-                                )
-                            if not frame({"id": qid, "type": "columns",
-                                          "columns": res.columns}):
-                                return
-                            if res.rows and not frame(
-                                {"id": qid, "type": "rows",
-                                 "rows": [[_json_value(v) for v in r]
-                                          for r in res.rows]}
-                            ):
-                                return
-                            if not frame({"id": qid, "type": "end",
-                                          "row_count": res.row_count,
-                                          "changes": res.changes,
-                                          "latency": res.latency}):
-                                return
-                            continue
-                        res = server.engine.stream(stmt, params)
-                        if not frame({"id": qid, "type": "columns",
-                                      "columns": res.columns}):
-                            return
-                        batch = []
-                        for row in res.rows:
-                            batch.append([_json_value(v) for v in row])
-                            if len(batch) >= 256:
-                                if not frame({"id": qid, "type": "rows",
-                                              "rows": batch}):
-                                    return
-                                batch = []
-                        if batch and not frame(
-                            {"id": qid, "type": "rows", "rows": batch}
-                        ):
-                            return
-                        if not frame({"id": qid, "type": "end",
-                                      "row_count": res.row_count,
-                                      "changes": 0,
-                                      "latency": res.latency}):
-                            return
-                    except Exception as e:
-                        frame({"id": qid, "type": "error",
-                               "message": str(e)[:500]})
-                        return  # fail-fast: abort the remaining pipeline
-
-            def _txn_store(self, key, db, branch):
-                resource = f"database:{db}:branch:{branch}"
-                if not key.allows(resource, "database:transaction"):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
-                kind = (self._body().get("kind") or "DEFERRED").upper()
-                txn = server.engine.begin(kind)
-                return self._send(
-                    201,
-                    {
-                        "status": "success",
-                        "data": {"transaction_id": txn.transaction_id},
-                    },
-                )
-
-            def _txn_commit(self, key, db, branch, txn_id):
-                resource = f"database:{db}:branch:{branch}"
-                if not key.allows(resource, "database:transaction"):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
-                txn = server.engine._transactions.get(txn_id)
-                if txn is None:
-                    return self._send(404, {"status": "error", "message": "no such transaction"})
-                with server.write_lock:
-                    txn.commit()
-                return self._send(200, {"status": "success"})
-
-            def _txn_rollback(self, key, db, branch, txn_id):
-                resource = f"database:{db}:branch:{branch}"
-                if not key.allows(resource, "database:transaction"):
-                    return self._send(403, {"status": "error", "message": "forbidden"})
-                txn = server.engine._transactions.get(txn_id)
-                if txn is None:
-                    return self._send(404, {"status": "error", "message": "no such transaction"})
-                txn.rollback()
-                return self._send(200, {"status": "success"})
+                    q = wire.decode_query_input(qbytes)
+                    resp.id = q["id"]
+                    resp.transaction_id = q["transaction_id"]
+                    res = server.execute(prepare_statement(key, resource, q))
+                    resp.changes = res.changes or 0
+                    resp.latency = res.latency
+                    resp.columns = list(res.columns)
+                    resp.rows = [list(row) for row in res.rows]
+                    resp.row_count = len(resp.rows)
+                except Exception as e:
+                    etype = wire.MSG_ERROR
+                    resp.error = str(e)[:500] or "error"
+                    resp.latency = time.perf_counter() - t0
+                enc = wire.encode_query_response(resp)
+                return bytes([etype]) + len(enc).to_bytes(4, "little") + enc
 
         self.httpd = ThreadingHTTPServer((host, port), Handler)
         self.port = self.httpd.server_address[1]
+
+    def execute(self, st: PreparedStatement):
+        """Run one prepared statement, collected; `st.locked` statements
+        hold the single-writer lock."""
+        with self.write_lock if st.locked else contextlib.nullcontext():
+            return self.engine.sql(
+                st.statement, st.params,
+                transaction_id=st.transaction_id, timeout=st.timeout,
+            )
 
     def start(self) -> threading.Thread:
         t = threading.Thread(target=self.httpd.serve_forever, daemon=True)

@@ -19,6 +19,8 @@ from litebase_spark.http_api import (
     AccessKeyManager,
     AccessKeyStatement,
     QueryServer,
+    ROUTES,
+    match_route,
 )
 
 RESOURCE = "database:main:branch:main"
@@ -1168,3 +1170,95 @@ def test_drift_report_endpoint_and_engine_method(server, spark, sf_dir):
         token="reader:r3ad",
     )
     assert code == 400
+
+
+# -- the route table and the shared statement path --------------------------
+
+_SAMPLE_PARAMS = {
+    "db": "main", "branch": "main", "table": "t", "report": "card",
+    "snapshot": "1", "backup": "b", "key_id": "k", "username": "u",
+    "txn": "x",
+}
+
+
+@pytest.mark.parametrize(
+    "route",
+    [r for r in ROUTES if r.grants is not None],
+    ids=lambda r: f"{r.method} {r.template}",
+)
+def test_every_route_but_health_requires_credentials(server, route):
+    path = route.template.format(**_SAMPLE_PARAMS)
+    assert match_route(route.method, path)[0] == route
+    body = {} if route.method in ("POST", "PUT") else None
+    code, resp = _call(server, route.method, path, body)
+    assert (code, resp["message"]) == (401, "invalid access key")
+
+
+def test_unmatched_path_authenticates_before_404(server):
+    assert _call(server, "GET", "/v1/nope")[0] == 401
+    assert _call(server, "GET", "/v1/nope", token="reader:r3ad")[0] == 404
+    assert _call(server, "PUT", "/health")[0] == 401
+
+
+def _raw_call(srv, method, path, data: bytes, token):
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{srv.port}{path}", data=data, method=method)
+    req.add_header("Authorization", f"Bearer {token}")
+    try:
+        with urllib.request.urlopen(req) as resp:
+            return resp.status, json.loads(resp.read())
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read())
+
+
+_Q = "/v1/databases/main/main/query"
+
+
+@pytest.mark.parametrize("path,data", [
+    (_Q, json.dumps({"queries": [{"id": "1", "statement": "SELECT ? AS x",
+                                  "parameters": [{"type": "INTEGER",
+                                                  "value": "abc"}]}]})),
+    (_Q, json.dumps({"queries": [{"id": "1", "statement": "SELECT 1 AS x",
+                                  "timeout_ms": "abc"}]})),
+    (_Q, json.dumps({"queries": ["SELECT 1"]})),
+    (_Q, json.dumps([{"id": "1", "statement": "SELECT 1 AS x"}])),
+    ("/v1/users", "not json"),
+    ("/v1/access-keys", "not json"),
+    ("/v1/databases/main/main/transactions", json.dumps({"kind": "BOGUS"})),
+], ids=["bad-integer", "bad-timeout", "query-not-object", "list-body",
+        "users-not-json", "access-keys-not-json", "bad-transaction-kind"])
+def test_malformed_request_is_400(server, path, data):
+    code, body = _raw_call(server, "POST", path, data.encode(),
+                           "admin:s3cret")
+    assert code == 400 and body["status"] == "error" and body["message"]
+
+
+def test_unknown_json_parameter_type_is_rejected(server):
+    q = {"queries": [{"id": "1", "statement": "SELECT ? AS x",
+                      "parameters": [{"type": "BOOLEAN", "value": True}]}]}
+    code, body = _call(server, "POST", _Q, q, token="admin:s3cret")
+    assert code == 400 and "BOOLEAN" in body["message"]
+
+
+def test_unknown_wire_parameter_type_is_an_error_entry(server):
+    from litebase_spark import wire
+    from litebase_spark.wire import BinaryStreamClient
+
+    # type byte 9 is no SQLite storage class
+    param = bytes([9]) + (1).to_bytes(4, "little") + b"x"
+    q = (wire._lp(b"u") + wire._lp(b"") + wire._lp(b"SELECT ? AS x")
+         + wire._lp(param))
+    c = BinaryStreamClient(
+        "127.0.0.1", server.port,
+        "/v1/databases/main/main/query/stream", "Bearer admin:s3cret")
+    try:
+        c.open()
+        c.send_message(wire.MSG_FRAME, wire.encode_frame_payload([q]))
+        mtype, payload = c.read_message()
+        [(etype, data)] = list(wire.iter_frame_entries(payload))
+        assert etype == wire.MSG_ERROR
+        err = wire.decode_query_response(data, is_error=True).error
+        assert "unsupported type" in err
+        assert c.query("v", "SELECT 1 AS one").rows == [[1]]
+    finally:
+        c.close()

@@ -407,6 +407,12 @@ def _dml_script(seed):
          "(52, 'e', NULL), (52, 'f', 8)", None),
         ("INSERT INTO {t} (id, g) VALUES (?, ?) RETURNING *", [60, "z"]),
         ("DELETE FROM {t} WHERE g IN ('A', 'c') RETURNING *", None),
+        # a subquery in SET has its own FROM
+        ("UPDATE {t} SET m = (SELECT max(id) FROM {t}) WHERE id = ?", [3]),
+        # a NULL conflict key conflicts with nothing: both rows insert
+        ("INSERT OR IGNORE INTO {t} VALUES (NULL, 'n', 1), (NULL, 'n', 2)",
+         None),
+        ("DELETE FROM {t} WHERE id IS NULL RETURNING g, m", None),
     ]
 
 
@@ -445,7 +451,9 @@ def test_dml_script_autocommit_transaction_and_sqlite_agree(eng):
             eng.sql(f"DROP TABLE IF EXISTS {s}")
         runs[mode] = out
     con = sqlite3.connect(":memory:")
-    con.execute("CREATE TABLE t (id INTEGER PRIMARY KEY, g TEXT, "
+    # BIGINT, not INTEGER: an INTEGER PRIMARY KEY is SQLite's rowid and
+    # would number a NULL key instead of storing it
+    con.execute("CREATE TABLE t (id BIGINT PRIMARY KEY, g TEXT, "
                 "m INTEGER DEFAULT 5)")
     con.execute("CREATE TABLE s (id INTEGER, bump INTEGER)")
     want = []
@@ -459,3 +467,24 @@ def test_dml_script_autocommit_transaction_and_sqlite_agree(eng):
         for i, (g, w) in enumerate(zip(got, want)):
             what = script[i][0] if i < len(script) else "final rows"
             assert g == w, f"{mode} diverged from sqlite at {what}"
+
+
+def test_typeof_of_a_null_value_matches_sqlite(eng):
+    """typeof() types the value: a NULL in a BIGINT column is 'null'."""
+    import shutil
+
+    eng.sql("DROP TABLE IF EXISTS ty_null")
+    shutil.rmtree("spark-warehouse/ty_null", ignore_errors=True)
+    eng.sql("CREATE TABLE ty_null (k BIGINT, v BIGINT) USING PARQUET")
+    con = sqlite3.connect(":memory:")
+    con.execute("CREATE TABLE ty_null (k INTEGER, v INTEGER)")
+    q = "SELECT k, typeof(v), typeof(k) FROM ty_null ORDER BY k"
+    rows = "INSERT INTO ty_null VALUES (1, 5), (2, NULL)"
+    try:
+        eng.sql(rows)
+        con.execute(rows)
+        got = [tuple(r) for r in eng.sql(q).rows]
+        assert got == con.execute(q).fetchall()
+        assert got[1] == (2, "null", "integer")
+    finally:
+        eng.sql("DROP TABLE IF EXISTS ty_null")
