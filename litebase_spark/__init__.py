@@ -13,7 +13,7 @@ Layout:
   catalog    — registry of declared queries + DuckDB oracle SQL (t2 gate)
   functions  — SQLite -> Spark SQL dialect layer (SURVEY §2.B scalar functions)
   operators  — relational + dedup + similarity + text + multimodal
-  plans      — recursive CTE fixpoint helper (SQLite WITH RECURSIVE analog)
+  plans      — fixpoint driver + recursive CTE (SQLite WITH RECURSIVE analog)
   streaming  — Structured Streaming operators over the events table
   sources    — parquet table registry / readers
 """

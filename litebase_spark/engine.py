@@ -42,7 +42,12 @@ from typing import Any
 from pyspark.sql import DataFrame, Row, SparkSession
 
 from litebase_spark.catalog import register_views
-from litebase_spark.functions.dialect import to_spark_sql, top_level_search
+from litebase_spark.functions.dialect import (
+    quote_ident,
+    sub_outside_literals,
+    to_spark_sql,
+    top_level_search,
+)
 from litebase_spark.session import get_spark
 
 # Statement-prefix classes, mirroring reference pkg/database/query.go:46-102
@@ -289,11 +294,6 @@ class QueryMetrics:
 _IDENT = r"(?:`[^`]+`|[A-Za-z_]\w*)"
 
 
-def _q(name: str) -> str:
-    """Backtick-quote an identifier for generated SQL."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _bare(name: str) -> str:
     """An identifier without its quoting backticks."""
     name = name.strip()
@@ -340,7 +340,7 @@ def _rewrite_excluded(expr: str) -> str:
     the join's `__exc_col` column."""
     return re.sub(
         r"(?i)\bexcluded\s*\.\s*(`[^`]+`|\w+)",
-        lambda m: _q("__exc_" + _bare(m.group(1))),
+        lambda m: quote_ident("__exc_" + _bare(m.group(1))),
         expr,
     )
 
@@ -609,34 +609,34 @@ class Engine:
         pkg/backups/restore.go resolves the log covering the point)."""
         self._vstore = store
 
-    _TT_VERSION_RE = re.compile(r"(?is)\b(\w+)\s+VERSION\s+AS\s+OF\s+(\d+)")
-    _TT_TS_RE = re.compile(r"(?is)\b(\w+)\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'")
+    _TIME_TRAVEL_RE = re.compile(
+        r"(?is)'|\b(\w+)\s+(?:VERSION\s+AS\s+OF\s+(\d+)"
+        r"|TIMESTAMP\s+AS\s+OF\s+'([^']+)')"
+    )
 
     def _rewrite_time_travel(self, sql_text: str) -> str:
+        """Each `t VERSION AS OF n` / `t TIMESTAMP AS OF '<ts>'` outside
+        string literals -> a temp view over that version of t."""
         if self._vstore is None:
             return sql_text
 
-        def sub_version(m):
-            table, version = m.group(1), int(m.group(2))
-            view = f"__tt_{table}_v{version}"
-            self._vstore.read(table, version).createOrReplaceTempView(view)
-            return view
-
-        def sub_ts(m):
+        def pin(m):
             import datetime as _dt
 
-            table, raw = m.group(1), m.group(2)
-            try:
-                ts = float(raw)
-            except ValueError:
-                ts = _dt.datetime.fromisoformat(raw).timestamp()
-            version = self._vstore.version_at(table, ts)
+            table, version, raw = m.groups()
+            if raw is None:
+                version = int(version)
+            else:
+                try:
+                    ts = float(raw)
+                except ValueError:
+                    ts = _dt.datetime.fromisoformat(raw).timestamp()
+                version = self._vstore.version_at(table, ts)
             view = f"__tt_{table}_v{version}"
             self._vstore.read(table, version).createOrReplaceTempView(view)
             return view
 
-        sql_text = self._TT_VERSION_RE.sub(sub_version, sql_text)
-        return self._TT_TS_RE.sub(sub_ts, sql_text)
+        return sub_outside_literals(self._TIME_TRAVEL_RE, pin, sql_text)
 
     def sql_batch(self, statements: list[str | tuple]) -> list[QueryResult]:
         """Execute N statements sequentially in one call (batch query
@@ -820,19 +820,19 @@ class Engine:
             path, alias = m.group(1), m.group(2)
             if not _os.path.isdir(path):
                 raise ValueError(f"ATTACH: no such directory: {path}")
-            self.spark.sql(f"CREATE DATABASE IF NOT EXISTS `{alias}`")
+            self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {quote_ident(alias)}")
             for fn in sorted(_os.listdir(path)):
                 if not fn.endswith(".parquet"):
                     continue
                 tname = fn[: -len(".parquet")]
                 # directory contents are untrusted input to this SQL
                 # text: ''-double quotes in the LOCATION literal and
-                # ``-double backticks in the identifier so a filename
-                # like "x'.parquet" can't break out of either
+                # quote the identifier so a filename like "x'.parquet"
+                # can't break out of either
                 loc = f"{path}/{fn}".replace("'", "''")
-                tq = tname.replace("`", "``")
                 self.spark.sql(
-                    f"CREATE TABLE IF NOT EXISTS `{alias}`.`{tq}` "
+                    f"CREATE TABLE IF NOT EXISTS "
+                    f"{quote_ident(alias)}.{quote_ident(tname)} "
                     f"USING PARQUET LOCATION '{loc}'"
                 )
             return QueryResult([], [], 0, 0, 0.0, "DDL")
@@ -842,7 +842,7 @@ class Engine:
             dbs = {d.name for d in self.spark.catalog.listDatabases()}
             if alias not in dbs:
                 raise ValueError(f"no such database: {alias}")
-            self.spark.sql(f"DROP DATABASE `{alias}` CASCADE")
+            self.spark.sql(f"DROP DATABASE {quote_ident(alias)} CASCADE")
             return QueryResult([], [], 0, 0, 0.0, "DDL")
         return None
 
@@ -1290,7 +1290,7 @@ class Engine:
             rrows, rcols = rdf.collect(), list(rdf.columns)
         image = rows.filter("__changed = 0") if plan.drop_changed else rows
         image = image.select([
-            F.col(_q(f.name)).alias(f.name, metadata=f.metadata)
+            F.col(quote_ident(f.name)).alias(f.name, metadata=f.metadata)
             for f in plan.fields
         ])
         if txn is not None:
@@ -1333,8 +1333,8 @@ class Engine:
             else:
                 proj = ", ".join(
                     f"CASE WHEN __changed = 1 THEN {_store(assignments[c], c, t)}"
-                    f" ELSE {_q(c)} END AS {_q(c)}"
-                    if c in assignments else _q(c)
+                    f" ELSE {quote_ident(c)} END AS {quote_ident(c)}"
+                    if c in assignments else quote_ident(c)
                     for c, t in tgt.dtypes
                 )
                 rows = self.spark.sql(
@@ -1385,11 +1385,11 @@ class Engine:
         if action == "IGNORE":
             # append-only: the anti-joined new rows, no table rewrite
             rows = src.join(tgt, on=keys, how="left_anti").select(
-                [_q(c) for c in tgt.columns] + ["__changed"])
+                [quote_ident(c) for c in tgt.columns] + ["__changed"])
             return _DmlPlan(table, "INSERT", rows, True, tgt.schema.fields,
                             may_skip=True)
         if action == "REPLACE":
-            assignments = {c: f"excluded.{_q(c)}" for c in tgt.columns}
+            assignments = {c: f"excluded.{quote_ident(c)}" for c in tgt.columns}
         rows = self._upsert_rows(tgt, table, src, keys, assignments,
                                  upd_where, args)
         return _DmlPlan(table, "INSERT", rows, False, tgt.schema.fields)
@@ -1461,12 +1461,12 @@ class Engine:
         proj = []
         for f in tgt.schema.fields:
             c, t = f.name, f.dataType.simpleString()
-            v = (_q(by_name[c.lower()]) if c.lower() in by_name
+            v = (quote_ident(by_name[c.lower()]) if c.lower() in by_name
                  else f.metadata.get("CURRENT_DEFAULT", "NULL"))
-            proj.append(f"{_store(v, c, t)} AS {_q(c)}")
+            proj.append(f"{_store(v, c, t)} AS {quote_ident(c)}")
         return self.spark.sql(
             f"SELECT {', '.join(proj)}, 1 AS __changed FROM ({body}) AS "
-            f"__v({', '.join(map(_q, given))})",
+            f"__v({', '.join(map(quote_ident, given))})",
             args=args or None,
         )
 
@@ -1485,7 +1485,7 @@ class Engine:
         from pyspark.sql import functions as F
 
         has_null = reduce(
-            lambda a, b: a | b, [F.col(_q(k)).isNull() for k in keys]
+            lambda a, b: a | b, [F.col(quote_ident(k)).isNull() for k in keys]
         )
         w = Window.partitionBy(*keys, F.when(has_null, F.col("__seq")))
         seq = F.col("__seq").desc() if keep_last else F.col("__seq").asc()
@@ -1513,18 +1513,18 @@ class Engine:
 
         cols = tgt.columns
         t_ren = tgt.select(
-            [F.col(_q(c)).alias(f"__t_{c}") for c in cols]
+            [F.col(quote_ident(c)).alias(f"__t_{c}") for c in cols]
         ).withColumn("__t_present", F.lit(True))
         s_ren = src.select(
-            [F.col(_q(c)).alias(f"__exc_{c}") for c in cols] + ["__n"]
+            [F.col(quote_ident(c)).alias(f"__exc_{c}") for c in cols] + ["__n"]
         ).withColumn("__s_present", F.lit(True))
         on = reduce(
             lambda a, b: a & b,
             [t_ren[f"__t_{k}"] == s_ren[f"__exc_{k}"] for k in keys],
         )
         j = t_ren.join(s_ren, on, "full_outer").select(
-            *[F.col(_q(f"__t_{c}")).alias(c) for c in cols],
-            *[F.col(_q(f"__exc_{c}")) for c in cols],
+            *[F.col(quote_ident(f"__t_{c}")).alias(c) for c in cols],
+            *[F.col(quote_ident(f"__exc_{c}")) for c in cols],
             "__n",
             F.coalesce("__t_present", F.lit(False)).alias("__t_present"),
             F.coalesce("__s_present", F.lit(False)).alias("__s_present"),
@@ -1535,8 +1535,8 @@ class Engine:
             if c in assignments:
                 expr = _rewrite_excluded(assignments[c])
                 upd = f"WHEN __gate THEN {_store(expr, c, t)} "
-            proj.append(f"CASE {upd}WHEN __src_only THEN {_q('__exc_' + c)} "
-                        f"ELSE {_q(c)} END AS {_q(c)}")
+            proj.append(f"CASE {upd}WHEN __src_only THEN {quote_ident('__exc_' + c)} "
+                        f"ELSE {quote_ident(c)} END AS {quote_ident(c)}")
         guard = ""
         if upd_where:
             guard = f" AND {_flag(_rewrite_excluded(upd_where))} = 1"
@@ -1582,9 +1582,9 @@ class Engine:
                 new = F.expr(_store(f"__new_{assigned.index(c)}", c, t))
                 final.append(
                     F.when(F.col("__hit") == 1, new)
-                    .otherwise(F.col(_q(c))).alias(c))
+                    .otherwise(F.col(quote_ident(c))).alias(c))
             else:
-                final.append(F.col(_q(c)))
+                final.append(F.col(quote_ident(c)))
         return rid.join(hits, on="__rid", how="left").select(
             *final, F.coalesce("__hit", F.lit(0)).alias("__changed"))
 
@@ -1644,10 +1644,10 @@ class Engine:
     # -- catalog / namespace management (A21 analog, §1.1) -----------------
 
     def create_database(self, name: str) -> None:
-        self.spark.sql(f"CREATE DATABASE IF NOT EXISTS `{name}`")
+        self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {quote_ident(name)}")
 
     def drop_database(self, name: str) -> None:
-        self.spark.sql(f"DROP DATABASE IF EXISTS `{name}` CASCADE")
+        self.spark.sql(f"DROP DATABASE IF EXISTS {quote_ident(name)} CASCADE")
 
     def create_branch(self, database: str, branch: str, tables: list[str]) -> str:
         """Fork a database: copy-on-read snapshot of each table into a new
@@ -1661,8 +1661,8 @@ class Engine:
         self.create_database(ns)
         for t in tables:
             self.spark.sql(
-                f"CREATE TABLE IF NOT EXISTS `{ns}`.`{t}` AS "
-                f"SELECT * FROM `{database}`.`{t}`"
+                f"CREATE TABLE IF NOT EXISTS {quote_ident(ns)}.{quote_ident(t)} "
+                f"AS SELECT * FROM {quote_ident(database)}.{quote_ident(t)}"
             )
         return ns
 

@@ -26,6 +26,13 @@ from __future__ import annotations
 import json
 import re
 
+
+def quote_ident(name: str) -> str:
+    """`name` as one backtick-quoted Spark identifier: every backtick in
+    it is doubled, so no name can close the quoting."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 # -- the literal-aware scanner ------------------------------------------------
 
 
@@ -85,6 +92,20 @@ def _outside_literals(sql: str, fn) -> str:
         out.append(fn(sql[i:j]))
         i = _literal_end(sql, j) if j < len(sql) else j
         out.append(sql[j:i])
+    return "".join(out)
+
+
+def sub_outside_literals(pattern: re.Pattern, repl, sql: str) -> str:
+    """pattern.sub(repl, sql) for the matches that start outside string
+    literals (a match may span whole literals).  `pattern` has a
+    literal's opening quote as its first alternative, as _calls_re
+    does; that literal is kept as written."""
+    out, i = [], 0
+    while (m := pattern.search(sql, i)) is not None:
+        out.append(sql[i:m.start()])
+        i = _literal_end(sql, m.start()) if m.group() == "'" else m.end()
+        out.append(sql[m.start():i] if m.group() == "'" else repl(m))
+    out.append(sql[i:])
     return "".join(out)
 
 
@@ -863,7 +884,7 @@ def rewrite_double_quoted_identifiers(sql: str) -> str:
             j = sql.find('"', j + 2)
         end = len(sql) if j == -1 else j
         name = sql[s + 1:end].replace('""', '"')
-        out.append("`" + name.replace("`", "``") + "`")
+        out.append(quote_ident(name))
         i = end + 1
     out.append(sql[i:])
     return "".join(out)

@@ -48,6 +48,8 @@ from types import SimpleNamespace
 from typing import NamedTuple
 from urllib.parse import parse_qs, urlparse
 
+from pyspark.errors import AnalysisException
+
 from litebase_spark import wire
 from litebase_spark.engine import Engine, classify_statement
 
@@ -780,6 +782,8 @@ class QueryServer:
                     return getattr(self, route.handler)(r)
                 except Refusal as e:
                     return self._error(e.status, str(e))
+                except AnalysisException as e:  # e.g. an invalid name
+                    return self._error(400, str(e))
 
             do_GET = do_POST = do_PUT = do_DELETE = _dispatch  # noqa: N815
 

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from litebase_spark.catalog import load, query
+from litebase_spark.plans.recursive import fixpoint
 
 _SCALE = 10**12  # rank units per unit mass; total mass 1e12 << 2^63
 _DAMP_NUM, _DAMP_DEN = 85, 100  # damping 0.85 as a rational
@@ -338,6 +339,22 @@ def _kcore_oracle() -> str:
     return head + "," + ",".join(steps) + tail
 
 
+def _kcore_peel(edges: DataFrame) -> DataFrame:
+    """The edges whose both ends have degree >= _KCORE_K."""
+    deg = (
+        edges.select(F.col("u").alias("node"))
+        .unionAll(edges.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+    keep = deg.filter(F.col("d") >= _KCORE_K).select("node")
+    return (
+        edges.join(keep.withColumnRenamed("node", "u"), "u", "semi")
+        .join(keep.withColumnRenamed("node", "v"), "v", "semi")
+        .select("u", "v")
+    )
+
+
 @query(
     "graph_k_core",
     oracle=_kcore_oracle(),
@@ -355,11 +372,12 @@ def _kcore_oracle() -> str:
     "keep-set is O(|parts|) and at sf100+ exceeds safe broadcast "
     "size, so AQE picks broadcast vs shuffle from runtime stats "
     "(same size-adaptive stance as join_range_interval's build "
-    "side). localCheckpoint caps lineage per round; the loop is a "
-    "COUNTED FIXPOINT (stop when a peel removes no edge — the peel "
-    "only deletes, so an unchanged count IS an unchanged set), "
-    "bounded at _KCORE_MAX_ROUNDS with a loud RuntimeError on "
-    "non-convergence rather than a silent superset core. Fixtures "
+    "side). Each peel is one plans.recursive.fixpoint round: a lazy "
+    "localCheckpoint written by the round's edge count, its one Spark "
+    "action. The loop stops when a peel removes no edge (the peel "
+    "only deletes, so an unchanged count IS an unchanged set) and "
+    "raises RecursionError past _KCORE_MAX_ROUNDS rather than "
+    "returning a silent superset core. Fixtures "
     "converge in <= 8 rounds (3445 -> 3108 edges at sf0.01, 3573 "
     "-> 3 at sf0.1). All arithmetic is integer (degrees), so "
     "the surviving node set and degrees are bit-identical in both "
@@ -386,35 +404,16 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("w"))
         .filter(F.col("w") >= 2)
         .select("u", "v")
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    prev_cnt = edges.count()
-    converged = False
-    for _ in range(_KCORE_MAX_ROUNDS):
-        deg = (
-            edges.select(F.col("u").alias("node"))
-            .unionAll(edges.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= _KCORE_K).select("node")
-        edges = (
-            edges.join(keep.withColumnRenamed("node", "u"), "u", "semi")
-            .join(keep.withColumnRenamed("node", "v"), "v", "semi")
-            .select("u", "v")
-            .localCheckpoint(eager=True)
-        )
-        cnt = edges.count()
-        if cnt == prev_cnt:
-            converged = True
+    prev = None
+    rounds = fixpoint(
+        edges, _kcore_peel, max_rounds=_KCORE_MAX_ROUNDS, what="graph_k_core"
+    )
+    for edges in rounds:  # the peel only deletes: same count, same set
+        if (cnt := edges.count()) == prev:
             break
-        prev_cnt = cnt
-    if not converged:
-        raise RuntimeError(
-            f"graph_k_core: peel did not converge within "
-            f"{_KCORE_MAX_ROUNDS} rounds ({prev_cnt} edges still "
-            f"shrinking) — raise _KCORE_MAX_ROUNDS for this graph"
-        )
+        prev = cnt
     return (
         edges.select(F.col("u").alias("part"))
         .unionAll(edges.select(F.col("v").alias("part")))

@@ -27,6 +27,7 @@ from litebase_spark.catalog import (
     query,
     register_views,
 )
+from litebase_spark.functions.dialect import quote_ident
 
 # int64 headroom ceiling for the N^2-class moment sums in the rank
 # statistics below (spearman/kruskal/mann-whitney rank sums are bounded
@@ -4030,7 +4031,7 @@ def _drift_ref_cond(
             f"drift_report: unknown ts_col {ts_col!r} — "
             f"table has {df.columns!r}"
         )
-    ts_ident = "`" + ts_col.replace("`", "``") + "`"
+    ts_ident = quote_ident(ts_col)
     # pre-aggregate to the distinct-timestamp domain BEFORE the exact
     # percentile: percentile() buffers its full per-group input list,
     # and over raw rows that is the same single-buffer OOM class
@@ -4323,8 +4324,8 @@ def drift_report_multi(
     # stack() needs homogeneous value types — normalize every column
     # to double (fp()'s exact domain covers |x| * 100 < 2^52)
     pairs = ", ".join(
-        "'{lbl}', cast(`{ident}` as double)".format(
-            lbl=c.replace("'", "''"), ident=c.replace("`", "``")
+        "'{lbl}', cast({ident} as double)".format(
+            lbl=c.replace("'", "''"), ident=quote_ident(c)
         )
         for c in value_cols
     )

@@ -35,6 +35,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from litebase_spark.functions.dialect import quote_ident
+
 
 @dataclass
 class SnapshotInfo:
@@ -129,11 +131,12 @@ class SnapshotManager:
         """Restore snapshot tables into a namespace (branch-from-restore:
         the reference forks a branch off a restore point,
         pkg/backups/restore.go:29-56). Returns restored table names."""
-        self.spark.sql(f"CREATE DATABASE IF NOT EXISTS `{target_namespace}`")
+        ns = quote_ident(target_namespace)
+        self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {ns}")
         restored = []
         for t in tables or snap.tables:
             df = self.read_table(snap, t)
-            df.write.mode("overwrite").saveAsTable(f"`{target_namespace}`.`{t}`")
+            df.write.mode("overwrite").saveAsTable(f"{ns}.{quote_ident(t)}")
             restored.append(t)
         return restored
 

@@ -20,6 +20,21 @@ def test_minhash_identical_docs_identical_sigs(spark, sf_dir):
     assert agg.filter(F.col("n_distinct") != 1).count() == 0
 
 
+def test_minhash_skips_null_text(spark):
+    # a NULL text gets no signature (the DuckDB oracle drops the row the
+    # same way), and banding the rest still runs
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox"), (2, None), (3, "the quick brown fox")],
+        "doc_id long, text string",
+    )
+    sigs = minhash_signatures(docs)
+    assert sorted(r.doc_id for r in sigs.collect()) == [1, 3]
+    # a batch in which no document has a signature
+    assert minhash_signatures(docs.filter("text IS NULL")).count() == 0
+    pairs = lsh_candidate_pairs(sigs).collect()
+    assert [(r.doc_a, r.doc_b, r.est_jaccard) for r in pairs] == [(1, 3, 1.0)]
+
+
 def test_lsh_recall_vs_exact_jaccard(spark, sf_dir):
     # every exact near-dup pair (jaccard >= 0.5) should be recalled by the
     # banded LSH candidates with high probability (8 bands x 4 rows at
@@ -175,6 +190,29 @@ def test_connected_components_chain_and_clique(spark):
         for r in connected_components(edges, "src", "dst").collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+
+
+def test_connected_components_long_paths(spark):
+    # two 200-node paths in one call, one with ascending ids and one
+    # with shuffled ids: min-label propagation would need ~200 rounds,
+    # large-star/small-star stays well inside the round cap
+    import random
+
+    from litebase_spark.operators.dedup import connected_components
+
+    shuffled = list(range(1000, 1200))
+    random.Random(7).shuffle(shuffled)
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(199)]
+        + list(zip(shuffled, shuffled[1:])),
+        "src int, dst int",
+    )
+    got = {
+        r.node: r.comp
+        for r in connected_components(edges, "src", "dst").collect()
+    }
+    assert got == {**dict.fromkeys(range(200), 0),
+                   **dict.fromkeys(shuffled, 1000)}
 
 
 def test_chunk_dedup_semantics(spark, sf_dir):

@@ -313,6 +313,30 @@ def test_per_query_timeout_ms_returns_408(server):
     assert code == 200 and body["data"][0]["rows"] == [[1]]
 
 
+def test_database_names_are_quoted(server):
+    # a backtick in a database name is doubled inside the quoting, so
+    # the name can never close the identifier and reach the statement
+    # as SQL text; Spark's refusal of the name comes back as JSON
+    admin = "admin:s3cret"
+    code, body = _call(server, "POST", "/v1/databases", {"name": "bad`name"},
+                       token=admin)
+    assert (code, body["status"]) == (400, "error")
+    code, body = _call(server, "DELETE", "/v1/databases/bad`name", token=admin)
+    assert (code, body["status"]) == (400, "error")
+    code, _ = _call(server, "POST", "/v1/databases", {"name": "victim"},
+                    token=admin)
+    assert code == 201
+    try:
+        # unquoted, this reads DROP DATABASE IF EXISTS `victim`CASCADE--`
+        code, body = _call(server, "DELETE", "/v1/databases/victim`CASCADE--",
+                           token=admin)
+        assert (code, body["status"]) == (400, "error")
+        code, body = _call(server, "GET", "/v1/databases", token=admin)
+        assert "victim" in body["data"]
+    finally:
+        _call(server, "DELETE", "/v1/databases/victim", token=admin)
+
+
 def test_admin_routes_snapshots_backups_restore_keys(spark, tmp_path):
     """Reference §2.C admin surface: snapshots, backups, restore,
     branches, databases, access-key CRUD over the wire."""

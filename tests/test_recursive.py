@@ -48,6 +48,18 @@ def test_depth_cap_raises(spark):
         )
 
 
+def test_union_all_depth_cap_raises(spark):
+    # UNION ALL hits the same cap: a truncated result would be wrong
+    base = spark.range(1).select(F.col("id").cast("int").alias("n"))
+    with pytest.raises(RecursionError, match="did not converge within 5 rounds"):
+        recursive_cte(
+            base,
+            lambda f: f.select((F.col("n") + 1).alias("n")),
+            max_iterations=5,
+            distinct=False,
+        )
+
+
 def test_union_all_mode(spark):
     base = spark.range(1).select(F.lit(1).alias("n"))
     out = recursive_cte(

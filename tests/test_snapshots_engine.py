@@ -219,6 +219,15 @@ def test_sql_time_travel_over_versioned_store(spark, sf_dir, tmp_path):
         f"SELECT count(*) AS n FROM nation_tt TIMESTAMP AS OF '{t_v1}'"
     )
     assert r.rows[0].n == nation.count()
+    # inside a string literal the spelling is text, not a table
+    # reference; outside it, the same statement still pins the version
+    r = eng.sql("SELECT 'x VERSION AS OF 1' AS s")
+    assert r.rows[0].s == "x VERSION AS OF 1"
+    r = eng.sql(
+        "SELECT 'nation_tt VERSION AS OF 1' AS s, count(*) AS n "
+        "FROM nation_tt VERSION AS OF 2"
+    )
+    assert tuple(r.rows[0]) == ("nation_tt VERSION AS OF 1", 5)
 
 
 def test_backup_archive_roundtrip(spark, sf_dir, tmp_path):

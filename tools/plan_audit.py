@@ -221,19 +221,26 @@ _REVIEWED_CHECKPOINTS = {
     "fts_phrase_prefix": "PROXY tokenized posting table shared by the "
     "3 phrase positions",
     # --- per-round lineage caps in iterative algorithms ---
-    "connected_components": "LOOP per-round label table + edge set",
+    "connected_components": "LOOP input pair set, lazily checkpointed and "
+    "written by the first round's test (each round's star edges are a "
+    "fixpoint round)",
     "pagerank": "LOOP per-round rank table + edge set (57 MB @x100m)",
     "graph_triangle_count": "LOOP/PROXY edge set reused 3 ways",
-    "graph_k_core": "LOOP per-round degree table",
+    "graph_k_core": "LOOP co-purchase edge set, lazily checkpointed and "
+    "written by the first peel's edge count (each peel is a fixpoint "
+    "round)",
     "bpe_learn_merges": "LOOP per-round word table (vocab-sized)",
     "kmeans_fit": "LOOP training-set cache during model fit",
     "knn_ivf_kmeans": "LOOP training-set cache during model fit",
     "pq_fit": "LOOP training-set cache during model fit (70 MB @x100m "
     "via embedding_pq_codes)",
-    "recursive_cte": "LOOP each iteration's new rows, lazily checkpointed "
-    "and written once by the count() that decides emptiness; the union of "
-    "those frontiers compacted every checkpoint_every iterations "
-    "(plans/recursive.py)",
+    "recursive_cte": "LOOP the deduplicated base and the union of the "
+    "frontiers, compacted every checkpoint_every iterations; each frontier "
+    "is a fixpoint round (plans/recursive.py)",
+    "fixpoint": "LOOP each round's state (recursive_cte frontier, "
+    "connected_components star edges, graph_k_core surviving edges), "
+    "lazily checkpointed and written by the caller's convergence test, "
+    "the round's one action (plans/recursive.py)",
     # --- output-sized (the query RETURNS this data) ---
     "json_tree_walk": "OUTPUT per-level frontiers; union of ALL levels "
     "IS the result (4676 MB mem + 132 MB disk @x100m — bounded by "
