@@ -240,6 +240,87 @@ def format_driver_line(result: dict, limit: int = 1950) -> str:
     return line
 
 
+def warm_up(spark) -> None:
+    """Run a first job on the JVM and on the Python/Arrow worker pool so
+    per-query numbers measure the queries, not process startup."""
+    spark.range(1).count()
+    import pandas as pd  # noqa: F401
+
+    spark.range(32).repartition(32).mapInPandas(
+        lambda it: it, schema="id long"
+    ).count()
+
+
+def query_record(spark, name: str, sf_dir: str) -> dict:
+    """One registered query through ``perfbench.measure``: the builder,
+    the first run, then two warm runs of the same plan.
+
+    ``warm_s`` is the min of the two warm runs (the per-query value of
+    the JSON line); ``e2e_s`` = ``build_s + first_s`` is what a caller
+    pays for one fresh query (its ``cold``).  ``phases_ms``
+    are the Catalyst phases and ``ops`` the Spark counters of the
+    builder's and the first run's SQL executions."""
+    import litebase_spark.operators  # noqa: F401
+    from litebase_spark.catalog import REGISTRY
+    from perfbench.measure import measure
+
+    builder = REGISTRY[name].builder
+    m = measure(spark, name, lambda: builder(spark, sf_dir), harvest=True)
+    # the second warm run: the already-built plan, executed once more
+    again = measure(spark, name, lambda: m.df, warm=False)
+    return {
+        "build_s": m.build_s,
+        "build_sql_executions": m.build_sql_executions,
+        "first_s": m.first_s,
+        "warm_s": min(m.warm_s, again.first_s),
+        "e2e_s": m.build_s + m.first_s,
+        "phases_ms": m.phases_ms,
+        "ops": m.ops,
+    }
+
+
+def duckdb_connect(sf_dir: str):
+    """DuckDB connection with one view per fixture table of ``sf_dir``
+    (a parquet file per table, or a replica's directory of part files)."""
+    import duckdb
+
+    from litebase_spark.catalog import TABLES
+
+    con = duckdb.connect()
+    # a bound on spill: unrolled-CTE oracles (the 5-round pagerank
+    # replay) otherwise spill without limit on replicas and fill the disk
+    con.execute("SET max_temp_directory_size='40GB'")
+    for t in TABLES:
+        src = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(src):
+            src += "/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
+    return con
+
+
+def duckdb_times(con, statements: dict[str, str], reps: int = 1):
+    """Best of ``reps`` runs of each named statement, each run timed as a
+    ``perfbench.measure`` span.  Returns ({name: seconds},
+    {name: error}) — a failing statement is reported, not raised."""
+    from perfbench.measure import Tracer
+
+    times: dict[str, float] = {}
+    failed: dict[str, str] = {}
+    for name, sql in statements.items():
+        tracer = Tracer(True)
+        try:
+            for _ in range(reps):
+                with tracer.span(name):
+                    con.execute(sql).fetchall()
+        except Exception as e:
+            failed[name] = str(e).splitlines()[0][:120]
+            print(f"# duckdb {name}: FAILED {failed[name]}", file=sys.stderr)
+            continue
+        times[name] = min(sp["end"] - sp["start"] for sp in tracer.spans)
+        print(f"# duckdb {name}: {times[name]:.2f}s", file=sys.stderr)
+    return times, failed
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
@@ -264,66 +345,39 @@ def main() -> int:
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import litebase_spark.operators  # noqa: F401
-    from litebase_spark.catalog import REGISTRY, TABLES
+    from litebase_spark.catalog import REGISTRY
     from litebase_spark.session import get_spark
+    from perfbench.measure import sched_floor_s
 
     spark = get_spark("litebase-bench")
-    # warm the JVM and the Python/Arrow worker pool once so per-query
-    # numbers measure the queries, not process startup
-    spark.range(1).count()
-    import pandas as pd  # noqa: F401
-
-    spark.range(32).repartition(32).mapInPandas(
-        lambda it: it, schema="id long"
-    ).count()
-
-    # Steady-state execution timing: the logical plan is built once per
-    # query (a resident engine keeps prepared plans — the reference does
-    # exactly this with its per-connection statement cache, reference
-    # pkg/database/database_connection.go:726-756), then executed twice and
-    # the best run reported. The first end-to-end run (plan build +
-    # analysis + execution) is reported separately as cold_total.
-    # Full-plan execution via the noop sink: every operator runs (count()
-    # would let Catalyst prune e.g. unused Window projections), but rows
-    # stay executor-side — the honest analog of serving a result set
-    # without charging for local driver transfer.
-    def run(df):
-        df.write.format("noop").mode("overwrite").save()
+    warm_up(spark)
 
     # Scheduling floor: a one-shuffle no-data job. Each headline query
     # pays roughly this much pure scheduler/stage latency locally — a
     # constant, not a throughput cost (vanishes at cluster scale where
-    # task work >> launch latency). Reported so totals can be read as
-    # floor*n + real work.
-    from pyspark.sql import functions as _F
+    # task work >> launch latency). Reported beside the totals so they
+    # can be read as floor*n + real work; never subtracted from them.
+    sched_floor = round(sched_floor_s(spark), 3)
 
-    floor_df = spark.range(1000).groupBy((_F.col("id") % 8).alias("k")).count()
-    run(floor_df)
-    floor_runs = []
-    for _ in range(5):
-        t0 = time.time()
-        run(floor_df)
-        floor_runs.append(time.time() - t0)
-    sched_floor = round(min(floor_runs), 3)
-
-    timings: dict[str, float] = {}
-    cold: dict[str, float] = {}
+    # Steady-state execution timing: the logical plan is built once per
+    # query (a resident engine keeps prepared plans — the reference does
+    # exactly this with its per-connection statement cache, reference
+    # pkg/database/database_connection.go:726-756), then executed and
+    # the best of two warm runs reported. The first end-to-end run (plan
+    # build + analysis + execution) is reported separately as cold_total.
+    # Full-plan execution via the noop sink: every operator runs (count()
+    # would let Catalyst prune e.g. unused Window projections), but rows
+    # stay executor-side — the honest analog of serving a result set
+    # without charging for local driver transfer.
+    layers = {}
     for name in HEADLINE:
-        spec = REGISTRY[name]
-        t0 = time.time()
-        df = spec.builder(spark, sf_dir)
-        run(df)
-        cold[name] = round(time.time() - t0, 3)
-        per_run = []
-        for _ in range(2):
-            t0 = time.time()
-            run(df)
-            per_run.append(time.time() - t0)
-        timings[name] = round(min(per_run), 3)
+        layers[name] = r = query_record(spark, name, sf_dir)
         print(
-            f"# {name}: exec {timings[name]:.2f}s cold {cold[name]:.2f}s",
+            f"# {name}: exec {r['warm_s']:.2f}s cold {r['e2e_s']:.2f}s",
             file=sys.stderr,
         )
+    timings = {n: round(r["warm_s"], 3) for n, r in layers.items()}
+    cold = {n: round(r["e2e_s"], 3) for n, r in layers.items()}
 
     # The driver captures only the last ~2000 bytes of stdout and parses
     # the final line as JSON — keep the line compact (no spaces, 2-decimal
@@ -347,35 +401,24 @@ def main() -> int:
     }
 
     if baseline:
-        import duckdb
-
-        con = duckdb.connect()
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/{t}.parquet')"
-            )
-        duck: dict[str, float] = {}
-        for name in HEADLINE:
-            spec = REGISTRY[name]
-            if spec.oracle is None:
-                continue
-            t0 = time.time()
-            con.execute(spec.oracle).fetchall()
-            duck[name] = round(time.time() - t0, 3)
-            print(f"# duckdb {name}: {duck[name]:.2f}s", file=sys.stderr)
-        result["duckdb_baseline"] = duck
+        oracles = {n: REGISTRY[n].oracle for n in HEADLINE
+                   if REGISTRY[n].oracle is not None}
+        duck, _ = duckdb_times(duckdb_connect(sf_dir), oracles)
+        result["duckdb_baseline"] = {n: round(v, 3) for n, v in duck.items()}
         result["duckdb_total"] = round(sum(duck.values()), 3)
 
     full = dict(result)
     full["queries"] = timings
     full["cold"] = cold
+    full["e2e_total"] = round(sum(r["e2e_s"] for r in layers.values()), 3)
+    full["layers"] = layers
     full["loadavg_at_start"] = [load1, load5, load15]
     full["loadavg_at_end"] = list(read_loadavg())
     full["methodology"] = (
-        "steady-state full-plan execution (noop sink): plan built once "
-        "(statement-cache analog), 2 executions, min; cold_total = first "
-        "build+run per query"
+        "perfbench.measure per query, noop sink: plan built once "
+        "(statement-cache analog), first run, 2 warm runs, min; cold = "
+        "build + first run; layers = builder, Catalyst phases and "
+        "operator counters of the builder's and first run's executions"
     )
     # Per-run artifact (r14): every invocation writes its OWN file under
     # bench_runs/ instead of clobbering BENCH_FULL.json in place — the

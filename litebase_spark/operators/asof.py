@@ -1537,7 +1537,7 @@ def ts_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consume g, and each otherwise re-inlines the corpus window sort
     # per execution (5 scans / 3 window passes in the before plan).
     # r14 scale audit: this IS a corpus-sized barrier — measured
-    # 1.32 GB at the x100m point (tools/checkpoint_bytes.py) — kept on
+    # 1.32 GB at the x100m point (tools/layers.py ckpt_MB) — kept on
     # the measured A/B (x100m 5.0 s without -> 2.4 s with; the three
     # consumers each re-running a corpus window sort costs more than
     # the narrow 7-int64-column lag table holds), documented per the

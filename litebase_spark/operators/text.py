@@ -312,7 +312,7 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus stats and the scoring pass both consume it, and each
     # otherwise re-inlines the tokenize pass per execution. r14 scale
     # audit: O(n_docs) x ~18 B of longs — measured 54 MB at the x100m
-    # point (~0.8% of the corpus bytes; tools/checkpoint_bytes.py),
+    # point (~0.8% of the corpus bytes; tools/layers.py ckpt_MB),
     # the §8 lightweight-proxy shape rather than a corpus hazard.
     perdoc = d.select("doc_id", tokens("text").alias("words")).select(
         "doc_id",
@@ -1896,7 +1896,7 @@ def text_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus stats and the scoring pass both consume it, and each
     # otherwise re-inlines the tokenize pass per execution. r14 scale
     # audit: O(n_docs) x ~18 B of longs — measured 54 MB at the x100m
-    # point (~0.8% of the corpus bytes; tools/checkpoint_bytes.py),
+    # point (~0.8% of the corpus bytes; tools/layers.py ckpt_MB),
     # the §8 lightweight-proxy shape rather than a corpus hazard.
     perdoc = d.select("doc_id", tokens("text").alias("words")).select(
         "doc_id",
@@ -2405,9 +2405,9 @@ def text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("df"))
         .localCheckpoint(eager=True)
     )
-    n = df_.filter(F.col("term") == sent).select(
-        F.col("df").alias("n_docs")
-    )
+    # an ungrouped aggregate, so the broadcast side is a one-row scalar
+    # (keys=[]) and the cross join below is a threshold, not a product
+    n = df_.filter(F.col("term") == sent).agg(F.max("df").alias("n_docs"))
     tf = (
         d.filter(F.col("doc_id") < 100)
         .select("doc_id", F.explode(tokens("text")).alias("term"))

@@ -19,7 +19,7 @@ def test_headline_subset_of_registry():
 def test_replica_tool_names_exist():
     import litebase_spark.operators  # noqa: F401
     from litebase_spark.catalog import REGISTRY
-    from tools.bench_sf1 import _EXCLUDE
+    from tools.layers import REPLICA_EXCLUDE as _EXCLUDE
     from tools.scale_stress import QUERIES
 
     assert all(n in REGISTRY for n in QUERIES)

@@ -95,3 +95,19 @@ def test_audit_plan_synthetic_flags():
         "PYTHON_ARROW_UNREVIEWED"
     ]
     assert pa.audit_plan("dedup_minhash_lsh", "... MapInPandas ...", "") == []
+
+
+def test_tfidf_scalar_cross_join_is_not_cartesian(spark, sf_dir):
+    """text_tfidf_keywords broadcasts a one-row n_docs table into a
+    cross join; built as an ungrouped aggregate it plans as keys=[] and
+    the gate must read it as the scalar-threshold shape, not CARTESIAN."""
+    import litebase_spark.operators  # noqa: F401
+    from litebase_spark.catalog import REGISTRY
+
+    pa = _audit()
+    df = REGISTRY["text_tfidf_keywords"].builder(spark, sf_dir)
+    qe = df._jdf.queryExecution()
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
+    plan = qe.explainString(mode.fromString("formatted"))
+    simple = qe.explainString(mode.fromString("simple"))
+    assert pa.audit_plan("text_tfidf_keywords", plan, simple) == []

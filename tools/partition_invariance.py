@@ -16,8 +16,6 @@ Exit code = number of failures. Round-3 run: 15/15 PASS.
 
 from __future__ import annotations
 
-import datetime as dt  # noqa: F401  (timestamp values pass through)
-import math
 import sys
 
 sys.path.insert(0, ".")
@@ -27,6 +25,7 @@ import duckdb
 import litebase_spark.operators  # noqa: F401
 from litebase_spark.catalog import REGISTRY, TABLES
 from litebase_spark.session import get_spark
+from tools.check_oracle import canon_rows
 
 SF = "/root/testdata/sf0.01"
 
@@ -136,20 +135,6 @@ NAMES = [
 ]
 
 
-def canon(v):
-    if isinstance(v, bool):
-        return ("i", int(v))
-    if isinstance(v, int):
-        return ("i", v)
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else ("f", v)
-    import decimal
-
-    if isinstance(v, decimal.Decimal):
-        return ("f", float(v))
-    return v
-
-
 def main() -> int:
     spark = get_spark("pinv", master="local[5]", shuffle_partitions=7)
     con = duckdb.connect()
@@ -162,18 +147,9 @@ def main() -> int:
     for name in NAMES:
         spec = REGISTRY[name]
         sdf = spec.builder(spark, SF)
-        scols = list(sdf.columns)
-        sidx = sorted(range(len(scols)), key=lambda i: scols[i])
-        srows = sorted(
-            tuple(canon(r[i]) for i in sidx)
-            for r in (tuple(x) for x in sdf.collect())
-        )
+        _, srows = canon_rows(sdf.columns, sdf.collect())
         cur = con.execute(spec.oracle)
-        ocols = [d[0] for d in cur.description]
-        oidx = sorted(range(len(ocols)), key=lambda i: ocols[i])
-        orows = sorted(
-            tuple(canon(r[i]) for i in oidx) for r in cur.fetchall()
-        )
+        _, orows = canon_rows([d[0] for d in cur.description], cur.fetchall())
         ok = srows == orows
         print(("PASS" if ok else "FAIL"),
               f"{name} ({len(srows)} rows @ local[5]/7)")

@@ -27,7 +27,7 @@ Flags per query:
                       measured MB), LOOP (per-round lineage cap),
                       OUTPUT (output-sized level table), or CORPUS
                       (kept only with a measured at-scale A/B + bytes
-                      figure; tools/checkpoint_bytes.py)
+                      figure; tools/layers.py ckpt_MB)
 
 Run:  python tools/plan_audit.py [sf_dir]     (default sf0.01)
       python tools/plan_audit.py --selftest   (prove the pushdown
@@ -168,7 +168,7 @@ _ALLOWED_COLLECT = {
 
 # Every localCheckpoint site in query-path source (operators/** and the
 # porter stage chain), keyed by ENCLOSING FUNCTION, with its reviewed
-# class. Measured MB figures are tools/checkpoint_bytes.py at the
+# class. Measured MB figures are tools/layers.py's ckpt_MB at the
 # x100-mutated replica (1.8 GB parquet). A new/unlisted site fails the
 # audit until classified here.
 _REVIEWED_CHECKPOINTS = {
@@ -472,7 +472,7 @@ def main() -> int:
                 "checkpoints run at build time, so these are exactly "
                 "the sites whose work is excluded from steady-state "
                 "warm timings; bytes measured with "
-                "tools/checkpoint_bytes.py at x100m):\n\n"
+                "the ckpt_MB column of tools/layers.py at x100m):\n\n"
             )
             for k, v in sorted(_REVIEWED_CHECKPOINTS.items()):
                 out.write(f"- `{k}`: {v}\n")

@@ -1,12 +1,13 @@
-"""Scale-stress harness: measure how plans behave as data grows 1x-16x.
+"""Scale-stress replicas: how plans behave as data grows 1x-16x.
 
-sf0.1 is the largest driver-provided fixture; this tool manufactures
-4x / 16x fact-table replicas (key-shifted unions — facts grow, dims stay
-fixed, exactly how a real warehouse scales) and times a representative
-operator per family at each scale. The question it answers is the
-100 TB question in miniature: is the time curve ~linear in fact rows
-(shuffle-bound plans should be n log n at worst), or does some plan hide
-quadratic work / a driver bottleneck that only shows past the bench SF?
+sf0.1 is the largest shipped fixture; ``build_replica``
+manufactures k-times fact-table replicas (key-shifted unions — facts
+grow, dims stay fixed, exactly how a real warehouse scales) and
+``QUERIES`` names a representative operator per family. The question
+they answer is the 100 TB question in miniature: is the time curve
+~linear in fact rows (shuffle-bound plans should be n log n at worst),
+or does some plan hide quadratic work / a single-process bottleneck
+that only shows past the bench SF?
 
 Replication contract: o_orderkey/l_orderkey/doc_id/event_id/vec_id are
 shifted by k*1e9 per replica k, so keys stay unique, join fan-outs per
@@ -18,18 +19,16 @@ larger duplicate clusters, so their work profile changes semantically,
 not just in volume — their scale arguments live in SCALE.md (banding
 math), not in a replica test.
 
-Usage: python tools/scale_stress.py [--scales 1,4,16] [--out SCALE_STRESS.md]
-Writes a markdown table + one JSON line to stdout.
+Time them with the layer table, one run per scale (x1 is the base):
+  python tools/layers.py scale_stress --out x1.md
+  python tools/layers.py scale_stress --x 16 --out x16.md
 """
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -252,98 +251,3 @@ def build_replica(spark, k: int, mutate: bool = False) -> str:
             "overwrite").parquet(f"{out}/{t}.parquet")
     open(marker, "w").close()
     return out
-
-
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--scales", default="1,4,16")
-    ap.add_argument("--out", default=None)
-    args = ap.parse_args()
-    scales = [int(s) for s in args.scales.split(",")]
-
-    import litebase_spark.operators  # noqa: F401
-    from litebase_spark.catalog import REGISTRY
-    from litebase_spark.session import get_spark
-
-    spark = get_spark("scale-stress")
-    spark.range(1).count()
-
-    def run(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    dirs = {}
-    for k in scales:
-        t0 = time.time()
-        dirs[k] = build_replica(spark, k) if k > 1 else BASE
-        print(f"# replica x{k} ready in {time.time() - t0:.1f}s",
-              file=sys.stderr)
-
-    results: dict[str, dict[int, float]] = {}
-    for name in QUERIES:
-        spec = REGISTRY[name]
-        results[name] = {}
-        for k in scales:
-            df = spec.builder(spark, dirs[k])
-            run(df)  # warm (plan + first exec)
-            per = []
-            for _ in range(2):
-                t0 = time.time()
-                run(df)
-                per.append(time.time() - t0)
-            best = min(per)
-            results[name][k] = round(best, 3)
-            print(f"# {name} x{k}: {best:.2f}s", file=sys.stderr)
-
-    lines = ["# SCALE_STRESS — fact-replica scaling, sf0.1 base, "
-             f"local[{spark.sparkContext.defaultParallelism}]", "",
-             "| query | " + " | ".join(f"x{k} s" for k in scales)
-             + " | x16/x1 | per-row ratio |",
-             "|---|" + "---|" * (len(scales) + 2)]
-    hi, lo = max(scales), min(scales)
-    for name, row in results.items():
-        ratio = row[hi] / row[lo] if row[lo] else float("nan")
-        per_row = ratio / (hi / lo)
-        lines.append(
-            f"| {name} | "
-            + " | ".join(f"{row[k]:.2f}" for k in scales)
-            + f" | {ratio:.1f}x | {per_row:.2f} |"
-        )
-    lines += [
-        "",
-        "Reading the curves: facts replicate with shifted PRIMARY keys "
-        "only (orders/lineitem stay 1:1 on orderkey — their joins are "
-        "linear in k), but events keeps user_id/ts and documents keeps "
-        "its text, so the replica grows DENSER, not longer. "
-        "Density-coupled operators therefore do quadratically more "
-        "OUTPUT work by construction: join_range_interval's matched "
-        "pairs grow k^2 (183 at x1 -> 46,848 at x16, 256x) because "
-        "every user has 16x the clicks inside each 30-min window; "
-        "join_interval_overlap and text_substring_dedup (16 identical "
-        "copies of every doc make every 8-gram a duplicate) are the "
-        "same class. Their x16/x1 wall ratios of ~4x against 16x rows "
-        "PLUS 256x matches are strongly sub-linear in actual work — "
-        "the per-row ratio column understates them.",
-        "",
-        "Round-9 rows: `window_range_frame` (3.8x) is the distributed "
-        "CDF doing real per-row bucket work on 3x the union rows — "
-        "still 4x under linear and 2.3x ahead of the single-reducer "
-        "window it replaced at x100; `pipeline_ngram_novelty` (2.7x) "
-        "tracks its gram-keyed shuffle volume; `stats_spearman_rho` "
-        "(1.3x) is dominated by the value-keyed rank join whose "
-        "distinct-cents key space saturates under replication; the "
-        "cells-based tests (kruskal 2.2x, kendall 2.0x, levene 1.5x, "
-        "xcorr 2.1x) stay near-flat because their windows run over "
-        "bounded grids that do not grow with the corpus.",
-    ]
-    md = "\n".join(lines) + "\n"
-    if args.out:
-        with open(args.out, "w") as f:
-            f.write(md)
-    print(md, file=sys.stderr)
-    print(json.dumps({"metric": "scale_stress", "scales": scales,
-                      "queries": results}))
-    return 0
-
-
-if __name__ == "__main__":
-    sys.exit(main())

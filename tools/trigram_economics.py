@@ -79,15 +79,6 @@ def build_docs_replica(spark, k: int) -> str:
     return out
 
 
-def timed(fn, reps=3):
-    best = 1e9
-    for _ in range(reps):
-        t0 = time.time()
-        fn()
-        best = min(best, time.time() - t0)
-    return best
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--points", default="100,1000")
@@ -96,6 +87,7 @@ def main() -> int:
 
     import duckdb
 
+    from bench import duckdb_times
     from litebase_spark.operators.text import fts_match
     from litebase_spark.operators.text_trigram import (
         build_trigram_index,
@@ -104,6 +96,7 @@ def main() -> int:
         match_trigram,
     )
     from litebase_spark.session import get_spark
+    from perfbench.measure import measure
 
     spark = get_spark("trigram-econ")
     spark.range(1).count()
@@ -112,10 +105,10 @@ def main() -> int:
           "(round-13, tools/trigram_economics.py)\n")
     print("Methodology: index built and written to parquet ONCE per "
           "corpus point (cost listed); probes then run against the "
-          "materialized index (best of 3 warm noop writes). DuckDB "
-          "rows are the raw corpus scan for the same predicate, best "
-          "of 3. Corpus points are the MUTATED document replicas "
-          "(copy-salted token mutations — realistic vocabulary "
+          "materialized index (perfbench.measure: the warm noop write "
+          "after the first). DuckDB rows are the raw corpus scan for "
+          "the same predicate, best of 3. Corpus points are the "
+          "MUTATED document replicas (copy-salted token mutations — realistic vocabulary "
           "growth, so the index is bigger and more realistic than a "
           "verbatim replica would be).\n")
 
@@ -196,26 +189,28 @@ def main() -> int:
             "text LIKE '%" + rare.replace("'", "''") + "%'"
         )
 
-        for label, kind, pat in probes:
+        def probe(kind, pat):
             if kind == "like":
-                q = like_trigram(None, pat, postings=idx)
-            elif kind == "glob":
-                q = glob_trigram(None, pat, postings=idx)
-            elif kind == "match":
-                q = match_trigram(None, pat, postings=idx)
-            else:
-                q = fts_match(
-                    docs, must=["que", "tab"],
-                    should=["vect", "strea"], must_not=["merg"],
-                    tokenize="trigram", trigram_postings_df=idx,
-                )
-            q.write.format("noop").mode("overwrite").save()  # warm
-            s_spark = timed(
-                lambda q=q: q.write.format("noop").mode(
-                    "overwrite").save())
-            s_duck = timed(lambda label=label: con.execute(
-                f"SELECT count(*) FROM documents WHERE "
-                f"{DUCK_PRED[label]}").fetchone())
+                return like_trigram(None, pat, postings=idx)
+            if kind == "glob":
+                return glob_trigram(None, pat, postings=idx)
+            if kind == "match":
+                return match_trigram(None, pat, postings=idx)
+            return fts_match(
+                docs, must=["que", "tab"],
+                should=["vect", "strea"], must_not=["merg"],
+                tokenize="trigram", trigram_postings_df=idx,
+            )
+
+        duck, _ = duckdb_times(con, {
+            label: f"SELECT count(*) FROM documents WHERE {DUCK_PRED[label]}"
+            for label, _, _ in probes
+        }, reps=3)
+        for label, kind, pat in probes:
+            s_spark = measure(
+                spark, label, lambda kind=kind, pat=pat: probe(kind, pat)
+            ).warm_s
+            s_duck = duck[label]
             print(f"| {label} | {s_spark:.2f} | {s_duck:.2f} | "
                   f"{s_spark / s_duck:.2f}x |")
         con.close()
