@@ -487,13 +487,8 @@ def build_server(port: int = 8080, admin_key: str | None = None,
     kid, _, secret = raw.partition(":")
     keys = AccessKeyManager()
     keys.store(AccessKey(kid, secret, [AccessKeyStatement(["*"], ["*"])]))
-    engine = Engine(spark=get_spark("litebase-serve"))
-    store = None
-    if store_root:
-        from litebase_spark.snapshots import VersionedStore
-
-        store = VersionedStore(engine.spark, store_root)
-    return QueryServer(engine, keys, port=port, store=store)
+    engine = Engine(spark=get_spark("litebase-serve"), store_root=store_root)
+    return QueryServer(engine, keys, port=port)
 
 
 def serve_main(argv: list[str]) -> int:
@@ -504,7 +499,11 @@ def serve_main(argv: list[str]) -> int:
     p = argparse.ArgumentParser(prog="litebase-spark serve")
     p.add_argument("--port", type=int, default=8080)
     p.add_argument("--admin-key", default=None)
-    p.add_argument("--store-root", default=None)
+    p.add_argument(
+        "--store-root", default=None,
+        help="directory of the versioned table store that every write "
+             "commits to and snapshots, branches, backups and restore read "
+             "(default: spark.sql.warehouse.dir)")
     a = p.parse_args(argv)
     srv = build_server(a.port, a.admin_key, a.store_root)
     srv.start()

@@ -21,23 +21,33 @@ Maps litebase's query lifecycle (SURVEY §3.1) onto a SparkSession:
     ``Engine.sql`` times each statement once on a monotonic clock and
     records it under the caller's text; percentiles come from a
     fixed log-scale histogram, so memory does not grow with traffic.
-  * Databases/branches — namespace management in the session catalog
-    (reference: pkg/database/system_database.go:98-131); branch forking is
-    snapshot-copy of a namespace location.
+  * Storage — one writer: every SQL write (autocommit DML, a
+    transaction's COMMIT, the foreachBatch upsert sink) commits a
+    version of the Engine's ``snapshots.VersionedStore``, and each table
+    the Engine creates is an EXTERNAL catalog table located at its head
+    version. Snapshots, branches, restore and ``VERSION AS OF`` read
+    those versions (reference: every write is a WAL version,
+    pkg/backups). Databases are namespaces of the session catalog
+    (reference: pkg/database/system_database.go:98-131).
 """
 
 from __future__ import annotations
 
 import bisect
 import contextlib
+import io
+import json
 import math
+import os
 import re
+import shutil
 import threading
 import time
 import uuid
 import zlib
 from dataclasses import dataclass
 from typing import Any
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, Row, SparkSession
 
@@ -49,6 +59,7 @@ from litebase_spark.functions.dialect import (
     top_level_search,
 )
 from litebase_spark.session import get_spark
+from litebase_spark.snapshots import StagedVersion, VersionedStore
 
 # Statement-prefix classes, mirroring reference pkg/database/query.go:46-102
 # (IsDDL/IsDML/IsDQL/IsPragma/IsVacuum/IsBegin/IsCommit/IsRollback).
@@ -265,14 +276,12 @@ class QueryMetrics:
         """Append the bucketed log to a JSON-lines file and clear the
         in-memory queue (the reference's 5-second flush of closed
         buckets to tiered storage). Returns rows flushed."""
-        import json as _json
-
         with self._lock:
             rows = self.log_entries()
             if rows:
                 with open(path, "a") as f:
                     for r in rows:
-                        f.write(_json.dumps(r) + "\n")
+                        f.write(json.dumps(r) + "\n")
             self._buckets.clear()
         return len(rows)
 
@@ -335,6 +344,11 @@ def _store(expr: str, col: str, dtype: str) -> str:
     )
 
 
+def _sql_str(text: str) -> str:
+    """`text` as a Spark SQL string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _rewrite_excluded(expr: str) -> str:
     """`excluded.col` (the proposed insert row, SQLite upsert scope) ->
     the join's `__exc_col` column."""
@@ -351,9 +365,8 @@ class _DmlPlan:
     `__changed`, the number of changes a row accounts for (changes() is
     their sum). An append's rows are new rows; a rewrite's rows are the
     table's whole new image, minus the changed rows when `drop_changed`
-    (DELETE). A `may_skip` append (INSERT OR IGNORE / DO NOTHING) is
-    materialized before its write, which is skipped when it adds nothing:
-    an empty insert job still writes a file."""
+    (DELETE). A statement that changes no row commits no version, unless
+    it `replaces` the table's rows (INSERT OVERWRITE)."""
 
     table: str
     event: str  # INSERT | UPDATE | DELETE: the trigger event
@@ -363,7 +376,7 @@ class _DmlPlan:
     # a CASE projection drops and the written image must keep
     fields: list
     drop_changed: bool = False
-    may_skip: bool = False
+    replaces: bool = False
 
 
 class Engine:
@@ -375,16 +388,21 @@ class Engine:
     def __init__(
         self,
         spark: SparkSession | None = None,
-        default_database: str = "main",
+        store_root: str | None = None,
     ) -> None:
         self.spark = spark or get_spark()
         self.metrics = QueryMetrics()
-        self.default_database = default_database
         self._plan_cache: dict[int, DataFrame] = {}
         self._plan_freq: dict[int, int] = {}
         self._transactions: dict[str, "Transaction"] = {}
         self._autotxn: "Transaction | None" = None
-        self._vstore = None  # attach_versioned_store enables time travel
+        # the one writer of table data; tables of the session's database
+        # are its "main" namespace
+        self.store = VersionedStore(
+            self.spark,
+            store_root
+            or urlparse(self.spark.conf.get("spark.sql.warehouse.dir")).path,
+        )
         # declared PRIMARY KEYs (parsed from CREATE TABLE or declared
         # explicitly) — the conflict target for INSERT OR REPLACE/IGNORE
         # and bare ON CONFLICT, like SQLite's rowid/unique machinery
@@ -530,13 +548,11 @@ class Engine:
             # CREATE TABLE ... PRIMARY KEY: record the key (conflict target
             # for upserts) and strip the constraint Spark's parser rejects.
             sql_text = self._register_primary_key(sql_text)
-        if stmt_class == "DML":
-            res = self._run_dml(sql_text, args, None)
+            res = self._try_table_ddl(sql_text, args)
             if res is not None:
                 return res
-            # a form the planner does not recognise runs natively; plain
-            # parquet reports no commit metrics, so it counts no changes
-            self._last_changes = 0
+        if stmt_class == "DML":
+            return self._run_dml(sql_text, args, None)
         if re.search(r"(?i)\bsqlite_master\b", sql_text):
             self._refresh_sqlite_master()
         df = self.spark.sql(sql_text, args=args) if args else self.spark.sql(sql_text)
@@ -557,10 +573,8 @@ class Engine:
         watchdog timer — cancellation interrupts the statement's Spark
         jobs only (other sessions/statements are untouched), and the
         caller sees TimeoutError, like a busy_timeout expiry."""
-        import uuid as _uuid
-
         sc = self.spark.sparkContext
-        group = f"litebase-stmt-{_uuid.uuid4().hex[:12]}"
+        group = f"litebase-stmt-{uuid.uuid4().hex[:12]}"
         fired = threading.Event()
 
         def _cancel():
@@ -599,15 +613,12 @@ class Engine:
         )
         return sql_text, args
 
-    # -- time travel over a VersionedStore (A21 SQL surface) ----------------
-
-    def attach_versioned_store(self, store) -> None:
-        """Enable `FROM t VERSION AS OF n` / `TIMESTAMP AS OF '<ts>'`
-        (the Delta/Iceberg time-travel dialect) against a
-        snapshots.VersionedStore: version references resolve to pinned
-        immutable file lists, zero-copy (reference PITR timeline:
-        pkg/backups/restore.go resolves the log covering the point)."""
-        self._vstore = store
+    # -- time travel over the store (A21 SQL surface) -----------------------
+    #
+    # `FROM t VERSION AS OF n` / `TIMESTAMP AS OF '<ts>'` (the Delta/Iceberg
+    # time-travel dialect) resolve to a version's pinned, immutable file
+    # list, zero-copy (reference PITR timeline: pkg/backups/restore.go
+    # resolves the log covering the point).
 
     _TIME_TRAVEL_RE = re.compile(
         r"(?is)'|\b(\w+)\s+(?:VERSION\s+AS\s+OF\s+(\d+)"
@@ -617,8 +628,6 @@ class Engine:
     def _rewrite_time_travel(self, sql_text: str) -> str:
         """Each `t VERSION AS OF n` / `t TIMESTAMP AS OF '<ts>'` outside
         string literals -> a temp view over that version of t."""
-        if self._vstore is None:
-            return sql_text
 
         def pin(m):
             import datetime as _dt
@@ -631,9 +640,9 @@ class Engine:
                     ts = float(raw)
                 except ValueError:
                     ts = _dt.datetime.fromisoformat(raw).timestamp()
-                version = self._vstore.version_at(table, ts)
+                version = self.store.version_at(table.lower(), ts)
             view = f"__tt_{table}_v{version}"
-            self._vstore.read(table, version).createOrReplaceTempView(view)
+            self.store.read(table.lower(), version).createOrReplaceTempView(view)
             return view
 
         return sub_outside_literals(self._TIME_TRAVEL_RE, pin, sql_text)
@@ -680,8 +689,6 @@ class Engine:
         physical-plan tree of the Catalyst plan, one operator per row,
         parent derived from tree indentation (sqlite.org/eqp.html shape
         over a Spark plan)."""
-        import re
-
         tree = self.explain(statement, mode="simple")
         rows, stack = [], []  # stack of (indent, id)
         next_id = 1
@@ -702,9 +709,6 @@ class Engine:
 
     def explain(self, statement: str, mode: str = "formatted") -> str:
         """EXPLAIN pass-through (PRAGMA-analog introspection, M3/A13)."""
-        import contextlib
-        import io
-
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             self.spark.sql(self._translate(statement, None)[0]).explain(mode=mode)
@@ -815,13 +819,11 @@ class Engine:
         detach-leaves-the-file semantics."""
         m = self._ATTACH_RE.match(sql_text)
         if m:
-            import os as _os
-
             path, alias = m.group(1), m.group(2)
-            if not _os.path.isdir(path):
+            if not os.path.isdir(path):
                 raise ValueError(f"ATTACH: no such directory: {path}")
             self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {quote_ident(alias)}")
-            for fn in sorted(_os.listdir(path)):
+            for fn in sorted(os.listdir(path)):
                 if not fn.endswith(".parquet"):
                     continue
                 tname = fn[: -len(".parquet")]
@@ -910,9 +912,7 @@ class Engine:
         index_list/index_info, sqlite_master and sqlite_stat1, and
         DROPped symmetrically. Returns None when the statement is not
         index DDL."""
-        import re as _re
-
-        m = _re.match(
+        m = re.match(
             r"(?is)^\s*CREATE\s+(UNIQUE\s+)?INDEX\s+(IF\s+NOT\s+EXISTS\s+)?"
             r"([A-Za-z_][\w]*)\s+ON\s+([A-Za-z_][\w.]*)\s*\(([^)]*)\)\s*;?\s*$",
             sql_text,
@@ -930,7 +930,7 @@ class Engine:
                 "sql": sql_text.strip().rstrip(";"),
             }
             return QueryResult([], [], 0, 0, 0.0, "DDL")
-        m = _re.match(
+        m = re.match(
             r"(?is)^\s*DROP\s+INDEX\s+(IF\s+EXISTS\s+)?"
             r"([A-Za-z_][\w]*)\s*;?\s*$",
             sql_text,
@@ -1048,8 +1048,6 @@ class Engine:
     )
 
     def _run_pragma(self, statement: str) -> QueryResult:
-        import re
-
         m = re.match(r"(?is)\s*PRAGMA\s+(\w+)\s*(?:\(([^)]*)\))?\s*;?\s*$",
                      statement)
         if not m:
@@ -1117,8 +1115,6 @@ class Engine:
         physical secondary indexes (Parquet min/max + partition pruning
         replace them), mirroring index_list's truthfully-empty result.
         """
-        import re
-
         m = re.match(
             r"(?is)\s*(ANALYZE|REINDEX)\s*([A-Za-z_][\w.]*)?\s*;?\s*$",
             statement,
@@ -1232,16 +1228,18 @@ class Engine:
     # `_plan_dml` parses every form once, after `_translate` has bound the
     # parameters and applied the dialect, and returns a `_DmlPlan`: an
     # append (the new rows) or a rewrite (the table's whole new image).
-    # `_run_dml` materializes it and hands it to one of two sinks — the
-    # table itself in autocommit, the transaction's shadow view inside
-    # BEGIN … COMMIT — so a statement means the same thing in both.
+    # `_run_dml` hands it to one of two sinks — a store commit in
+    # autocommit, the transaction's shadow view inside BEGIN … COMMIT — so
+    # a statement means the same thing in both.
     #
-    # `changes` rides the job that materializes the rows, via df.observe()
-    # over `__changed` — the Spark analog of reading commit
-    # operationMetrics (Delta) or sqlite3_changes: a rewrite is one eager
-    # localCheckpoint plus the overwrite, and an autocommit append is its
-    # one insert job. Expressions reach Spark as SQL text run with the
-    # bound args, so `?`/`:name` work in every clause.
+    # `changes` rides the job that writes the rows, via df.observe() over
+    # `__changed` — the Spark analog of reading commit operationMetrics
+    # (Delta) or sqlite3_changes. A rewrite writes a fresh version
+    # directory, so it reads the files it replaces without cutting its
+    # lineage first; only RETURNING and a transaction's shadow view
+    # materialize the rows (one localCheckpoint) before they are used.
+    # Expressions reach Spark as SQL text run with the bound args, so
+    # `?`/`:name` work in every clause.
 
     _TABLE = rf"({_IDENT}(?:\.{_IDENT})?)"
     _UPDATE_RE = re.compile(rf"(?is)^UPDATE\s+{_TABLE}\s+SET\s+(.*)$")
@@ -1250,9 +1248,11 @@ class Engine:
     _DELETE_RE = re.compile(
         rf"(?is)^DELETE\s+FROM\s+{_TABLE}(?:\s+WHERE\s+(.*))?$"
     )
-    # REPLACE INTO is SQLite's alias for INSERT OR REPLACE INTO
+    # REPLACE INTO is SQLite's alias for INSERT OR REPLACE INTO; INSERT
+    # OVERWRITE [TABLE] is Spark's, and replaces every row
     _INSERT_RE = re.compile(
-        r"(?is)^(?:INSERT(?:\s+OR\s+(REPLACE|IGNORE))?|(REPLACE))\s+INTO\s+"
+        r"(?is)^(?:INSERT(?:\s+OR\s+(REPLACE|IGNORE))?\s+INTO|(REPLACE)\s+INTO"
+        r"|INSERT\s+(OVERWRITE)(?:\s+TABLE)?)\s+"
         rf"{_TABLE}\s*(?:\(([^)]*)\))?\s*((?:VALUES|SELECT|WITH)\b.*)$"
     )
     _CONFLICT_RE = re.compile(
@@ -1262,24 +1262,23 @@ class Engine:
 
     def _run_dml(
         self, sql_text: str, args, txn: "Transaction | None"
-    ) -> QueryResult | None:
+    ) -> QueryResult:
         """Run a translated DML statement through the planner and a sink:
         ``txn`` publishes the result as that transaction's shadow view,
-        None writes it to the table (and fires triggers). RETURNING
+        None commits it to the store (and fires triggers). RETURNING
         projects the post-statement image of the affected rows (deleted
-        rows for DELETE), SQLite >= 3.35 semantics. Returns None for a
-        form the planner does not recognise."""
+        rows for DELETE), SQLite >= 3.35 semantics. A form the planner
+        does not recognise is refused: only the store writes tables."""
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
         sql_text, returning = self._split_returning(sql_text)
         plan = self._plan_dml(sql_text, args)
         if plan is None:
-            return None
+            raise ValueError(f"unsupported DML: {sql_text[:60]}")
         obs = Observation()
         rows = plan.rows.observe(obs, F.sum("__changed").alias("changes"))
-        eager = (not plan.append or plan.may_skip or returning is not None
-                 or txn is not None)
+        eager = returning is not None or txn is not None
         if eager:
             rows = rows.localCheckpoint(eager=True)
         rrows, rcols = [], []
@@ -1298,12 +1297,12 @@ class Engine:
             if plan.append:
                 image = self.spark.table(plan.table).unionByName(image)
             image.createOrReplaceTempView(plan.table)
-        elif eager and not obs.get["changes"]:
-            pass  # nothing changed: the table is not written
-        elif plan.append:
-            image.write.insertInto(plan.table)
-        else:
-            image.write.mode("overwrite").saveAsTable(plan.table)
+        elif not eager or obs.get["changes"] or plan.replaces:
+            staged = self._stage({plan.table: image}, plan.append)
+            if obs.get["changes"] or plan.replaces:
+                self._publish(staged)
+            else:  # nothing changed: no version
+                self.store.discard([s for _, s in staged])
         changes = int(obs.get["changes"] or 0)
         self._last_changes = changes
         self._total_changes += changes
@@ -1356,7 +1355,7 @@ class Engine:
         m = self._INSERT_RE.match(stmt)
         if not m:
             return None
-        or_action, replace_kw, table, collist, body = m.groups()
+        or_action, replace_kw, overwrite, table, collist, body = m.groups()
         action = (or_action or replace_kw or "").upper()
         assignments = upd_where = keys = None
         tgt = self.spark.table(table)
@@ -1372,8 +1371,11 @@ class Engine:
                 action = "UPDATE"
                 assignments = self._assignments(tgt, set_clause)
         src = self._insert_source(tgt, collist, body, args)
+        if overwrite and action:
+            raise ValueError("INSERT OVERWRITE takes no conflict clause")
         if not action:
-            return _DmlPlan(table, "INSERT", src, True, tgt.schema.fields)
+            return _DmlPlan(table, "INSERT", src, not overwrite,
+                            tgt.schema.fields, replaces=bool(overwrite))
         keys = keys or self._primary_keys.get(_bare(table).lower())
         if not keys:
             raise ValueError(
@@ -1386,8 +1388,7 @@ class Engine:
             # append-only: the anti-joined new rows, no table rewrite
             rows = src.join(tgt, on=keys, how="left_anti").select(
                 [quote_ident(c) for c in tgt.columns] + ["__changed"])
-            return _DmlPlan(table, "INSERT", rows, True, tgt.schema.fields,
-                            may_skip=True)
+            return _DmlPlan(table, "INSERT", rows, True, tgt.schema.fields)
         if action == "REPLACE":
             assignments = {c: f"excluded.{quote_ident(c)}" for c in tgt.columns}
         rows = self._upsert_rows(tgt, table, src, keys, assignments,
@@ -1405,8 +1406,6 @@ class Engine:
         """Record PRIMARY KEY constraints in a CREATE TABLE and strip them
         from the DDL (Spark's v1 parser rejects constraint syntax).
         Handles both `col TYPE PRIMARY KEY` and `PRIMARY KEY (a, b)`."""
-        import re
-
         m = re.match(
             r"(?is)^(\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s*\()"
             r"(.*)(\)\s*(?:USING\s+\w+\s*)?;?\s*)$",
@@ -1649,22 +1648,119 @@ class Engine:
     def drop_database(self, name: str) -> None:
         self.spark.sql(f"DROP DATABASE IF EXISTS {quote_ident(name)} CASCADE")
 
-    def create_branch(self, database: str, branch: str, tables: list[str]) -> str:
-        """Fork a database: copy-on-read snapshot of each table into a new
-        namespace `database__branch` (reference branch model:
-        pkg/database/branch.go:15-30; fork-by-copy pkg/backups/restore.go:29-56).
-        With a Delta catalog this becomes SHALLOW CLONE; on plain parquet we
-        materialize a snapshot copy. The O(metadata) fork for large tables
-        is snapshots.VersionedStore.create_branch (shared immutable files,
-        manifest-only fork)."""
-        ns = f"{database}__{branch}"
-        self.create_database(ns)
-        for t in tables:
+    # -- storage: the store commit behind every table write ----------------
+
+    _CREATE_TABLE_RE = re.compile(
+        rf"(?is)^\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?{_TABLE}(.*?)[\s;]*$"
+    )
+    _DROP_TABLE_RE = re.compile(
+        rf"(?is)^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?{_TABLE}[\s;]*$"
+    )
+    _AS_RE = re.compile(r"(?i)\s+AS\s+")
+    # CREATE TABLE clauses the store does not write: an own location, a
+    # partitioned or bucketed layout, a source other than parquet
+    _UNSTORED_RE = re.compile(
+        r"(?i)\b(?:LOCATION|PARTITIONED|CLUSTERED)\b|\bUSING\s+(?!parquet\b)"
+    )
+
+    def _try_table_ddl(self, sql_text: str, args) -> QueryResult | None:
+        """CREATE TABLE makes an EXTERNAL table located at a fresh store
+        version, where a CTAS writes its rows. DROP TABLE leaves an
+        external table's files and commits a DROP, so earlier snapshots
+        still restore the rows. A CREATE the store does not write stays
+        a Spark table that the Engine refuses to write. None for other
+        DDL."""
+        done = QueryResult([], [], 0, 0, 0.0, "DDL")
+        m = self._DROP_TABLE_RE.match(sql_text)
+        if m:
+            self.spark.sql(sql_text)
+            key, _, meta = self._table(m.group(1))
+            if meta is None and self.store.head(key):
+                self.store.drop(key)
+            return done
+        m = self._CREATE_TABLE_RE.match(sql_text)
+        if m is None:
+            return None
+        if_not_exists, table, rest = m.groups()
+        clauses, query = _cut(rest, self._AS_RE)
+        if top_level_search(self._UNSTORED_RE, clauses):
+            return None
+        key, name, meta = self._table(table)
+        if meta is not None and if_not_exists:
+            return done
+        path = self.store.new_dir(key)
+        os.makedirs(path)
+        try:
             self.spark.sql(
-                f"CREATE TABLE IF NOT EXISTS {quote_ident(ns)}.{quote_ident(t)} "
-                f"AS SELECT * FROM {quote_ident(database)}.{quote_ident(t)}"
+                f"CREATE TABLE {name}{clauses} LOCATION {_sql_str(path)}"
+                + ("" if query is None else f" AS {query}"),
+                args=args or None,
             )
-        return ns
+        except BaseException:
+            shutil.rmtree(path)
+            raise
+        self.store.publish([
+            self.store.stage_dir(key, path, self.spark.table(name).schema)])
+        return done
+
+    def _table(self, table: str):
+        """(store key, qualified name, catalog metadata or None) of a
+        table name. A table of the session's database is keyed by its
+        name, any other by db.name. Read from the session catalog in a
+        few calls: DESCRIBE TABLE EXTENDED costs ~20x more."""
+        state = self.spark._jsparkSession.sessionState()
+        cat = state.catalog()
+        ident = cat.qualifyIdentifier(
+            state.sqlParser().parseTableIdentifier(table))
+        db, name = ident.database().get(), ident.table()
+        key = name if db == cat.getCurrentDatabase() else f"{db}.{name}"
+        meta = cat.getTableMetadata(ident) if cat.tableExists(ident) else None
+        return key, f"{quote_ident(db)}.{quote_ident(name)}", meta
+
+    def _stage(
+        self, images: dict[str, DataFrame], append: bool = False
+    ) -> list[tuple[str, StagedVersion]]:
+        """Write each table's image (its new rows, when `append`) as an
+        unpublished store version. A table located elsewhere than its
+        store head, such as an ATTACHed one, is written whole. Only an
+        EXTERNAL parquet table can be written: a managed table's DROP
+        would delete its version."""
+        staged = []
+        try:
+            for table, df in images.items():
+                key, name, meta = self._table(table)
+                kind = meta and (f"{meta.tableType().name()} "
+                                 f"{meta.provider().get()}").lower()
+                if kind != "external parquet":
+                    raise ValueError(f"cannot write {table} ({kind}): the "
+                                     "Engine writes the tables it creates")
+                head = self.store.head(key) or {}
+                held = head.get("dir") == os.path.normpath(
+                    meta.location().getPath())
+                if append and not held:
+                    df = self.spark.table(name).unionByName(df)
+                staged.append(
+                    (name, self.store.stage(key, df, append and held)))
+        except BaseException:
+            self.store.discard([s for _, s in staged])
+            raise
+        return staged
+
+    def _publish(self, staged: list[tuple[str, StagedVersion]]) -> None:
+        """Make staged versions their tables' heads with one manifest
+        swap, then point each catalog entry at its head directory."""
+        self.store.publish([s for _, s in staged])
+        for name, s in staged:
+            if s.entry["mode"] == "append":  # new files, same directory
+                self.spark.catalog.refreshTable(name)
+            else:
+                self.spark.sql(f"ALTER TABLE {name} SET LOCATION "
+                               f"{_sql_str(s.entry['dir'])}")
+
+    def commit(self, images: dict[str, DataFrame]) -> None:
+        """Replace each table's rows with its image in one store commit:
+        every table lands, or none does."""
+        self._publish(self._stage(images))
 
     def register_parquet_dir(self, sf_dir: str, tables) -> None:
         register_views(self.spark, sf_dir, tables)
@@ -1693,7 +1789,6 @@ class Engine:
 
     def transaction(self, kind: str = "DEFERRED", timeout: float = 300.0):
         """Context-manager form: commit on success, rollback on error."""
-        import contextlib
 
         @contextlib.contextmanager
         def _cm():
@@ -1722,9 +1817,11 @@ class Transaction:
     rewrite. Temp views shadow catalog tables during resolution, so
     later statements in the txn (reads and writes) see the txn's own
     uncommitted state, while nothing is written to storage. COMMIT
-    localCheckpoints each shadow (cutting lineage off the files about to
-    be replaced) and overwrites the catalog table: one distributed write
-    per touched table, and a ROLLBACK costs nothing (drop the views).
+    writes each shadow as a new store version and publishes them all
+    with one manifest swap (``Engine.commit``): one distributed write per
+    touched table, and the tables land together or not at all — a
+    COMMIT that fails rolls the transaction back. A ROLLBACK costs
+    nothing (drop the views).
     This is the Spark-idiomatic inversion of the reference's design —
     SQLite holds locks and writes WAL frames per statement, rolling back
     by discarding them (pkg/database/transaction.go,
@@ -1771,12 +1868,17 @@ class Transaction:
     def commit(self) -> None:
         self._check_live()
         spark = self.engine.spark
-        for table, (pre_image, was_temp) in self._touched.items():
-            if was_temp:
-                continue  # shadow view IS the committed state for views
-            final = spark.table(table).localCheckpoint(eager=True)
+        # a shadowed temp view's shadow IS its committed state
+        images = {t: spark.table(t)
+                  for t, (_, was_temp) in self._touched.items()
+                  if not was_temp}
+        try:
+            self.engine.commit(images)
+        except BaseException:
+            self.rollback()
+            raise
+        for table in images:
             spark.catalog.dropTempView(table)
-            final.write.mode("overwrite").saveAsTable(table)
         self.state = "committed"
         self.engine._transactions.pop(self.transaction_id, None)
 
@@ -1856,12 +1958,8 @@ class Transaction:
         if stmt_class == "TCL":
             return self.engine._run_tcl(statement, self)
         if stmt_class == "DML":
-            res = self.engine._run_dml(
+            return self.engine._run_dml(
                 *self.engine._translate(statement, params), self)
-            if res is None:
-                raise ValueError(
-                    f"unsupported DML inside transaction: {statement[:60]}")
-            return res
         # DQL/DDL/OTHER: session resolution already sees shadow views.
         return self.engine._execute(statement, params)
 

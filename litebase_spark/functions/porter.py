@@ -38,8 +38,6 @@ Algorithm notes (classic Porter, following SQLite's implementation):
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -337,13 +335,12 @@ def with_porter_stem(
     df: DataFrame,
     token_col: str,
     out_col: str = "stem",
-    barrier_every: int = 0,
 ) -> DataFrame:
     """Append `out_col` = porter_stem(token_col) via the staged
     pipeline; intermediate work columns are dropped. Pure Catalyst
     expressions — whole-stage codegen, no UDF.
 
-    Default is NO materialization barrier (r13): since SPARK-36718,
+    No materialization barrier (r13): since SPARK-36718,
     CollapseProject refuses to inline a non-cheap producer expression
     referenced more than once — exactly this chain's shape (every
     stage's CASE reads the previous p/k columns many times) — so the
@@ -356,40 +353,12 @@ def with_porter_stem(
     block manager); outputs bit-identical over the full sf0.01
     vocabulary.
 
-    `barrier_every=N` keeps the old behavior (an eager localCheckpoint
-    every N stages) as an escape hatch for an optimizer that DOES
-    collapse the chain; dead work columns are pruned before each
-    barrier (only the latest p/k pair, f1b, and the original token
-    are ever referenced downstream), which is itself worth ~25 % of
-    the barriered runtime.
-
     Intended for VOCABULARY-sized inputs (distinct terms); for
     corpus-scale postings use stem_vocabulary + a broadcast join of
     the term -> stem map instead of stemming every posting row."""
-    stages = porter_stages(token_col)
-    done: list[str] = []
-    for i, (name, expr) in enumerate(stages):
+    for name, expr in porter_stages(token_col):
         df = df.withColumn(name if name != "stem" else out_col,
                            F.expr(expr))
-        if name != "stem":
-            done.append(name)
-        if (
-            barrier_every
-            and (i + 1) % barrier_every == 0
-            and i + 1 < len(stages)
-        ):
-            live = {
-                w
-                for w in done
-                if any(
-                    re.search(rf"\b{w}\b", later)
-                    for _, later in stages[i + 1:]
-                )
-            }
-            dead = [w for w in done if w not in live]
-            if dead:
-                df = df.drop(*dead)  # drop ignores already-pruned
-            df = df.localCheckpoint(eager=True)
     return df.drop(*_WORK_COLS)
 
 
@@ -397,7 +366,6 @@ def stem_vocabulary(
     vocab: DataFrame,
     token_col: str = "term",
     out_col: str = "stem",
-    materialize: bool = True,
 ) -> DataFrame:
     """term -> stem map over a distinct-vocabulary DataFrame. The
     100 TB path: the vocabulary is orders of magnitude smaller than
@@ -421,7 +389,7 @@ def stem_vocabulary(
     out = with_porter_stem(
         vocab.select(token_col).distinct(), token_col, out_col
     )
-    return out.localCheckpoint(eager=True) if materialize else out
+    return out.localCheckpoint(eager=True)
 
 
 def porter_stem_py(word: str) -> str:

@@ -524,9 +524,9 @@ def prepare_statement(key: AccessKey, resource: str, q) -> PreparedStatement:
 # a (resource template, privilege) pair filled from the path parameters;
 # any one of a route's grants admits the request. `grants=None` is an
 # open route, `()` admits any authenticated key. `_dispatch` does the
-# rest once per request: 401, the route's 403, the 503 of a route that
-# needs a VersionedStore, and the JSON body (400 if it is not an object).
-# An unmatched path is authenticated before its 404.
+# rest once per request: 401, the route's 403 and the JSON body (400 if
+# it is not an object). An unmatched path is authenticated before its
+# 404.
 
 
 class Route(NamedTuple):
@@ -534,7 +534,6 @@ class Route(NamedTuple):
     template: str
     grants: tuple | None
     handler: str
-    needs_store: bool = False
 
 
 # table report -> (Engine method, text params, positive-int params)
@@ -573,7 +572,7 @@ ROUTES = (  # reference pkg/http/routes.go
     Route("DELETE", _DB, _DATABASES, "_database_delete"),
     Route("POST", _DB + "/branches",
           (("database:{db}:branch:main", "database:manage"),),
-          "_branch_create", needs_store=True),
+          "_branch_create"),
     Route("GET", _BR, _SELECT + _DATABASES, "_branch_show"),
     Route("POST", _BR + "/query", _QUERY, "_query"),
     Route("POST", _BR + "/query/stream", _QUERY, "_query_stream"),
@@ -582,19 +581,14 @@ ROUTES = (  # reference pkg/http/routes.go
     Route("POST", _BR + "/transactions", _TXN, "_txn_begin"),
     Route("POST", _BR + "/transactions/{txn}/commit", _TXN, "_txn_commit"),
     Route("DELETE", _BR + "/transactions/{txn}", _TXN, "_txn_rollback"),
-    Route("GET", _BR + "/snapshots", _MANAGE, "_snapshot_list",
-          needs_store=True),
-    Route("POST", _BR + "/snapshots", _MANAGE, "_snapshot_create",
-          needs_store=True),
-    Route("GET", _BR + "/snapshots/{snapshot}", _MANAGE, "_snapshot_show",
-          needs_store=True),
+    Route("GET", _BR + "/snapshots", _MANAGE, "_snapshot_list"),
+    Route("POST", _BR + "/snapshots", _MANAGE, "_snapshot_create"),
+    Route("GET", _BR + "/snapshots/{snapshot}", _MANAGE, "_snapshot_show"),
     Route("GET", _BR + "/backups", _MANAGE, "_backup_list"),
-    Route("POST", _BR + "/backups", _MANAGE, "_backup_create",
-          needs_store=True),
+    Route("POST", _BR + "/backups", _MANAGE, "_backup_create"),
     Route("GET", _BR + "/backups/{backup}", _MANAGE, "_backup_show"),
-    Route("DELETE", _BR + "/backups/{backup}", _MANAGE, "_backup_delete",
-          needs_store=True),
-    Route("POST", _BR + "/restore", _MANAGE, "_restore", needs_store=True),
+    Route("DELETE", _BR + "/backups/{backup}", _MANAGE, "_backup_delete"),
+    Route("POST", _BR + "/restore", _MANAGE, "_restore"),
     Route("GET", "/v1/access-keys", _ACCESS_KEYS, "_key_list"),
     Route("POST", "/v1/access-keys", _ACCESS_KEYS, "_key_create"),
     Route("GET", "/v1/access-keys/{key_id}", _ACCESS_KEYS, "_key_show"),
@@ -657,8 +651,10 @@ def _is_binary(headers) -> bool:
 
 
 class QueryServer:
-    """Threaded HTTP server over one Engine. Start with serve_forever in
-    a thread; `port` 0 picks an ephemeral port (see tests)."""
+    """Threaded HTTP server over one Engine, whose VersionedStore backs
+    the snapshot, branch, backup and restore routes. Start with
+    serve_forever in a thread; `port` 0 picks an ephemeral port (see
+    tests)."""
 
     def __init__(
         self,
@@ -666,14 +662,13 @@ class QueryServer:
         keys: AccessKeyManager,
         host: str = "127.0.0.1",
         port: int = 0,
-        store=None,  # VersionedStore: enables snapshot/backup/restore routes
         users: UserManager | None = None,
         encryption_key: str | None = None,
     ) -> None:
         self.engine = engine
         self.keys = keys
         self.users = users or UserManager()
-        self.store = store
+        self.store = engine.store
         # encryption-key rotation state (reference key_controller.go +
         # key_activate_controller.go): the active key signs the next
         # one in; NEXT keys are stored INACTIVE and must be activated
@@ -763,8 +758,6 @@ class QueryServer:
                     for res, priv in route.grants
                 ):
                     return self._error(403, "forbidden")
-                if route.needs_store and server.store is None:
-                    return self._error(503, "no versioned store attached")
                 body = {}
                 if not _is_binary(self.headers):  # binary bodies stream
                     try:
@@ -802,7 +795,7 @@ class QueryServer:
                     ),
                     "queries_served": server.engine.metrics.total_count(),
                     "uptime_s": round(time.time() - server.started_at, 3),
-                    "versioned_store": server.store is not None,
+                    "store_root": server.store.root,
                 })
 
             def _database_list(self, r):
@@ -818,22 +811,19 @@ class QueryServer:
                     server.engine.create_database(name)
                 return self._ok({"database": name}, 201)
 
+            def _branches(self) -> list[str]:
+                # branches are the store's namespaces; main always exists
+                return sorted({"main", *server.store.namespaces()})
+
             def _database_show(self, r):
                 # DatabaseControllerShow: branches + tables of one db
                 cat = server.engine.spark.catalog
-                all_dbs = {d.name for d in cat.listDatabases()}
-                branches = ["main"] + sorted(
-                    n.split("__", 1)[1]
-                    for n in all_dbs
-                    if n.startswith(f"{r.db}__")
-                )
-                try:
-                    ns = r.db if r.db in all_dbs else None
-                    tables = sorted(t.name for t in cat.listTables(ns))
-                except Exception:
-                    tables = []
+                dbs = {d.name for d in cat.listDatabases()}
+                tables = sorted(t.name for t in cat.listTables(
+                    r.db if r.db in dbs else None))
                 return self._ok({
-                    "database": r.db, "branches": branches, "tables": tables,
+                    "database": r.db, "branches": self._branches(),
+                    "tables": tables,
                 })
 
             def _database_delete(self, r):
@@ -843,31 +833,27 @@ class QueryServer:
 
             def _branch_create(self, r):
                 name = r.body.get("name")
-                if not name:
-                    return self._error(400, "name is required")
-                tables = server.store.create_branch(
-                    name, source=r.body.get("source", "main")
-                )
+                if not isinstance(name, str) or not re.fullmatch(
+                        r"[A-Za-z0-9_-]+", name):
+                    return self._error(400, "name must be [A-Za-z0-9_-]+")
+                try:
+                    tables = server.store.create_branch(
+                        name, source=r.body.get("source", "main")
+                    )
+                except FileExistsError as e:
+                    return self._error(409, str(e))
                 return self._ok({"branch": name, "tables": tables}, 201)
 
             def _branch_show(self, r):
-                # branch detail: tables in the branch namespace (main =
-                # the session catalog; others = db__branch)
-                cat = server.engine.spark.catalog
-                ns = f"{r.db}__{r.branch}"
-                if r.branch != "main" and ns not in {
-                    d.name for d in cat.listDatabases()
-                }:
+                # branch detail: main is the session catalog; another
+                # branch lists its store namespace's tables
+                if r.branch not in self._branches():
                     return self._error(404, "no such branch")
-                try:
-                    tables = sorted(
-                        t.name
-                        for t in cat.listTables(
-                            None if r.branch == "main" else ns
-                        )
-                    )
-                except Exception:
-                    tables = []
+                tables = (
+                    sorted(t.name for t in
+                           server.engine.spark.catalog.listTables())
+                    if r.branch == "main" else server.store.tables(r.branch)
+                )
                 return self._ok({
                     "database": r.db, "branch": r.branch, "tables": tables,
                 })
@@ -920,12 +906,8 @@ class QueryServer:
                 snap = server.store.snapshot(
                     label=r.body.get("label", ""), namespace=r.branch
                 )
-                return self._ok({
-                    "snapshot_id": snap.snapshot_id,
-                    "created_at": snap.created_at,
-                    "label": snap.label,
-                    "tables": snap.tables,
-                }, 201)
+                return self._ok({**snap, "tables": sorted(snap["versions"])},
+                                201)
 
             def _snapshot_show(self, r):
                 # SnapshotControllerShow (routes.go snapshots/{ts})
@@ -935,30 +917,21 @@ class QueryServer:
                     return self._error(404, "no such snapshot")
                 return self._ok(snap)
 
-            def _backup_dir(self) -> str:
-                d = os.path.join(server.store.root, "backups")
-                os.makedirs(d, exist_ok=True)
-                return d
-
             def _backup_file(self, backup_id: str) -> str | None:
                 """The archive of a backup, or None without one."""
-                if server.store is None:
-                    return None
-                path = os.path.join(self._backup_dir(), f"{backup_id}.tar.gz")
+                path = os.path.join(server.store.backups_dir, f"{backup_id}.tar.gz")
                 return path if os.path.exists(path) else None
 
             def _backup_list(self, r):
-                if server.store is None:
-                    return self._ok([])
                 return self._ok(sorted(
                     f[: -len(".tar.gz")]
-                    for f in os.listdir(self._backup_dir())
+                    for f in os.listdir(server.store.backups_dir)
                     if f.endswith(".tar.gz")
                 ))
 
             def _backup_create(self, r):
                 backup_id = f"backup-{int(time.time() * 1e6)}"
-                path = os.path.join(self._backup_dir(), f"{backup_id}.tar.gz")
+                path = os.path.join(server.store.backups_dir, f"{backup_id}.tar.gz")
                 try:
                     server.store.backup_archive(
                         path, snapshot_id=r.body.get("snapshot_id")

@@ -1048,14 +1048,14 @@ def _semantic_oracle() -> str:
       SELECT vec_id, cid AS cluster_id, embedding,
              {_SQL_NORM.format(a='embedding', n=DIM)} AS nrm
       FROM fin
-    ), pairs AS (
+    ), pairs AS MATERIALIZED (
       SELECT a.vec_id AS va, b.vec_id AS vb
       FROM cellv a JOIN cellv b
         ON a.cluster_id = b.cluster_id AND a.vec_id < b.vec_id
       WHERE {dot} / (a.nrm * b.nrm) >= 0.4
     ), nodes AS (
       SELECT va AS v FROM pairs UNION SELECT vb FROM pairs
-    ), edges AS (
+    ), edges AS MATERIALIZED (
       SELECT va AS s, vb AS d FROM pairs UNION SELECT vb, va FROM pairs
     ), reach(src, dst) AS (
       SELECT v, v FROM nodes

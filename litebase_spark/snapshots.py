@@ -1,222 +1,208 @@
-"""Snapshots, backups, and point-in-time restore (SURVEY §2.A row A21).
+"""The versioned table store: every table write, snapshots, branches,
+backups and point-in-time restore (SURVEY §2.A row A21).
 
-The reference implements PITR with rollback logs (page pre-images per
-checkpoint), daily snapshot logs, tar.gz backups, and branch-from-restore
-(reference: pkg/backups/backup.go:32-70, restore.go:24-70,
-snapshot_logger.go:16-35, rollback_log.go). On Spark the idiomatic
-equivalent is versioned immutable table snapshots: each snapshot is a
-full parquet copy of the table set plus a JSON manifest keyed by a
-monotonically increasing timestamp; restore-at-time picks the latest
-snapshot at-or-before the requested instant (the same contract the
-reference's restore timeline resolves). With a Delta/Iceberg catalog
-every method here collapses to built-in time travel / RESTORE TABLE —
-the manager keeps that swap possible behind one class.
+In the reference every write becomes a WAL version, and PITR, snapshots
+and branches read those versions (rollback logs keep page pre-images,
+restore forks files copy-on-write — pkg/backups/rollback_logger.go:12-34,
+snapshot_logger.go:16-27, restore.go:24-70). Here every write becomes a
+version of one manifest-based store, the shape Delta/Iceberg formalize
+(with a lake format on the classpath this class collapses to its
+commits, shallow clone and RESTORE/time travel):
 
-Two implementations:
+  * a version is a FILE LIST under ``<root>/<table>/``; an append adds
+    files to the head version's directory, a rewrite writes a fresh
+    directory, and no data file is modified or deleted by a commit;
+  * a namespace's manifest (``_store/log/<namespace>.json``) holds the
+    version log of each of its tables and is replaced by one atomic
+    rename, so a commit of several tables lands whole or not at all;
+  * a snapshot pins {table: version} — one small JSON, zero data IO;
+  * restore and time travel read pinned file lists in place
+    (zero-copy); a branch is a namespace forked from another one's
+    manifest, sharing every data file;
+  * vacuum deletes logged files unreachable from every snapshot and
+    every namespace's head (the reference's VACUUM + retention analog).
 
-  * SnapshotManager — full-copy snapshots (a distributed parquet write
-    per table). Simple, self-contained, O(data) per snapshot; kept as
-    the compatibility surface.
-  * VersionedStore — the 100 TB path: an immutable-file transaction log
-    where snapshots/branches pin version manifests (O(metadata), zero
-    data rewrite), appends extend file lists incrementally, restore is
-    zero-copy view registration, and vacuum enforces retention. This is
-    the round-3 answer to the "full-copy snapshot/branch is not usable
-    at 100 TB" gap; with Delta/Iceberg on the classpath it collapses to
-    shallow clone + RESTORE/time travel.
+`Engine` owns one store, rooted at ``spark.sql.warehouse.dir``: its SQL
+writes, transaction commits and the foreachBatch upsert sink all commit
+here, and its catalog tables are EXTERNAL tables located at their head
+version's directory. At 100 TB a snapshot or branch is a few KB of JSON
+regardless of data size, exactly like the reference's snapshot log.
 """
 
 from __future__ import annotations
 
+import functools
+import io
 import json
 import os
+import shutil
+import tarfile
 import time
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from litebase_spark.functions.dialect import quote_ident
+STORE_DIR = "_store"  # store metadata under the root, beside the tables
+
+
+def _log_path(root: str, namespace: str) -> str:
+    return os.path.join(root, STORE_DIR, "log", f"{namespace}.json")
+
+
+def read_manifest(root: str, namespace: str) -> dict[str, list[dict]]:
+    """A namespace's manifest: table -> its version log, oldest first."""
+    p = _log_path(root, namespace)
+    if not os.path.exists(p):
+        return {}
+    with open(p) as f:
+        return json.load(f)
+
+
+def write_manifest(root: str, namespace: str, manifest: dict) -> None:
+    """Swap a namespace's manifest in one atomic rename: a crash leaves
+    the old manifest whole."""
+    p = _log_path(root, namespace)
+    os.makedirs(os.path.dirname(p), exist_ok=True)
+    tmp = f"{p}.{uuid.uuid4().hex[:8]}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, p)
+
+
+def next_version(log: list[dict]) -> int:
+    return log[-1]["version"] + 1 if log else 1
+
+
+def version_dir(root: str, namespace: str, table: str, version: int) -> str:
+    """A fresh directory for one version's data files; the suffix keeps
+    a failed or discarded attempt from colliding with the next one."""
+    return os.path.join(
+        root, table, f"{namespace}-tx{version:08d}-{uuid.uuid4().hex[:8]}"
+    )
+
+
+def _parquet_files(path: str, exclude=frozenset()) -> list[str]:
+    return sorted(
+        os.path.join(path, f) for f in os.listdir(path)
+        if f.endswith(".parquet") and f not in exclude
+    )
 
 
 @dataclass
-class SnapshotInfo:
-    snapshot_id: str
-    created_at: float
-    label: str
-    tables: list[str]
-    path: str
+class StagedVersion:
+    """A version whose files are written but not yet in the manifest:
+    `publish` makes it the table's head, `discard` deletes its files."""
 
-
-class SnapshotManager:
-    """Filesystem-backed snapshot timeline for a set of named tables."""
-
-    def __init__(self, spark: SparkSession, root: str) -> None:
-        self.spark = spark
-        self.root = root
-        os.makedirs(root, exist_ok=True)
-
-    # -- write side ---------------------------------------------------------
-
-    def snapshot(
-        self, tables: dict[str, DataFrame], label: str = ""
-    ) -> SnapshotInfo:
-        """Materialize a consistent snapshot of the given tables."""
-        created = time.time()
-        snap_id = f"{int(created * 1000):015d}"
-        path = os.path.join(self.root, snap_id)
-        for name, df in tables.items():
-            df.write.mode("errorifexists").parquet(os.path.join(path, name))
-        info = SnapshotInfo(
-            snapshot_id=snap_id,
-            created_at=created,
-            label=label,
-            tables=sorted(tables),
-            path=path,
-        )
-        with open(os.path.join(path, "MANIFEST.json"), "w") as f:
-            json.dump(
-                {
-                    "snapshot_id": info.snapshot_id,
-                    "created_at": info.created_at,
-                    "label": info.label,
-                    "tables": info.tables,
-                },
-                f,
-            )
-        return info
-
-    # -- read side ----------------------------------------------------------
-
-    def list_snapshots(self) -> list[SnapshotInfo]:
-        out = []
-        for snap_id in sorted(os.listdir(self.root)):
-            manifest = os.path.join(self.root, snap_id, "MANIFEST.json")
-            if not os.path.exists(manifest):
-                continue  # incomplete snapshot (write crashed) — not visible
-            with open(manifest) as f:
-                m = json.load(f)
-            out.append(
-                SnapshotInfo(
-                    snapshot_id=m["snapshot_id"],
-                    created_at=m["created_at"],
-                    label=m.get("label", ""),
-                    tables=m["tables"],
-                    path=os.path.join(self.root, snap_id),
-                )
-            )
-        return out
-
-    def snapshot_at(self, ts: float) -> SnapshotInfo:
-        """Latest snapshot at-or-before `ts` (the reference's restore
-        timeline resolution: pkg/backups/restore.go picks the rollback
-        log covering the requested point)."""
-        candidates = [s for s in self.list_snapshots() if s.created_at <= ts]
-        if not candidates:
-            raise LookupError(f"no snapshot at or before {ts}")
-        return candidates[-1]
-
-    def read_table(self, snap: SnapshotInfo, table: str) -> DataFrame:
-        if table not in snap.tables:
-            raise LookupError(f"table {table!r} not in snapshot {snap.snapshot_id}")
-        return self.spark.read.parquet(os.path.join(snap.path, table))
-
-    # -- restore ------------------------------------------------------------
-
-    def restore(
-        self,
-        snap: SnapshotInfo,
-        target_namespace: str,
-        tables: list[str] | None = None,
-    ) -> list[str]:
-        """Restore snapshot tables into a namespace (branch-from-restore:
-        the reference forks a branch off a restore point,
-        pkg/backups/restore.go:29-56). Returns restored table names."""
-        ns = quote_ident(target_namespace)
-        self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {ns}")
-        restored = []
-        for t in tables or snap.tables:
-            df = self.read_table(snap, t)
-            df.write.mode("overwrite").saveAsTable(f"{ns}.{quote_ident(t)}")
-            restored.append(t)
-        return restored
-
-    def restore_at(
-        self, ts: float, target_namespace: str
-    ) -> tuple[SnapshotInfo, list[str]]:
-        """Point-in-time restore: resolve the timeline, then restore."""
-        snap = self.snapshot_at(ts)
-        return snap, self.restore(snap, target_namespace)
-
-
-# ---------------------------------------------------------------------------
-# Incremental manifest snapshots (the 100 TB path)
-# ---------------------------------------------------------------------------
+    table: str
+    namespace: str
+    entry: dict  # the log entry publish appends
+    written: list[str]  # the files this version added
 
 
 class VersionedStore:
     """Manifest-based versioned table store: snapshots and branches are
-    O(metadata), never O(data).
-
-    The reference's PITR machinery is incremental — rollback logs keep
-    page pre-images and restore forks files copy-on-write
-    (pkg/backups/rollback_logger.go:12-34, snapshot_logger.go:16-27,
-    restore.go:29-56) — whereas SnapshotManager above rewrites every
-    table per snapshot. This store brings the same incrementality to the
-    Spark side with a miniature transaction log, the shape Delta/Iceberg
-    formalize (swap this class for Delta shallow clone + RESTORE when a
-    lake format is on the classpath):
-
-      * every write lands in a fresh immutable transaction directory
-        ``store/<table>/tx<k>``; nothing is ever modified in place;
-      * a version is a FILE LIST: overwrite starts a new list, append
-        extends the previous one (so appends never rewrite history);
-      * a snapshot pins {table: version} — one small JSON, zero data IO;
-      * restore/branch resolve pinned file lists and read them in place
-        (zero-copy); a branch forks the version log (O(tables)) and
-        diverges on subsequent writes while sharing all parent files;
-      * vacuum deletes files unreachable from any snapshot, branch, or
-        head version (the reference's VACUUM gate + retention analog).
-
-    At 100 TB: snapshot/branch cost is a few KB of JSON regardless of
-    data size, exactly like the reference's snapshot log; data files are
-    written once by the normal (distributed) write path.
-    """
+    O(metadata), never O(data)."""
 
     def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
-        self.root = root
-        for d in ("store", "_log", "snapshots"):
-            os.makedirs(os.path.join(root, d), exist_ok=True)
+        self.root = os.path.abspath(root)
+        self.backups_dir = os.path.join(self.root, STORE_DIR, "backups")
+        for d in (self.backups_dir, os.path.join(self.root, STORE_DIR,
+                                                 "snapshots")):
+            os.makedirs(d, exist_ok=True)
 
     # -- version log --------------------------------------------------------
 
-    def _log_path(self, ns: str, table: str) -> str:
-        return os.path.join(self.root, "_log", ns, f"{table}.json")
+    def _log(self, table: str, namespace: str) -> list[dict]:
+        return read_manifest(self.root, namespace).get(table, [])
 
-    def _read_log(self, ns: str, table: str) -> list[dict]:
-        p = self._log_path(ns, table)
-        if not os.path.exists(p):
-            return []
-        with open(p) as f:
-            return json.load(f)
-
-    def _append_log(self, ns: str, table: str, entry: dict) -> None:
-        log = self._read_log(ns, table)
-        log.append(entry)
-        p = self._log_path(ns, table)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(log, f)
-        os.replace(tmp, p)  # atomic manifest swap, crash = old manifest
-
-    def tables(self, namespace: str = "main") -> list[str]:
-        d = os.path.join(self.root, "_log", namespace)
+    def namespaces(self) -> list[str]:
+        d = os.path.dirname(_log_path(self.root, "main"))
         if not os.path.isdir(d):
             return []
         return sorted(f[:-5] for f in os.listdir(d) if f.endswith(".json"))
 
-    # -- write side ---------------------------------------------------------
+    def tables(self, namespace: str = "main") -> list[str]:
+        """The namespace's tables whose head is not a DROP."""
+        return sorted(self.current_versions(namespace))
+
+    def head(self, table: str, namespace: str = "main") -> dict | None:
+        """The table's current version entry; None when it has none or
+        was dropped."""
+        log = self._log(table, namespace)
+        return log[-1] if log and log[-1]["mode"] != "drop" else None
+
+    # -- write side: stage, then publish or discard --------------------------
+
+    def new_dir(self, table: str, namespace: str = "main") -> str:
+        """A fresh directory for the table's next version (not created)."""
+        return version_dir(self.root, namespace, table,
+                           next_version(self._log(table, namespace)))
+
+    def stage_dir(
+        self, table: str, path: str, schema: StructType,
+        namespace: str = "main",
+    ) -> StagedVersion:
+        """Stage the files already under `path` (a `new_dir`) as the
+        table's next version, replacing its file list."""
+        return self._staged(table, namespace, None, path,
+                            _parquet_files(path), schema)
+
+    def stage(
+        self, table: str, df: DataFrame, append: bool = False,
+        namespace: str = "main",
+    ) -> StagedVersion:
+        """Write `df` as the table's next version, unpublished: an
+        append adds its files to the head version's directory, anything
+        else writes a fresh directory."""
+        head = self.head(table, namespace) if append else None
+        path = (head or {}).get("dir") or self.new_dir(table, namespace)
+        before = set(os.listdir(path)) if os.path.isdir(path) else set()
+        df.write.mode("append").parquet(path)
+        return self._staged(table, namespace, head, path,
+                            _parquet_files(path, exclude=before), df.schema)
+
+    def _staged(self, table, namespace, head, path, new, schema):
+        entry = {
+            "version": next_version(self._log(table, namespace)),
+            "mode": "append" if head else "overwrite",
+            "files": (head["files"] if head else []) + new, "dir": path,
+            "schema": schema.json(),
+        }
+        return StagedVersion(table, namespace, entry, new)
+
+    def publish(self, staged: list[StagedVersion]) -> None:
+        """Append every staged version to its log with one manifest swap
+        per namespace — one swap for a commit of one namespace."""
+        now = time.time()
+        for ns in {s.namespace for s in staged}:
+            manifest = read_manifest(self.root, ns)
+            for s in staged:
+                if s.namespace == ns:
+                    manifest.setdefault(s.table, []).append(
+                        {**s.entry, "ts": now})
+            write_manifest(self.root, ns, manifest)
+
+    @staticmethod
+    def discard(staged: list[StagedVersion]) -> None:
+        """Delete the files of versions that will not be published."""
+        for s in staged:
+            if s.entry["mode"] == "append":
+                for f in s.written:
+                    os.remove(f)
+            else:
+                shutil.rmtree(s.entry["dir"], ignore_errors=True)
+
+    def drop(self, table: str, namespace: str = "main") -> None:
+        """Commit a DROP: later snapshots leave the table out, earlier
+        ones still restore it."""
+        log = self._log(table, namespace)
+        self.publish([StagedVersion(table, namespace, {
+            "version": next_version(log), "mode": "drop", "files": [],
+            "dir": None,
+        }, [])])
 
     def write(
         self,
@@ -230,77 +216,62 @@ class VersionedStore:
         fresh file list but leaves old files for snapshots/branches."""
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode must be overwrite|append, got {mode!r}")
-        log = self._read_log(namespace, table)
-        version = (log[-1]["version"] + 1) if log else 1
-        txdir = os.path.join(
-            self.root, "store", table, f"{namespace}-tx{version:08d}"
-        )
-        df.write.mode("errorifexists").parquet(txdir)
-        new_files = sorted(
-            os.path.join(txdir, f)
-            for f in os.listdir(txdir)
-            if f.endswith(".parquet")
-        )
-        files = (
-            (log[-1]["files"] + new_files)
-            if (mode == "append" and log)
-            else new_files
-        )
-        self._append_log(
-            namespace,
-            table,
-            {
-                "version": version,
-                "mode": mode,
-                "ts": time.time(),
-                "files": files,
-            },
-        )
-        return version
+        staged = self.stage(table, df, mode == "append", namespace)
+        self.publish([staged])
+        return staged.entry["version"]
 
     # -- read side ----------------------------------------------------------
+
+    def _entry(self, table: str, version: int | None, namespace: str) -> dict:
+        log = self._log(table, namespace)
+        if not log:
+            raise LookupError(f"unknown table {namespace}.{table}")
+        entry = log[-1] if version is None else next(
+            (e for e in log if e["version"] == version), None)
+        if entry is None or entry["mode"] == "drop":
+            raise LookupError(
+                f"{namespace}.{table} has no version {version or 'head'}")
+        return entry
 
     def files(
         self, table: str, version: int | None = None, namespace: str = "main"
     ) -> list[str]:
-        log = self._read_log(namespace, table)
-        if not log:
-            raise LookupError(f"unknown table {namespace}.{table}")
-        if version is None:
-            return log[-1]["files"]
-        for entry in log:
-            if entry["version"] == version:
-                return entry["files"]
-        raise LookupError(f"{namespace}.{table} has no version {version}")
+        return self._entry(table, version, namespace)["files"]
 
     def read(
         self, table: str, version: int | None = None, namespace: str = "main"
     ) -> DataFrame:
         """Time travel: read a pinned version's file list in place."""
-        return self.spark.read.parquet(*self.files(table, version, namespace))
+        entry = self._entry(table, version, namespace)
+        if not entry.get("schema"):
+            return self.spark.read.parquet(*entry["files"])
+        schema = StructType.fromJson(json.loads(entry["schema"]))
+        if not entry["files"]:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*entry["files"])
 
     def version_at(
         self, table: str, ts: float, namespace: str = "main"
     ) -> int:
         """Latest version committed at-or-before `ts` (the timeline
         resolution behind TIMESTAMP AS OF and PITR)."""
-        log = self._read_log(namespace, table)
-        cands = [e["version"] for e in log if e["ts"] <= ts]
-        if not cands:
+        cands = [e for e in self._log(table, namespace) if e["ts"] <= ts]
+        if not cands or cands[-1]["mode"] == "drop":
             raise LookupError(f"no version of {namespace}.{table} at {ts}")
-        return cands[-1]
+        return cands[-1]["version"]
 
     def current_versions(self, namespace: str = "main") -> dict[str, int]:
         return {
-            t: self._read_log(namespace, t)[-1]["version"]
-            for t in self.tables(namespace)
+            t: log[-1]["version"]
+            for t, log in read_manifest(self.root, namespace).items()
+            if log[-1]["mode"] != "drop"
         }
 
     # -- snapshots (O(metadata)) --------------------------------------------
 
-    def snapshot(self, label: str = "", namespace: str = "main") -> SnapshotInfo:
+    def snapshot(self, label: str = "", namespace: str = "main") -> dict:
         """Pin the namespace's current versions. Writes ONE small JSON —
-        no table data is copied or rewritten."""
+        no table data is copied or rewritten — and returns it."""
         created = time.time()
         snap_id = f"{int(created * 1e6):018d}"
         manifest = {
@@ -310,20 +281,15 @@ class VersionedStore:
             "namespace": namespace,
             "versions": self.current_versions(namespace),
         }
-        path = os.path.join(self.root, "snapshots", f"{snap_id}.json")
+        path = os.path.join(self.root, STORE_DIR, "snapshots",
+                            f"{snap_id}.json")
         with open(path, "w") as f:
             json.dump(manifest, f)
-        return SnapshotInfo(
-            snapshot_id=snap_id,
-            created_at=created,
-            label=label,
-            tables=sorted(manifest["versions"]),
-            path=path,
-        )
+        return manifest
 
     def list_snapshots(self) -> list[dict]:
         out = []
-        d = os.path.join(self.root, "snapshots")
+        d = os.path.join(self.root, STORE_DIR, "snapshots")
         for name in sorted(os.listdir(d)):
             with open(os.path.join(d, name)) as f:
                 out.append(json.load(f))
@@ -346,29 +312,20 @@ class VersionedStore:
         out = []
         for table, version in sorted(snap["versions"].items()):
             self.read(table, version, ns).createOrReplaceTempView(
-                f"{view_prefix}__{table}"
+                f"{view_prefix}__{table.replace('.', '__')}"
             )
             out.append(table)
         return out
 
     def create_branch(self, branch: str, source: str = "main") -> list[str]:
-        """Fork a namespace: copy the version LOGS (a few KB), share all
+        """Fork a namespace: copy its manifest (a few KB), share all
         data files. Writes to the branch diverge; the parent is
         untouched (reference: branch.go:15-30 forks metadata, restore.go
         forks files copy-on-write)."""
-        src_dir = os.path.join(self.root, "_log", source)
-        dst_dir = os.path.join(self.root, "_log", branch)
-        if os.path.exists(dst_dir):
+        if os.path.exists(_log_path(self.root, branch)):
             raise FileExistsError(f"branch {branch!r} already exists")
-        os.makedirs(dst_dir)
-        forked = []
-        for t in self.tables(source):
-            with open(self._log_path(source, t)) as f:
-                log = json.load(f)
-            with open(self._log_path(branch, t), "w") as f:
-                json.dump(log, f)
-            forked.append(t)
-        return forked
+        write_manifest(self.root, branch, read_manifest(self.root, source))
+        return self.tables(branch)
 
     # -- change data feed (file-level CDF over the manifest log) ------------
 
@@ -389,36 +346,17 @@ class VersionedStore:
         from pyspark.sql import functions as F
 
         old = set(self.files(table, v_from, namespace))
-        new = set(
-            self.files(table, v_to, namespace)
-            if v_to is not None
-            else self.files(table, None, namespace)
-        )
-        added, removed = sorted(new - old), sorted(old - new)
-        parts = []
-        if added:
-            parts.append(
-                self.spark.read.parquet(*added).withColumn(
-                    "_change_type", F.lit("insert")
-                )
-            )
-        if removed:
-            parts.append(
-                self.spark.read.parquet(*removed).withColumn(
-                    "_change_type", F.lit("delete")
-                )
-            )
+        new = set(self.files(table, v_to, namespace))
+        parts = [
+            self.spark.read.parquet(*sorted(fs))
+            .withColumn("_change_type", F.lit(kind))
+            for kind, fs in (("insert", new - old), ("delete", old - new))
+            if fs
+        ]
         if not parts:
-            schema = self.read(table, v_from, namespace).schema
-            return (
-                self.spark.createDataFrame([], schema)
-                .withColumn("_change_type", F.lit(""))
-                .limit(0)
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            return (self.read(table, v_from, namespace)
+                    .withColumn("_change_type", F.lit("")).limit(0))
+        return functools.reduce(DataFrame.unionByName, parts)
 
     # -- archive backups (reference: pkg/backups/backup.go tar.gz) ----------
 
@@ -431,8 +369,6 @@ class VersionedStore:
         `restore_archive` — the reference's portable backup format is
         the same shape (tar.gz of the database files plus metadata,
         pkg/backups/backup.go:32-70)."""
-        import tarfile
-
         snaps = self.list_snapshots()
         if snapshot_id is None:
             if not snaps:
@@ -446,17 +382,18 @@ class VersionedStore:
         ns = snap["namespace"]
         with tarfile.open(archive, "w:gz") as tar:
             manifest = dict(snap)
+            entries = {t: self._entry(t, v, ns)
+                       for t, v in snap["versions"].items()}
             manifest["files"] = {
-                t: [os.path.relpath(f, self.root) for f in self.files(t, v, ns)]
-                for t, v in snap["versions"].items()
+                t: [os.path.relpath(f, self.root) for f in e["files"]]
+                for t, e in entries.items()
             }
+            manifest["schemas"] = {t: e.get("schema")
+                                   for t, e in entries.items()}
             payload = json.dumps(manifest).encode()
-            import io as _io
-            import tarfile as _tf
-
-            info = _tf.TarInfo("BACKUP_MANIFEST.json")
+            info = tarfile.TarInfo("BACKUP_MANIFEST.json")
             info.size = len(payload)
-            tar.addfile(info, _io.BytesIO(payload))
+            tar.addfile(info, io.BytesIO(payload))
             for t, v in snap["versions"].items():
                 for f in self.files(t, v, ns):
                     tar.add(f, arcname=os.path.relpath(f, self.root))
@@ -471,24 +408,19 @@ class VersionedStore:
         pointing at the restored files (version 1 of the new timeline —
         the reference's restore likewise starts a fresh branch from the
         backup point, pkg/backups/restore.go:24-70)."""
-        import tarfile
-
         with tarfile.open(archive, "r:gz") as tar:
             member = tar.extractfile("BACKUP_MANIFEST.json")
             manifest = json.loads(member.read())
             tar.extractall(root, filter="data")
         store = cls(spark, root)
-        for t, rels in manifest["files"].items():
-            store._append_log(
-                "main",
-                t,
-                {
-                    "version": 1,
-                    "mode": "overwrite",
-                    "ts": time.time(),
-                    "files": [os.path.join(root, r) for r in rels],
-                },
-            )
+        write_manifest(store.root, "main", {
+            t: [{
+                "version": 1, "mode": "overwrite", "ts": time.time(),
+                "files": [os.path.join(store.root, r) for r in rels],
+                "schema": manifest.get("schemas", {}).get(t),
+            }]
+            for t, rels in manifest["files"].items()
+        })
         return store
 
     # -- retention ----------------------------------------------------------
@@ -503,25 +435,15 @@ class VersionedStore:
             ns = snap["namespace"]
             for t, v in snap["versions"].items():
                 live.update(self.files(t, v, ns))
-        log_root = os.path.join(self.root, "_log")
-        for ns in os.listdir(log_root):
-            for t in self.tables(ns):
-                live.update(self._read_log(ns, t)[-1]["files"])
-        deleted = []
-        store = os.path.join(self.root, "store")
-        for table in os.listdir(store):
-            tdir = os.path.join(store, table)
-            for tx in os.listdir(tdir):
-                txdir = os.path.join(tdir, tx)
-                fs = [
-                    os.path.join(txdir, f)
-                    for f in os.listdir(txdir)
-                    if f.endswith(".parquet")
-                ]
-                if fs and not any(f in live for f in fs):
-                    for f in fs:
-                        os.remove(f)
-                        deleted.append(f)
+        logged: set[str] = set()
+        for ns in self.namespaces():
+            for log in read_manifest(self.root, ns).values():
+                live.update(log[-1]["files"])
+                for e in log:
+                    logged.update(e["files"])
+        deleted = sorted(f for f in logged - live if os.path.exists(f))
+        for f in deleted:
+            os.remove(f)
         return deleted
 
 
@@ -552,7 +474,7 @@ class IncrementalAggView:
         self.table = table
         self.key_col = key_col
         self.value_col = value_col
-        self.state_path = os.path.join(store.root, "_views", name)
+        self.state_path = os.path.join(store.root, STORE_DIR, "views", name)
         self.meta_path = self.state_path + ".json"
 
     def _last_version(self) -> int | None:
@@ -573,8 +495,7 @@ class IncrementalAggView:
         """Returns {"mode": "full"|"incremental", "version": v}."""
         from pyspark.sql import functions as F
 
-        head_log = self.store._read_log("main", self.table)
-        head = head_log[-1]["version"]
+        head = self.store.current_versions()[self.table]
         last = self._last_version()
         mode = "full"
         if last is not None and last < head:
@@ -620,7 +541,7 @@ def versioned_read_stream(store: VersionedStore, table: str):
     (overwrites would re-deliver replaced files; gate on append-only
     pipelines or consume `changes()` batch-wise instead)."""
     schema = store.read(table).schema
-    path = os.path.join(store.root, "store", table)
+    path = os.path.join(store.root, table)
     return (
         store.spark.readStream.schema(schema)
         .option("pathGlobFilter", "*.parquet")

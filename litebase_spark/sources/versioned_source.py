@@ -21,7 +21,6 @@ manifest.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -33,6 +32,13 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from litebase_spark.snapshots import (
+    next_version,
+    read_manifest,
+    version_dir,
+    write_manifest,
+)
+
 
 class _FilePartition(InputPartition):
     def __init__(self, path: str) -> None:
@@ -40,12 +46,9 @@ class _FilePartition(InputPartition):
 
 
 def _resolve_files(options: dict) -> list[str]:
-    root = options["root"]
     table = options["table"]
     ns = options.get("namespace", "main")
-    log_path = os.path.join(root, "_log", ns, f"{table}.json")
-    with open(log_path) as f:
-        log = json.load(f)
+    log = read_manifest(options["root"], ns).get(table, [])
     if "version" in options:
         v = int(options["version"])
         for entry in log:
@@ -58,6 +61,8 @@ def _resolve_files(options: dict) -> list[str]:
         if not cands:
             raise LookupError(f"no version of {ns}.{table} at {ts}")
         return cands[-1]["files"]
+    if not log:
+        raise LookupError(f"unknown table {ns}.{table}")
     return log[-1]["files"]
 
 
@@ -90,7 +95,7 @@ class VersionedWriter(DataSourceWriter):
     """Write side: every task writes its rows to one immutable parquet
     file in a fresh transaction directory and reports the path as its
     commit message; the DRIVER's commit() appends exactly one version
-    entry to the manifest log — the same two-phase commit the manifest
+    entry to the namespace manifest — the same two-phase commit the manifest
     design gives VersionedStore.write, now reachable through
     ``df.write.format("versioned")``. An aborted job leaves only
     unreferenced files (vacuum-able), never a torn manifest."""
@@ -101,16 +106,10 @@ class VersionedWriter(DataSourceWriter):
         self.overwrite = overwrite
         root, table = self.options["root"], self.options["table"]
         self.ns = self.options.get("namespace", "main")
-        log_path = os.path.join(root, "_log", self.ns, f"{table}.json")
-        prev = []
-        if os.path.exists(log_path):
-            with open(log_path) as f:
-                prev = json.load(f)
-        self.version = (prev[-1]["version"] + 1) if prev else 1
+        prev = read_manifest(root, self.ns).get(table, [])
+        self.version = next_version(prev)
         self.prev_files = prev[-1]["files"] if prev else []
-        self.txdir = os.path.join(
-            root, "store", table, f"{self.ns}-tx{self.version:08d}"
-        )
+        self.txdir = version_dir(root, self.ns, table, self.version)
         os.makedirs(self.txdir, exist_ok=True)
 
     def write(self, iterator):
@@ -135,17 +134,13 @@ class VersionedWriter(DataSourceWriter):
         return _FilesCommit([path])
 
     def commit(self, messages):
+        import time as _time
+
         root, table = self.options["root"], self.options["table"]
         new_files = sorted(f for m in messages for f in m.files)
         files = new_files if self.overwrite else self.prev_files + new_files
-        log_path = os.path.join(root, "_log", self.ns, f"{table}.json")
-        log = []
-        if os.path.exists(log_path):
-            with open(log_path) as f:
-                log = json.load(f)
-        import time as _time
-
-        log.append(
+        manifest = read_manifest(root, self.ns)
+        manifest.setdefault(table, []).append(
             {
                 "version": self.version,
                 "mode": "overwrite" if self.overwrite else "append",
@@ -153,11 +148,7 @@ class VersionedWriter(DataSourceWriter):
                 "files": files,
             }
         )
-        os.makedirs(os.path.dirname(log_path), exist_ok=True)
-        tmp = log_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(log, f)
-        os.replace(tmp, log_path)
+        write_manifest(root, self.ns, manifest)
 
     def abort(self, messages):
         for m in messages:

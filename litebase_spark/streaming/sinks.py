@@ -7,25 +7,26 @@ microbatch arrives as a batch DataFrame plus a monotonically increasing
 batch_id for idempotence (re-delivered batches after a restart carry
 the same id and must not double-apply).
 
-On Delta this body is one `MERGE INTO`; on plain parquet we reuse the
-engine's copy-on-write upsert. State contract at scale: the upsert
-keys per batch are bounded by the trigger interval, and the target
-table rewrite cost is what Delta's log/file-pruning would remove —
-the swap point is the `apply` function alone.
+On Delta this body is one `MERGE INTO`; on plain parquet each batch
+commits the merged table as a new version of the Engine's store, like
+any SQL write. State contract at scale: the upsert keys per batch are
+bounded by the trigger interval, and the target table rewrite cost is
+what Delta's log/file-pruning would remove — the swap point is the
+`apply` function alone.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
+
+from litebase_spark.engine import Engine
 
 
 class ForeachBatchUpsertSink:
-    """Merge every microbatch into a target table, idempotently."""
+    """Merge every microbatch into a table of `engine`, idempotently."""
 
-    def __init__(
-        self, spark: SparkSession, table: str, keys: list[str]
-    ) -> None:
-        self.spark = spark
+    def __init__(self, engine: Engine, table: str, keys: list[str]) -> None:
+        self.engine = engine
         self.table = table
         self.keys = keys
         self.applied_batches: list[int] = []
@@ -33,14 +34,11 @@ class ForeachBatchUpsertSink:
     def apply(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id in self.applied_batches:
             return  # replayed batch after restart: already applied
-        from pyspark.sql import functions as F
-
-        target = self.spark.table(self.table)
+        target = self.engine.spark.table(self.table)
         # last-write-wins inside the batch: one row per key
         deduped = batch_df.dropDuplicates(self.keys)
         kept = target.join(deduped, on=self.keys, how="left_anti")
-        merged = kept.unionByName(deduped).localCheckpoint(eager=True)
-        merged.write.mode("overwrite").saveAsTable(self.table)
+        self.engine.commit({self.table: kept.unionByName(deduped)})
         self.applied_batches.append(batch_id)
 
     def attach(self, stream: DataFrame, **trigger_kwargs):

@@ -122,7 +122,7 @@ def test_metrics_meta_command(shell):
     assert "41 + 1" in text
 
 
-def test_admin_subcommands_drive_management_api(spark):
+def test_admin_subcommands_drive_management_api(spark, tmp_path):
     """The management CLI (reference pkg/cli/cmd tree: database/user/
     access-key/status) is a thin client over the HTTP API: spin a real
     QueryServer, drive admin_main, assert exit codes + JSON output."""
@@ -138,7 +138,7 @@ def test_admin_subcommands_drive_management_api(spark):
 
     keys = AccessKeyManager()
     keys.store(AccessKey("root", "pw", [AccessKeyStatement(["*"], ["*"])]))
-    srv = QueryServer(Engine(spark=spark), keys)
+    srv = QueryServer(Engine(spark=spark, store_root=str(tmp_path)), keys)
     srv.start()
     try:
         base = ["--url", f"http://127.0.0.1:{srv.port}", "--token", "root:pw"]
@@ -196,12 +196,17 @@ def test_admin_subcommands_drive_management_api(spark):
         rc, _ = run(["access-key", "delete", "clikey"])
         assert rc == 0
 
-        # backup listing works (empty) even without a store; creating
-        # one needs a VersionedStore attached -> 503, exit 1
+        # every server has a store: with no snapshot yet there is
+        # nothing to back up (400, exit 1); after one, a backup is made
         rc, body = run(["backup", "list", "main", "main"])
         assert rc == 0 and body["data"] == []
         rc, _ = run(["backup", "create", "main", "main"])
         assert rc == 1
+        srv.store.snapshot(label="cli")
+        rc, body = run(["backup", "create", "main", "main"])
+        assert rc == 0
+        rc, listed = run(["backup", "list", "main", "main"])
+        assert listed["data"] == [body["data"]["backup_id"]]
     finally:
         srv.stop()
 

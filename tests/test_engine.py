@@ -94,23 +94,6 @@ def test_merge_upsert(engine, spark):
     eng.sql("DROP TABLE t_merge")
 
 
-def test_branching(engine):
-    # reference branch model: fork via copy (pkg/backups/restore.go:29-56)
-    eng = engine
-    eng.sql("DROP DATABASE IF EXISTS b_src CASCADE")
-    eng.sql("DROP DATABASE IF EXISTS b_src__dev CASCADE")
-    eng.create_database("b_src")
-    eng.sql("CREATE TABLE b_src.t (id BIGINT) USING PARQUET")
-    eng.sql("INSERT INTO b_src.t VALUES (1),(2)")
-    ns = eng.create_branch("b_src", "dev", ["t"])
-    assert ns == "b_src__dev"
-    eng.sql(f"INSERT INTO {ns}.t VALUES (3)")
-    assert eng.sql("SELECT count(*) AS n FROM b_src.t").rows[0].n == 2
-    assert eng.sql(f"SELECT count(*) AS n FROM {ns}.t").rows[0].n == 3
-    eng.drop_database("b_src")
-    eng.drop_database("b_src__dev")
-
-
 def test_metrics_telemetry(engine, spark):
     # A22: per-statement-hash count/avg/min/max/p50/p90/p99
     eng = Engine(spark)

@@ -342,20 +342,19 @@ def test_admin_routes_snapshots_backups_restore_keys(spark, tmp_path):
     branches, databases, access-key CRUD over the wire."""
     import time as _time
 
-    from litebase_spark.snapshots import VersionedStore
-
-    store = VersionedStore(spark, str(tmp_path / "store"))
-    store.write("t", spark.range(5).selectExpr("id", "id * 2 AS v"))
+    engine = Engine(spark=spark, store_root=str(tmp_path / "store"))
+    engine.sql("DROP TABLE IF EXISTS adm_t")
+    engine.sql("CREATE TABLE adm_t AS SELECT id, id * 2 AS v FROM range(5)")
     keys = AccessKeyManager()
     keys.store(AccessKey("admin", "s3cret", [AccessKeyStatement(["*"], ["*"])]))
-    srv = QueryServer(Engine(spark=spark), keys, store=store)
+    srv = QueryServer(engine, keys)
     srv.start()
     try:
         base = "/v1/databases/main/main"
         # snapshot
         code, body = _call(srv, "POST", f"{base}/snapshots",
                            {"label": "wire"}, token="admin:s3cret")
-        assert code == 201 and body["data"]["tables"] == ["t"]
+        assert code == 201 and body["data"]["tables"] == ["adm_t"]
         code, body = _call(srv, "GET", f"{base}/snapshots", token="admin:s3cret")
         assert code == 200 and body["data"][-1]["label"] == "wire"
         # backup lifecycle
@@ -371,12 +370,18 @@ def test_admin_routes_snapshots_backups_restore_keys(spark, tmp_path):
         # restore at now -> zero-copy views
         code, body = _call(srv, "POST", f"{base}/restore",
                            {"timestamp": _time.time()}, token="admin:s3cret")
-        assert code == 200 and body["data"]["views"] == ["t"]
-        assert spark.table("main_main_restore__t").count() == 5
-        # branch fork
+        assert code == 200 and body["data"]["views"] == ["adm_t"]
+        assert spark.table("main_main_restore__adm_t").count() == 5
+        # branch fork: listed by the database and shown with its tables
         code, body = _call(srv, "POST", "/v1/databases/main/branches",
                            {"name": "dev"}, token="admin:s3cret")
-        assert code == 201 and body["data"]["tables"] == ["t"]
+        assert code == 201 and body["data"]["tables"] == ["adm_t"]
+        code, body = _call(srv, "GET", "/v1/databases/main",
+                           token="admin:s3cret")
+        assert body["data"]["branches"] == ["dev", "main"]
+        code, body = _call(srv, "GET", "/v1/databases/main/dev",
+                           token="admin:s3cret")
+        assert code == 200 and body["data"]["tables"] == ["adm_t"]
         # access-key CRUD + use
         code, body = _call(srv, "POST", "/v1/access-keys",
                            {"access_key_id": "svc", "secret": "pw",
@@ -398,6 +403,64 @@ def test_admin_routes_snapshots_backups_restore_keys(spark, tmp_path):
         assert code == 401  # revoked
     finally:
         srv.stop()
+        engine.sql("DROP TABLE IF EXISTS adm_t")
+
+
+def _rows(srv, statement):
+    code, body = _call(srv, "POST", "/v1/databases/main/main/query",
+                       {"queries": [{"id": "1", "statement": statement}]},
+                       token="admin:s3cret")
+    assert code == 200, body
+    return body["data"][0]["rows"]
+
+
+def _admin_post(srv, route, body):
+    return _call(srv, "POST", f"/v1/databases/main/main/{route}", body,
+                 token="admin:s3cret")
+
+
+def test_restore_before_a_sql_update_returns_the_pre_update_rows(server):
+    """SQL INSERT -> snapshot -> UPDATE -> restore at the snapshot's time:
+    the snapshot pins what SQL wrote, so the restored view holds the
+    pre-UPDATE rows while the table holds the updated ones."""
+    _rows(server, "DROP TABLE IF EXISTS h_pitr")
+    _rows(server, "CREATE TABLE h_pitr (id BIGINT, v STRING) USING PARQUET")
+    try:
+        _rows(server, "INSERT INTO h_pitr VALUES (1, 'a'), (2, 'b')")
+        code, snap = _admin_post(server, "snapshots", {})
+        assert code == 201 and "h_pitr" in snap["data"]["tables"]
+        _rows(server, "UPDATE h_pitr SET v = 'z'")
+        code, body = _admin_post(
+            server, "restore", {"timestamp": snap["data"]["created_at"]})
+        assert code == 200 and "h_pitr" in body["data"]["views"]
+        assert _rows(server, "SELECT id, v FROM main_main_restore__h_pitr "
+                             "ORDER BY id") == [[1, "a"], [2, "b"]]
+        assert _rows(server, "SELECT id, v FROM h_pitr ORDER BY id") == [
+            [1, "z"], [2, "z"]]
+    finally:
+        _rows(server, "DROP TABLE IF EXISTS h_pitr")
+
+
+def test_drop_then_create_starts_empty_and_a_snapshot_keeps_the_rows(server):
+    """DROP TABLE then CREATE TABLE of the same name gives an empty
+    table, and a snapshot taken before the DROP still restores the
+    dropped rows: the drop deletes no data file."""
+    _rows(server, "DROP TABLE IF EXISTS h_drop")
+    _rows(server, "CREATE TABLE h_drop (id BIGINT) USING PARQUET")
+    try:
+        _rows(server, "INSERT INTO h_drop VALUES (1), (2), (3)")
+        code, snap = _admin_post(server, "snapshots", {})
+        assert code == 201
+        _rows(server, "DROP TABLE h_drop")
+        _rows(server, "CREATE TABLE h_drop (id BIGINT) USING PARQUET")
+        assert _rows(server, "SELECT count(*) AS n FROM h_drop") == [[0]]
+        code, body = _admin_post(
+            server, "restore", {"timestamp": snap["data"]["created_at"]})
+        assert code == 200 and "h_drop" in body["data"]["views"]
+        assert _rows(server, "SELECT id FROM main_main_restore__h_drop "
+                             "ORDER BY id") == [[1], [2], [3]]
+    finally:
+        _rows(server, "DROP TABLE IF EXISTS h_drop")
 
 
 def _stream_call(srv, path, body, token):
@@ -630,7 +693,7 @@ def test_trigger_and_attach_over_the_wire(server):
 
 def test_status_and_show_routes(server):
     """Round-4 read surface: /v1/status (cluster status analog),
-    database show, branch show, backup 404s without a store."""
+    database show, branch show, backup 404s."""
     from litebase_spark.wire import BinaryStreamClient
 
     t = "admin:s3cret"
@@ -638,7 +701,7 @@ def test_status_and_show_routes(server):
     assert code == 200
     d = body["data"]
     assert d["role"] == "primary" and d["uptime_s"] >= 0
-    assert d["versioned_store"] is False
+    assert d["store_root"] == server.engine.store.root  # always on
     assert _call(server, "GET", "/v1/status")[0] == 401
     # queries_served counts each statement once, whatever route ran it:
     # two over JSON, two over the NDJSON stream, one over the wire

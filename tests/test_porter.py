@@ -232,23 +232,6 @@ def test_fts_vocab_porter_semantics(spark, tmp_path, monkeypatch):
     assert rows["tabl"] == (1, 1)
 
 
-def test_barriered_chain_matches_unbarriered(spark, truth):
-    """r13: with_porter_stem defaults to NO localCheckpoint barriers
-    (SPARK-36718 keeps the stacked stages from collapsing); the
-    barrier_every=N escape hatch now also prunes dead work columns
-    before each checkpoint. Pin that the barriered path still produces
-    identical stems — the pruning regex must never drop a column a
-    later stage references."""
-    from litebase_spark.functions.porter import with_porter_stem
-
-    words, expect = truth
-    df = spark.createDataFrame([(w,) for w in words], "tok string")
-    got = {r["tok"]: r["stem"]
-           for r in with_porter_stem(df, "tok", barrier_every=2).collect()}
-    bad = {w: (got[w], expect[w]) for w in words if got[w] != expect[w]}
-    assert not bad, f"{len(bad)} mismatches: {dict(list(bad.items())[:10])}"
-
-
 def test_porter_stem_preserves_first_char():
     """r13: fts_match's porter path prunes the vocabulary to query-stem
     first letters BEFORE the stage chain — sound only if no Porter rule

@@ -1,5 +1,5 @@
-"""Snapshot/PITR (A21), batch queries (A24), statement cache (A6), and
-introspection (A13/M3) tests."""
+"""Versioned store and PITR (A21), batch queries (A24), statement cache
+(A6), and introspection (A13/M3) tests."""
 
 from __future__ import annotations
 
@@ -10,43 +10,11 @@ from pyspark.sql import functions as F
 
 from litebase_spark.catalog import load
 from litebase_spark.engine import Engine
-from litebase_spark.snapshots import SnapshotManager
 
 
 @pytest.fixture()
 def engine(spark):
     return Engine(spark=spark)
-
-
-def test_snapshot_restore_roundtrip(spark, sf_dir, tmp_path):
-    mgr = SnapshotManager(spark, str(tmp_path / "snaps"))
-    nation = load(spark, sf_dir, "nation")
-
-    s1 = mgr.snapshot({"nation": nation}, label="before-change")
-    t_between = time.time()
-    changed = nation.withColumn("n_name", F.upper("n_name"))
-    s2 = mgr.snapshot({"nation": changed}, label="after-change")
-
-    assert [s.snapshot_id for s in mgr.list_snapshots()] == [
-        s1.snapshot_id,
-        s2.snapshot_id,
-    ]
-    # point-in-time resolution: between the two snapshots -> s1
-    assert mgr.snapshot_at(t_between).snapshot_id == s1.snapshot_id
-
-    snap, restored = mgr.restore_at(t_between, "restored_ns")
-    assert snap.snapshot_id == s1.snapshot_id and restored == ["nation"]
-    back = spark.table("`restored_ns`.`nation`")
-    assert sorted(r["n_name"] for r in back.collect()) == sorted(
-        r["n_name"] for r in nation.collect()
-    )
-    spark.sql("DROP DATABASE IF EXISTS `restored_ns` CASCADE")
-
-
-def test_snapshot_at_before_first_raises(spark, sf_dir, tmp_path):
-    mgr = SnapshotManager(spark, str(tmp_path / "snaps2"))
-    with pytest.raises(LookupError):
-        mgr.snapshot_at(time.time())
 
 
 def test_sql_batch_sequential(engine, spark, sf_dir):
@@ -132,7 +100,7 @@ def test_versioned_snapshot_writes_no_data(spark, sf_dir, tmp_path):
     s1 = vs.snapshot(label="pin-both")
     s2 = vs.snapshot(label="pin-again")
     assert _parquet_files(str(tmp_path / "vstore")) == before
-    assert s1.snapshot_id != s2.snapshot_id
+    assert s1["snapshot_id"] != s2["snapshot_id"]
     assert vs.read("nation").count() == nation.count()
 
 
@@ -196,38 +164,41 @@ def test_versioned_branch_diverges_and_vacuum(spark, sf_dir, tmp_path):
     assert vs.read("nation", namespace="dev").count() == 2
 
 
-def test_sql_time_travel_over_versioned_store(spark, sf_dir, tmp_path):
+def test_sql_time_travel_over_versioned_store(spark, tmp_path):
     """Delta-dialect time travel through Engine.sql: VERSION AS OF and
-    TIMESTAMP AS OF resolve to pinned file lists, zero-copy."""
-    from litebase_spark.snapshots import VersionedStore
-
-    eng = Engine(spark=spark)
-    vs = VersionedStore(spark, str(tmp_path / "tt"))
-    eng.attach_versioned_store(vs)
-    nation = load(spark, sf_dir, "nation")
-    vs.write("nation_tt", nation)
-    t_v1 = time.time()
+    TIMESTAMP AS OF resolve the versions SQL writes committed to pinned
+    file lists, zero-copy."""
+    eng = Engine(spark=spark, store_root=str(tmp_path / "tt"))
+    eng.sql("DROP TABLE IF EXISTS nation_tt")
+    eng.sql("CREATE TABLE nation_tt (k BIGINT, v STRING) USING PARQUET")
+    eng.sql("INSERT INTO nation_tt VALUES " + ", ".join(
+        f"({i}, 'n{i}')" for i in range(25)))
+    v_full = eng.store.current_versions()["nation_tt"]
+    t_full = time.time()
     time.sleep(0.01)
-    vs.write("nation_tt", nation.limit(5))
-    # current head also readable through the store
-    assert vs.read("nation_tt").count() == 5
-    r = eng.sql("SELECT count(*) AS n FROM nation_tt VERSION AS OF 1")
-    assert r.rows[0].n == nation.count()
-    r = eng.sql("SELECT count(*) AS n FROM nation_tt VERSION AS OF 2")
-    assert r.rows[0].n == 5
-    r = eng.sql(
-        f"SELECT count(*) AS n FROM nation_tt TIMESTAMP AS OF '{t_v1}'"
-    )
-    assert r.rows[0].n == nation.count()
-    # inside a string literal the spelling is text, not a table
-    # reference; outside it, the same statement still pins the version
-    r = eng.sql("SELECT 'x VERSION AS OF 1' AS s")
-    assert r.rows[0].s == "x VERSION AS OF 1"
-    r = eng.sql(
-        "SELECT 'nation_tt VERSION AS OF 1' AS s, count(*) AS n "
-        "FROM nation_tt VERSION AS OF 2"
-    )
-    assert tuple(r.rows[0]) == ("nation_tt VERSION AS OF 1", 5)
+    eng.sql("DELETE FROM nation_tt WHERE k >= 5")
+    try:
+        assert eng.sql("SELECT count(*) AS n FROM nation_tt").rows[0].n == 5
+        r = eng.sql(f"SELECT count(*) AS n FROM nation_tt VERSION AS OF {v_full}")
+        assert r.rows[0].n == 25
+        r = eng.sql("SELECT count(*) AS n FROM nation_tt VERSION AS OF "
+                    f"{v_full + 1}")
+        assert r.rows[0].n == 5
+        r = eng.sql(
+            f"SELECT count(*) AS n FROM nation_tt TIMESTAMP AS OF '{t_full}'"
+        )
+        assert r.rows[0].n == 25
+        # inside a string literal the spelling is text, not a table
+        # reference; outside it, the same statement still pins the version
+        r = eng.sql("SELECT 'x VERSION AS OF 1' AS s")
+        assert r.rows[0].s == "x VERSION AS OF 1"
+        r = eng.sql(
+            "SELECT 'nation_tt VERSION AS OF 1' AS s, count(*) AS n "
+            f"FROM nation_tt VERSION AS OF {v_full + 1}"
+        )
+        assert tuple(r.rows[0]) == ("nation_tt VERSION AS OF 1", 5)
+    finally:
+        eng.sql("DROP TABLE nation_tt")
 
 
 def test_backup_archive_roundtrip(spark, sf_dir, tmp_path):
@@ -346,3 +317,64 @@ def test_versioned_store_streams_appends_incrementally(spark, sf_dir, tmp_path):
     # same checkpoint: only the appended files are delivered on top
     assert drain() == nation.count()
     assert drain() == nation.count()  # nothing new -> no re-delivery
+
+
+# -- SQL writes commit store versions -----------------------------------------
+
+
+def _rows(eng, sql):
+    return sorted(tuple(r) for r in eng.sql(sql).rows)
+
+
+def test_dataframe_built_before_an_update_keeps_its_rows(spark):
+    """An UPDATE writes a fresh version directory and deletes nothing, so
+    a DataFrame resolved before it still collects the rows it was built
+    over."""
+    eng = Engine(spark=spark)
+    eng.sql("DROP TABLE IF EXISTS st_before")
+    eng.sql("CREATE TABLE st_before (id BIGINT, v BIGINT) USING PARQUET")
+    try:
+        eng.sql("INSERT INTO st_before VALUES (1, 10), (2, 20)")
+        before = eng.df("SELECT id, v FROM st_before")
+        eng.sql("UPDATE st_before SET v = v + 1")
+        assert sorted(tuple(r) for r in before.collect()) == [(1, 10), (2, 20)]
+        assert _rows(eng, "SELECT id, v FROM st_before") == [(1, 11), (2, 21)]
+    finally:
+        eng.sql("DROP TABLE IF EXISTS st_before")
+
+
+def test_failed_two_table_commit_leaves_both_tables_unchanged(spark, monkeypatch):
+    """A COMMIT whose second table write raises publishes neither table:
+    both keep their pre-COMMIT rows."""
+    from pyspark.sql import DataFrameWriter
+
+    eng = Engine(spark=spark)
+    for t in ("st_c1", "st_c2"):
+        eng.sql(f"DROP TABLE IF EXISTS {t}")
+        eng.sql(f"CREATE TABLE {t} (id BIGINT) USING PARQUET")
+        eng.sql(f"INSERT INTO {t} VALUES (1)")
+    writes = []
+
+    def second_write_fails(real):
+        def write(self, *args, **kwargs):
+            writes.append(real.__name__)
+            if len(writes) == 2:
+                raise OSError("disk full")
+            return real(self, *args, **kwargs)
+        return write
+
+    try:
+        with pytest.raises(OSError, match="disk full"):
+            with eng.transaction() as txn:
+                txn.sql("UPDATE st_c1 SET id = 10")
+                txn.sql("UPDATE st_c2 SET id = 20")
+                for name in ("parquet", "saveAsTable", "insertInto"):
+                    monkeypatch.setattr(DataFrameWriter, name, second_write_fails(
+                        getattr(DataFrameWriter, name)))
+        monkeypatch.undo()
+        assert _rows(eng, "SELECT id FROM st_c1") == [(1,)]
+        assert _rows(eng, "SELECT id FROM st_c2") == [(1,)]
+    finally:
+        monkeypatch.undo()
+        for t in ("st_c1", "st_c2"):
+            eng.sql(f"DROP TABLE IF EXISTS {t}")

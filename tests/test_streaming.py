@@ -209,17 +209,19 @@ def test_foreach_batch_upsert_sink(spark, sf_dir, tmp_path):
     import pyspark.sql.functions as F
 
     from litebase_spark.catalog import load
+    from litebase_spark.engine import Engine
     from litebase_spark.streaming.sinks import ForeachBatchUpsertSink
 
     events = load(spark, sf_dir, "events").select("user_id", "event_type", "value")
     src = str(tmp_path / "src")
     events.repartition(3).write.parquet(src)
 
-    spark.sql("DROP TABLE IF EXISTS serving_totals")
-    spark.createDataFrame([], "user_id long, event_type string, value double") \
-        .write.saveAsTable("serving_totals")
+    eng = Engine(spark=spark)
+    eng.sql("DROP TABLE IF EXISTS serving_totals")
+    eng.sql("CREATE TABLE serving_totals (user_id BIGINT, event_type STRING, "
+            "value DOUBLE) USING PARQUET")
 
-    sink = ForeachBatchUpsertSink(spark, "serving_totals", keys=["user_id"])
+    sink = ForeachBatchUpsertSink(eng, "serving_totals", keys=["user_id"])
     stream = (
         spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1)
@@ -237,7 +239,7 @@ def test_foreach_batch_upsert_sink(spark, sf_dir, tmp_path):
     before = final.count()
     sink.apply(events.limit(5), sink.applied_batches[0])
     assert spark.table("serving_totals").count() == before
-    spark.sql("DROP TABLE serving_totals")
+    eng.sql("DROP TABLE serving_totals")
 
 
 def test_stream_stream_interval_join_equals_batch(spark, sf_dir):

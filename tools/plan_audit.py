@@ -175,8 +175,6 @@ _REVIEWED_CHECKPOINTS = {
     # --- bounded tables (cells / vocabulary / sketches / models) ---
     "stem_vocabulary": "BOUNDED vocab (term, stem) map — AQE join sizing "
     "+ pushdown guard over the unbarriered chain",
-    "with_porter_stem": "LOOP escape hatch (barrier_every, default 0 = "
-    "no barrier — dead code unless an optimizer collapses the chain)",
     "_cdf_percentiles": "BOUNDED cents-domain cell table",
     "stats_levene_test": "BOUNDED (arm, cents) cells",
     "stats_spearman_rho": "BOUNDED 50-row quantity cells",
