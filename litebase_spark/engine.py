@@ -828,14 +828,12 @@ class Engine:
                     continue
                 tname = fn[: -len(".parquet")]
                 # directory contents are untrusted input to this SQL
-                # text: ''-double quotes in the LOCATION literal and
-                # quote the identifier so a filename like "x'.parquet"
-                # can't break out of either
-                loc = f"{path}/{fn}".replace("'", "''")
+                # text: quote the LOCATION literal and the identifier so
+                # a filename like "x'.parquet" can't break out of either
                 self.spark.sql(
                     f"CREATE TABLE IF NOT EXISTS "
                     f"{quote_ident(alias)}.{quote_ident(tname)} "
-                    f"USING PARQUET LOCATION '{loc}'"
+                    f"USING PARQUET LOCATION {_sql_str(f'{path}/{fn}')}"
                 )
             return QueryResult([], [], 0, 0, 0.0, "DDL")
         m = self._DETACH_RE.match(sql_text)
@@ -1297,7 +1295,7 @@ class Engine:
             if plan.append:
                 image = self.spark.table(plan.table).unionByName(image)
             image.createOrReplaceTempView(plan.table)
-        elif not eager or obs.get["changes"] or plan.replaces:
+        else:
             staged = self._stage({plan.table: image}, plan.append)
             if obs.get["changes"] or plan.replaces:
                 self._publish(staged)

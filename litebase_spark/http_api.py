@@ -811,10 +811,6 @@ class QueryServer:
                     server.engine.create_database(name)
                 return self._ok({"database": name}, 201)
 
-            def _branches(self) -> list[str]:
-                # branches are the store's namespaces; main always exists
-                return sorted({"main", *server.store.namespaces()})
-
             def _database_show(self, r):
                 # DatabaseControllerShow: branches + tables of one db
                 cat = server.engine.spark.catalog
@@ -822,7 +818,7 @@ class QueryServer:
                 tables = sorted(t.name for t in cat.listTables(
                     r.db if r.db in dbs else None))
                 return self._ok({
-                    "database": r.db, "branches": self._branches(),
+                    "database": r.db, "branches": server.store.namespaces(),
                     "tables": tables,
                 })
 
@@ -836,10 +832,11 @@ class QueryServer:
                 if not isinstance(name, str) or not re.fullmatch(
                         r"[A-Za-z0-9_-]+", name):
                     return self._error(400, "name must be [A-Za-z0-9_-]+")
+                source = r.body.get("source", "main")
+                if source not in server.store.namespaces():
+                    return self._error(404, "no such source branch")
                 try:
-                    tables = server.store.create_branch(
-                        name, source=r.body.get("source", "main")
-                    )
+                    tables = server.store.create_branch(name, source=source)
                 except FileExistsError as e:
                     return self._error(409, str(e))
                 return self._ok({"branch": name, "tables": tables}, 201)
@@ -847,7 +844,7 @@ class QueryServer:
             def _branch_show(self, r):
                 # branch detail: main is the session catalog; another
                 # branch lists its store namespace's tables
-                if r.branch not in self._branches():
+                if r.branch not in server.store.namespaces():
                     return self._error(404, "no such branch")
                 tables = (
                     sorted(t.name for t in
@@ -919,7 +916,8 @@ class QueryServer:
 
             def _backup_file(self, backup_id: str) -> str | None:
                 """The archive of a backup, or None without one."""
-                path = os.path.join(server.store.backups_dir, f"{backup_id}.tar.gz")
+                path = os.path.join(server.store.backups_dir,
+                                    f"{backup_id}.tar.gz")
                 return path if os.path.exists(path) else None
 
             def _backup_list(self, r):
@@ -931,7 +929,8 @@ class QueryServer:
 
             def _backup_create(self, r):
                 backup_id = f"backup-{int(time.time() * 1e6)}"
-                path = os.path.join(server.store.backups_dir, f"{backup_id}.tar.gz")
+                path = os.path.join(server.store.backups_dir,
+                                    f"{backup_id}.tar.gz")
                 try:
                     server.store.backup_archive(
                         path, snapshot_id=r.body.get("snapshot_id")

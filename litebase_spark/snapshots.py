@@ -37,11 +37,13 @@ import json
 import os
 import shutil
 import tarfile
+import threading
 import time
 import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 STORE_DIR = "_store"  # store metadata under the root, beside the tables
@@ -75,14 +77,6 @@ def next_version(log: list[dict]) -> int:
     return log[-1]["version"] + 1 if log else 1
 
 
-def version_dir(root: str, namespace: str, table: str, version: int) -> str:
-    """A fresh directory for one version's data files; the suffix keeps
-    a failed or discarded attempt from colliding with the next one."""
-    return os.path.join(
-        root, table, f"{namespace}-tx{version:08d}-{uuid.uuid4().hex[:8]}"
-    )
-
-
 def _parquet_files(path: str, exclude=frozenset()) -> list[str]:
     return sorted(
         os.path.join(path, f) for f in os.listdir(path)
@@ -109,6 +103,8 @@ class VersionedStore:
         self.spark = spark
         self.root = os.path.abspath(root)
         self.backups_dir = os.path.join(self.root, STORE_DIR, "backups")
+        # publish and create_branch read, change and replace a manifest
+        self._manifest_lock = threading.Lock()
         for d in (self.backups_dir, os.path.join(self.root, STORE_DIR,
                                                  "snapshots")):
             os.makedirs(d, exist_ok=True)
@@ -119,10 +115,10 @@ class VersionedStore:
         return read_manifest(self.root, namespace).get(table, [])
 
     def namespaces(self) -> list[str]:
+        """Every namespace: main, and each branch forked from it."""
         d = os.path.dirname(_log_path(self.root, "main"))
-        if not os.path.isdir(d):
-            return []
-        return sorted(f[:-5] for f in os.listdir(d) if f.endswith(".json"))
+        logs = os.listdir(d) if os.path.isdir(d) else []
+        return sorted({"main", *(f[:-5] for f in logs if f.endswith(".json"))})
 
     def tables(self, namespace: str = "main") -> list[str]:
         """The namespace's tables whose head is not a DROP."""
@@ -137,9 +133,12 @@ class VersionedStore:
     # -- write side: stage, then publish or discard --------------------------
 
     def new_dir(self, table: str, namespace: str = "main") -> str:
-        """A fresh directory for the table's next version (not created)."""
-        return version_dir(self.root, namespace, table,
-                           next_version(self._log(table, namespace)))
+        """A fresh directory for the table's next version (not created);
+        the suffix keeps a failed or discarded attempt from colliding
+        with the next one."""
+        version = next_version(self._log(table, namespace))
+        return os.path.join(self.root, table, f"{namespace}-tx{version:08d}"
+                            f"-{uuid.uuid4().hex[:8]}")
 
     def stage_dir(
         self, table: str, path: str, schema: StructType,
@@ -164,9 +163,12 @@ class VersionedStore:
         return self._staged(table, namespace, head, path,
                             _parquet_files(path, exclude=before), df.schema)
 
-    def _staged(self, table, namespace, head, path, new, schema):
+    def _staged(
+        self, table: str, namespace: str, head: dict | None, path: str,
+        new: list[str], schema: StructType,
+    ) -> StagedVersion:
+        """The next version: `head`'s files (for an append) plus `new`."""
         entry = {
-            "version": next_version(self._log(table, namespace)),
             "mode": "append" if head else "overwrite",
             "files": (head["files"] if head else []) + new, "dir": path,
             "schema": schema.json(),
@@ -175,15 +177,18 @@ class VersionedStore:
 
     def publish(self, staged: list[StagedVersion]) -> None:
         """Append every staged version to its log with one manifest swap
-        per namespace — one swap for a commit of one namespace."""
+        per namespace, so the tables of a commit land together. Each
+        entry gets its version number and commit time here."""
         now = time.time()
-        for ns in {s.namespace for s in staged}:
-            manifest = read_manifest(self.root, ns)
-            for s in staged:
-                if s.namespace == ns:
-                    manifest.setdefault(s.table, []).append(
-                        {**s.entry, "ts": now})
-            write_manifest(self.root, ns, manifest)
+        with self._manifest_lock:
+            for ns in {s.namespace for s in staged}:
+                manifest = read_manifest(self.root, ns)
+                for s in staged:
+                    if s.namespace == ns:
+                        log = manifest.setdefault(s.table, [])
+                        s.entry.update(version=next_version(log), ts=now)
+                        log.append(s.entry)
+                write_manifest(self.root, ns, manifest)
 
     @staticmethod
     def discard(staged: list[StagedVersion]) -> None:
@@ -198,11 +203,8 @@ class VersionedStore:
     def drop(self, table: str, namespace: str = "main") -> None:
         """Commit a DROP: later snapshots leave the table out, earlier
         ones still restore it."""
-        log = self._log(table, namespace)
-        self.publish([StagedVersion(table, namespace, {
-            "version": next_version(log), "mode": "drop", "files": [],
-            "dir": None,
-        }, [])])
+        self.publish([StagedVersion(
+            table, namespace, {"mode": "drop", "files": [], "dir": None}, [])])
 
     def write(
         self,
@@ -322,9 +324,10 @@ class VersionedStore:
         data files. Writes to the branch diverge; the parent is
         untouched (reference: branch.go:15-30 forks metadata, restore.go
         forks files copy-on-write)."""
-        if os.path.exists(_log_path(self.root, branch)):
-            raise FileExistsError(f"branch {branch!r} already exists")
-        write_manifest(self.root, branch, read_manifest(self.root, source))
+        with self._manifest_lock:
+            if os.path.exists(_log_path(self.root, branch)):
+                raise FileExistsError(f"branch {branch!r} already exists")
+            write_manifest(self.root, branch, read_manifest(self.root, source))
         return self.tables(branch)
 
     # -- change data feed (file-level CDF over the manifest log) ------------
@@ -343,8 +346,6 @@ class VersionedStore:
         set algebra — zero data copied, and appends produce exactly the
         appended rows. (Writes are append/overwrite, so there are no
         row-level update_pre/postimage types to emit.)"""
-        from pyspark.sql import functions as F
-
         old = set(self.files(table, v_from, namespace))
         new = set(self.files(table, v_to, namespace))
         parts = [
@@ -484,8 +485,6 @@ class IncrementalAggView:
             return json.load(f)["version"]
 
     def _aggregate(self, df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
         return df.groupBy(self.key_col).agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(self.value_col).alias("total"),
@@ -493,8 +492,6 @@ class IncrementalAggView:
 
     def refresh(self) -> dict:
         """Returns {"mode": "full"|"incremental", "version": v}."""
-        from pyspark.sql import functions as F
-
         head = self.store.current_versions()[self.table]
         last = self._last_version()
         mode = "full"

@@ -32,12 +32,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from litebase_spark.snapshots import (
-    next_version,
-    read_manifest,
-    version_dir,
-    write_manifest,
-)
+from litebase_spark.snapshots import StagedVersion, VersionedStore
 
 
 class _FilePartition(InputPartition):
@@ -46,24 +41,13 @@ class _FilePartition(InputPartition):
 
 
 def _resolve_files(options: dict) -> list[str]:
-    table = options["table"]
-    ns = options.get("namespace", "main")
-    log = read_manifest(options["root"], ns).get(table, [])
-    if "version" in options:
-        v = int(options["version"])
-        for entry in log:
-            if entry["version"] == v:
-                return entry["files"]
-        raise LookupError(f"{ns}.{table} has no version {v}")
+    store = VersionedStore(None, options["root"])
+    table, ns = options["table"], options.get("namespace", "main")
     if "timestamp" in options:
-        ts = float(options["timestamp"])
-        cands = [e for e in log if e["ts"] <= ts]
-        if not cands:
-            raise LookupError(f"no version of {ns}.{table} at {ts}")
-        return cands[-1]["files"]
-    if not log:
-        raise LookupError(f"unknown table {ns}.{table}")
-    return log[-1]["files"]
+        version = store.version_at(table, float(options["timestamp"]), ns)
+    else:
+        version = int(options["version"]) if "version" in options else None
+    return store.files(table, version, ns)
 
 
 class VersionedReader(DataSourceReader):
@@ -104,12 +88,12 @@ class VersionedWriter(DataSourceWriter):
         self.schema_ = schema
         self.options = dict(options)
         self.overwrite = overwrite
-        root, table = self.options["root"], self.options["table"]
         self.ns = self.options.get("namespace", "main")
-        prev = read_manifest(root, self.ns).get(table, [])
-        self.version = next_version(prev)
-        self.prev_files = prev[-1]["files"] if prev else []
-        self.txdir = version_dir(root, self.ns, table, self.version)
+        # the store holds a lock, which cannot travel to the write tasks
+        store = VersionedStore(None, self.options["root"])
+        head = store.head(self.options["table"], self.ns)
+        self.prev_files = head["files"] if head else []
+        self.txdir = store.new_dir(self.options["table"], self.ns)
         os.makedirs(self.txdir, exist_ok=True)
 
     def write(self, iterator):
@@ -134,21 +118,14 @@ class VersionedWriter(DataSourceWriter):
         return _FilesCommit([path])
 
     def commit(self, messages):
-        import time as _time
-
-        root, table = self.options["root"], self.options["table"]
         new_files = sorted(f for m in messages for f in m.files)
         files = new_files if self.overwrite else self.prev_files + new_files
-        manifest = read_manifest(root, self.ns)
-        manifest.setdefault(table, []).append(
-            {
-                "version": self.version,
-                "mode": "overwrite" if self.overwrite else "append",
-                "ts": _time.time(),
-                "files": files,
-            }
-        )
-        write_manifest(root, self.ns, manifest)
+        VersionedStore(None, self.options["root"]).publish([StagedVersion(
+            self.options["table"], self.ns,
+            {"mode": "overwrite" if self.overwrite else "append",
+             "files": files},
+            new_files,
+        )])
 
     def abort(self, messages):
         for m in messages:

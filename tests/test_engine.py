@@ -952,6 +952,13 @@ def test_attach_detach_database(engine, sf_dir):
         "JOIN customer c ON o.o_custkey = c.c_custkey"
     ).rows[0].n
     assert r == n
+    # a write to an attached table commits its whole image as a store
+    # version and leaves the attached directory as it was
+    n = eng.sql("SELECT count(*) AS n FROM att.region").rows[0].n
+    eng.sql("INSERT INTO att.region VALUES (99, 'X')")
+    assert eng.sql("SELECT count(*) AS n FROM att.region").rows[0].n == n + 1
+    assert eng.store.head("att.region") is not None
+    assert eng.spark.read.parquet(f"{sf_dir}/region.parquet").count() == n
     eng.sql("DETACH att")
     with pytest.raises(Exception):
         eng.sql("SELECT count(*) AS n FROM att.orders")

@@ -382,6 +382,11 @@ def test_admin_routes_snapshots_backups_restore_keys(spark, tmp_path):
         code, body = _call(srv, "GET", "/v1/databases/main/dev",
                            token="admin:s3cret")
         assert code == 200 and body["data"]["tables"] == ["adm_t"]
+        for bad, want in (({"name": "dev"}, 409), ({"name": "../x"}, 400),
+                          ({"name": "qa", "source": "nope"}, 404)):
+            code, _ = _call(srv, "POST", "/v1/databases/main/branches", bad,
+                            token="admin:s3cret")
+            assert code == want, bad
         # access-key CRUD + use
         code, body = _call(srv, "POST", "/v1/access-keys",
                            {"access_key_id": "svc", "secret": "pw",

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from litebase_spark.catalog import load
 from litebase_spark.engine import Engine
+from litebase_spark.snapshots import read_manifest
 
 
 @pytest.fixture()
@@ -118,6 +119,39 @@ def test_versioned_append_reuses_prior_files(spark, sf_dir, tmp_path):
     assert vs.read("nation", version=1).count() == nation.filter(
         F.col("n_nationkey") < 10
     ).count()
+
+
+def test_concurrent_publishes_lose_no_version(tmp_path):
+    """Commits from several threads into one namespace each land, with
+    one version number per commit of a table: publish reads, changes and
+    replaces the manifest under the store's lock."""
+    import sys
+    import threading
+
+    from litebase_spark.snapshots import StagedVersion, VersionedStore
+
+    vs = VersionedStore(None, str(tmp_path / "vstore"))
+
+    def work(i):
+        for _ in range(20):
+            vs.publish([StagedVersion(f"t{i % 3}", "main", {
+                "mode": "overwrite", "files": [], "dir": None}, [])])
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(i,))
+                   for i in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert vs.current_versions() == {"t0": 80, "t1": 80, "t2": 80}
+    for log in read_manifest(vs.root, "main").values():
+        assert [e["version"] for e in log] == list(range(1, 81))
 
 
 def test_versioned_pitr_and_zero_copy_restore(spark, sf_dir, tmp_path):
