@@ -503,7 +503,8 @@ def serve_main(argv: list[str]) -> int:
         "--store-root", default=None,
         help="directory of the versioned table store that every write "
              "commits to and snapshots, branches, backups and restore read "
-             "(default: spark.sql.warehouse.dir)")
+             "(default: spark.sql.warehouse.dir); it must be on the "
+             "local filesystem")
     a = p.parse_args(argv)
     srv = build_server(a.port, a.admin_key, a.store_root)
     srv.start()

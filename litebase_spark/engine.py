@@ -349,6 +349,20 @@ def _sql_str(text: str) -> str:
     return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def _local_root(uri: str, default_fs: str | None) -> str:
+    """The driver-local path of a store root. The store lists and moves
+    its files with os calls while Spark writes them through Hadoop, so
+    both must reach the same disk: a root on another filesystem (an
+    hdfs:// or s3a:// warehouse, or a bare path under such an
+    fs.defaultFS) is refused."""
+    url = urlparse(uri)
+    if (url.scheme or urlparse(default_fs or "file:///").scheme) != "file":
+        raise ValueError(f"store root {uri!r} is not on the local filesystem"
+                         f" (fs.defaultFS={default_fs}); pass a local "
+                         "store_root or a file: warehouse")
+    return url.path if url.scheme else uri
+
+
 def _rewrite_excluded(expr: str) -> str:
     """`excluded.col` (the proposed insert row, SQLite upsert scope) ->
     the join's `__exc_col` column."""
@@ -398,11 +412,10 @@ class Engine:
         self._autotxn: "Transaction | None" = None
         # the one writer of table data; tables of the session's database
         # are its "main" namespace
-        self.store = VersionedStore(
-            self.spark,
-            store_root
-            or urlparse(self.spark.conf.get("spark.sql.warehouse.dir")).path,
-        )
+        self.store = VersionedStore(self.spark, _local_root(
+            store_root or self.spark.conf.get("spark.sql.warehouse.dir"),
+            self.spark.sparkContext._jsc.hadoopConfiguration().get(
+                "fs.defaultFS")))
         # declared PRIMARY KEYs (parsed from CREATE TABLE or declared
         # explicitly) — the conflict target for INSERT OR REPLACE/IGNORE
         # and bare ON CONFLICT, like SQLite's rowid/unique machinery
@@ -1666,14 +1679,13 @@ class Engine:
         version, where a CTAS writes its rows. DROP TABLE leaves an
         external table's files and commits a DROP, so earlier snapshots
         still restore the rows. A CREATE the store does not write stays
-        a Spark table that the Engine refuses to write. None for other
-        DDL."""
+        a plain Spark table. None for other DDL."""
         done = QueryResult([], [], 0, 0, 0.0, "DDL")
         m = self._DROP_TABLE_RE.match(sql_text)
         if m:
             self.spark.sql(sql_text)
             key, _, meta = self._table(m.group(1))
-            if meta is None and self.store.head(key):
+            if meta is None and key in self.store.tables():
                 self.store.drop(key)
             return done
         m = self._CREATE_TABLE_RE.match(sql_text)
@@ -1688,17 +1700,21 @@ class Engine:
             return done
         path = self.store.new_dir(key)
         os.makedirs(path)
+        created = False
         try:
             self.spark.sql(
                 f"CREATE TABLE {name}{clauses} LOCATION {_sql_str(path)}"
                 + ("" if query is None else f" AS {query}"),
                 args=args or None,
             )
+            created = True
+            self.store.publish([self.store.stage_dir(
+                key, path, self.spark.table(name).schema)])
         except BaseException:
-            shutil.rmtree(path)
+            if created:  # external: the DROP leaves the files to rmtree
+                self.spark.sql(f"DROP TABLE {name}")
+            shutil.rmtree(path, ignore_errors=True)
             raise
-        self.store.publish([
-            self.store.stage_dir(key, path, self.spark.table(name).schema)])
         return done
 
     def _table(self, table: str):
@@ -1715,25 +1731,57 @@ class Engine:
         meta = cat.getTableMetadata(ident) if cat.tableExists(ident) else None
         return key, f"{quote_ident(db)}.{quote_ident(name)}", meta
 
+    def _writable(self, table: str):
+        """`_table` of a table the store can write: an unpartitioned,
+        unbucketed parquet table. A managed one is adopted first."""
+        key, name, meta = self._table(table)
+        if meta is None or meta.tableType().name() == "VIEW":
+            raise ValueError(f"cannot write {table}: no such table")
+        provider = meta.provider()
+        if (not provider.isDefined() or provider.get().lower() != "parquet"
+                or meta.partitionColumnNames().nonEmpty()
+                or meta.bucketSpec().isDefined()):
+            raise ValueError(
+                f"cannot write {table}: the store writes unpartitioned, "
+                "unbucketed parquet tables")
+        if meta.tableType().name() == "MANAGED":
+            meta = self._adopt(key, name, meta)
+        return key, name, meta
+
+    def _adopt(self, key: str, name: str, meta):
+        """Make a managed table an EXTERNAL one over the same directory,
+        whose files become the table's next store version: Spark's DROP
+        of a managed table deletes its directory and RENAME moves it,
+        which would take the store's versions along. The entry is first
+        re-pointed at an empty directory, which the DROP deletes.
+        Returns the new catalog metadata."""
+        location = meta.location().getPath()
+        empty = self.store.new_dir(key)
+        os.makedirs(empty)
+        self._set_location(name, empty)
+        self.spark.sql(f"DROP TABLE {name}")
+        self.spark.sql(f"CREATE TABLE {name} ({meta.schema().toDDL()}) "
+                       f"USING parquet LOCATION {_sql_str(location)}")
+        os.makedirs(location, exist_ok=True)
+        self.store.publish([self.store.stage_dir(
+            key, location, self.spark.table(name).schema)])
+        return self._table(name)[2]
+
+    def _set_location(self, name: str, path: str) -> None:
+        self.spark.sql(f"ALTER TABLE {name} SET LOCATION {_sql_str(path)}")
+
     def _stage(
         self, images: dict[str, DataFrame], append: bool = False
     ) -> list[tuple[str, StagedVersion]]:
         """Write each table's image (its new rows, when `append`) as an
-        unpublished store version. A table located elsewhere than its
-        store head, such as an ATTACHed one, is written whole. Only an
-        EXTERNAL parquet table can be written: a managed table's DROP
-        would delete its version."""
+        unpublished store version. An append joins the head's directory
+        only when the catalog table reads it; a table located elsewhere,
+        such as an ATTACHed one, is written whole."""
         staged = []
         try:
             for table, df in images.items():
-                key, name, meta = self._table(table)
-                kind = meta and (f"{meta.tableType().name()} "
-                                 f"{meta.provider().get()}").lower()
-                if kind != "external parquet":
-                    raise ValueError(f"cannot write {table} ({kind}): the "
-                                     "Engine writes the tables it creates")
-                head = self.store.head(key) or {}
-                held = head.get("dir") == os.path.normpath(
+                key, name, meta = self._writable(table)
+                held = self.store.head_dir(key) == os.path.normpath(
                     meta.location().getPath())
                 if append and not held:
                     df = self.spark.table(name).unionByName(df)
@@ -1745,15 +1793,28 @@ class Engine:
         return staged
 
     def _publish(self, staged: list[tuple[str, StagedVersion]]) -> None:
-        """Make staged versions their tables' heads with one manifest
-        swap, then point each catalog entry at its head directory."""
-        self.store.publish([s for _, s in staged])
+        """Make staged versions their tables' heads: point each
+        rewritten table's catalog entry at its new directory, then swap
+        the manifest (an append's files join the directory the entry
+        already reads). If either step fails, the entries are pointed
+        back and the staged files deleted: the commit lands whole or
+        not at all."""
+        moved = []
+        try:
+            for name, s in staged:
+                if not s.appends:
+                    was = self._table(name)[2].location().getPath()
+                    self._set_location(name, s.path)
+                    moved.append((name, was))
+            self.store.publish([s for _, s in staged])
+        except BaseException:
+            for name, was in reversed(moved):
+                self._set_location(name, was)
+            self.store.discard([s for _, s in staged])
+            raise
         for name, s in staged:
-            if s.entry["mode"] == "append":  # new files, same directory
+            if s.appends:
                 self.spark.catalog.refreshTable(name)
-            else:
-                self.spark.sql(f"ALTER TABLE {name} SET LOCATION "
-                               f"{_sql_str(s.entry['dir'])}")
 
     def commit(self, images: dict[str, DataFrame]) -> None:
         """Replace each table's rows with its image in one store commit:

@@ -11,7 +11,10 @@ commits, shallow clone and RESTORE/time travel):
 
   * a version is a FILE LIST under ``<root>/<table>/``; an append adds
     files to the head version's directory, a rewrite writes a fresh
-    directory, and no data file is modified or deleted by a commit;
+    directory, and no data file is modified or deleted by a commit. A
+    log entry lists only the files its version added, so an append
+    costs the manifest its own files, and a version's list runs back to
+    the last rewrite;
   * a namespace's manifest (``_store/log/<namespace>.json``) holds the
     version log of each of its tables and is replaced by one atomic
     rename, so a commit of several tables lands whole or not at all;
@@ -40,13 +43,18 @@ import tarfile
 import threading
 import time
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 STORE_DIR = "_store"  # store metadata under the root, beside the tables
+
+
+# one manifest lock per store root: every store object on a root
+# serializes its commits with every other one in the process
+_LOCKS: dict[str, threading.Lock] = {}
 
 
 def _log_path(root: str, namespace: str) -> str:
@@ -77,11 +85,34 @@ def next_version(log: list[dict]) -> int:
     return log[-1]["version"] + 1 if log else 1
 
 
-def _parquet_files(path: str, exclude=frozenset()) -> list[str]:
-    return sorted(
-        os.path.join(path, f) for f in os.listdir(path)
-        if f.endswith(".parquet") and f not in exclude
-    )
+def _entry(
+    version: int, ts: float, mode: str, files: list[str],
+    path: str | None = None, schema: str | None = None,
+) -> dict:
+    """A version log entry. `files` are the files the version added: an
+    append's join those of the versions before it, back to the last
+    overwrite (its base), and it keeps the base's schema. `dir`, when
+    set, holds exactly the version's files, so a catalog table can be
+    located there."""
+    return {"version": version, "ts": ts, "mode": mode, "files": files,
+            "dir": path, "schema": schema}
+
+
+def _base(log: list[dict], i: int) -> int:
+    """The index of the overwrite that version `log[i]` builds on."""
+    while i > 0 and log[i]["mode"] == "append":
+        i -= 1
+    return i
+
+
+def _resolve(log: list[dict], i: int) -> list[str]:
+    """The whole file list of version `log[i]`."""
+    return [f for e in log[_base(log, i):i + 1] for f in e["files"]]
+
+
+def _parquet_files(path: str) -> list[str]:
+    return sorted(os.path.join(path, f) for f in os.listdir(path)
+                  if f.endswith(".parquet"))
 
 
 @dataclass
@@ -91,8 +122,17 @@ class StagedVersion:
 
     table: str
     namespace: str
-    entry: dict  # the log entry publish appends
-    written: list[str]  # the files this version added
+    mode: str  # overwrite | append | drop
+    path: str | None  # the directory its files were written to
+    files: list[str]
+    schema: str | None = None  # StructType JSON
+    version: int | None = None  # given by publish
+    # an append's files as moved into the head's directory by publish
+    landed: list[str] = field(default_factory=list)
+
+    @property
+    def appends(self) -> bool:
+        return self.mode == "append"
 
 
 class VersionedStore:
@@ -103,11 +143,15 @@ class VersionedStore:
         self.spark = spark
         self.root = os.path.abspath(root)
         self.backups_dir = os.path.join(self.root, STORE_DIR, "backups")
-        # publish and create_branch read, change and replace a manifest
-        self._manifest_lock = threading.Lock()
         for d in (self.backups_dir, os.path.join(self.root, STORE_DIR,
                                                  "snapshots")):
             os.makedirs(d, exist_ok=True)
+
+    @property
+    def _lock(self) -> threading.Lock:
+        """Held by publish and create_branch while they read, change and
+        replace a manifest."""
+        return _LOCKS.setdefault(self.root, threading.Lock())
 
     # -- version log --------------------------------------------------------
 
@@ -124,87 +168,104 @@ class VersionedStore:
         """The namespace's tables whose head is not a DROP."""
         return sorted(self.current_versions(namespace))
 
-    def head(self, table: str, namespace: str = "main") -> dict | None:
-        """The table's current version entry; None when it has none or
-        was dropped."""
+    def head_dir(self, table: str, namespace: str = "main") -> str | None:
+        """The directory holding exactly the head version's files; None
+        when the table has no head or its files span directories."""
         log = self._log(table, namespace)
-        return log[-1] if log and log[-1]["mode"] != "drop" else None
+        return log[-1]["dir"] if log and log[-1]["mode"] != "drop" else None
 
     # -- write side: stage, then publish or discard --------------------------
 
-    def new_dir(self, table: str, namespace: str = "main") -> str:
-        """A fresh directory for the table's next version (not created);
-        the suffix keeps a failed or discarded attempt from colliding
-        with the next one."""
+    def new_dir(
+        self, table: str, namespace: str = "main", append: bool = False
+    ) -> str:
+        """A fresh directory for the files of the table's next version
+        (not created). An append's go to a hidden directory inside the
+        head's directory (table scans and streams skip names that start
+        with _), and publish moves them up; anything else gets a version
+        directory of its own. The suffix keeps a failed or discarded
+        attempt from colliding with the next one."""
+        head = self.head_dir(table, namespace) if append else None
+        if head:
+            return os.path.join(head, f"_stage-{uuid.uuid4().hex[:8]}")
         version = next_version(self._log(table, namespace))
         return os.path.join(self.root, table, f"{namespace}-tx{version:08d}"
                             f"-{uuid.uuid4().hex[:8]}")
 
     def stage_dir(
-        self, table: str, path: str, schema: StructType,
-        namespace: str = "main",
+        self, table: str, path: str, schema: StructType | None,
+        append: bool = False, namespace: str = "main",
     ) -> StagedVersion:
-        """Stage the files already under `path` (a `new_dir`) as the
-        table's next version, replacing its file list."""
-        return self._staged(table, namespace, None, path,
-                            _parquet_files(path), schema)
+        """Stage the parquet files under `path` (a `new_dir`) as the
+        table's next version: added to the head's files when `append`,
+        replacing them otherwise."""
+        return StagedVersion(
+            table, namespace, "append" if append else "overwrite", path,
+            _parquet_files(path), schema.json() if schema else None)
 
     def stage(
         self, table: str, df: DataFrame, append: bool = False,
         namespace: str = "main",
     ) -> StagedVersion:
-        """Write `df` as the table's next version, unpublished: an
-        append adds its files to the head version's directory, anything
-        else writes a fresh directory."""
-        head = self.head(table, namespace) if append else None
-        path = (head or {}).get("dir") or self.new_dir(table, namespace)
-        before = set(os.listdir(path)) if os.path.isdir(path) else set()
-        df.write.mode("append").parquet(path)
-        return self._staged(table, namespace, head, path,
-                            _parquet_files(path, exclude=before), df.schema)
-
-    def _staged(
-        self, table: str, namespace: str, head: dict | None, path: str,
-        new: list[str], schema: StructType,
-    ) -> StagedVersion:
-        """The next version: `head`'s files (for an append) plus `new`."""
-        entry = {
-            "mode": "append" if head else "overwrite",
-            "files": (head["files"] if head else []) + new, "dir": path,
-            "schema": schema.json(),
-        }
-        return StagedVersion(table, namespace, entry, new)
+        """Write `df` to a fresh directory as the table's next version,
+        unpublished."""
+        path = self.new_dir(table, namespace, append)
+        df.write.parquet(path)
+        return self.stage_dir(table, path, df.schema, append, namespace)
 
     def publish(self, staged: list[StagedVersion]) -> None:
         """Append every staged version to its log with one manifest swap
         per namespace, so the tables of a commit land together. Each
-        entry gets its version number and commit time here."""
+        version gets its number and commit time here. An append's files
+        first move into the head's directory when it has one, which is
+        where the catalog table reads; an append to a table without a
+        head becomes its first version."""
         now = time.time()
-        with self._manifest_lock:
+        with self._lock:
             for ns in {s.namespace for s in staged}:
                 manifest = read_manifest(self.root, ns)
-                for s in staged:
-                    if s.namespace == ns:
-                        log = manifest.setdefault(s.table, [])
-                        s.entry.update(version=next_version(log), ts=now)
-                        log.append(s.entry)
+                for s in (s for s in staged if s.namespace == ns):
+                    log = manifest.setdefault(s.table, [])
+                    s.version = next_version(log)
+                    log.append(self._commit_entry(s, log, now))
                 write_manifest(self.root, ns, manifest)
+        for s in staged:  # left behind: only Spark's markers and checksums
+            if s.landed:
+                shutil.rmtree(s.path, ignore_errors=True)
+
+    @staticmethod
+    def _commit_entry(s: StagedVersion, log: list[dict], now: float) -> dict:
+        """The entry `s` appends to `log`, moving an append's files into
+        the head's directory."""
+        head = log[-1] if log and log[-1]["mode"] != "drop" else None
+        mode, files, path = s.mode, s.files, s.path
+        if mode == "append" and head is None:
+            mode = "overwrite"
+        elif mode == "append":
+            path = head["dir"]
+            if path:
+                s.landed = [os.path.join(path, os.path.basename(f))
+                            for f in files]
+                for src, dst in zip(files, s.landed):
+                    os.rename(src, dst)
+                files = s.landed
+        return _entry(s.version, now, mode, files, path,
+                      None if mode == "append" else s.schema)
 
     @staticmethod
     def discard(staged: list[StagedVersion]) -> None:
         """Delete the files of versions that will not be published."""
         for s in staged:
-            if s.entry["mode"] == "append":
-                for f in s.written:
+            for f in s.landed:
+                if os.path.exists(f):
                     os.remove(f)
-            else:
-                shutil.rmtree(s.entry["dir"], ignore_errors=True)
+            if s.path:
+                shutil.rmtree(s.path, ignore_errors=True)
 
     def drop(self, table: str, namespace: str = "main") -> None:
         """Commit a DROP: later snapshots leave the table out, earlier
         ones still restore it."""
-        self.publish([StagedVersion(
-            table, namespace, {"mode": "drop", "files": [], "dir": None}, [])])
+        self.publish([StagedVersion(table, namespace, "drop", None, [])])
 
     def write(
         self,
@@ -219,38 +280,53 @@ class VersionedStore:
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode must be overwrite|append, got {mode!r}")
         staged = self.stage(table, df, mode == "append", namespace)
-        self.publish([staged])
-        return staged.entry["version"]
+        try:
+            self.publish([staged])
+        except BaseException:
+            self.discard([staged])
+            raise
+        return staged.version
 
     # -- read side ----------------------------------------------------------
 
-    def _entry(self, table: str, version: int | None, namespace: str) -> dict:
+    def _find(
+        self, table: str, version: int | None, namespace: str
+    ) -> tuple[list[dict], int]:
+        """(log, index) of a version; the head when `version` is None."""
         log = self._log(table, namespace)
         if not log:
             raise LookupError(f"unknown table {namespace}.{table}")
-        entry = log[-1] if version is None else next(
-            (e for e in log if e["version"] == version), None)
-        if entry is None or entry["mode"] == "drop":
+        i = len(log) - 1 if version is None else next(
+            (i for i, e in enumerate(log) if e["version"] == version), None)
+        if i is None or log[i]["mode"] == "drop":
             raise LookupError(
                 f"{namespace}.{table} has no version {version or 'head'}")
-        return entry
+        return log, i
 
     def files(
         self, table: str, version: int | None = None, namespace: str = "main"
     ) -> list[str]:
-        return self._entry(table, version, namespace)["files"]
+        return _resolve(*self._find(table, version, namespace))
+
+    def schema(
+        self, table: str, version: int | None = None, namespace: str = "main"
+    ) -> StructType | None:
+        """The version's schema; None when its writer recorded none."""
+        log, i = self._find(table, version, namespace)
+        schema = log[_base(log, i)]["schema"]
+        return StructType.fromJson(json.loads(schema)) if schema else None
 
     def read(
         self, table: str, version: int | None = None, namespace: str = "main"
     ) -> DataFrame:
         """Time travel: read a pinned version's file list in place."""
-        entry = self._entry(table, version, namespace)
-        if not entry.get("schema"):
-            return self.spark.read.parquet(*entry["files"])
-        schema = StructType.fromJson(json.loads(entry["schema"]))
-        if not entry["files"]:
+        files = self.files(table, version, namespace)
+        schema = self.schema(table, version, namespace)
+        if schema is None:
+            return self.spark.read.parquet(*files)
+        if not files:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*entry["files"])
+        return self.spark.read.schema(schema).parquet(*files)
 
     def version_at(
         self, table: str, ts: float, namespace: str = "main"
@@ -324,10 +400,14 @@ class VersionedStore:
         data files. Writes to the branch diverge; the parent is
         untouched (reference: branch.go:15-30 forks metadata, restore.go
         forks files copy-on-write)."""
-        with self._manifest_lock:
+        with self._lock:
             if os.path.exists(_log_path(self.root, branch)):
                 raise FileExistsError(f"branch {branch!r} already exists")
-            write_manifest(self.root, branch, read_manifest(self.root, source))
+            # the source keeps its directories: a branch append never
+            # joins a directory the source's catalog tables read
+            write_manifest(self.root, branch, {
+                t: [dict(e, dir=None) for e in log]
+                for t, log in read_manifest(self.root, source).items()})
         return self.tables(branch)
 
     # -- change data feed (file-level CDF over the manifest log) ------------
@@ -383,20 +463,22 @@ class VersionedStore:
         ns = snap["namespace"]
         with tarfile.open(archive, "w:gz") as tar:
             manifest = dict(snap)
-            entries = {t: self._entry(t, v, ns)
-                       for t, v in snap["versions"].items()}
+            files = {t: self.files(t, v, ns)
+                     for t, v in snap["versions"].items()}
             manifest["files"] = {
-                t: [os.path.relpath(f, self.root) for f in e["files"]]
-                for t, e in entries.items()
+                t: [os.path.relpath(f, self.root) for f in fs]
+                for t, fs in files.items()
             }
-            manifest["schemas"] = {t: e.get("schema")
-                                   for t, e in entries.items()}
+            schemas = {t: self.schema(t, v, ns)
+                       for t, v in snap["versions"].items()}
+            manifest["schemas"] = {t: sc and sc.json()
+                                   for t, sc in schemas.items()}
             payload = json.dumps(manifest).encode()
             info = tarfile.TarInfo("BACKUP_MANIFEST.json")
             info.size = len(payload)
             tar.addfile(info, io.BytesIO(payload))
-            for t, v in snap["versions"].items():
-                for f in self.files(t, v, ns):
+            for fs in files.values():
+                for f in fs:
                     tar.add(f, arcname=os.path.relpath(f, self.root))
         return archive
 
@@ -415,11 +497,9 @@ class VersionedStore:
             tar.extractall(root, filter="data")
         store = cls(spark, root)
         write_manifest(store.root, "main", {
-            t: [{
-                "version": 1, "mode": "overwrite", "ts": time.time(),
-                "files": [os.path.join(store.root, r) for r in rels],
-                "schema": manifest.get("schemas", {}).get(t),
-            }]
+            t: [_entry(1, time.time(), "overwrite",
+                       [os.path.join(store.root, r) for r in rels],
+                       schema=manifest.get("schemas", {}).get(t))]
             for t, rels in manifest["files"].items()
         })
         return store
@@ -439,7 +519,8 @@ class VersionedStore:
         logged: set[str] = set()
         for ns in self.namespaces():
             for log in read_manifest(self.root, ns).values():
-                live.update(log[-1]["files"])
+                if log[-1]["mode"] != "drop":
+                    live.update(_resolve(log, len(log) - 1))
                 for e in log:
                     logged.update(e["files"])
         deleted = sorted(f for f in logged - live if os.path.exists(f))

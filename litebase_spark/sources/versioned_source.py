@@ -22,6 +22,7 @@ manifest.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -32,7 +33,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from litebase_spark.snapshots import StagedVersion, VersionedStore
+from litebase_spark.snapshots import VersionedStore
 
 
 class _FilePartition(InputPartition):
@@ -70,30 +71,23 @@ class VersionedReader(DataSourceReader):
         yield from table.to_batches()
 
 
-class _FilesCommit(WriterCommitMessage):
-    def __init__(self, files: list[str]) -> None:
-        self.files = files
-
-
 class VersionedWriter(DataSourceWriter):
     """Write side: every task writes its rows to one immutable parquet
-    file in a fresh transaction directory and reports the path as its
-    commit message; the DRIVER's commit() appends exactly one version
-    entry to the namespace manifest — the same two-phase commit the manifest
-    design gives VersionedStore.write, now reachable through
-    ``df.write.format("versioned")``. An aborted job leaves only
-    unreferenced files (vacuum-able), never a torn manifest."""
+    file in a fresh transaction directory; the DRIVER's commit() stages
+    that directory's files as one version and publishes it — the same
+    two-phase commit the manifest design gives VersionedStore.write,
+    now reachable through
+    ``df.write.format("versioned")``. An aborted job deletes its
+    directory, and never leaves a torn manifest."""
 
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
         self.schema_ = schema
         self.options = dict(options)
         self.overwrite = overwrite
         self.ns = self.options.get("namespace", "main")
-        # the store holds a lock, which cannot travel to the write tasks
-        store = VersionedStore(None, self.options["root"])
-        head = store.head(self.options["table"], self.ns)
-        self.prev_files = head["files"] if head else []
-        self.txdir = store.new_dir(self.options["table"], self.ns)
+        self.store = VersionedStore(None, self.options["root"])
+        self.txdir = self.store.new_dir(self.options["table"], self.ns,
+                                        not overwrite)
         os.makedirs(self.txdir, exist_ok=True)
 
     def write(self, iterator):
@@ -107,7 +101,7 @@ class VersionedWriter(DataSourceWriter):
         names = [f.name for f in self.schema_.fields]
         rows = [[getattr(r, n) for n in names] for r in iterator]
         if not rows:
-            return _FilesCommit([])
+            return WriterCommitMessage()
         cols = list(zip(*rows))
         table = pa.Table.from_arrays(
             [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
@@ -115,23 +109,19 @@ class VersionedWriter(DataSourceWriter):
         )
         path = os.path.join(self.txdir, f"part-{uuid.uuid4().hex}.parquet")
         pq.write_table(table, path)
-        return _FilesCommit([path])
+        return WriterCommitMessage()
 
     def commit(self, messages):
-        new_files = sorted(f for m in messages for f in m.files)
-        files = new_files if self.overwrite else self.prev_files + new_files
-        VersionedStore(None, self.options["root"]).publish([StagedVersion(
-            self.options["table"], self.ns,
-            {"mode": "overwrite" if self.overwrite else "append",
-             "files": files},
-            new_files,
-        )])
+        staged = self.store.stage_dir(self.options["table"], self.txdir,
+                                      self.schema_, not self.overwrite, self.ns)
+        try:
+            self.store.publish([staged])
+        except BaseException:
+            self.store.discard([staged])
+            raise
 
     def abort(self, messages):
-        for m in messages:
-            for f in getattr(m, "files", []):
-                if os.path.exists(f):
-                    os.remove(f)
+        shutil.rmtree(self.txdir, ignore_errors=True)
 
 
 class VersionedDataSource(DataSource):

@@ -123,19 +123,20 @@ def test_versioned_append_reuses_prior_files(spark, sf_dir, tmp_path):
 
 def test_concurrent_publishes_lose_no_version(tmp_path):
     """Commits from several threads into one namespace each land, with
-    one version number per commit of a table: publish reads, changes and
-    replaces the manifest under the store's lock."""
+    one version number per commit of a table, also when the threads use
+    different store objects on one root: publish reads, changes and
+    replaces the manifest under the root's lock."""
     import sys
     import threading
 
     from litebase_spark.snapshots import StagedVersion, VersionedStore
 
-    vs = VersionedStore(None, str(tmp_path / "vstore"))
+    stores = [VersionedStore(None, str(tmp_path / "vstore")) for _ in range(2)]
 
     def work(i):
         for _ in range(20):
-            vs.publish([StagedVersion(f"t{i % 3}", "main", {
-                "mode": "overwrite", "files": [], "dir": None}, [])])
+            stores[i % 2].publish([StagedVersion(
+                f"t{i % 3}", "main", "overwrite", None, [])])
 
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
@@ -149,9 +150,42 @@ def test_concurrent_publishes_lose_no_version(tmp_path):
     finally:
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
-    assert vs.current_versions() == {"t0": 80, "t1": 80, "t2": 80}
-    for log in read_manifest(vs.root, "main").values():
+    assert stores[0].current_versions() == {"t0": 80, "t1": 80, "t2": 80}
+    for log in read_manifest(stores[0].root, "main").values():
         assert [e["version"] for e in log] == list(range(1, 81))
+
+
+def test_manifest_grows_linearly_with_appends(tmp_path):
+    """An append's log entry lists only the files it added: after 300
+    one-file appends the manifest holds each file once, and every
+    version still resolves to its whole file list in the head's
+    directory."""
+    import os
+
+    from litebase_spark.snapshots import VersionedStore, _log_path
+
+    vs = VersionedStore(None, str(tmp_path / "vstore"))
+
+    def commit(i, append):
+        path = vs.new_dir("t", append=append)
+        os.makedirs(path)
+        open(os.path.join(path, f"part-{i:04d}.parquet"), "w").close()
+        vs.publish([vs.stage_dir("t", path, None, append)])
+
+    n = 300
+    commit(0, append=False)
+    for i in range(1, n + 1):
+        commit(i, append=True)
+    size = os.path.getsize(_log_path(vs.root, "main"))
+    per_entry = size / (n + 1)
+    assert per_entry < 400, per_entry  # listing every prior file: ~20 KB
+    head = vs.head_dir("t")
+    assert vs.files("t") == [os.path.join(head, f"part-{i:04d}.parquet")
+                             for i in range(n + 1)]
+    assert len(vs.files("t", version=10)) == 10
+    # the staging directories are gone; the head's holds every file
+    assert os.listdir(os.path.dirname(head)) == [os.path.basename(head)]
+    assert len(os.listdir(head)) == n + 1
 
 
 def test_versioned_pitr_and_zero_copy_restore(spark, sf_dir, tmp_path):
@@ -412,3 +446,134 @@ def test_failed_two_table_commit_leaves_both_tables_unchanged(spark, monkeypatch
         monkeypatch.undo()
         for t in ("st_c1", "st_c2"):
             eng.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def _location(eng, table):
+    return eng._table(table)[2].location().getPath()
+
+
+def test_failed_publish_leaves_table_and_store_unchanged(spark, monkeypatch):
+    """A commit whose manifest swap raises deletes what it staged and
+    points the catalog entry back: the table and the store's file list
+    stay as they were, for an append and a rewrite alike."""
+    import os
+
+    from litebase_spark import snapshots
+
+    eng = Engine(spark=spark)
+    eng.sql("DROP TABLE IF EXISTS st_pub")
+    eng.sql("CREATE TABLE st_pub (id BIGINT) USING PARQUET")
+    try:
+        eng.sql("INSERT INTO st_pub VALUES (1)")
+        files, where = eng.store.files("st_pub"), _location(eng, "st_pub")
+        listing = sorted(os.listdir(os.path.dirname(where)))
+
+        def swap_fails(*args):
+            raise OSError("disk full")
+
+        monkeypatch.setattr(snapshots, "write_manifest", swap_fails)
+        for stmt in ("INSERT INTO st_pub VALUES (2)",
+                     "UPDATE st_pub SET id = 10"):
+            with pytest.raises(OSError, match="disk full"):
+                eng.sql(stmt)
+            assert _rows(eng, "SELECT id FROM st_pub") == [(1,)]
+            assert eng.store.files("st_pub") == files
+            assert _location(eng, "st_pub") == where
+            assert sorted(os.listdir(os.path.dirname(where))) == listing
+            assert set(os.listdir(where)) >= {os.path.basename(f) for f in files}
+            assert len([f for f in os.listdir(where)
+                        if f.endswith(".parquet")]) == len(files)
+    finally:
+        monkeypatch.undo()
+        eng.sql("DROP TABLE IF EXISTS st_pub")
+
+
+def test_commit_whose_second_repoint_fails_lands_no_table(spark, monkeypatch):
+    """A two-table COMMIT that fails while pointing the second table at
+    its new version points the first one back: neither table changes,
+    in the catalog or in the store."""
+    eng = Engine(spark=spark)
+    for t in ("st_r1", "st_r2"):
+        eng.sql(f"DROP TABLE IF EXISTS {t}")
+        eng.sql(f"CREATE TABLE {t} (id BIGINT) USING PARQUET")
+        eng.sql(f"INSERT INTO {t} VALUES (1)")
+    before = {t: (eng.store.files(t), _location(eng, t))
+              for t in ("st_r1", "st_r2")}
+    real, calls = eng._set_location, []
+
+    def second_fails(name, path):
+        calls.append(name)
+        if len(calls) == 2:
+            raise RuntimeError("catalog unavailable")
+        real(name, path)
+
+    try:
+        with pytest.raises(RuntimeError, match="catalog unavailable"):
+            with eng.transaction() as txn:
+                txn.sql("UPDATE st_r1 SET id = 10")
+                txn.sql("UPDATE st_r2 SET id = 20")
+                monkeypatch.setattr(eng, "_set_location", second_fails)
+        monkeypatch.undo()
+        for t in ("st_r1", "st_r2"):
+            assert _rows(eng, f"SELECT id FROM {t}") == [(1,)]
+            assert (eng.store.files(t), _location(eng, t)) == before[t]
+    finally:
+        monkeypatch.undo()
+        for t in ("st_r1", "st_r2"):
+            eng.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_managed_table_is_adopted_on_first_write(spark):
+    """A managed parquet table (here written by the DataFrame API)
+    becomes an EXTERNAL table over its own directory on its first
+    Engine write; its files are the first store version, so snapshots
+    and DROP treat it like a table the Engine created."""
+    import os
+
+    eng = Engine(spark=spark)
+    eng.sql("DROP TABLE IF EXISTS st_managed")
+    spark.range(3).selectExpr("id").write.saveAsTable("st_managed")
+    where = _location(eng, "st_managed")
+    try:
+        eng.sql("INSERT INTO st_managed VALUES (7)")
+        assert eng._table("st_managed")[2].tableType().name() == "EXTERNAL"
+        assert _location(eng, "st_managed") == where  # no data moved
+        assert _rows(eng, "SELECT id FROM st_managed") == [(0,), (1,), (2,), (7,)]
+        assert eng.store.read("st_managed", version=1).count() == 3
+        eng.sql("UPDATE st_managed SET id = id + 100 WHERE id = 7")
+        assert _rows(eng, "SELECT id FROM st_managed WHERE id > 2") == [(107,)]
+        eng.sql("DROP TABLE st_managed")
+        # the DROP left every version's files for snapshots and time travel
+        assert eng.store.read("st_managed", version=2).count() == 4
+        assert all(os.path.exists(f) for f in eng.store.files("st_managed", 1))
+    finally:
+        eng.sql("DROP TABLE IF EXISTS st_managed")
+
+
+def test_unstored_layouts_are_refused_with_the_reason(spark):
+    """The store writes unpartitioned, unbucketed parquet tables; a
+    write to any other table fails with that reason and changes nothing."""
+    eng = Engine(spark=spark)
+    eng.sql("DROP TABLE IF EXISTS st_part")
+    eng.sql("CREATE TABLE st_part (id BIGINT, p INT) USING PARQUET "
+            "PARTITIONED BY (p)")
+    try:
+        with pytest.raises(ValueError, match="unpartitioned, unbucketed"):
+            eng.sql("INSERT INTO st_part VALUES (1, 1)")
+        assert eng.sql("SELECT count(*) AS n FROM st_part").rows[0].n == 0
+    finally:
+        eng.sql("DROP TABLE IF EXISTS st_part")
+
+
+def test_store_root_must_be_on_the_local_filesystem():
+    """The store moves files with os calls, so a root that Spark would
+    resolve on another filesystem is refused instead of misplaced."""
+    from litebase_spark.engine import _local_root
+
+    assert _local_root("file:/data/wh", "file:///") == "/data/wh"
+    assert _local_root("/data/wh", None) == "/data/wh"
+    for root, default_fs in (("hdfs://nn:8020/wh", "file:///"),
+                             ("s3a://bucket/wh", "file:///"),
+                             ("/data/wh", "hdfs://nn:8020")):
+        with pytest.raises(ValueError, match="not on the local filesystem"):
+            _local_root(root, default_fs)

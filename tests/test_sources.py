@@ -3,6 +3,8 @@ enforcement, partitioned writes + partition pruning."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -292,6 +294,10 @@ def test_versioned_datasource_write_roundtrip(spark, sf_dir, tmp_path):
     wr(nation.filter(F.col("n_nationkey") >= 10), "append")
     vs = VersionedStore(spark, root)
     assert vs.read("n").count() == nation.count()
+    # the append's files joined the head's directory, which holds
+    # exactly the version's files
+    head = vs.head_dir("n")
+    assert head and {os.path.dirname(f) for f in vs.files("n")} == {head}
     assert vs.read("n", version=1).count() == nation.filter(
         F.col("n_nationkey") < 10
     ).count()
