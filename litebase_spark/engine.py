@@ -521,11 +521,12 @@ class Engine:
         stmt_class = classify_statement(statement)
         if stmt_class == "VACUUM":
             # Reference rejects VACUUM from the query API (needs drained
-            # connections — pkg/database/resolver.go:100-103); our analog
-            # is the explicit compaction job (sources/io.py compact_table).
+            # connections — pkg/database/resolver.go:100-103); here
+            # compaction and file deletion are maintenance calls too.
             raise ValueError(
-                "VACUUM is not allowed through the query API; "
-                "use litebase_spark.sources.io.compact_table"
+                "VACUUM is not allowed through the query API; use "
+                "Engine.optimize to compact a table and "
+                "VersionedStore.vacuum to delete unreferenced files"
             )
         eqp = re.match(r"(?is)^\s*EXPLAIN\s+QUERY\s+PLAN\s+(.+)$", statement)
         if eqp:
@@ -746,7 +747,7 @@ class Engine:
         """OPTIMIZE planning for a registered table: greedy bin packing
         of the (synthesized) file manifest into target-size output bins.
         Metadata-only — plans, never rewrites; the rewrite itself is
-        sources/io.py compact_table (the VACUUM analog, A11)."""
+        `Engine.optimize` (the VACUUM analog, A11)."""
         from litebase_spark.operators.pipeline import compaction_plan
 
         return compaction_plan(self.spark.table(table), **options)
@@ -1820,6 +1821,37 @@ class Engine:
         """Replace each table's rows with its image in one store commit:
         every table lands, or none does."""
         self._publish(self._stage(images))
+
+    def optimize(
+        self,
+        table: str,
+        zorder_cols: tuple[str, str] | None = None,
+        target_file_bytes: int = 128 * 1024 * 1024,
+    ) -> tuple[int, int]:
+        """OPTIMIZE [ZORDER BY (a, b)]: rewrite the table's committed
+        head as ~target-size files, clustered by the Z-order of
+        `zorder_cols` when given, and commit them as one new version.
+        Earlier versions keep their files, so snapshots, VERSION AS OF
+        and branches still read them until `VersionedStore.vacuum`.
+        A maintenance call, like the reference's VACUUM, which its query
+        API refuses (pkg/database/resolver.go:100-103), and like it,
+        run with the table's writers drained: a commit landing between
+        its read and its publish would be replaced. Returns
+        (files_before, files_after)."""
+        from litebase_spark.operators.layout import zorder_cluster
+
+        # the qualified name: a transaction's shadow view of the bare
+        # name holds rows nobody committed
+        key, name, _ = self._writable(table)
+        files = self.store.files(key)
+        n_out = max(1, math.ceil(
+            sum(map(os.path.getsize, files)) / target_file_bytes))
+        if not files or (zorder_cols is None and len(files) <= n_out):
+            return len(files), len(files)
+        df = self.spark.table(name)
+        self.commit({name: zorder_cluster(df, zorder_cols, n_out)
+                     if zorder_cols else df.coalesce(n_out)})
+        return len(files), len(self.store.files(key))
 
     def register_parquet_dir(self, sf_dir: str, tables) -> None:
         register_views(self.spark, sf_dir, tables)

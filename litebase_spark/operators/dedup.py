@@ -182,7 +182,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so both pair-side sizes ride the postings rows into the pair
     # aggregate as grouping keys and the two sizes join-backs (each of
     # which re-inlined the tokenize+md5-shingle corpus pass — 4 scans
-    # per execution in plans/r13/dedup_ngram_jaccard_before.txt)
+    # per execution in history/plans/r13/dedup_ngram_jaccard_before.txt)
     # disappear. The shingle pass now runs once per pair SIDE (2x),
     # with no corpus-sized materialization (a localCheckpoint of the
     # md5-string shingle arrays measured ~40 GB at x100 — a scale
@@ -854,7 +854,7 @@ def dedup_embedding_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # emb (vec_id, embedding, nrm) is materialized ONCE and feeds both
     # join-back sides AND the banding pass: without the barrier each
     # side re-scanned + re-repartitioned the corpus per execution
-    # (plans/r13/dedup_embedding_lsh_verified_before.txt: 4 parquet
+    # (history/plans/r13/dedup_embedding_lsh_verified_before.txt: 4 parquet
     # scans, 12 exchanges -> after: the two join-backs read the
     # checkpointed row set).
     emb = e.select(

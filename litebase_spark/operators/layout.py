@@ -86,13 +86,14 @@ def layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def zorder_write(
-    df: DataFrame, cols: tuple[str, str], path: str, n_files: int = 64
-) -> None:
-    """Write `df` clustered by the Z-order of two integer expressions:
-    range-partition by zkey into ~n_files buckets, sort within, write
-    parquet. Each output file then covers a small rectangle of the
-    (cols[0], cols[1]) space, so min/max stats prune on either column.
+def zorder_cluster(
+    df: DataFrame, cols: tuple[str, str], n_files: int
+) -> DataFrame:
+    """`df` clustered by the Z-order of two integer expressions:
+    range-partitioned by zkey into ~n_files partitions and sorted
+    within each. Written out one file per partition, each file covers
+    a small rectangle of the (cols[0], cols[1]) space, so min/max stats
+    prune on either column.
 
     Dimensions are RANGE-binNED into 256 buckets from a one-row min/max
     pre-pass (monotone, alias-free). Round 2 binned with modulo, which
@@ -114,13 +115,11 @@ def zorder_write(
     zkey = F.expr(
         _interleave_sql(bin_expr(a, lo_a, hi_a), bin_expr(b, lo_b, hi_b))
     )
-    (
+    return (
         df.withColumn("__z", zkey)
         .repartitionByRange(n_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
     )
 
 

@@ -567,7 +567,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the (doc_id, phash) table ONCE: both sides of the
     # band self-join consume it, and without the barrier the whole
     # Arrow decode+hash stage is inlined into EACH side (2 MapInPandas
-    # nodes, 2 full media decodes per execution — plans/r13/
+    # nodes, 2 full media decodes per execution — history/plans/r13/
     # multimodal_phash_dedup_before.txt). 16 bytes/item, the
     # fingerprint table every media-dedup deployment persists anyway
     # (same convention as similarity.py's banded sketches).

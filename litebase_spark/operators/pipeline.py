@@ -1743,7 +1743,7 @@ def pipeline_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Per-doc gram DEDUPE moved into the array (array_distinct inside
     # the projection): the r12 plan deduped via a (doc, source, h)
     # hash-aggregate exchange of every gram INSTANCE — computed twice,
-    # once per consumer (plans/r13/pipeline_ngram_novelty_before.txt:
+    # once per consumer (history/plans/r13/pipeline_ngram_novelty_before.txt:
     # the whole tokenize->explode->distinct subtree appears on BOTH
     # sides of the h join). Scan-side dedupe removes those gram-
     # instance exchanges entirely (guide §2.3/§2.4: shuffle fewer
@@ -1869,7 +1869,7 @@ def pipeline_incremental_novelty(
     # gram-keyed MIN over all docs filtered to owners past the
     # threshold. The r12 plan evaluated the tokenize->explode->
     # distinct subtree once per consumer (3x) and anti-joined batch
-    # grams against the index grams (plans/r13/
+    # grams against the index grams (history/plans/r13/
     # pipeline_incremental_novelty_before.txt: 12 parquet scans, 34
     # exchanges -> 4 scans, 1 corpus-scale exchange).
     g = tw.select(

@@ -1608,7 +1608,7 @@ def _cdf_percentiles(
     # local window, the bucket offsets and the per-group totals all
     # consume cells, and each consumer otherwise re-inlines the full
     # corpus aggregate (6 parquet scans per execution in
-    # plans/r13/agg_percentiles_before.txt)
+    # history/plans/r13/agg_percentiles_before.txt)
     cells = df.groupBy(
         F.col(group_col), fp(value_col).alias("c")
     ).agg(F.count(F.lit(1)).alias("cnt")).localCheckpoint(eager=True)

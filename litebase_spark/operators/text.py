@@ -976,7 +976,7 @@ def fts_phrase_prefix(
     # Materialize the PRUNED postings once: the phrase anchors, each
     # phrase-word probe and the prefix probe all consume `pos`, and
     # without the barrier every consumer re-inlines the full
-    # tokenize+posexplode corpus pass (plans/r13/
+    # tokenize+posexplode corpus pass (history/plans/r13/
     # fts_match_phrase_prefix_before.txt: 8 parquet scans, 18
     # exchanges for a 2-word phrase + prefix). The pruned postings are
     # a few rows per matching doc — exactly the slice of the posting
@@ -2536,7 +2536,7 @@ def text_containment_rare(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the rare-shingle postings ONCE: sizes, and both pair
     # sides consume rp, and without the barrier the whole tokenize ->
     # shingle -> explode -> df-window subtree is re-inlined into each
-    # consumer (plans/r13/text_containment_rare_before.txt: 8 parquet
+    # consumer (history/plans/r13/text_containment_rare_before.txt: 8 parquet
     # scans, 4 Window sorts over the full posting set per execution).
     # rp is the df-capped posting slice (2..50 docs/shingle) — the
     # bounded index table this operator's design doc promises.

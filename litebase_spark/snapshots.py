@@ -615,9 +615,11 @@ def versioned_read_stream(store: VersionedStore, table: str):
     treats each committed transaction directory's files as newly
     arrived data, so appends flow incrementally to any Structured
     Streaming sink with exactly-once checkpointed progress — the
-    manifest store doubles as a CDC source for append-only tables
-    (overwrites would re-deliver replaced files; gate on append-only
-    pipelines or consume `changes()` batch-wise instead)."""
+    manifest store doubles as a CDC source for append-only tables.
+    Any rewrite (an UPDATE or DELETE, and an `Engine.optimize` too)
+    writes a fresh directory, which the stream delivers as new files:
+    it re-delivers the table's rows. Gate on append-only pipelines, or
+    consume `changes()` batch-wise instead."""
     schema = store.read(table).schema
     path = os.path.join(store.root, table)
     return (

@@ -114,50 +114,6 @@ class SourceRegistry:
         return sorted(self._sources)
 
 
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    format: str = "parquet",
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> tuple[int, int]:
-    """OPTIMIZE/compaction analog of the reference's VACUUM (blocked from
-    its query API and run as maintenance instead — reference:
-    pkg/database/resolver.go:100-103, pkg/sqlite3/connection.go:370-384):
-    rewrite a small-files table into ~target-sized files. Returns
-    (files_before, files_after).
-
-    The rewrite is a distributed job (repartition by computed file
-    count); localCheckpoint breaks lineage so the overwrite of the SAME
-    path is safe. On Delta this is `OPTIMIZE` and on Iceberg
-    `rewrite_data_files` — swap points, same contract."""
-    import math
-
-    sc = spark.sparkContext
-    jvm_path = sc._jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
-    fs = jvm_path.getFileSystem(sc._jsc.hadoopConfiguration())
-    files = [
-        f
-        for f in fs.listStatus(jvm_path)
-        if f.getPath().getName().endswith(f".{format}")
-        or f.getPath().getName().startswith("part-")
-    ]
-    files_before = len(files)
-    total_bytes = sum(f.getLen() for f in files)
-    n_out = max(1, math.ceil(total_bytes / target_file_bytes))
-    df = spark.read.format(format).load(path).repartition(n_out)
-    df.localCheckpoint(eager=True).write.format(format).mode(
-        "overwrite"
-    ).save(path)
-    files_after = len(
-        [
-            f
-            for f in fs.listStatus(jvm_path)
-            if f.getPath().getName().startswith("part-")
-        ]
-    )
-    return files_before, files_after
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,
@@ -181,50 +137,3 @@ def write_bucketed(
     if sort_col:
         w = w.sortBy(sort_col)
     w.saveAsTable(table)
-
-
-def optimize_table(
-    spark: SparkSession,
-    path: str,
-    zorder_cols: tuple[str, str] | None = None,
-    format: str = "parquet",
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> tuple[int, int]:
-    """OPTIMIZE [ZORDER BY (a, b)] analog: compact small files to
-    ~target size and, when zorder_cols is given, cluster rows by the
-    Morton key while doing it — after the rewrite each file covers a
-    small rectangle of the (a, b) space, so parquet min/max footers
-    prune on EITHER column (the Delta OPTIMIZE ZORDER contract; the
-    reference's range-file layout plays this role,
-    pkg/storage/range.go:15-24). Returns (files_before, files_after)."""
-    import math
-
-    sc = spark.sparkContext
-    jvm_path = sc._jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
-    fs = jvm_path.getFileSystem(sc._jsc.hadoopConfiguration())
-
-    def n_files() -> int:
-        return len(
-            [
-                f
-                for f in fs.listStatus(jvm_path)
-                if f.getPath().getName().startswith("part-")
-                or f.getPath().getName().endswith(f".{format}")
-            ]
-        )
-
-    if zorder_cols is None:
-        return compact_table(spark, path, format, target_file_bytes)
-    files_before = n_files()
-    total_bytes = sum(
-        f.getLen()
-        for f in fs.listStatus(jvm_path)
-        if f.getPath().getName().startswith("part-")
-        or f.getPath().getName().endswith(f".{format}")
-    )
-    n_out = max(1, math.ceil(total_bytes / target_file_bytes))
-    from litebase_spark.operators.layout import zorder_write
-
-    df = spark.read.format(format).load(path).localCheckpoint(eager=True)
-    zorder_write(df, zorder_cols, path, n_files=n_out)
-    return files_before, n_files()

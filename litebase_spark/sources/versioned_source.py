@@ -41,28 +41,34 @@ class _FilePartition(InputPartition):
         self.path = path
 
 
-def _resolve_files(options: dict) -> list[str]:
+def _resolve(options: dict) -> tuple[VersionedStore, str, int | None, str]:
+    """(store, table, version, namespace) the options pin; version None
+    is the head."""
     store = VersionedStore(None, options["root"])
     table, ns = options["table"], options.get("namespace", "main")
     if "timestamp" in options:
         version = store.version_at(table, float(options["timestamp"]), ns)
     else:
         version = int(options["version"]) if "version" in options else None
-    return store.files(table, version, ns)
+    return store, table, version, ns
 
 
 class VersionedReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict) -> None:
         self.schema_ = schema
-        self.files = _resolve_files(options)
+        store, table, version, ns = _resolve(options)
+        self.files = store.files(table, version, ns)
 
     def partitions(self):
         # one split per immutable data file: the manifest is the split
         # list, no FS listing; Spark schedules one task per file
         return [_FilePartition(p) for p in self.files]
 
-    def read(self, partition: _FilePartition):
+    def read(self, partition: _FilePartition | None):
         import pyarrow.parquet as pq
+
+        if partition is None:  # Spark's one split of a version with no files
+            return
 
         # Arrow record batches stream straight into Spark's columnar
         # path; column pruning happens via the schema Spark passes down
@@ -133,11 +139,18 @@ class VersionedDataSource(DataSource):
         return "versioned"
 
     def schema(self):
+        """The schema the version's writer recorded, as
+        `VersionedStore.read` uses it; the first file's footer when none
+        was recorded."""
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        files = _resolve_files(self.options)
-        return from_arrow_schema(pq.read_schema(files[0]))
+        store, table, version, ns = _resolve(self.options)
+        schema = store.schema(table, version, ns)
+        if schema is not None:
+            return schema
+        return from_arrow_schema(
+            pq.read_schema(store.files(table, version, ns)[0]))
 
     def reader(self, schema: StructType) -> DataSourceReader:
         return VersionedReader(schema, self.options)

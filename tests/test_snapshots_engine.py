@@ -552,17 +552,82 @@ def test_managed_table_is_adopted_on_first_write(spark):
 
 def test_unstored_layouts_are_refused_with_the_reason(spark):
     """The store writes unpartitioned, unbucketed parquet tables; a
-    write to any other table fails with that reason and changes nothing."""
+    write or an optimize of any other table fails with that reason and
+    changes nothing."""
     eng = Engine(spark=spark)
-    eng.sql("DROP TABLE IF EXISTS st_part")
-    eng.sql("CREATE TABLE st_part (id BIGINT, p INT) USING PARQUET "
-            "PARTITIONED BY (p)")
-    try:
-        with pytest.raises(ValueError, match="unpartitioned, unbucketed"):
-            eng.sql("INSERT INTO st_part VALUES (1, 1)")
-        assert eng.sql("SELECT count(*) AS n FROM st_part").rows[0].n == 0
-    finally:
+    for layout in ("PARTITIONED BY (p)", "CLUSTERED BY (id) INTO 2 BUCKETS"):
         eng.sql("DROP TABLE IF EXISTS st_part")
+        eng.sql("CREATE TABLE st_part (id BIGINT, p INT) USING PARQUET "
+                + layout)
+        try:
+            with pytest.raises(ValueError, match="unpartitioned, unbucketed"):
+                eng.sql("INSERT INTO st_part VALUES (1, 1)")
+            with pytest.raises(ValueError, match="unpartitioned, unbucketed"):
+                eng.optimize("st_part")
+            assert eng.sql("SELECT count(*) AS n FROM st_part").rows[0].n == 0
+        finally:
+            eng.sql("DROP TABLE IF EXISTS st_part")
+
+
+def test_optimize_keeps_earlier_versions_until_vacuum(spark, tmp_path):
+    """An optimize commits the compacted rows as a new version in a
+    fresh directory: VERSION AS OF and a snapshot taken before it still
+    read the replaced files, which vacuum deletes only once no snapshot
+    pins them."""
+    import os
+
+    from litebase_spark.snapshots import STORE_DIR
+
+    eng = Engine(spark=spark, store_root=str(tmp_path / "opt"))
+    eng.sql("DROP TABLE IF EXISTS st_opt")
+    eng.sql("CREATE TABLE st_opt (k BIGINT, v STRING) USING PARQUET")
+    try:
+        for i in range(6):
+            eng.sql(f"INSERT INTO st_opt VALUES ({i}, 'v{i}')")
+        rows = [(i, f"v{i}") for i in range(6)]
+        replaced = eng.store.files("st_opt")
+        snap = eng.store.snapshot()
+        assert eng.optimize("st_opt") == (6, 1)
+        head = eng.store.head_dir("st_opt")
+        assert eng.optimize("st_opt") == (1, 1)  # compact: no new version
+        assert eng.store.head_dir("st_opt") == head
+        assert _rows(eng, "SELECT k, v FROM st_opt") == rows
+        assert _rows(eng, "SELECT k, v FROM st_opt VERSION AS OF 3") == rows[:2]
+        assert eng.store.restore_at(snap["created_at"], "pre") == ["st_opt"]
+        assert _rows(eng, "SELECT k, v FROM pre__st_opt") == rows
+        assert eng.store.vacuum() == []  # the snapshot pins them
+        os.remove(os.path.join(eng.store.root, STORE_DIR, "snapshots",
+                               f"{snap['snapshot_id']}.json"))
+        assert eng.store.vacuum() == sorted(replaced)
+        assert _rows(eng, "SELECT k, v FROM st_opt") == rows
+    finally:
+        eng.sql("DROP TABLE IF EXISTS st_opt")
+
+
+def test_optimize_commits_the_rows_before_an_open_transaction(spark):
+    """An optimize reads the committed head, not a transaction's
+    uncommitted UPDATE of the table; after ROLLBACK the table holds the
+    pre-transaction rows."""
+    eng = Engine(spark=spark)
+    eng.sql("DROP TABLE IF EXISTS st_optx")
+    eng.sql("CREATE TABLE st_optx (k BIGINT, v BIGINT) USING PARQUET")
+    txn = None
+    try:
+        for i in range(3):
+            eng.sql(f"INSERT INTO st_optx VALUES ({i}, {i})")
+        rows = [(i, i) for i in range(3)]
+        txn = eng.begin()
+        txn.sql("UPDATE st_optx SET v = v + 100")
+        assert eng.optimize("st_optx") == (3, 1)
+        assert sorted(tuple(r) for r in eng.store.read("st_optx").collect()) == rows
+        assert sorted(tuple(r) for r in txn.sql("SELECT k, v FROM st_optx").rows) \
+            == [(i, i + 100) for i in range(3)]
+        txn.rollback()
+        assert _rows(eng, "SELECT k, v FROM st_optx") == rows
+    finally:
+        if txn is not None:
+            txn.rollback()
+        eng.sql("DROP TABLE IF EXISTS st_optx")
 
 
 def test_store_root_must_be_on_the_local_filesystem():

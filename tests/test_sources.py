@@ -71,17 +71,25 @@ def test_registry_exposes_sql(spark, sf_dir, tmp_path):
     assert reg.names() == ["nation_ext"]
 
 
-def test_compact_table_reduces_files(spark, sf_dir, tmp_path):
-    from litebase_spark.sources.io import compact_table
+def test_optimize_reduces_files(spark, sf_dir):
+    """Engine.optimize rewrites a 24-file store table as fewer files in
+    one new version, with the same rows."""
+    from litebase_spark.engine import Engine
 
+    eng = Engine(spark=spark)
     orders = load(spark, sf_dir, "orders")
-    path = str(tmp_path / "fragmented")
-    orders.repartition(24).write.parquet(path)  # 24 tiny files
-    before, after = compact_table(spark, path)
-    assert before == 24 and after < 24
-    back = spark.read.parquet(path)
-    assert back.count() == orders.count()
-    assert set(back.columns) == set(orders.columns)
+    eng.sql("DROP TABLE IF EXISTS fragmented")
+    eng.sql(f"CREATE TABLE fragmented ({orders.schema.toDDL()}) USING PARQUET")
+    try:
+        eng.commit({"fragmented": orders.repartition(24)})  # 24 tiny files
+        before, after = eng.optimize("fragmented")
+        assert before == 24 and after < 24
+        back = spark.table("fragmented")
+        assert back.count() == orders.count()
+        assert set(back.columns) == set(orders.columns)
+        assert canon(back.select(orders.columns), None) == canon(orders, None)
+    finally:
+        eng.sql("DROP TABLE IF EXISTS fragmented")
 
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir):
@@ -147,18 +155,18 @@ def test_zorder_buckets_localize_both_dimensions(spark, sf_dir):
     assert z_spread < lex_spread / 2, (z_spread, lex_spread)
 
 
-def test_zorder_write_negative_values_valid_layout(spark, tmp_path):
-    """zorder_write must produce a valid clustered layout for columns
+def test_zorder_cluster_negative_values_valid_layout(spark, tmp_path):
+    """zorder_cluster must produce a valid clustered layout for columns
     with NEGATIVE values (round-2 used sign-preserving %, which fed
     negative operands into the bit interleave)."""
-    from litebase_spark.operators.layout import zorder_write
+    from litebase_spark.operators.layout import zorder_cluster
     from pyspark.sql import functions as F
 
     df = spark.range(-500, 500).select(
         F.col("id").alias("x"), (F.lit(-3) * F.col("id")).alias("y")
     )
     out = str(tmp_path / "zo")
-    zorder_write(df, ("x", "y"), out, n_files=8)
+    zorder_cluster(df, ("x", "y"), n_files=8).write.parquet(out)
     back = spark.read.parquet(out)
     assert back.count() == 1000
     assert back.select("x").distinct().count() == 1000
@@ -172,61 +180,67 @@ def test_zorder_write_negative_values_valid_layout(spark, tmp_path):
     assert zkeys.filter(F.col("xd") < 0).count() == 0
 
 
-def test_optimize_table_zorder_compacts_and_clusters(spark, tmp_path):
-    """optimize_table(zorder) merges small files AND leaves each output
+def test_optimize_zorder_compacts_and_clusters(spark):
+    """Engine.optimize(zorder) merges small files AND leaves each output
     file covering a narrow rectangle of the key space (per-file parquet
     min/max verified via DuckDB's footer metadata)."""
     import duckdb
 
-    from litebase_spark.sources.io import optimize_table
+    from litebase_spark.engine import Engine
 
-    out = str(tmp_path / "opt")
-    # 16 small shuffled files over a 2-d key space
-    df = (
-        spark.range(0, 20000)
-        .select(
-            F.pmod(F.hash(F.col("id")), F.lit(997)).alias("x"),
-            F.pmod(F.hash(F.col("id") * 7 + 1), F.lit(997)).alias("y"),
+    eng = Engine(spark=spark)
+    eng.sql("DROP TABLE IF EXISTS st_zopt")
+    eng.sql("CREATE TABLE st_zopt (x INT, y INT) USING PARQUET")
+    try:
+        # 16 small shuffled files over a 2-d key space
+        df = (
+            spark.range(0, 20000)
+            .select(
+                F.pmod(F.hash(F.col("id")), F.lit(997)).alias("x"),
+                F.pmod(F.hash(F.col("id") * 7 + 1), F.lit(997)).alias("y"),
+            )
+            .repartition(16)
         )
-        .repartition(16)
-    )
-    df.write.parquet(out)
-    con = duckdb.connect()
+        eng.commit({"st_zopt": df})
+        con = duckdb.connect()
 
-    def spreads():
-        return con.sql(
-            f"""
-            SELECT file_name,
-                   MAX(CASE WHEN path_in_schema = 'x'
-                       THEN stats_max::BIGINT - stats_min::BIGINT END) AS xs,
-                   MAX(CASE WHEN path_in_schema = 'y'
-                       THEN stats_max::BIGINT - stats_min::BIGINT END) AS ys
-            FROM parquet_metadata('{out}/*.parquet')
-            GROUP BY file_name
-            """
-        ).fetchall()
+        def spreads():
+            out = eng.store.head_dir("st_zopt")
+            return con.sql(
+                f"""
+                SELECT file_name,
+                       MAX(CASE WHEN path_in_schema = 'x'
+                           THEN stats_max::BIGINT - stats_min::BIGINT END) AS xs,
+                       MAX(CASE WHEN path_in_schema = 'y'
+                           THEN stats_max::BIGINT - stats_min::BIGINT END) AS ys
+                FROM parquet_metadata('{out}/*.parquet')
+                GROUP BY file_name
+                """
+            ).fetchall()
 
-    base = spreads()
-    base_x = sum(r[1] for r in base) / len(base)
-    base_y = sum(r[2] for r in base) / len(base)
-    before, after = optimize_table(
-        spark, out, zorder_cols=("x", "y"), target_file_bytes=24 * 1024
-    )
-    assert before == 16 and 2 <= after < 16
-    back = spark.read.parquet(out)
-    assert back.count() == 20000
-    stats = spreads()
-    mean_x = sum(r[1] for r in stats) / len(stats)
-    mean_y = sum(r[2] for r in stats) / len(stats)
-    # unsorted files span ~the whole domain in both dims; z-range files
-    # localize both on average (boundary files legitimately straddle
-    # quadrants — z-order is approximate clustering, as in Delta
-    # OPTIMIZE ZORDER), and at least one file is a tight quadrant
-    assert mean_x < 0.72 * base_x and mean_y < 0.72 * base_y, (
-        (mean_x, base_x),
-        (mean_y, base_y),
-    )
-    assert any(r[1] <= 510 and r[2] <= 510 for r in stats), stats
+        base = spreads()
+        base_x = sum(r[1] for r in base) / len(base)
+        base_y = sum(r[2] for r in base) / len(base)
+        before, after = eng.optimize(
+            "st_zopt", zorder_cols=("x", "y"), target_file_bytes=24 * 1024
+        )
+        assert before == 16 and 2 <= after < 16
+        back = spark.table("st_zopt")
+        assert back.count() == 20000
+        stats = spreads()
+        mean_x = sum(r[1] for r in stats) / len(stats)
+        mean_y = sum(r[2] for r in stats) / len(stats)
+        # unsorted files span ~the whole domain in both dims; z-range files
+        # localize both on average (boundary files legitimately straddle
+        # quadrants — z-order is approximate clustering, as in Delta
+        # OPTIMIZE ZORDER), and at least one file is a tight quadrant
+        assert mean_x < 0.72 * base_x and mean_y < 0.72 * base_y, (
+            (mean_x, base_x),
+            (mean_y, base_y),
+        )
+        assert any(r[1] <= 510 and r[2] <= 510 for r in stats), stats
+    finally:
+        eng.sql("DROP TABLE IF EXISTS st_zopt")
 
 
 def test_versioned_python_datasource(spark, sf_dir, tmp_path):
@@ -306,3 +320,28 @@ def test_versioned_datasource_write_roundtrip(spark, sf_dir, tmp_path):
     wr(nation.limit(3), "overwrite")
     assert vs.read("n").count() == 3
     assert vs.read("n", version=2).count() == nation.count()  # time travel
+
+
+def test_versioned_source_reads_a_version_with_no_files(spark):
+    """A table created empty through Engine.sql commits a version with no
+    files; format('versioned') reads it as 0 rows with the schema the
+    store recorded."""
+    from litebase_spark.engine import Engine
+    from litebase_spark.sources.versioned_source import VersionedDataSource
+
+    eng = Engine(spark=spark)
+    eng.sql("DROP TABLE IF EXISTS vs_empty")
+    eng.sql("CREATE TABLE vs_empty (k BIGINT, s STRING) USING PARQUET")
+    try:
+        assert eng.store.files("vs_empty") == []
+        spark.dataSource.register(VersionedDataSource)
+        df = (
+            spark.read.format("versioned")
+            .option("root", eng.store.root)
+            .option("table", "vs_empty")
+            .load()
+        )
+        assert df.schema == eng.store.schema("vs_empty")
+        assert df.collect() == []
+    finally:
+        eng.sql("DROP TABLE IF EXISTS vs_empty")
